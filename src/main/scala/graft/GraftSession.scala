@@ -41,10 +41,8 @@ object GraftSession {
       // compile time. Cost is metaspace for compiled classes (~KBs per
       // entry). Round 11 raised the default to 20000 as HEADROOM for the
       // 131-query surface (an A/B at 5000 vs 20000 under ambient host
-      // variance was inconclusive — SCALE.md r11 notes the measurement;
-      // the conf is env-overridable for future bisects).
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "20000"))
+      // variance was inconclusive — SCALE.md r11 notes the measurement).
+      .config("spark.sql.codegen.cache.maxEntries", "20000")
       .config("spark.sql.session.timeZone", "UTC")
       // catalog tables (the bucketed warehouse) live under tmp, not the
       // source tree

@@ -5,8 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The Power BI layer's queries as a typed API over the semantic view
-  * (SURVEY.md §2.4 A7-A11, §2.5 W1-W2, plus the validation queries
-  * A2-A4 from /root/reference/sql/transformations/90_validation_checks.sql).
+  * (SURVEY.md §2.4 A7 and A9-A11, §2.5 W1-W2).
   *
   * `view` is [[SemanticView.salesProductGeo]] output. All are
   * aggregate-then-window plans: the window's single-partition stage only
@@ -65,12 +64,6 @@ object Dashboard {
       .sum("units")
       .na.fill(0, platforms)
 
-  /** A8: units per subcategory within a category (bar chart). */
-  def subcategoryUnits(view: DataFrame, category: String): DataFrame =
-    view.where(col("category") === category)
-      .groupBy(col("subcategory")).agg(sum(col("units")).as("units"))
-      .orderBy(col("units").desc)
-
   /** A11: day-of-week trend (Monday=1 ordering). */
   def dowTrend(view: DataFrame): DataFrame =
     view.groupBy(col("day_of_week"), col("day_name"))
@@ -86,28 +79,4 @@ object Dashboard {
     agg.withColumn("rank", row_number().over(w)).where(col("rank") === 1)
       .select(col("state_code"), col("platform"), col("units"))
   }
-
-  // --- validation checks (90_validation_checks.sql) ---
-
-  /** A2: SKU count per Furniture subcategory (90_...sql:17-24). */
-  def skuCountPerSubcategory(dimProduct: DataFrame): DataFrame =
-    dimProduct.where(col("category") === "Furniture")
-      .groupBy(col("subcategory")).agg(count(lit(1)).as("sku_count"))
-      .orderBy(col("sku_count").desc)
-
-  /** A3: units sold per Furniture subcategory (90_...sql:27-35). */
-  def unitsPerSubcategory(factSales: DataFrame, dimProduct: DataFrame): DataFrame =
-    factSales.join(broadcast(dimProduct), Seq("product_id"))
-      .where(col("category") === "Furniture")
-      .groupBy(col("subcategory")).agg(sum(col("units")).as("units_sold"))
-      .orderBy(col("units_sold").desc)
-
-  /** A4: top-200 'Other Furniture' offenders by units (90_...sql:38-48). */
-  def topOtherFurniture(factSales: DataFrame, dimProduct: DataFrame): DataFrame =
-    factSales.join(broadcast(dimProduct), Seq("product_id"))
-      .where(col("category") === "Furniture" && col("subcategory") === "Furniture Sets & General")
-      .groupBy(col("english_name"), col("main_sku_code"))
-      .agg(sum(col("units")).as("units_sold"))
-      .orderBy(col("units_sold").desc, col("main_sku_code"))
-      .limit(200)
 }

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Calendar dimension generation — the reference builds it in pandas from
@@ -33,12 +33,6 @@ object DimDate {
   def fromColumnRange(src: DataFrame, tsCol: String): DataFrame = {
     val mm = src.agg(to_date(min(col(tsCol))).as("lo"), to_date(max(col(tsCol))).as("hi"))
     val days = mm.select(explode(sequence(col("lo"), col("hi"))).as("d"))
-    days.select(calendarCols(col("d")): _*)
-  }
-
-  def fromRange(spark: SparkSession, lo: String, hi: String): DataFrame = {
-    val days = spark.range(1).select(
-      explode(sequence(to_date(lit(lo)), to_date(lit(hi)))).as("d"))
     days.select(calendarCols(col("d")): _*)
   }
 }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
   * (transform/zip_with/aggregate are CodegenFallback: the lambda is
   * interpreted PER ELEMENT, and the power loop pays that on every one
   * of its r·iters corpus scans — the dominant per-row term at scale;
-  * graft.PcaAb measures the factor on a scale-shaped corpus).
+  * OPTIMIZATION_r19.md §9 measures the factor on a scale-shaped corpus).
   *
   * The arithmetic is the SAME integer-exact FP20 protocol, transcribed
   * step for step (every value is a long; no floating accumulation, so

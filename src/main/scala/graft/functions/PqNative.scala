@@ -17,8 +17,8 @@ import org.apache.spark.sql.types._
   *    zip_with(slice(v, j·ds+1, ds), centroid, (x,y) ⇒ (x−y)²)), …))`
   *    over m×k (subspace, centroid) pairs — 128 aggregate/zip_with/
   *    slice subtrees ≈ 3,900 analyzed expression nodes per plan
-  *    (measured, graft.PqTreeProbe), ~0.5–0.9 s of analyzer/optimizer/
-  *    codegen per ACTION even warm (JobProbe: q158 0.93 s of driver
+  *    (measured, OPTIMIZATION_r19.md §8), ~0.5–0.9 s of analyzer/
+  *    optimizer/codegen per ACTION even warm (q158: 0.93 s of driver
   *    gaps around 0.65 s of jobs), and interpreted per-element lambda
   *    eval at runtime (HOFs are CodegenFallback);
   *  - the exact re-rank distance was `aggregate(zip_with(qv, nv,

@@ -17,8 +17,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Why native (guide §7.3 "very large plans" + §1.2 step 2): the
   * composed pipeline substitutes the percent-normalization subtree into
   * every component extraction, compounding to ~5,000 expression nodes
-  * per call (measured, graft.TreeSize) — ~0.25 s of analyzer/optimizer/
-  * codegen work per ACTION even warm, paid again by every streaming
+  * per call (measured, OPTIMIZATION_r19.md §3) — ~0.25 s of analyzer/
+  * optimizer/codegen work per ACTION even warm, paid again by every streaming
   * micro-batch's incremental plan (q163/q164: 0.15–0.4 s/batch of
   * queryPlanning), and ~1 ms/row at execution (q155: 0.5 s for 500
   * rows — dozens of regex/array passes per URL). One expression node

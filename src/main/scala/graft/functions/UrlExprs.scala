@@ -141,8 +141,8 @@ object UrlExprs {
   /** Canonicalize as ONE native scalar ([[CanonicalizeUrlExpr]], r19).
     * The composed-Column formulation below substitutes the
     * percent-normalization subtree into every component extraction —
-    * ~5,000 analyzed expression nodes per call (graft.TreeSize), which
-    * taxed every action's planning by ~0.25 s (every streaming
+    * ~5,000 analyzed expression nodes per call (OPTIMIZATION_r19.md
+    * §3), which taxed every action's planning by ~0.25 s (every streaming
     * micro-batch, too) and evaluated at ~1 ms/row. The native pass is
     * byte-identical by spec (UrlCanonEquivalenceSpec) and keeps the
     * pipeline whole-stage-codegen'd. */

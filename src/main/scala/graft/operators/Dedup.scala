@@ -106,7 +106,7 @@ object Dedup {
     * pairs at/above `threshold` — shared tail of [[jaccardPairs]],
     * [[verifyJaccard]] and [[sortedNeighborhoodPairs]] (r18 dedup of three
     * copies). The size aggregate is NOT materialized and MAY evaluate once
-    * per side: measured at 10M postings / 5M pairs (graft.SzAb,
+    * per side: measured at 10M postings / 5M pairs (SCALE.md round 18,
     * interleaved medians over 5 rounds) the double aggregate over the
     * checkpointed posting RDD is free (renames-inside 0.558 s vs
     * alias-outside 0.554 s) while localCheckpointing sz LOSES (0.625 s —
@@ -136,12 +136,8 @@ object Dedup {
     (1300271L, 2750159L), (1300313L, 198491317L), (1300327L, 217645177L), (1300369L, 236887691L),
     (1300391L, 256203161L), (1300393L, 275604541L), (1300423L, 295075147L), (1300439L, 314606891L))
 
-  /** Per-doc MinHash signature: one row per doc, columns m0..m{k-1}. */
-  def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
-                        ngram: Int = 3): DataFrame =
-    signaturesOf(postings(docs, idCol, textCol, ngram))
-
-  /** Signatures from an already-built (doc, hv) posting frame — shared so
+  /** Per-doc MinHash signature (one row per doc, columns m0..m{k-1}) from
+    * an already-built (doc, hv) posting frame — shared so
     * [[minhashDuplicates]] can reuse ONE materialized posting scan for
     * banding and for the candidate-restricted verify. */
   private def signaturesOf(tok: DataFrame): DataFrame = {
@@ -1897,7 +1893,7 @@ object Dedup {
       // value)) is the same total order (most frequent value, ties to
       // smallest) as the former per-cluster max + join-back + min —
       // minus a join and a recompute of the vote table (the LPA
-      // struct-min collapse, measured 1.42× there in [[graft.LpaAb]])
+      // struct-min collapse, measured 1.42× there — SCALE.md round 14)
       val winner = base.where(col(a).isNotNull)
         .groupBy(col("cluster"), col(a))
         .agg(count(lit(1)).as("__c"))

@@ -71,7 +71,7 @@ object LinkGraph {
     // through the LogicalRDD, so each round's src-join re-shuffles
     // only the |nodes|-row rank frame, never the edge list
     // (interleaved same-JVM A/B at 1M nodes / 8M edges / 3 iters:
-    // 22.1 → 7.3 s, 3.0× — [[graft.PrAb]]; the edge re-shuffle per
+    // 22.1 → 7.3 s, 3.0× — SCALE.md round 14; the edge re-shuffle per
     // round was the dominant cost, not the extra join)
     val ed = e
       .join(e.groupBy(col("src")).agg(count(lit(1)).as("__deg"))
@@ -194,7 +194,7 @@ object LinkGraph {
       .distinct()
       // src-partitioned before the checkpoint so each relax round
       // re-shuffles only the reached set, never the edge list (the
-      // pageRank 3.0× lesson, graft.PrAb)
+      // pageRank 3.0× lesson, SCALE.md round 14)
       .repartition(col("src"))
       .localCheckpoint()
     val inGraph = e.select(col("src").as("node"))
@@ -326,7 +326,7 @@ object LinkGraph {
       .localCheckpoint()
     // one pre-partitioned copy per join orientation: the repartition-
     // then-localCheckpoint preserves HashPartitioning through the
-    // LogicalRDD ([[pageRank]]'s measured 3.0× lesson, graft.PrAb),
+    // LogicalRDD ([[pageRank]]'s measured 3.0× lesson, SCALE.md r14),
     // so each half-step re-shuffles only the ≤|nodes|-row score frame,
     // never the edge list
     val eSrc = e.repartition(col("src")).localCheckpoint()
@@ -391,7 +391,7 @@ object LinkGraph {
     * chain (one aggregate instead of two aggregates and a join, and
     * `votes` becomes single-consumer so the per-round materialization
     * barrier goes too; interleaved same-JVM A/B at 1M nodes / 8M
-    * edges / 2 iters: 30.2 → 21.2 s — [[graft.LpaAb]], separate-
+    * edges / 2 iters: 30.2 → 21.2 s — SCALE.md round 14, separate-
     * session medians were ±15% ambient and could not resolve it).
     * The neighbor join runs over a both-direction adjacency
     * built and hash-partitioned on the neighbor key ONCE before the

@@ -171,7 +171,7 @@ object PqIndex {
     * [[graft.functions.PqNative.distTable]] (which is what the search
     * paths run): m×k `aggregate(zip_with(slice…))` subtrees ≈ 3,900
     * analyzed expression nodes per plan, ~0.5–0.9 s of driver planning
-    * per action (measured r19, graft.PqTreeProbe / JobProbe) and
+    * per action (measured r19, OPTIMIZATION_r19.md §8) and
     * interpreted per-element lambdas at runtime. Kept ONLY for
     * PqNativeEquivalenceSpec, which holds the two byte-identical
     * through Spark — do not use on hot paths. */

@@ -63,7 +63,7 @@ object SemDeDup {
     * precisely so cells stay small — a mass this high means too few
     * cells or a skewed training sample, and silently paying Σ|cell|² is
     * the |corpus|² shape this operator exists to avoid. Raise it only
-    * deliberately (the [[graft.SemDedupScale]] worst-case measure does,
+    * deliberately (the worst-case measure in SCALE.md round 13 does,
     * with `Long.MaxValue`). */
   val DefaultMaxCellPairs: Long = 1L << 26
 

@@ -843,20 +843,6 @@ private[graft] object StoreSwap {
       sized.map { case (rel, len) => (rel.stripPrefix(dir + "/"), len) })
   }
 
-  /** The pre-round-17 explicit-multi-path read — kept ONLY as the A/B
-    * baseline for the scale harness (it pays the per-path driver
-    * constant [[readStoreDir]] exists to kill). */
-  private[graft] def readStoreDirExplicit(spark: SparkSession, path: String,
-                                          dir: String,
-                                          manifestFiles: Seq[String])
-  : DataFrame = {
-    val mine = manifestFiles.filter(_.startsWith(dir + "/"))
-      .map(f => s"$path/$f")
-    require(mine.nonEmpty,
-      s"readStoreDirExplicit: the store manifest at $path lists no $dir files")
-    spark.read.option("basePath", s"$path/$dir").parquet(mine: _*)
-  }
-
   /** Move every staged file under `tmpRoot` into the live `dir` under a
     * fresh `tag`-prefixed name (copy-on-write: nothing in the live tree
     * is deleted or overwritten), returning the moved files'

@@ -74,4 +74,20 @@ class ManifestRelationSpec extends SparkSpec {
     assert(df.schema("v").dataType == DoubleType)
     assert(df.select(sum(col("v"))).as[Double].head() == 2.0)
   }
+
+  test("schema cache holds at most 256 footers; evictSchemas drops a " +
+    "store's entries") {
+    val dir = freshDir()
+    // one job, one input partition per core, >= 300 rows each: every
+    // round-robin output partition is non-empty, so 300 files land
+    spark.range(3000).repartition(300).write.parquet(dir.toString)
+    val files = dir.listFiles().map(_.getName)
+      .filter(n => n.endsWith(".parquet") && !n.startsWith(".")).sorted
+    assert(files.length == 300)
+    files.foreach(f => ManifestRelation.dataSchemaOf(spark, dir.toString, f))
+    assert(ManifestRelation.schemaCacheSize == 256)
+    // the 256 survivors are the most recent puts, all under `dir`
+    ManifestRelation.evictSchemas(dir.toString)
+    assert(ManifestRelation.schemaCacheSize == 0)
+  }
 }
