@@ -67,10 +67,11 @@ object Bench {
         try q.stop() catch { case scala.util.control.NonFatal(_) => () })
       spark.sharedState.cacheManager.clearCache()
       // INVARIANT this blanket unpersist imposes on Queries: cross-query
-      // memos must hold durable FILES only (staged dirs, bucketed catalog
-      // tables, the parquet-backed incremental warehouse) — a memoized
-      // localCheckpoint frame would die on reuse with
-      // CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND once its blocks are freed here
+      // memos must hold durable FILES only — a memoized localCheckpoint
+      // frame would die on reuse with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND
+      // once its blocks are freed here. Queries.staged enforces it by
+      // type (it returns only a java.io.File); the bucketed catalog
+      // tables and the parquet-backed incremental warehouse keep it by hand
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
       org.apache.spark.sql.graftbridge.StateBridge.unloadAllStateStores()

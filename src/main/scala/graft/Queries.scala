@@ -1095,31 +1095,9 @@ object Queries {
   // late data to drop, so streaming == batch row-for-row.
   private val q58 = Q("q58_streaming_hourly",
     (s, d) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the file source streams a DIRECTORY (new files get picked up);
-      // stage the fixture file into one — once per JVM, always refreshed
-      // (an exists-check would silently stream a STALE copy after the
-      // fixture regenerates)
-      val dir = Queries.stagedEventsDir.computeIfAbsent(d, _ => {
-        val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_stream_${Queries.stagingSuffix(d)}")
-        f.mkdirs()
-        Queries.stageParquetCopy(s"$d/events.parquet", f, "events")
-        f
-      })
-      val rawSchema = s.read.parquet(dir.getAbsolutePath).schema
-      val ev = Tables.normalizeEventTs(
-        s.readStream.schema(rawSchema).parquet(dir.getAbsolutePath))
-      val sink = "graft_q58_sink"
-      Queries.withStreamingParallelism(s) {
-        graft.streaming.EventStreams.hourlyAgg(ev)
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      s.table(sink)
-        .select(date_format(col("hour"), "yyyy-MM-dd HH:mm:ss").as("hour"),
+      drainToMemory(s, "graft_q58_sink", "complete") {
+        graft.streaming.EventStreams.hourlyAgg(eventsStream(s, d))
+      }.select(date_format(col("hour"), "yyyy-MM-dd HH:mm:ss").as("hour"),
           col("event_type"), col("n"), col("total_value"))
     },
     Some("""SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour, event_type, COUNT(*) AS n,
@@ -1134,26 +1112,16 @@ object Queries {
   // exact; production picks a horizon = its re-delivery window.
   private val q71 = Q("q71_streaming_dedup",
     (s, d) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_stream_dup_${Queries.stagingSuffix(d)}")
-      f.mkdirs()
-      Seq("a", "b").foreach(n =>
-        Queries.stageParquetCopy(s"$d/events.parquet", f, s"events_$n"))
-      val rawSchema = s.read.parquet(f.getAbsolutePath).schema
-      val ev = Tables.normalizeEventTs(
-        s.readStream.schema(rawSchema).parquet(f.getAbsolutePath))
-      val sink = "graft_q71_sink"
-      Queries.withStreamingParallelism(s) {
+      val dir = staged("stream_dup", d) { f =>
+        Seq("a", "b").foreach(n =>
+          stageParquetCopy(s"$d/events.parquet", f, s"events_$n"))
+      }
+      val ev = Tables.readEventsStream(s, dir.getAbsolutePath)
+      drainToMemory(s, "graft_q71_sink", "complete") {
         graft.streaming.EventStreams
           .dedupedEvents(ev, watermarkHorizon = "87600 hours")
           .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
       }
-      s.table(sink)
     },
     Some("SELECT event_type, COUNT(*) AS n FROM events GROUP BY event_type"))
 
@@ -1164,32 +1132,15 @@ object Queries {
   private val q65 = Q("q65_streaming_sessions",
     (s, d) => {
       import s.implicits._
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val dir = Queries.stagedEventsDir.computeIfAbsent(d, _ => {
-        val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_stream_${Queries.stagingSuffix(d)}")
-        f.mkdirs()
-        Queries.stageParquetCopy(s"$d/events.parquet", f, "events")
-        f
-      })
-      val rawSchema = s.read.parquet(dir.getAbsolutePath).schema
-      val ev = Tables.normalizeEventTs(
-          s.readStream.schema(rawSchema).parquet(dir.getAbsolutePath))
+      val ev = eventsStream(s, d)
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"))
         .as[graft.streaming.EventStreams.Event]
-      val sink = "graft_q65_sink"
-      Queries.withStreamingParallelism(s) {
-        graft.streaming.EventStreams.sessionize(ev, gapMinutes = 30)
-          .toDF()
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("update")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
       // one drained batch → one (final) row per user; the max-agg keeps
       // the reduction robust if the source ever arrives as several files
-      s.table(sink).groupBy(col("user_id"))
+      drainToMemory(s, "graft_q65_sink", "update") {
+        graft.streaming.EventStreams.sessionize(ev, gapMinutes = 30).toDF()
+      }.groupBy(col("user_id"))
         .agg(max(col("n_sessions")).as("n_sessions"),
           max(col("n_events")).as("n_events"))
     },
@@ -1310,13 +1261,10 @@ object Queries {
   // the JSON escape round trip, every row parses (n_bad = 0).
   private val q91 = Q("q91_jsonl_ingest",
     (s, d) => {
-      val dir = Queries.stagedJsonlDir.computeIfAbsent(d, _ => {
-        val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_jsonl_${Queries.stagingSuffix(d)}")
+      val dir = staged("jsonl", d) { f =>
         documents(s, d).write.mode("overwrite")
           .option("compression", "gzip").json(f.getAbsolutePath)
-        f
-      })
+      }
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("doc_id", LongType),
         org.apache.spark.sql.types.StructField("text", StringType),
@@ -1390,12 +1338,39 @@ object Queries {
     * maps distinct paths together ('/a/b', '/a_b', '/a.b' all become
     * '_a_b'), which would recreate the cross-corpus staging overwrite
     * this exists to eliminate; the sha-256 prefix separates them. */
-  private def stagingSuffix(d: String): String = {
+  private[graft] def stagingSuffix(d: String): String = {
     // alnum+underscore only: the suffix also names Spark SQL TABLES
     // (bucketedTables), where dots/dashes are invalid identifiers
     val digest = java.security.MessageDigest.getInstance("SHA-256")
       .digest(d.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
     d.replaceAll("[^A-Za-z0-9]", "_") + "_" + digest
+  }
+
+  private val stagedDirs =
+    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
+
+  /** The fixture directory `tmpdir/graft_<tag>_<stagingSuffix(d)>`, filled
+    * by `build` once per JVM per `(tag, d)` (the memo is keyed by the
+    * directory itself). The directory is ALWAYS deleted and recreated
+    * before `build` runs: a leftover from an earlier JVM would leak into
+    * this run — a stale copy doubles a stream's source, and a leftover
+    * versioned store makes this run's save commit v4+, shifting every
+    * manifest version a query pins. A `build` that throws leaves no memo
+    * entry, so the next call builds again.
+    *
+    * Only the File is memoized, never a frame: the bench sweep unpersists
+    * every persistent RDD between queries, so a cross-query memo may hold
+    * durable files only. */
+  private[graft] def staged(tag: String, d: String)(
+      build: java.io.File => Unit): java.io.File = {
+    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
+      s"graft_${tag}_${stagingSuffix(d)}")
+    stagedDirs.computeIfAbsent(dir.getPath, _ => {
+      org.apache.commons.io.FileUtils.deleteDirectory(dir)
+      dir.mkdirs()
+      build(dir)
+      dir
+    })
   }
 
   /** Every stateful streaming op runs one state-store instance per
@@ -1416,11 +1391,60 @@ object Queries {
     } finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
-  private val stagedOrcDir =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
+  /** Drain the streaming frame `df` into the memory sink `sink` with one
+    * AvailableNow run (see [[withStreamingParallelism]]); the drained
+    * table. `df` is by-name so it is built under the pinned parallelism. */
+  private[graft] def drainToMemory(s: SparkSession, sink: String,
+                                   mode: String)(df: => DataFrame): DataFrame = {
+    withStreamingParallelism(s) {
+      df.writeStream.format("memory").queryName(sink).outputMode(mode)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+    }
+    s.table(sink)
+  }
 
-  private val stagedExcelDir =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
+  /** The events table as a file stream: the source streams a DIRECTORY
+    * (new files get picked up), so the fixture file is staged into one
+    * once per JVM, then read like [[Tables.events]]. */
+  private[graft] def eventsStream(s: SparkSession, d: String): DataFrame =
+    Tables.readEventsStream(s, staged("stream", d) { f =>
+      stageParquetCopy(s"$d/events.parquet", f, "events")
+    }.getAbsolutePath)
+
+  /** Write `df` as ONE parquet part-file named `name.parquet` in `dir`
+    * with a forced modification time — the file-stream staging for
+    * multi-batch gates: `maxFilesPerTrigger=1` + strictly increasing
+    * modTimes pin the BATCH ORDER (FileStreamSource admits oldest
+    * first), which is what makes watermark-advance/evict/re-deliver
+    * scenarios deterministic. */
+  private[graft] def stageStreamFile(df: DataFrame, dir: java.io.File,
+                                     name: String, modTime: Long): Unit = {
+    val tmp = new java.io.File(dir, s".stage_$name")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp.getAbsolutePath)
+    val part = tmp.listFiles().filter(_.getName.endsWith(".parquet"))
+    require(part.length == 1, s"stageStreamFile: ${part.length} parts")
+    val dst = new java.io.File(dir, s"$name.parquet")
+    java.nio.file.Files.move(part(0).toPath, dst.toPath,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    require(dst.setLastModified(modTime), s"stageStreamFile: modTime $dst")
+    org.apache.commons.io.FileUtils.deleteDirectory(tmp)
+  }
+
+  /** `df` staged into `in` as two pinned-order files — even `idCol`
+    * first (`a_even`), odd two seconds later (`b_odd`) — and read back
+    * as a stream admitting one file per micro-batch. */
+  private[graft] def evenOddStream(s: SparkSession, in: java.io.File,
+                                   df: DataFrame, idCol: String): DataFrame = {
+    in.mkdirs()
+    val t0 = System.currentTimeMillis()
+    stageStreamFile(df.where(col(idCol) % 2 === 0), in, "a_even", t0)
+    stageStreamFile(df.where(col(idCol) % 2 === 1), in, "b_odd", t0 + 2000)
+    val rawSchema = s.read.parquet(in.getAbsolutePath).schema
+    s.readStream.schema(rawSchema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(in.getAbsolutePath)
+  }
 
   /** Stage a deterministic orders subset as BOTH Excel formats (durable
     * files, sweep-safe): one inline-string .xlsx and one BIFF8 .xls,
@@ -1432,10 +1456,7 @@ object Queries {
     * deterministic (keys unique, ordered) and safely under the writer's
     * single-FAT-sector limit at any corpus size. */
   private def stagedExcel(s: SparkSession, d: String): java.io.File =
-    stagedExcelDir.computeIfAbsent(d, _ => {
-      val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_excel_${Queries.stagingSuffix(d)}")
-      dir.mkdirs()
+    staged("excel", d) { dir =>
       val rows = Tables.orders(s, d)
         .where(col("o_orderkey") % 997 === 0)
         .orderBy(col("o_orderkey"))
@@ -1452,35 +1473,13 @@ object Queries {
         new java.io.File(dir, "orders.xlsx").getAbsolutePath)
       graft.sources.ExcelFixture.writeXls(hdr, data,
         new java.io.File(dir, "orders.xls").getAbsolutePath)
-      dir
-    })
-
-  private val stagedJsonlDir =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
-
-  private val stagedLmDir =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
-
-  private val stagedIvfDir =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
-
-  private val stagedIvfAppendDir =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
-
-  private val stagedBm25Dir =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
-
-  private val stagedJsonlExportDir =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
-
-  private val stagedEventsDir =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
+    }
 
   /** Stage a parquet table into a streaming-source dir under `prefix`.
     * The driver fixtures are single files, but engine-written tables
     * (warehouse output, the sf1.0 scale corpus) are DIRECTORIES of part
     * files — copy whichever shape `src` is, flattened with stable names
-    * so re-staging overwrites instead of accumulating. */
+    * into a fresh [[staged]] directory. */
   private[graft] def stageParquetCopy(src: String, dstDir: java.io.File,
                                       prefix: String): Unit = {
     val s = new java.io.File(src)
@@ -1488,16 +1487,9 @@ object Queries {
       if (s.isDirectory)
         s.listFiles().filter(_.getName.endsWith(".parquet")).sortBy(_.getName).toSeq
       else Seq(s)
-    // drop any earlier staging under this prefix: a leftover copy (from a
-    // prior JVM or a different part count) would double the source
-    Option(dstDir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName == s"$prefix.parquet" ||
-        f.getName.startsWith(prefix + "_"))
-      .foreach(_.delete())
     parts.zipWithIndex.foreach { case (p, i) =>
       java.nio.file.Files.copy(p.toPath,
-        new java.io.File(dstDir, f"${prefix}_$i%04d.parquet").toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        new java.io.File(dstDir, f"${prefix}_$i%04d.parquet").toPath)
     }
   }
 
@@ -1513,7 +1505,9 @@ object Queries {
     * every cross-query memo must hold durable files only, because the
     * bench sweep unpersists all persistent RDDs between queries — a
     * memoized localCheckpoint frame would die on reuse with
-    * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (round-9 lesson). The in-memory
+    * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (round-9 lesson). [[staged]]
+    * enforces this by type (it memoizes only a java.io.File); this memo
+    * holds frames, so it keeps the rule by re-reading parquet. The in-memory
     * checkpoints below live only WITHIN this one-time build (batch 2
     * reads batch 1's state), then the result is dumped to parquet and
     * the memo references the re-read. */
@@ -1570,14 +1564,9 @@ object Queries {
     * the (possibly absent) catalog entry and the stale directory. */
   private def dropStaleTable(s: SparkSession, table: String): Unit = {
     s.sql(s"DROP TABLE IF EXISTS $table")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
-      f.delete()
-    }
     val wh = s.conf.get("spark.sql.warehouse.dir")
       .stripPrefix("file:")
-    val dir = new java.io.File(wh, table)
-    if (dir.exists()) rm(dir)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(wh, table))
   }
 
   private def bucketedTables(s: SparkSession, d: String): (String, String) =
@@ -2194,14 +2183,11 @@ object Queries {
   // identically to retraining (the cross-run reuse contract).
   private val q93 = Q("q93_lm_quality_saved",
     (s, d) => {
-      val dir = Queries.stagedLmDir.computeIfAbsent(d, _ => {
-        val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_lm_${Queries.stagingSuffix(d)}")
+      val dir = staged("lm", d) { f =>
         graft.operators.TrainingData
           .trainQualityLm(documents(s, d), "text", vocabSize = 2000, alpha = 0.5)
           .write.mode("overwrite").parquet(f.getAbsolutePath)
-        f
-      })
+      }
       graft.operators.TrainingData.lmQualityScore(
         documents(s, d), "doc_id", "text",
         s.read.parquet(dir.getAbsolutePath))
@@ -2216,13 +2202,10 @@ object Queries {
   // parity — layout and losslessness certified in one gate.
   private val q94 = Q("q94_jsonl_export",
     (s, d) => {
-      val dir = Queries.stagedJsonlExportDir.computeIfAbsent(d, _ => {
-        val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_jsonl_exp_${Queries.stagingSuffix(d)}")
+      val dir = staged("jsonl_exp", d) { f =>
         graft.sources.JsonlExport.write(documents(s, d), "doc_id",
           f.getAbsolutePath, numShards = 8)
-        f
-      })
+      }
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("doc_id", LongType),
         org.apache.spark.sql.types.StructField("text", StringType),
@@ -2447,29 +2430,13 @@ object Queries {
   // nothing and streaming == batch exactly.
   private val q102 = Q("q102_streaming_interval_join",
     (s, d) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val dir = Queries.stagedEventsDir.computeIfAbsent(d, _ => {
-        val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_stream_${Queries.stagingSuffix(d)}")
-        f.mkdirs()
-        Queries.stageParquetCopy(s"$d/events.parquet", f, "events")
-        f
-      })
-      val rawSchema = s.read.parquet(dir.getAbsolutePath).schema
-      def stream(): DataFrame = Tables.normalizeEventTs(
-        s.readStream.schema(rawSchema).parquet(dir.getAbsolutePath))
-      val views = stream().filter(col("event_type") === "view")
-      val purchases = stream().filter(col("event_type") === "purchase")
-      val sink = "graft_q102_sink"
-      Queries.withStreamingParallelism(s) {
+      val views = eventsStream(s, d).filter(col("event_type") === "view")
+      val purchases =
+        eventsStream(s, d).filter(col("event_type") === "purchase")
+      drainToMemory(s, "graft_q102_sink", "append") {
         graft.streaming.EventStreams
           .intervalJoin(views, purchases, horizon = "30 minutes")
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      s.table(sink).groupBy(col("effect_id").as("purchase_id"))
+      }.groupBy(col("effect_id").as("purchase_id"))
         .agg(count(lit(1)).as("n_views"),
           min(col("cause_id")).as("min_view_id"))
     },
@@ -2735,13 +2702,10 @@ object Queries {
     * order-independent — the right checksum for a shuffled read-back). */
   private val q107 = Q("q107_orc_roundtrip",
     (s, d) => {
-      val dir = Queries.stagedOrcDir.computeIfAbsent(d, _ => {
-        val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_orc_${Queries.stagingSuffix(d)}")
+      val dir = staged("orc", d) { f =>
         graft.sources.OrcStore.save(documents(s, d), f.getAbsolutePath,
           partitionCols = Seq("lang"))
-        f
-      })
+      }
       graft.sources.OrcStore.load(s, dir.getAbsolutePath)
         .where(col("lang") =!= "en")
         .withColumn("__k",
@@ -3227,15 +3191,12 @@ object Queries {
   private val q120 = Q("q120_ann_ivf_saved",
     (s, d) => {
       val emb = embeddings(s, d)
-      val dir = Queries.stagedIvfDir.computeIfAbsent(d, _ => {
-        val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_ivf_${Queries.stagingSuffix(d)}")
+      val dir = staged("ivf", d) { f =>
         val model = graft.operators.IvfIndex.train(emb, "vec_id", "embedding", k = 16)
         val index = graft.operators.IvfIndex
           .assign(emb, "vec_id", "embedding", model)
         graft.operators.IvfIndex.saveIndex(model, index, f.getAbsolutePath)
-        f
-      })
+      }
       val (model, postings) =
         graft.operators.IvfIndex.loadIndex(s, dir.getAbsolutePath)
       graft.operators.IvfIndex.search(postings,
@@ -3267,13 +3228,10 @@ object Queries {
     * score and fails the hash. */
   private val q121 = Q("q121_bm25_indexed",
     (s, d) => {
-      val dir = Queries.stagedBm25Dir.computeIfAbsent(d, _ => {
-        val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_bm25_${Queries.stagingSuffix(d)}")
+      val dir = staged("bm25", d) { f =>
         graft.operators.TextSearch.saveCorpusStats(
           documents(s, d), "doc_id", "text", f.getAbsolutePath)
-        f
-      })
+      }
       graft.operators.TextSearch.bm25TopKIndexed(
         documents(s, d), "doc_id", "text", dir.getAbsolutePath,
         Seq("spark", "vector", "join"), k = 20)
@@ -3364,13 +3322,10 @@ object Queries {
   private val q123 = Q("q123_bm25_batch_indexed",
     (s, d) => {
       import s.implicits._
-      val dir = Queries.stagedBm25Dir.computeIfAbsent(d, _ => {
-        val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_bm25_${Queries.stagingSuffix(d)}")
+      val dir = staged("bm25", d) { f =>
         graft.operators.TextSearch.saveCorpusStats(
           documents(s, d), "doc_id", "text", f.getAbsolutePath)
-        f
-      })
+      }
       val probes = Seq(
         (0L, Seq("spark", "vector", "join")),
         (1L, Seq("table", "join")),
@@ -4612,9 +4567,7 @@ object Queries {
   private val q146 = Q("q146_ann_ivf_append",
     (s, d) => {
       val emb = embeddings(s, d)
-      val dir = Queries.stagedIvfAppendDir.computeIfAbsent(d, _ => {
-        val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_ivf_append_${Queries.stagingSuffix(d)}")
+      val dir = staged("ivf_append", d) { f =>
         val half = emb.where(col("vec_id") % 2 === 0)
         val model = graft.operators.IvfIndex.train(half, "vec_id", "embedding", k = 16)
         graft.operators.IvfIndex.saveIndex(model,
@@ -4626,8 +4579,7 @@ object Queries {
         // save → append → COMPACT → load → search end-to-end (compaction
         // must be invisible to results)
         graft.operators.IvfIndex.compactPostings(s, f.getAbsolutePath)
-        f
-      })
+      }
       val (model, postings) =
         graft.operators.IvfIndex.loadIndex(s, dir.getAbsolutePath)
       graft.operators.IvfIndex.search(postings,
@@ -4924,9 +4876,6 @@ object Queries {
     graft.operators.TrainingData.trainBpeMergesFromCounts(counts, nMerges = 10)
   }
 
-  private val stagedBpeDir =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
-
   /** BPE tokenizer training end-to-end, oracle-gated: the distributed
     * trainer learns merges from the fixed corpus, persists them
     * (saveBpeMerges → loadBpeMerges), and the LOADED table encodes the
@@ -4938,16 +4887,13 @@ object Queries {
   private val q152 = Q("q152_bpe_train_encode",
     (s, d) => {
       import s.implicits._
-      val dir = Queries.stagedBpeDir.computeIfAbsent(d, _ => {
-        val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_bpe_${Queries.stagingSuffix(d)}")
+      val dir = staged("bpe", d) { f =>
         val corpusDf = BpeTrainCorpus.zipWithIndex
           .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
         val merges = graft.operators.TrainingData
           .trainBpeMerges(corpusDf, "text", nMerges = 10)
         graft.operators.TrainingData.saveBpeMerges(s, merges, f.getAbsolutePath)
-        f
-      })
+      }
       val merges = graft.operators.TrainingData
         .loadBpeMerges(s, dir.getAbsolutePath)
       val toks = graft.functions.BpeEncode.bpeEncode(
@@ -4961,34 +4907,6 @@ object Queries {
     },
     Some(bpeOracleSql(BpeTrainedMerges)))
 
-  private val stagedUrlStreamDir =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
-
-  private val stagedUrlWindowDir =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
-
-  /** Write `df` as ONE parquet part-file named `name.parquet` in `dir`
-    * with a forced modification time — the file-stream staging for
-    * multi-batch gates: `maxFilesPerTrigger=1` + strictly increasing
-    * modTimes pin the BATCH ORDER (FileStreamSource admits oldest
-    * first), which is what makes watermark-advance/evict/re-deliver
-    * scenarios deterministic. */
-  private[graft] def stageStreamFile(df: DataFrame, dir: java.io.File,
-                                     name: String, modTime: Long): Unit = {
-    val tmp = new java.io.File(dir, s".stage_$name")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.getAbsolutePath)
-    val part = tmp.listFiles().filter(_.getName.endsWith(".parquet"))
-    require(part.length == 1, s"stageStreamFile: ${part.length} parts")
-    val dst = new java.io.File(dir, s"$name.parquet")
-    java.nio.file.Files.move(part(0).toPath, dst.toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    require(dst.setLastModified(modTime), s"stageStreamFile: modTime $dst")
-    org.apache.commons.io.FileUtils.deleteDirectory(tmp)
-  }
-
-  private val stagedBm25AppendDir =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
-
   /** Incremental BM25 stats growth (q146's append shape applied to
     * retrieval, round-11 verdict #5): stats are SAVED from the even
     * half of the corpus only, the odd half arrives later via
@@ -5000,9 +4918,7 @@ object Queries {
     * score and fails the hash. */
   private val q153 = Q("q153_bm25_stats_append",
     (s, d) => {
-      val dir = Queries.stagedBm25AppendDir.computeIfAbsent(d, _ => {
-        val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_bm25_append_${Queries.stagingSuffix(d)}")
+      val dir = staged("bm25_append", d) { f =>
         graft.operators.TextSearch.saveCorpusStats(
           documents(s, d).where(col("doc_id") % 2 === 0), "doc_id", "text",
           f.getAbsolutePath)
@@ -5013,8 +4929,7 @@ object Queries {
         // save → append → COMPACT → indexed-score end-to-end (summed
         // reads must be identical before/after compaction)
         graft.operators.TextSearch.compactCorpusStats(s, f.getAbsolutePath)
-        f
-      })
+      }
       graft.operators.TextSearch.bm25TopKIndexed(
         documents(s, d), "doc_id", "text", dir.getAbsolutePath,
         Seq("spark", "vector", "join"), k = 20)
@@ -5331,9 +5246,6 @@ object Queries {
           ROUND(l2sq, 6) AS l2sq
         FROM r WHERE rank <= 5"""))
 
-  private val stagedPqDir =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
-
   /** Persisted PQ model (q120/q121's pattern for the PQ family): the
     * codebooks are SAVED once per corpus and parquet round-tripped; the
     * query encodes and ADC-searches with the LOADED model. Doubles
@@ -5343,13 +5255,10 @@ object Queries {
     * hash. */
   private val q161 = Q("q161_pq_persisted",
     (s, d) => {
-      val dir = Queries.stagedPqDir.computeIfAbsent(d, _ => {
-        val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_pq_${Queries.stagingSuffix(d)}")
+      val dir = staged("pq", d) { f =>
         graft.operators.PqIndex.saveModel(
           graft.operators.PqIndex.Model(PqCb), f.getAbsolutePath, s)
-        f
-      })
+      }
       val pq = graft.operators.PqIndex.loadModel(s, dir.getAbsolutePath)
       val emb = embeddings(s, d)
       val codes = graft.operators.PqIndex.encode(emb, "vec_id", "embedding", pq)
@@ -5415,24 +5324,15 @@ object Queries {
       // gates canonicalization + per-host dedup semantics, not
       // throughput — round-15 verdict Next #5: the drain fixtures were
       // ~6% of the bench for trigger machinery)
-      val f = Queries.stagedUrlStreamDir.computeIfAbsent(d, _ => {
-        val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_stream_url_${Queries.stagingSuffix(d)}")
+      val f = staged("stream_url", d) { dir =>
         documents(s, d).select(messyUrl.as("url")).dropDuplicates("url")
           .coalesce(1).write.mode("overwrite").parquet(dir.getAbsolutePath)
-        dir
-      })
+      }
       val rawSchema = s.read.parquet(f.getAbsolutePath).schema
       val docs = s.readStream.schema(rawSchema).parquet(f.getAbsolutePath)
-      val sink = "graft_q163_sink"
-      Queries.withStreamingParallelism(s) {
+      drainToMemory(s, "graft_q163_sink", "complete") {
         graft.streaming.UrlFrontier.frontierPerHost(docs, "url")
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
       }
-      s.table(sink)
     },
     Some("""WITH u AS (SELECT DISTINCT
           'site' || ((doc_id % 50) % 7) || '.example.com' AS host,
@@ -5466,11 +5366,7 @@ object Queries {
   private val q164 = Q("q164_streaming_frontier_eviction",
     (s, d) => {
       import s.implicits._
-      val f = Queries.stagedUrlWindowDir.computeIfAbsent(d, _ => {
-        val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_stream_urlw_${Queries.stagingSuffix(d)}")
-        org.apache.commons.io.FileUtils.deleteDirectory(dir)
-        dir.mkdirs()
+      val f = staged("stream_urlw", d) { dir =>
         val base = 1767225600L // 2026-01-01T00:00:00Z
         val far = base + 100L * 86400
         val g = col("doc_id") % 50
@@ -5501,22 +5397,15 @@ object Queries {
         Queries.stageStreamFile(tick(1), dir, "b_tick1", t0 + 2000)
         Queries.stageStreamFile(tick(2), dir, "c_tick2", t0 + 4000)
         Queries.stageStreamFile(redeliver, dir, "d_redeliver", t0 + 6000)
-        dir
-      })
+      }
       val rawSchema = s.read.parquet(f.getAbsolutePath).schema
       val urls = s.readStream.schema(rawSchema)
         .option("maxFilesPerTrigger", "1")
         .parquet(f.getAbsolutePath)
-      val sink = "graft_q164_sink"
-      Queries.withStreamingParallelism(s) {
+      drainToMemory(s, "graft_q164_sink", "complete") {
         graft.streaming.UrlFrontier
           .frontierPerHostWindowed(urls, "url", "arrival", "1 hour")
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
       }
-      s.table(sink)
     },
     Some("""WITH gs AS (SELECT DISTINCT (doc_id % 50) AS g FROM documents),
         e AS (SELECT 'site' || (g % 7) || '.example.com' AS host,
@@ -7329,27 +7218,9 @@ object Queries {
   // AvailableNow == the batch explode-into-4-windows oracle.
   private val q206 = Q("q206_streaming_sliding",
     (s, d) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val dir = Queries.stagedEventsDir.computeIfAbsent(d, _ => {
-        val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_stream_${Queries.stagingSuffix(d)}")
-        f.mkdirs()
-        Queries.stageParquetCopy(s"$d/events.parquet", f, "events")
-        f
-      })
-      val rawSchema = s.read.parquet(dir.getAbsolutePath).schema
-      val ev = Tables.normalizeEventTs(
-        s.readStream.schema(rawSchema).parquet(dir.getAbsolutePath))
-      val sink = "graft_q206_sink"
-      Queries.withStreamingParallelism(s) {
-        graft.streaming.EventStreams.slidingAgg(ev)
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      s.table(sink)
-        .select(date_format(col("w_start"), "yyyy-MM-dd HH:mm:ss")
+      drainToMemory(s, "graft_q206_sink", "complete") {
+        graft.streaming.EventStreams.slidingAgg(eventsStream(s, d))
+      }.select(date_format(col("w_start"), "yyyy-MM-dd HH:mm:ss")
           .as("w_start"), col("event_type"), col("n"), col("total_value"))
     },
     Some("""WITH w AS (SELECT event_type, value,
@@ -7624,29 +7495,12 @@ object Queries {
   // dimension and rolls up per segment; misses land in the NULL group.
   private val q216 = Q("q216_streaming_enrich",
     (s, d) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val dir = Queries.stagedEventsDir.computeIfAbsent(d, _ => {
-        val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_stream_${Queries.stagingSuffix(d)}")
-        f.mkdirs()
-        Queries.stageParquetCopy(s"$d/events.parquet", f, "events")
-        f
-      })
-      val rawSchema = s.read.parquet(dir.getAbsolutePath).schema
-      val ev = Tables.normalizeEventTs(
-        s.readStream.schema(rawSchema).parquet(dir.getAbsolutePath))
       val dim = customer(s, d)
         .select(col("c_custkey").as("user_id"), col("c_mktsegment"))
-      val sink = "graft_q216_sink"
-      Queries.withStreamingParallelism(s) {
+      drainToMemory(s, "graft_q216_sink", "complete") {
         graft.streaming.EventStreams
-          .enrichAgg(ev, dim, "user_id", "c_mktsegment")
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
+          .enrichAgg(eventsStream(s, d), dim, "user_id", "c_mktsegment")
       }
-      s.table(sink)
     },
     Some("""SELECT c_mktsegment, COUNT(*) AS n,
       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
@@ -7772,31 +7626,14 @@ object Queries {
   private val q222 = Q("q222_streaming_rate_limit",
     (s, d) => {
       import s.implicits._
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val dir = Queries.stagedEventsDir.computeIfAbsent(d, _ => {
-        val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_stream_${Queries.stagingSuffix(d)}")
-        f.mkdirs()
-        Queries.stageParquetCopy(s"$d/events.parquet", f, "events")
-        f
-      })
-      val rawSchema = s.read.parquet(dir.getAbsolutePath).schema
-      val ev = Tables.normalizeEventTs(
-          s.readStream.schema(rawSchema).parquet(dir.getAbsolutePath))
+      val ev = eventsStream(s, d)
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"))
         .as[graft.streaming.EventStreams.Event]
-      val sink = "graft_q222_sink"
-      Queries.withStreamingParallelism(s) {
+      drainToMemory(s, "graft_q222_sink", "update") {
         graft.streaming.EventStreams
-          .rateLimitPerKey(ev, windowMinutes = 60, maxPerWindow = 1L)
-          .toDF()
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("update")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      s.table(sink).select(col("event_id"), col("user_id"),
+          .rateLimitPerKey(ev, windowMinutes = 60, maxPerWindow = 1L).toDF()
+      }.select(col("event_id"), col("user_id"),
         date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss")
           .as("window_start"),
         col("slot"))
@@ -8096,9 +7933,6 @@ object Queries {
             OR (b.csim = a.csim AND b.vec_id < a.vec_id))
           AND list_dot_product(a.nv, b.nv) >= 0.35)"""))
 
-  private val stagedBm25PurgeDir =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
-
   /** BM25 stats purge — the takedown path (round-13 verdict missing
     * #1): stats are saved over the FULL corpus, every doc_id ≡ 0 mod 5
     * is then forgotten via [[graft.operators.TextSearch
@@ -8111,9 +7945,7 @@ object Queries {
     * filter). */
   private val q232 = Q("q232_bm25_stats_purge",
     (s, d) => {
-      val dir = Queries.stagedBm25PurgeDir.computeIfAbsent(d, _ => {
-        val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_bm25_purge_${Queries.stagingSuffix(d)}")
+      val dir = staged("bm25_purge", d) { f =>
         graft.operators.TextSearch.saveCorpusStats(
           documents(s, d), "doc_id", "text", f.getAbsolutePath)
         graft.operators.TextSearch.purgeCorpusStats(
@@ -8122,8 +7954,7 @@ object Queries {
         // fold the save + negative-purge partials — the gate covers
         // save → purge → COMPACT → indexed-score end-to-end
         graft.operators.TextSearch.compactCorpusStats(s, f.getAbsolutePath)
-        f
-      })
+      }
       graft.operators.TextSearch.bm25TopKIndexed(
         documents(s, d).where(col("doc_id") % 5 =!= 0), "doc_id", "text",
         dir.getAbsolutePath, Seq("spark", "vector", "join"), k = 20)
@@ -8156,9 +7987,6 @@ object Queries {
           / 1000000.0 AS score
       FROM c GROUP BY doc ORDER BY score DESC, doc LIMIT 20"""))
 
-  private val stagedIvfPurgeDir =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
-
   /** IVF index purge — q232's sibling for the ANN family: the index is
     * trained and saved over the FULL corpus, every vec_id ≡ 0 mod 7 is
     * then forgotten via [[graft.operators.IvfIndex.purgeFromIndex]]
@@ -8173,9 +8001,7 @@ object Queries {
   private val q233 = Q("q233_ann_ivf_purge",
     (s, d) => {
       val emb = embeddings(s, d)
-      val dir = Queries.stagedIvfPurgeDir.computeIfAbsent(d, _ => {
-        val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_ivf_purge_${Queries.stagingSuffix(d)}")
+      val dir = staged("ivf_purge", d) { f =>
         val model = graft.operators.IvfIndex.train(
           emb, "vec_id", "embedding", k = 16)
         graft.operators.IvfIndex.saveIndex(model,
@@ -8183,8 +8009,7 @@ object Queries {
           f.getAbsolutePath)
         graft.operators.IvfIndex.purgeFromIndex(s, f.getAbsolutePath,
           emb.where(col("vec_id") % 7 === 0).select(col("vec_id")), "vec_id")
-        f
-      })
+      }
       val (model, postings) =
         graft.operators.IvfIndex.loadIndex(s, dir.getAbsolutePath)
       graft.operators.IvfIndex.search(postings,
@@ -8204,9 +8029,6 @@ object Queries {
         SELECT q_id, CAST(rank AS INTEGER) AS rank, n_id, ROUND(cos, 6) AS cos
         FROM r WHERE rank <= 5"""))
 
-  private val stagedMinhashIncDir =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
-
   /** Incremental near-dup dedup against a persisted MinHash signature
     * store (round-13 verdict missing #2; q75's exact-store protocol
     * extended to Jaccard): the store is bootstrapped from the even half
@@ -8222,9 +8044,7 @@ object Queries {
     * band row, or a double-counted posting all fail the hash. */
   private val q234 = Q("q234_minhash_incremental",
     (s, d) => {
-      val dir = Queries.stagedMinhashIncDir.computeIfAbsent(d, _ => {
-        val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_minhash_inc_${Queries.stagingSuffix(d)}")
+      val dir = staged("minhash_inc", d) { f =>
         val docs = documents(s, d)
         val batch1 = docs.where(col("doc_id") % 2 === 0)
         val batch2 = docs.where(col("doc_id") % 2 === 1)
@@ -8237,8 +8057,7 @@ object Queries {
           bands = 4, ngram = 3)
         bootstrapPairs.unionAll(deltaPairs)
           .write.mode("overwrite").parquet(s"${f.getAbsolutePath}/pairs")
-        f
-      })
+      }
       s.read.parquet(s"${dir.getAbsolutePath}/pairs")
     },
     q114.oracle)
@@ -8283,9 +8102,6 @@ object Queries {
         TRUE AS cum_within_10pct
       FROM p"""))
 
-  private val stagedMinhashPurgeDir =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
-
   /** MinHash store purge + re-ingest (q234's store completed with the
     * takedown verb): the store is built over the FULL corpus, every
     * odd doc is then purged via [[graft.operators.Dedup
@@ -8300,9 +8116,7 @@ object Queries {
     * and a broken seen-probe returns nothing. */
   private val q237 = Q("q237_minhash_store_purge",
     (s, d) => {
-      val dir = Queries.stagedMinhashPurgeDir.computeIfAbsent(d, _ => {
-        val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_minhash_purge_${Queries.stagingSuffix(d)}")
+      val dir = staged("minhash_purge", d) { f =>
         val docs = documents(s, d)
         val store = s"${f.getAbsolutePath}/store"
         graft.operators.Dedup.saveMinhashStore(
@@ -8315,15 +8129,11 @@ object Queries {
           docs.where(col("doc_id") % 2 === 1), "doc_id", "text", store, 0.4,
           bands = 4, ngram = 3)
           .write.mode("overwrite").parquet(s"${f.getAbsolutePath}/pairs")
-        f
-      })
+      }
       s.read.parquet(s"${dir.getAbsolutePath}/pairs")
     },
     q114.oracle.map(sql =>
       s"SELECT * FROM ($sql) WHERE d1 % 2 = 1 OR d2 % 2 = 1"))
-
-  private val stagedDocStreamDir =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
 
   /** Continuous near-dup ingest (q234's store protocol driven through
     * Structured Streaming): the corpus arrives as two pinned-order
@@ -8338,35 +8148,19 @@ object Queries {
     * all fail the hash. */
   private val q238 = Q("q238_streaming_near_dup_ingest",
     (s, d) => {
-      val dir = Queries.stagedDocStreamDir.computeIfAbsent(d, _ => {
-        val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_doc_stream_${Queries.stagingSuffix(d)}")
-        org.apache.commons.io.FileUtils.deleteDirectory(f)
-        val in = new java.io.File(f, "in"); in.mkdirs()
+      val dir = staged("doc_stream", d) { f =>
         val docs = documents(s, d).select(col("doc_id"), col("text"))
-        val t0 = System.currentTimeMillis()
-        Queries.stageStreamFile(
-          docs.where(col("doc_id") % 2 === 0), in, "a_even", t0)
-        Queries.stageStreamFile(
-          docs.where(col("doc_id") % 2 === 1), in, "b_odd", t0 + 2000)
-        val rawSchema = s.read.parquet(in.getAbsolutePath).schema
-        val stream = s.readStream.schema(rawSchema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(in.getAbsolutePath)
+        val stream = evenOddStream(s, new java.io.File(f, "in"), docs, "doc_id")
         Queries.withStreamingParallelism(s) {
           graft.streaming.DocStreams.nearDupIngest(stream,
             "doc_id", "text", s"$f/store", s"$f/pairs", s"$f/ckpt",
             threshold = 0.4)
         }
-        f
-      })
+      }
       s.read.parquet(s"${dir.getAbsolutePath}/pairs")
         .select(col("d1"), col("d2"), col("jaccard"))
     },
     q114.oracle)
-
-  private val stagedIvfRebuildDir =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
 
   /** IVF rebuild-in-place (round-13 verdict missing #8 — q145's
     * embeddingDrift says WHEN centroids went stale; this is the
@@ -8382,17 +8176,14 @@ object Queries {
   private val q236 = Q("q236_ann_ivf_rebuild",
     (s, d) => {
       val emb = embeddings(s, d)
-      val dir = Queries.stagedIvfRebuildDir.computeIfAbsent(d, _ => {
-        val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_ivf_rebuild_${Queries.stagingSuffix(d)}")
+      val dir = staged("ivf_rebuild", d) { f =>
         val stale = graft.operators.IvfIndex.train(
           emb.where(col("vec_id") % 2 === 0), "vec_id", "embedding", k = 4)
         graft.operators.IvfIndex.saveIndex(stale,
           graft.operators.IvfIndex.assign(emb, "vec_id", "embedding", stale),
           f.getAbsolutePath)
         graft.operators.IvfIndex.rebuildIndex(s, f.getAbsolutePath, k = 16)
-        f
-      })
+      }
       val (model, postings) =
         graft.operators.IvfIndex.loadIndex(s, dir.getAbsolutePath)
       graft.operators.IvfIndex.search(postings,
@@ -8400,9 +8191,6 @@ object Queries {
         "vec_id", "embedding", model, k = 5, nProbe = 16)
     },
     q146.oracle)
-
-  private val stagedDerivePairsDir =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
 
   /** Store-only pair derivation (round-14 verdict missing #2 made
     * executable — [[graft.operators.Dedup.derivePairsFromStore]]): the
@@ -8419,9 +8207,7 @@ object Queries {
     * DocStreams' at-most-once pair log. */
   private val q239 = Q("q239_derive_pairs_from_store",
     (s, d) => {
-      val dir = Queries.stagedDerivePairsDir.computeIfAbsent(d, _ => {
-        val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_derive_pairs_${Queries.stagingSuffix(d)}")
+      val dir = staged("derive_pairs", d) { f =>
         val docs = documents(s, d)
         graft.operators.Dedup.saveMinhashStore(
           docs.where(col("doc_id") % 2 === 0), "doc_id", "text",
@@ -8429,15 +8215,11 @@ object Queries {
         graft.operators.Dedup.minhashIncremental(
           docs.where(col("doc_id") % 2 === 1), "doc_id", "text",
           s"${f.getAbsolutePath}/store", 0.4, bands = 4, ngram = 3).count()
-        f
-      })
+      }
       graft.operators.Dedup.derivePairsFromStore(s,
         s"${dir.getAbsolutePath}/store", 0.4)
     },
     q114.oracle)
-
-  private val stagedBm25StreamDir =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
 
   /** Streaming BM25 stats ingest (q153's save → append → indexed-search
     * protocol driven through Structured Streaming — the round-14
@@ -8452,35 +8234,19 @@ object Queries {
     * hash. */
   private val q240 = Q("q240_bm25_streaming_ingest",
     (s, d) => {
-      val dir = Queries.stagedBm25StreamDir.computeIfAbsent(d, _ => {
-        val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_bm25_stream_${Queries.stagingSuffix(d)}")
-        org.apache.commons.io.FileUtils.deleteDirectory(f)
-        val in = new java.io.File(f, "in"); in.mkdirs()
+      val dir = staged("bm25_stream", d) { f =>
         val docs = documents(s, d).select(col("doc_id"), col("text"))
-        val t0 = System.currentTimeMillis()
-        Queries.stageStreamFile(
-          docs.where(col("doc_id") % 2 === 0), in, "a_even", t0)
-        Queries.stageStreamFile(
-          docs.where(col("doc_id") % 2 === 1), in, "b_odd", t0 + 2000)
-        val rawSchema = s.read.parquet(in.getAbsolutePath).schema
-        val stream = s.readStream.schema(rawSchema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(in.getAbsolutePath)
+        val stream = evenOddStream(s, new java.io.File(f, "in"), docs, "doc_id")
         Queries.withStreamingParallelism(s) {
           graft.streaming.ArtifactStreams.bm25StatsIngest(stream,
             "doc_id", "text", s"$f/stats", s"$f/ckpt")
         }
-        f
-      })
+      }
       graft.operators.TextSearch.bm25TopKIndexed(
         documents(s, d), "doc_id", "text", s"${dir.getAbsolutePath}/stats",
         Seq("spark", "vector", "join"), k = 20)
     },
     q116.oracle)
-
-  private val stagedIvfStreamDir =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
 
   /** Streaming IVF index ingest (q146's save → append → search protocol
     * driven through Structured Streaming): the embedding corpus arrives
@@ -8496,26 +8262,13 @@ object Queries {
   private val q241 = Q("q241_ann_ivf_streaming_ingest",
     (s, d) => {
       val emb = embeddings(s, d)
-      val dir = Queries.stagedIvfStreamDir.computeIfAbsent(d, _ => {
-        val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_ivf_stream_${Queries.stagingSuffix(d)}")
-        org.apache.commons.io.FileUtils.deleteDirectory(f)
-        val in = new java.io.File(f, "in"); in.mkdirs()
-        val t0 = System.currentTimeMillis()
-        Queries.stageStreamFile(
-          emb.where(col("vec_id") % 2 === 0), in, "a_even", t0)
-        Queries.stageStreamFile(
-          emb.where(col("vec_id") % 2 === 1), in, "b_odd", t0 + 2000)
-        val rawSchema = s.read.parquet(in.getAbsolutePath).schema
-        val stream = s.readStream.schema(rawSchema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(in.getAbsolutePath)
+      val dir = staged("ivf_stream", d) { f =>
+        val stream = evenOddStream(s, new java.io.File(f, "in"), emb, "vec_id")
         Queries.withStreamingParallelism(s) {
           graft.streaming.ArtifactStreams.ivfIngest(stream,
             "vec_id", "embedding", s"$f/index", s"$f/ckpt", k = 16)
         }
-        f
-      })
+      }
       val (model, postings) = graft.operators.IvfIndex.loadIndex(
         s, s"${dir.getAbsolutePath}/index")
       graft.operators.IvfIndex.search(postings,
@@ -8523,9 +8276,6 @@ object Queries {
         "vec_id", "embedding", model, k = 5, nProbe = 16)
     },
     q146.oracle)
-
-  private val stagedStoreLifecycleDir =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
 
   /** Full MinHash-store lifecycle under the round-15 manifest design:
     * save (even half) → incremental ingest (odd half) → purge (every
@@ -8539,9 +8289,7 @@ object Queries {
     * fail the hash. */
   private val q242 = Q("q242_minhash_store_vacuum",
     (s, d) => {
-      val dir = Queries.stagedStoreLifecycleDir.computeIfAbsent(d, _ => {
-        val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_store_vacuum_${Queries.stagingSuffix(d)}")
+      val dir = staged("store_vacuum", d) { f =>
         val docs = documents(s, d)
         val store = s"${f.getAbsolutePath}/store"
         graft.operators.Dedup.saveMinhashStore(
@@ -8553,16 +8301,12 @@ object Queries {
           docs.where(col("doc_id") % 3 === 0).select(col("doc_id")),
           "doc_id")
         graft.operators.Dedup.vacuumMinhashStore(s, store)
-        f
-      })
+      }
       graft.operators.Dedup.derivePairsFromStore(s,
         s"${dir.getAbsolutePath}/store", 0.4)
     },
     q114.oracle.map(sql =>
       s"SELECT * FROM ($sql) WHERE d1 % 3 <> 0 AND d2 % 3 <> 0"))
-
-  private val stagedIvfLifecycleDir =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
 
   /** Full ANN-index lifecycle under the manifest design (q242's sibling
     * for the IVF family): a deliberately-stale 4-centroid index is
@@ -8578,9 +8322,7 @@ object Queries {
   private val q243 = Q("q243_ann_ivf_lifecycle",
     (s, d) => {
       val emb = embeddings(s, d)
-      val dir = Queries.stagedIvfLifecycleDir.computeIfAbsent(d, _ => {
-        val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_ivf_lifecycle_${Queries.stagingSuffix(d)}")
+      val dir = staged("ivf_lifecycle", d) { f =>
         val even = emb.where(col("vec_id") % 2 === 0)
         val stale = graft.operators.IvfIndex.train(
           even, "vec_id", "embedding", k = 4)
@@ -8592,8 +8334,7 @@ object Queries {
         graft.operators.IvfIndex.purgeFromIndex(s, f.getAbsolutePath,
           emb.where(col("vec_id") % 7 === 0).select(col("vec_id")), "vec_id")
         graft.operators.IvfIndex.rebuildIndex(s, f.getAbsolutePath, k = 16)
-        f
-      })
+      }
       val (model, postings) =
         graft.operators.IvfIndex.loadIndex(s, dir.getAbsolutePath)
       graft.operators.IvfIndex.search(postings,
@@ -8601,9 +8342,6 @@ object Queries {
         "vec_id", "embedding", model, k = 5, nProbe = 16)
     },
     q233.oracle)
-
-  private val stagedBm25LifecycleDir =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
 
   /** Full BM25-stats lifecycle (q242's sibling for the retrieval
     * family): stats bootstrap from the even half, the odd half appends
@@ -8615,9 +8353,7 @@ object Queries {
     * a torn flip changes a score and fails the hash. */
   private val q244 = Q("q244_bm25_stats_lifecycle",
     (s, d) => {
-      val dir = Queries.stagedBm25LifecycleDir.computeIfAbsent(d, _ => {
-        val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_bm25_lifecycle_${Queries.stagingSuffix(d)}")
+      val dir = staged("bm25_lifecycle", d) { f =>
         val docs = documents(s, d)
         graft.operators.TextSearch.saveCorpusStats(
           docs.where(col("doc_id") % 2 === 0), "doc_id", "text",
@@ -8629,16 +8365,12 @@ object Queries {
           docs.where(col("doc_id") % 5 === 0), "doc_id", "text",
           f.getAbsolutePath)
         graft.operators.TextSearch.compactCorpusStats(s, f.getAbsolutePath)
-        f
-      })
+      }
       graft.operators.TextSearch.bm25TopKIndexed(
         documents(s, d).where(col("doc_id") % 5 =!= 0), "doc_id", "text",
         dir.getAbsolutePath, Seq("spark", "vector", "join"), k = 20)
     },
     q232.oracle)
-
-  private val stagedMinhashAsOfDir =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
 
   /** Snapshot (time-travel) read of the MinHash store: the store runs
     * the full bootstrap → ingest → purge lifecycle, then the derive
@@ -8652,14 +8384,7 @@ object Queries {
     * change pairs and fail the hash. */
   private val q245 = Q("q245_minhash_time_travel",
     (s, d) => {
-      val dir = Queries.stagedMinhashAsOfDir.computeIfAbsent(d, _ => {
-        val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_minhash_asof_${Queries.stagingSuffix(d)}")
-        // the derive PINS manifest v2: a leftover store from a prior
-        // JVM would make this run's save commit v4+ (and the pinned v2
-        // would list files the overwrite-mode save deleted) — the
-        // protocol must start from nothing
-        org.apache.commons.io.FileUtils.deleteDirectory(f)
+      val dir = staged("minhash_asof", d) { f =>
         val docs = documents(s, d)
         val store = s"${f.getAbsolutePath}/store"
         graft.operators.Dedup.saveMinhashStore(
@@ -8670,15 +8395,11 @@ object Queries {
         graft.operators.Dedup.purgeMinhashStore(s, store,
           docs.where(col("doc_id") % 3 === 0).select(col("doc_id")),
           "doc_id") // v3
-        f
-      })
+      }
       graft.operators.Dedup.derivePairsFromStore(s,
         s"${dir.getAbsolutePath}/store", 0.4, asOfVersion = Some(2))
     },
     q114.oracle)
-
-  private val stagedBm25RaceDir =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
 
   /** Writer-side isolation through the verbs: two threads race
     * [[graft.operators.TextSearch.appendCorpusStats]] on one stats
@@ -8692,9 +8413,7 @@ object Queries {
     * all shift idf/N and fail the hash. */
   private val q246 = Q("q246_bm25_concurrent_ingest",
     (s, d) => {
-      val dir = Queries.stagedBm25RaceDir.computeIfAbsent(d, _ => {
-        val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_bm25_race_${Queries.stagingSuffix(d)}")
+      val dir = staged("bm25_race", d) { f =>
         val docs = documents(s, d)
         graft.operators.TextSearch.saveCorpusStats(
           docs.where(col("doc_id") % 4 === 0), "doc_id", "text",
@@ -8728,16 +8447,12 @@ object Queries {
         graft.operators.TextSearch.appendCorpusStats(
           docs.where(col("doc_id") % 4 === 3), "doc_id", "text",
           f.getAbsolutePath)
-        f
-      })
+      }
       graft.operators.TextSearch.bm25TopKIndexed(
         documents(s, d), "doc_id", "text", dir.getAbsolutePath,
         Seq("spark", "vector", "join"), k = 20)
     },
     q116.oracle)
-
-  private val stagedIvfAsOfDir =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
 
   /** Snapshot read of the IVF index (q245's sibling for the ANN
     * family): bootstrap on the even half (v1), append the odd half
@@ -8749,12 +8464,7 @@ object Queries {
   private val q247 = Q("q247_ann_ivf_time_travel",
     (s, d) => {
       val emb = embeddings(s, d)
-      val dir = Queries.stagedIvfAsOfDir.computeIfAbsent(d, _ => {
-        val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_ivf_asof_${Queries.stagingSuffix(d)}")
-        // the search PINS manifest v2 — start from nothing (see the
-        // q245 note; a leftover index shifts every version)
-        org.apache.commons.io.FileUtils.deleteDirectory(f)
+      val dir = staged("ivf_asof", d) { f =>
         val even = emb.where(col("vec_id") % 2 === 0)
         val model = graft.operators.IvfIndex.train(
           even, "vec_id", "embedding", k = 16)
@@ -8766,8 +8476,7 @@ object Queries {
         graft.operators.IvfIndex.purgeFromIndex(s, f.getAbsolutePath,
           emb.where(col("vec_id") % 7 === 0).select(col("vec_id")),
           "vec_id") // v3
-        f
-      })
+      }
       val (model, postings) = graft.operators.IvfIndex.loadIndex(
         s, dir.getAbsolutePath, asOfVersion = Some(2))
       graft.operators.IvfIndex.search(postings,
@@ -8808,9 +8517,6 @@ object Queries {
         SELECT q_id, CAST(rank AS INTEGER) AS rank, n_id, ROUND(cos, 6) AS cos
         FROM r WHERE rank <= 5"""))
 
-  private val stagedSemStoreDir =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
-
   /** Semantic-store lifecycle (the FOURTH persisted artifact family —
     * [[graft.operators.SemDeDup]]'s cluster-confined dominance behind
     * the same save/ingest/purge/vacuum verbs and manifest isolation as
@@ -8828,13 +8534,7 @@ object Queries {
   private val q249 = Q("q249_semantic_store_lifecycle",
     (s, d) => {
       def basis(i: Int) = Array.tabulate(64)(j => if (j == i) 1.0 else 0.0)
-      val dir = Queries.stagedSemStoreDir.computeIfAbsent(d, _ => {
-        val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_sem_store_${Queries.stagingSuffix(d)}")
-        // the output carries seq = manifest VERSION, and versions
-        // continue past any prior store at this path — a leftover from
-        // an earlier run would shift every seq and fail the oracle
-        org.apache.commons.io.FileUtils.deleteDirectory(f)
+      val dir = staged("sem_store", d) { f =>
         val e = embeddings(s, d)
         val m = graft.operators.IvfIndex.Model(
           Array(basis(0), basis(1), basis(2)))
@@ -8847,8 +8547,7 @@ object Queries {
         graft.operators.SemanticStore.purge(s, f.getAbsolutePath,
           e.where(col("vec_id") % 7 === 0).select(col("vec_id")),
           "vec_id") // v3
-        f
-      })
+      }
       graft.operators.SemanticStore.deriveSurvivors(s,
           dir.getAbsolutePath, tau = 0.35)
         .select(col("doc").as("vec_id"), col("cell"), col("seq"))
@@ -8876,9 +8575,6 @@ object Queries {
               OR (b.csim = a.csim AND b.vec_id < a.vec_id))))
           AND list_dot_product(a.nv, b.nv) >= 0.35)"""))
 
-  private val stagedSemStreamDir =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
-
   /** Streaming semantic ingest (q249's family driven through
     * Structured Streaming — the fourth row of the streaming ×
     * persisted-artifact matrix): the embedding corpus arrives as two
@@ -8893,29 +8589,16 @@ object Queries {
   private val q250 = Q("q250_semantic_streaming_ingest",
     (s, d) => {
       def basis(i: Int) = Array.tabulate(64)(j => if (j == i) 1.0 else 0.0)
-      val dir = Queries.stagedSemStreamDir.computeIfAbsent(d, _ => {
-        val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_sem_stream_${Queries.stagingSuffix(d)}")
-        org.apache.commons.io.FileUtils.deleteDirectory(f)
-        val in = new java.io.File(f, "in"); in.mkdirs()
+      val dir = staged("sem_stream", d) { f =>
         val e = embeddings(s, d).select(col("vec_id"), col("embedding"))
-        val t0 = System.currentTimeMillis()
-        Queries.stageStreamFile(
-          e.where(col("vec_id") % 2 === 0), in, "a_even", t0)
-        Queries.stageStreamFile(
-          e.where(col("vec_id") % 2 === 1), in, "b_odd", t0 + 2000)
-        val rawSchema = s.read.parquet(in.getAbsolutePath).schema
-        val stream = s.readStream.schema(rawSchema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(in.getAbsolutePath)
+        val stream = evenOddStream(s, new java.io.File(f, "in"), e, "vec_id")
         Queries.withStreamingParallelism(s) {
           graft.streaming.ArtifactStreams.semanticIngest(stream,
             "vec_id", "embedding", s"$f/store", s"$f/verdicts", s"$f/ckpt",
             tau = 0.35, model = Some(graft.operators.IvfIndex.Model(
               Array(basis(0), basis(1), basis(2)))))
         }
-        f
-      })
+      }
       s.read.parquet(s"${dir.getAbsolutePath}/verdicts")
         .select(col("doc").as("vec_id"), col("cell"), col("seq"),
           col("kept"))
@@ -9025,9 +8708,6 @@ object Queries {
         CAST(len(t.toks) - COALESCE(kept.nk, 0) AS BIGINT) AS n_redacted
       FROM t LEFT JOIN kept USING (doc_id)"""))
 
-  private val stagedEvalStoreDir =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
-
   /** Persisted decontamination suite (the eval-hash store lifecycle):
     * benchmark A (doc_id < 10) bootstraps the store, benchmark B
     * (10 ≤ doc_id < 20) appends under its own source partition, then A
@@ -9038,10 +8718,7 @@ object Queries {
     * change a row and fail the hash. */
   private val q253 = Q("q253_eval_hash_store",
     (s, d) => {
-      val dir = Queries.stagedEvalStoreDir.computeIfAbsent(d, _ => {
-        val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_eval_store_${Queries.stagingSuffix(d)}")
-        org.apache.commons.io.FileUtils.deleteDirectory(f)
+      val dir = staged("eval_store", d) { f =>
         val docs = documents(s, d)
         graft.operators.TrainingData.saveEvalHashStore(
           docs.where(col("doc_id") < 10), "doc_id", "text",
@@ -9051,8 +8728,7 @@ object Queries {
           "doc_id", "text", f.getAbsolutePath, "benchB") // v2
         graft.operators.TrainingData.purgeEvalSource(s,
           f.getAbsolutePath, "benchA") // v3
-        f
-      })
+      }
       graft.operators.TrainingData.redactAgainstStore(
         documents(s, d), "doc_id", "text", dir.getAbsolutePath)
     },
@@ -9082,9 +8758,6 @@ object Queries {
         CAST(len(t.toks) - COALESCE(kept.nk, 0) AS BIGINT) AS n_redacted
       FROM t LEFT JOIN kept USING (doc_id)"""))
 
-  private val stagedWhTtDir =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
-
   /** Whole-warehouse time travel (the reference-parity fact table on
     * the manifest protocol — the LAST store with reader-visible swap
     * windows, now converted): the even half bootstraps `fact_sales`
@@ -9106,12 +8779,7 @@ object Queries {
           col("o_orderdate").as("date_id"),
           col("l_partkey").as("product_id"),
           col("l_quantity").cast("int").as("units"))
-      val dir = Queries.stagedWhTtDir.computeIfAbsent(d, _ => {
-        val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_wh_tt_${Queries.stagingSuffix(d)}")
-        // the read PINS manifest v2 — start from nothing (see the q245
-        // note; a leftover warehouse shifts every version)
-        org.apache.commons.io.FileUtils.deleteDirectory(f)
+      val dir = staged("wh_tt", d) { f =>
         val fx = fact()
         graft.sources.WarehouseStore.saveFact(
           fx.where(col("fact_id") % 2 === 0), f.getAbsolutePath) // v1
@@ -9119,8 +8787,7 @@ object Queries {
           fx.where(col("fact_id") % 2 === 1), f.getAbsolutePath,
           org.apache.spark.sql.SaveMode.Append) // v2
         graft.sources.WarehouseStore.compactFact(s, f.getAbsolutePath) // v3
-        f
-      })
+      }
       def agg(df: DataFrame, tag: String): DataFrame =
         df.groupBy(col("p_year").cast("int").as("p_year"),
             col("p_month").cast("int").as("p_month"))
@@ -9143,9 +8810,6 @@ object Queries {
       UNION ALL
       SELECT p_year, p_month, n_rows, sum_units, 'latest' AS src FROM agg"""))
 
-  private val stagedRebucketDir =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
-
   /** Store re-bucketing (the layout-lifecycle completion): a MinHash
     * store deliberately saved with bucket counts its deltas have
     * OUTGROWN (2 band buckets — pruning can no longer win) runs the
@@ -9159,11 +8823,7 @@ object Queries {
     * mixing old and new layouts all change a row and fail the hash. */
   private val q255 = Q("q255_minhash_rebucket",
     (s, d) => {
-      val dir = Queries.stagedRebucketDir.computeIfAbsent(d, _ => {
-        val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_minhash_rebucket_${Queries.stagingSuffix(d)}")
-        // versioned protocol — start from nothing (see the q245 note)
-        org.apache.commons.io.FileUtils.deleteDirectory(f)
+      val dir = staged("minhash_rebucket", d) { f =>
         val docs = documents(s, d)
         val store = s"${f.getAbsolutePath}/store"
         graft.operators.Dedup.saveMinhashStore(
@@ -9175,15 +8835,11 @@ object Queries {
         graft.operators.Dedup.rebucketMinhashStore(s, store,
           storeBuckets = 64, bandBuckets = 64) // v3
         graft.operators.Dedup.vacuumMinhashStore(s, store)
-        f
-      })
+      }
       graft.operators.Dedup.derivePairsFromStore(s,
         s"${dir.getAbsolutePath}/store", 0.4)
     },
     q114.oracle)
-
-  private val stagedWhStreamDir =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
 
   /** Streaming warehouse fact ingest (q254's fact protocol driven
     * through Structured Streaming — the FIFTH family's streaming row):
@@ -9199,12 +8855,7 @@ object Queries {
     * byte-identity is additionally spec-gated in ArtifactStreamsSpec). */
   private val q256 = Q("q256_warehouse_streaming_ingest",
     (s, d) => {
-      val dir = Queries.stagedWhStreamDir.computeIfAbsent(d, _ => {
-        val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_wh_stream_${Queries.stagingSuffix(d)}")
-        // versioned protocol — start from nothing (see the q245 note)
-        org.apache.commons.io.FileUtils.deleteDirectory(f)
-        val in = new java.io.File(f, "in"); in.mkdirs()
+      val dir = staged("wh_stream", d) { f =>
         val fact = lineitem(s, d)
           .join(orders(s, d), col("l_orderkey") === col("o_orderkey"))
           .select(
@@ -9212,21 +8863,12 @@ object Queries {
             col("o_orderdate").as("date_id"),
             col("l_partkey").as("product_id"),
             col("l_quantity").cast("int").as("units"))
-        val t0 = System.currentTimeMillis()
-        Queries.stageStreamFile(
-          fact.where(col("fact_id") % 2 === 0), in, "a_even", t0)
-        Queries.stageStreamFile(
-          fact.where(col("fact_id") % 2 === 1), in, "b_odd", t0 + 2000)
-        val rawSchema = s.read.parquet(in.getAbsolutePath).schema
-        val stream = s.readStream.schema(rawSchema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(in.getAbsolutePath)
+        val stream = evenOddStream(s, new java.io.File(f, "in"), fact, "fact_id")
         Queries.withStreamingParallelism(s) {
           graft.streaming.ArtifactStreams.factIngest(stream,
             s"$f/wh", s"$f/ckpt")
         }
-        f
-      })
+      }
       graft.sources.WarehouseStore.loadFact(s, s"${dir.getAbsolutePath}/wh")
         .groupBy(col("p_year").cast("int").as("p_year"),
           col("p_month").cast("int").as("p_month"))

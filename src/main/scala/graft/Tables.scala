@@ -56,18 +56,27 @@ object Tables {
   def events(s: SparkSession, d: String): DataFrame = load(s, d, "events")
 
   private def eventsRaw(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    readNanosAsLong(s)
     normalizeEventTs(s.read.parquet(s"$d/events.parquet"))
   }
+
+  /** A directory of staged events-parquet copies as a file stream, with
+    * the batch schema and `ts` normalized like [[events]]. */
+  def readEventsStream(s: SparkSession, dir: String): DataFrame = {
+    readNanosAsLong(s)
+    normalizeEventTs(s.readStream.schema(s.read.parquet(dir).schema).parquet(dir))
+  }
+
+  private def readNanosAsLong(s: SparkSession): Unit =
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
   /** Normalize a raw events frame's `ts` to first-class TIMESTAMP across
     * the parquet physical types the fixture has shipped with: nanos read
     * as long (legacy flag), or TIMESTAMP(MICROS) without isAdjustedToUTC,
     * which Spark 4 reads as NTZ — watermarks and unix_micros require
     * TIMESTAMP. The session zone is pinned UTC, so the NTZ cast keeps the
-    * same instant DuckDB sees. Shared by the batch reader and every
-    * streaming query that re-reads the staged events fixture. */
-  def normalizeEventTs(raw: DataFrame): DataFrame =
+    * same instant DuckDB sees. Shared by the batch and stream readers. */
+  private def normalizeEventTs(raw: DataFrame): DataFrame =
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts",

@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -17,9 +18,13 @@ object Verify {
     def selected(name: String): Boolean =
       only.forall(o => o.exists(name.startsWith))
     SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
+      // clear first: a query that throws before its write starts must
+      // leave NO result, not the previous run's parquet for check.py
+      val out = new java.io.File(outDir, name)
+      org.apache.commons.io.FileUtils.deleteDirectory(out)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+        .parquet(out.getPath)
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
