@@ -101,9 +101,9 @@ object Queries {
       GROUP BY n_name"""))
 
   // SURVEY §2.5 W1: percent of grand total — window over the AGGREGATED
-  // frame (5 rows), one traversal. For high-cardinality group keys use
-  // Dashboard.shareOfTotalBroadcast over a materialized aggregate instead
-  // (see its scaladoc).
+  // frame (5 rows), one traversal. For high-cardinality group keys,
+  // cross-join a materialized aggregate with its broadcast single-row
+  // total instead (see Dashboard's grand-total note).
   private val q07 = Q("q07_pct_of_total",
     (s, d) => customer(s, d).groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n_cust"))

@@ -20,25 +20,14 @@ object Dashboard {
     * Two formulations, picked by group-key cardinality:
     *  - FEW groups (these dashboards): this window — ONE traversal of the
     *    expensive aggregate; the single-partition stage sees dozens of rows.
-    *  - MANY groups (per-product/per-customer shares): use
-    *    [[shareOfTotalBroadcast]] over a MATERIALIZED aggregate — the
+    *  - MANY groups (per-product/per-customer shares): cross-join a
+    *    MATERIALIZED aggregate with its broadcast single-row total — the
     *    window would serialize millions of group rows through one task,
     *    while a scalar agg + broadcast join stays parallel. (Unmaterialized
     *    input would be traversed twice — measured slower here: q43 2.7s ->
     *    3.6s when this was a broadcast over the live ETL pipeline.)
     */
   private val grandTotal = Window.partitionBy()
-
-  /** Share-of-total for HIGH-cardinality group keys: single-row total +
-    * broadcast nested-loop join. Input should be materialized (cached or
-    * a staging table) — it is traversed twice. */
-  def shareOfTotalBroadcast(agg: DataFrame, valueCol: String,
-                            outCol: String): DataFrame = {
-    val tot = agg.agg(sum(col(valueCol)).as("__total"))
-    agg.crossJoin(broadcast(tot))
-      .withColumn(outCol, round(col(valueCol) / col("__total") * 100, 2))
-      .drop("__total")
-  }
 
   /** A7+W1: units by state with % of grand total (executive overview). */
   def unitsByState(view: DataFrame): DataFrame = {

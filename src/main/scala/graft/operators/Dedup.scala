@@ -271,8 +271,7 @@ object Dedup {
     * Scale shape: every store read is pruned by the delta — the id
     * docs' own band rows come from the pb-pruned `bands/` scan, the
     * collision scan reads `bandidx/` pruned to the band buckets those
-    * keys touch (legacy stores without the projection fall back to the
-    * full `bands/` scan), and the verify's posting scan is pruned to
+    * keys touch, and the verify's posting scan is pruned to
     * the candidate docs' pb buckets. Bytes read scale with the DELTA
     * and its candidates, not the store. */
   def pairsForIds(spark: org.apache.spark.sql.SparkSession,
@@ -298,18 +297,13 @@ object Dedup {
     val idBands = pruneBuckets(storeBands, "pb", idPbs, pbN)
       .join(maybeBroadcast(idFrame), Seq("doc"), "left_semi")
       .select(col("doc"), col("band"), col("bucket")).localCheckpoint()
-    val hasBandIdx = fs.exists(
-      new org.apache.hadoop.fs.Path(s"$storePath/bandidx")) &&
-      mfFiles.exists(_.startsWith("bandidx/"))
+    val touched = idBands
+      .select(bandBucket(col("band"), col("bucket"), bbN).as("bb"))
+      .distinct().collect().map(_.getInt(0).toLong).sorted.toSeq
     val collisionSide =
-      if (hasBandIdx) {
-        val touched = idBands
-          .select(bandBucket(col("band"), col("bucket"), bbN).as("bb"))
-          .distinct().collect().map(_.getInt(0).toLong).sorted.toSeq
-        pruneBuckets(StoreSwap.readStoreDir(spark, storePath, "bandidx", mfFiles),
-          "bb", touched, bbN)
-          .select(col("doc"), col("band"), col("bucket"))
-      } else storeBands.select(col("doc"), col("band"), col("bucket"))
+      pruneBuckets(StoreSwap.readStoreDir(spark, storePath, "bandidx", mfFiles),
+        "bb", touched, bbN)
+        .select(col("doc"), col("band"), col("bucket"))
     val probe = idBands.select(col("band"), col("bucket"), col("doc").as("__p"))
     val pairs = collisionSide
       .join(maybeBroadcast(probe), Seq("band", "bucket"))
@@ -367,26 +361,24 @@ object Dedup {
   private def bandBucket(band: Column, bucket: Column, n: Int): Column =
     pmod(hash(band, bucket), lit(n))
 
-  /** Per-store bucket counts, persisted at save time in a tiny
-    * `_layout` file so every later verb routes with the SAME counts the
-    * data was written with. Bucket counts are the pruning lever at
-    * scale: partition pruning saves bytes only while a delta's key set
-    * is smaller than the bucket count (a 1M-doc backfill's ~4M band
-    * keys hit every one of 64 buckets — no layout can prune a probe
-    * that genuinely touches everything), so a 100 TB store is saved
-    * with counts sized to its DAILY DELTA, not to the store: a
-    * streaming micro-batch of ~1k docs against bandBuckets=65536
-    * touches ≤ 4k buckets ≈ 6% of the store. Defaults (64/64) suit the
-    * test scale; legacy stores without the file read as 64/64, which
-    * is what they were written with. */
-  /** Layout resolution is VERSIONED ([[StoreSwap.readLayoutAt]]'s
-    * floor rule at the manifest version being read): a pinned snapshot
-    * routes with the counts its files were written with even after
-    * [[rebucketMinhashStore]] changed them. */
+  /** Per-store bucket counts, persisted at save time as a VERSIONED
+    * layout ([[StoreSwap.readLayoutAt]]'s floor rule at the manifest
+    * version being read) so every later verb routes with the SAME
+    * counts the data was written with — a pinned snapshot routes with
+    * its files' counts even after [[rebucketMinhashStore]] changed
+    * them, and a store with no resolvable layout refuses. Bucket
+    * counts are the pruning lever at scale: partition pruning saves
+    * bytes only while a delta's key set is smaller than the bucket
+    * count (a 1M-doc backfill's ~4M band keys hit every one of 64
+    * buckets — no layout can prune a probe that genuinely touches
+    * everything), so a 100 TB store is saved with counts sized to its
+    * DAILY DELTA, not to the store: a streaming micro-batch of ~1k docs
+    * against bandBuckets=65536 touches ≤ 4k buckets ≈ 6% of the store.
+    * Defaults (64/64) suit the test scale. */
   private def storeLayout(fs: org.apache.hadoop.fs.FileSystem,
                           path: String, asOf: Int): (Int, Int) = {
-    val kv = StoreSwap.readLayoutAt(fs, path, Some(asOf))
-    (kv.getOrElse("pb", NStoreBuckets), kv.getOrElse("bb", NBandBuckets))
+    val kv = StoreSwap.readLayoutAt(fs, path, asOf)
+    (kv("pb"), kv("bb"))
   }
 
   /** Partition-prune a store scan to `touched` buckets (shared
@@ -561,13 +553,11 @@ object Dedup {
     * band-bucket-keyed `bandidx/` projection PARTITION-PRUNED to the
     * band buckets the delta's own keys touch ([[NBandBuckets]]; the
     * round-14 verdict's top item — the previous shape scanned the
-    * entire `bands/` dir every batch, linear in STORE size per delta),
-    * falling back to the full `bands/` scan only on a legacy store
-    * saved without the projection. Deltas past
-    * [[IvfIndex.MaxBroadcastQueries]] band rows fall back to shuffle
-    * joins of the store scans (loud in the plan, correct either way;
-    * split huge backfills into batches instead). Per-batch cost is
-    * O(scan(delta-touched buckets) + |delta| log |delta|).
+    * entire `bands/` dir every batch, linear in STORE size per delta).
+    * Deltas past [[IvfIndex.MaxBroadcastQueries]] band rows fall back
+    * to shuffle joins of the store scans (loud in the plan, correct
+    * either way; split huge backfills into batches instead). Per-batch
+    * cost is O(scan(delta-touched buckets) + |delta| log |delta|).
     *
     * Torn append: the batch's files land first, the manifest flip
     * makes them visible LAST — a crash anywhere before the flip leaves
@@ -588,12 +578,6 @@ object Dedup {
     require(storeToks.columns.toSet == Set("doc", "hv", "pb") &&
       storeBands.columns.toSet == Set("doc", "band", "bucket", "pb"),
       s"minhashIncremental: $storePath is not a saveMinhashStore layout")
-    // the projection is optional: deleting the bandidx/ dir downgrades
-    // the store to the full bands/ scan (manifest entries for a
-    // missing dir are ignored — the dir is the opt-in switch)
-    val hasBandIdx = fsInc.exists(
-      new org.apache.hadoop.fs.Path(s"$storePath/bandidx")) &&
-      mfFiles.exists(_.startsWith("bandidx/"))
     val (pbN, bbN) = storeLayout(fsInc, storePath, mfVersion)
     def maybeBroadcast(df: DataFrame): DataFrame =
       StoreSwap.maybeBroadcast(df)
@@ -616,8 +600,7 @@ object Dedup {
     // delta×store. The store side reads the band-keyed bandidx/
     // projection pruned to the ≤ NBandBuckets partitions the delta's
     // own band keys touch (PartitionFilters at the scan — bytes read
-    // scale with the DELTA, not the store); legacy stores without the
-    // projection fall back to the full bands/ scan, broadcast-probed.
+    // scale with the DELTA, not the store).
     val out = if (!computePairs) {
       // ingest-only path ([[graft.streaming.DocStreams.nearDupIngest]]):
       // the caller derives a replay-stable pair set from the store
@@ -628,16 +611,13 @@ object Dedup {
     val intra = candidatesOf(sigNew, bands)
     val bn = bandedNew.select(col("band"), col("bucket"),
       col("doc").as("__new_doc"))
-    val storeBandSide =
-      if (hasBandIdx) {
-        val touched = bandedNew
-          .select(bandBucket(col("band"), col("bucket"), bbN).as("bb"))
-          .distinct().collect().map(_.getInt(0).toLong).sorted.toSeq
-        pruneBuckets(StoreSwap.readStoreDir(spark, storePath, "bandidx", mfFiles),
-          "bb", touched, bbN)
-          .select(col("doc"), col("band"), col("bucket"))
-      } else storeBands.select(col("doc"), col("band"), col("bucket"))
-    val cross = storeBandSide
+    val touched = bandedNew
+      .select(bandBucket(col("band"), col("bucket"), bbN).as("bb"))
+      .distinct().collect().map(_.getInt(0).toLong).sorted.toSeq
+    val cross = pruneBuckets(
+        StoreSwap.readStoreDir(spark, storePath, "bandidx", mfFiles),
+        "bb", touched, bbN)
+      .select(col("doc"), col("band"), col("bucket"))
       .join(maybeBroadcast(bn), Seq("band", "bucket"))
       .select(least(col("doc"), col("__new_doc")).as("d1"),
         greatest(col("doc"), col("__new_doc")).as("d2"))
@@ -678,14 +658,12 @@ object Dedup {
         df.repartition(col(partCol))
           .write.mode("overwrite").partitionBy(partCol).parquet(root))
     val added =
-      (if (hasBandIdx)
-        stageAppend(bandedNew.withColumn("bb",
-          bandBucket(col("band"), col("bucket"), bbN)), "bb", "bandidx")
-      else Seq.empty) ++
-        stageAppend(bandedNew.withColumn("pb",
-          storeBucket(col("doc"), pbN)), "pb", "bands") ++
-        stageAppend(tokNew.withColumn("pb",
-          storeBucket(col("doc"), pbN)), "pb", "postings")
+      stageAppend(bandedNew.withColumn("bb",
+        bandBucket(col("band"), col("bucket"), bbN)), "bb", "bandidx") ++
+      stageAppend(bandedNew.withColumn("pb",
+        storeBucket(col("doc"), pbN)), "pb", "bands") ++
+      stageAppend(tokNew.withColumn("pb",
+        storeBucket(col("doc"), pbN)), "pb", "postings")
     // nothing new (fully-seen batch): skip the flip — idempotent
     // re-ingest leaves the manifest version untouched
     if (added.nonEmpty)
@@ -722,7 +700,6 @@ object Dedup {
   def purgeMinhashStore(spark: org.apache.spark.sql.SparkSession,
                         path: String, ids: DataFrame,
                         idCol: String): Long = {
-    import org.apache.hadoop.fs.Path
     val fs = StoreSwap.fsOf(spark, path)
     val (mfVersion, mfFiles) = requireManifest(fs, path, "purgeMinhashStore")
     val (pbN, bbN) = storeLayout(fs, path, mfVersion)
@@ -748,17 +725,13 @@ object Dedup {
     // of the pb-pruned bands rows that names the band buckets to
     // rewrite (the projection is band-partitioned, so ids alone cannot
     // route it)
-    val hasBandIdx = fs.exists(new Path(s"$path/bandidx")) &&
-      mfFiles.exists(_.startsWith("bandidx/"))
     val bbs =
-      if (hasBandIdx)
-        pruneBuckets(StoreSwap.readStoreDir(spark, path, "bands", mfFiles), "pb",
-            pbs, pbN)
-          .join(broadcast(purgeKeys),
-            col("doc").cast("string") === col("__purge_id"), "left_semi")
-          .select(bandBucket(col("band"), col("bucket"), bbN).as("bb"))
-          .distinct().collect().map(_.getInt(0).toLong).sorted.toSeq
-      else Seq.empty[Long]
+      pruneBuckets(StoreSwap.readStoreDir(spark, path, "bands", mfFiles), "pb",
+          pbs, pbN)
+        .join(broadcast(purgeKeys),
+          col("doc").cast("string") === col("__purge_id"), "left_semi")
+        .select(bandBucket(col("band"), col("bucket"), bbN).as("bb"))
+        .distinct().collect().map(_.getInt(0).toLong).sorted.toSeq
     val tag = s"p${java.util.UUID.randomUUID().toString.take(8)}_"
     def rewriteDir(dir: String, partCol: String, parts: Seq[Long],
                    total: Int): Seq[String] =
@@ -771,8 +744,7 @@ object Dedup {
           .write.mode("overwrite").partitionBy(partCol)
           .parquet(root))
     val rewritten =
-      (if (bbs.nonEmpty) rewriteDir("bandidx", "bb", bbs, bbN)
-       else Seq.empty) ++
+      rewriteDir("bandidx", "bb", bbs, bbN) ++
         rewriteDir("bands", "pb", pbs, pbN) ++
         rewriteDir("postings", "pb", pbs, pbN)
     // ONE flip: every touched partition's old files unlist, the
@@ -828,10 +800,9 @@ object Dedup {
     * re-bucket still route with the old counts against the old files.
     * Content-preserving by construction: the directories are bags and
     * only the partition key changes (spec-gated byte-identical pairs;
-    * oracle-gated at q255). A store saved WITHOUT the `bandidx/`
-    * projection gains it here — re-bucketing doubles as the legacy
-    * upgrade path. Crash before the flip changes nothing visible;
-    * re-run is the recovery; the superseded layout is vacuum garbage.
+    * oracle-gated at q255). Crash before the flip changes nothing
+    * visible; re-run is the recovery; the superseded layout is vacuum
+    * garbage.
     * Offline maintenance like compact: run quiescent, then
     * [[vacuumMinhashStore]] on the retention schedule. */
   def rebucketMinhashStore(spark: org.apache.spark.sql.SparkSession,

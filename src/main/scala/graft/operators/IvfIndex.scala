@@ -169,7 +169,7 @@ object IvfIndex {
                                    verb: String): (Int, Seq[String]) =
     StoreSwap.latestManifest(fs, path)
       .getOrElse(throw new IllegalArgumentException(
-        s"$verb: $path is not a saveIndex layout (no index manifest)"))
+        s"$verb: $path is not a saveIndex layout (no store manifest)"))
 
   /** True iff `path` holds a committed index (a manifest exists — the
     * save's single commit point, so a torn bootstrap reads as absent
@@ -202,22 +202,18 @@ object IvfIndex {
     * stale index with queries of a different dimensionality fails loudly
     * per row in the `nearest_cells` kernel (checkDims), spec-gated.
     *
-    * Reads resolve through the index manifest when one exists (every
-    * index this module writes commits one) and fall back to plain
-    * directory reads on a legacy or hand-built layout. `asOfVersion`
+    * Reads resolve through the index manifest (every index this module
+    * writes commits one); a path without one refuses. `asOfVersion`
     * pins a retained older manifest — a snapshot read: copy-on-write
     * mutations leave every version's file-set intact until vacuum, so
     * e.g. the pre-purge index is searchable after the purge. */
   def loadIndex(spark: SparkSession, path: String,
                 asOfVersion: Option[Int] = None): (Model, DataFrame) = {
     val fs = StoreSwap.fsOf(spark, path)
-    val mf = asOfVersion
-      .map(v => Some(StoreSwap.manifestAt(fs, path, v)._2))
-      .getOrElse(StoreSwap.latestManifest(fs, path).map(_._2))
-    def dirDf(dir: String): DataFrame = mf match {
-      case Some(files) => StoreSwap.readStoreDir(spark, path, dir, files)
-      case None => spark.read.parquet(s"$path/$dir")
-    }
+    val (_, files) = asOfVersion.map(v => StoreSwap.manifestAt(fs, path, v))
+      .getOrElse(requireIndexManifest(fs, path, "loadIndex"))
+    def dirDf(dir: String): DataFrame =
+      StoreSwap.readStoreDir(spark, path, dir, files)
     val cents = dirDf("centroids")
       .select(col("cell").cast("int"), col("centroid").cast("array<double>"))
       .collect()

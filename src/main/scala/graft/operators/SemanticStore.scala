@@ -86,7 +86,7 @@ object SemanticStore {
   // with, even if a later save at this path chose different buckets
   private def layoutPbN(fs: org.apache.hadoop.fs.FileSystem,
                         path: String, asOf: Int): Int =
-    StoreSwap.readLayoutAt(fs, path, Some(asOf)).getOrElse("pb", NIdBuckets)
+    StoreSwap.readLayoutAt(fs, path, asOf)("pb")
 
   private def pruneParts(df: DataFrame, partCol: String,
                          touched: Seq[Long], total: Int): DataFrame =

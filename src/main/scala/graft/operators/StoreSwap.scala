@@ -28,9 +28,9 @@ import org.apache.spark.sql.functions._
   *  - **Sized entries** (`relpath<TAB>bytes`): the manifest records
   *    each file's length, so a manifest-resolved read builds its scan
   *    file-index from the manifest ALONE — zero per-file filesystem
-  *    calls ([[readStoreDir]] / `ManifestRelation`). Unsized (legacy
-  *    v1) entries fall back to ONE `listStatus` per directory, never
-  *    a stat per file.
+  *    calls ([[readStoreDir]] / `ManifestRelation`). Unsized entries
+  *    (no length known at commit) fall back to ONE `listStatus` per
+  *    directory, never a stat per file.
   *  - **Chunked segments**: past [[SegmentThreshold]] entries the
   *    file list lives in immutable `_mfseg/<id>` segment files and
   *    the manifest holds `#seg` references. A commit CARRIES every
@@ -88,7 +88,7 @@ private[graft] object StoreSwap {
     * RE-CREATED (a v1 manifest commit): a store deleted and rebuilt at
     * the same path in one driver session could otherwise serve stale
     * byte lengths (corrupting scan splits) or schemas when file names
-    * collide (deterministic names happen — adopted legacy layouts,
+    * collide (deterministic names happen — streaming batch tags,
     * externally written files). */
   private[graft] def clearPathCaches(path: String): Unit = {
     sizeCache.remove(path)
@@ -106,8 +106,8 @@ private[graft] object StoreSwap {
   }
 
   /** Resolve (relpath, bytes) for manifest entries: cache hits are free
-    * (populated at manifest parse and move-in time); misses batch to
-    * one listStatus per parent directory — the legacy-manifest path.
+    * (populated at manifest parse and move-in time); misses (unsized
+    * entries) batch to one listStatus per parent directory.
     * A file absent from its directory fails loudly at the terminal
     * getFileStatus (a vacuumed-under-reader or torn store). */
   def sizesFor(fs: FileSystem, path: String,
@@ -189,7 +189,7 @@ private[graft] object StoreSwap {
           if (es.nonEmpty && es.forall(e => newSet(e) && !covered(e))) {
             covered ++= es
             // recompute the prefix from the entries (already in hand):
-            // carried pre-r18 refs pick up a prefix on their next commit
+            // a carried prefix-less ref picks one up on this commit
             segLines += refLine(segRel, n, lcp(es.head, es.last))
           }
         }
@@ -247,13 +247,6 @@ private[graft] object StoreSwap {
     if (IvfIndex.fitsBroadcast(df, IvfIndex.MaxBroadcastQueries))
       broadcast(df) else df.hint("shuffle_hash")
 
-  /** `_layout` file: named bucket counts persisted at save time so
-    * every later verb routes with the SAME counts the data was
-    * written with. */
-  def writeLayout(fs: FileSystem, path: String,
-                  counts: Seq[(String, Int)]): Unit =
-    writeLayoutFile(fs, new Path(s"$path/_layout"), counts)
-
   private def writeLayoutFile(fs: FileSystem, p: Path,
                               counts: Seq[(String, Int)]): Unit = {
     val out = fs.create(p, true)
@@ -261,11 +254,6 @@ private[graft] object StoreSwap {
       .mkString.getBytes("UTF-8"))
     finally out.close()
   }
-
-  /** The `_layout` counts, empty when the file is absent (legacy
-    * stores) — callers apply their own per-key defaults. */
-  def readLayout(fs: FileSystem, path: String): Map[String, Int] =
-    readLayoutFile(fs, new Path(s"$path/_layout"))
 
   private def readLayoutFile(fs: FileSystem, p: Path): Map[String, Int] = {
     if (!fs.exists(p)) return Map.empty
@@ -278,15 +266,14 @@ private[graft] object StoreSwap {
 
   /** VERSIONED layout files — `_layout.v<N>`, committed alongside
     * manifest version N by any verb that sets or changes routing
-    * values (save, re-bucket). A plain unversioned `_layout` is a
-    * value's history erased: a pinned snapshot read would resolve the
-    * CURRENT bucket counts / window length against files written with
-    * the OLD ones and silently mis-route. Resolution is the floor
-    * rule — the highest layout version ≤ the manifest version being
-    * read (verbs between layout changes commit manifests without
-    * layout files) — falling back to the plain `_layout` for legacy
-    * stores. Save verbs keep writing the plain file too, so older
-    * readers and `ready()`-style probes are unaffected. */
+    * values (save, re-bucket), so every later verb routes with the
+    * SAME counts the data was written with. An unversioned layout
+    * would erase a value's history: a pinned snapshot read would
+    * resolve the CURRENT bucket counts / window length against files
+    * written with the OLD ones and silently mis-route. Resolution is
+    * the floor rule — the highest layout version ≤ the manifest
+    * version being read (verbs between layout changes commit
+    * manifests without layout files). */
   val LayoutPrefix = "_layout.v"
 
   def layoutVersions(fs: FileSystem, path: String): Seq[Int] = {
@@ -299,19 +286,17 @@ private[graft] object StoreSwap {
       .sorted
   }
 
-  /** Write the versioned layout (the history the floor rule reads)
-    * and mirror it to the plain `_layout` (legacy compatibility).
-    * Claim-or-verify on the versioned file: a re-run after a crash
-    * (same version, same counts) passes idempotently; a RACING writer
-    * with DIFFERENT counts fails loudly here, before its manifest
-    * claim, so a committed version's layout can never be another
-    * writer's counts. Called BEFORE [[commitManifest]] — a crash
-    * between the two leaves an orphan layout file no committed
-    * manifest resolves, and [[commitManifest]] REFUSES to let a
-    * layout-less verb claim that version number (the orphan counts
-    * would bind to old-count files and mis-route every pruned read);
-    * the remedy is re-running the crashed verb, or vacuuming the aged
-    * orphan away when quiescent.
+  /** Claim-or-verify the versioned layout `_layout.v<version>`: a
+    * re-run after a crash (same version, same counts) passes
+    * idempotently; a RACING writer with DIFFERENT counts fails loudly
+    * here, before its manifest claim, so a committed version's layout
+    * can never be another writer's counts. Called BEFORE
+    * [[commitManifest]] — a crash between the two leaves an orphan
+    * layout file no committed manifest resolves, and [[commitManifest]]
+    * REFUSES to let a layout-less verb claim that version number (the
+    * orphan counts would bind to old-count files and mis-route every
+    * pruned read); the remedy is re-running the crashed verb, or
+    * vacuuming the aged orphan away when quiescent.
     *
     * Refuses when `_manifest.v<version>` ALREADY exists: the claim is
     * stale — a concurrent layout-less writer (an ingest) committed
@@ -370,92 +355,27 @@ private[graft] object StoreSwap {
             "nothing is committed, re-run the verb")
       } else created = true
     }
-    // First versioned claim over a LEGACY store whose plain `_layout`
-    // carries DIFFERENT values: back-fill those values as the floor
-    // layout of the oldest retained manifest, so pinned reads at
-    // legacy-era versions (which have no _layout.v* <= v) keep
-    // resolving the counts their files were written with instead of
-    // floor-falling to the NEW counts. NOT gated on `created`: a verb
-    // that crashed between its layout claim and this write re-runs
-    // with created=false and must still back-fill (the condition
-    // below — this version is the ONLY versioned layout and the
-    // mirror still carries the old values — is idempotent). Written
-    // atomically like every other layout file: a torn multi-key
-    // back-fill would parse as a silent partial.
-    {
-      val legacy = readLayout(fs, path)
-      if (legacy.nonEmpty && legacy != counts.toMap &&
-          layoutVersions(fs, path) == Seq(version))
-        manifestVersions(fs, path).headOption.filter(_ < version).foreach {
-          oldest =>
-            val bf = new Path(s"$path/$LayoutPrefix$oldest")
-            if (!fs.exists(bf)) {
-              val btmp = new Path(path, "._layout_tmp_" +
-                java.util.UUID.randomUUID().toString.take(8))
-              writeLayoutFile(fs, btmp, legacy.toSeq.sortBy(_._1))
-              if (fs.getScheme == "file") {
-                val raw = (p: Path) =>
-                  java.nio.file.Paths.get(p.toUri.getPath)
-                try java.nio.file.Files.createLink(raw(bf), raw(btmp))
-                catch {
-                  case _: java.nio.file.FileAlreadyExistsException => ()
-                }
-                fs.delete(btmp, false)
-              } else if (!fs.rename(btmp, bf)) {
-                fs.delete(btmp, false)
-                // an I/O fault here must be LOUD: continuing would
-                // rewrite the plain mirror to the new counts, erasing
-                // the re-run condition — the back-fill would never
-                // happen and legacy-era pinned reads would silently
-                // mis-route forever (another claimant having landed
-                // the identical file is the only benign case)
-                if (!fs.exists(bf)) throw new java.io.IOException(
-                  s"commitLayout: legacy back-fill rename to $bf failed " +
-                    "and the destination does not exist — an I/O fault; " +
-                    "nothing is committed, re-run the verb")
-              }
-            }
-        }
-    }
-    // plain mirror via tmp+atomic-replace: an in-place truncate+write
-    // would let a concurrent legacy reader observe an empty/partial
-    // file and silently fall back to defaults. On the file scheme the
-    // tmp is written raw (no Hadoop .crc sidecar) and any stale
-    // `._layout.crc` from a prior fs.create is dropped first —
-    // rename(2) replacing the data under a kept sidecar would fail
-    // every later checksummed read.
-    val mirror = new Path(s"$path/_layout")
-    if (fs.getScheme == "file") {
-      val dir = java.nio.file.Paths.get(new Path(path).toUri.getPath)
-      val nioTmp = java.nio.file.Files.createTempFile(dir, "._layout_tmp_", "")
-      java.nio.file.Files.write(nioTmp,
-        counts.map { case (k, v) => s"$k=$v\n" }.mkString.getBytes("UTF-8"))
-      java.nio.file.Files.deleteIfExists(dir.resolve("._layout.crc"))
-      java.nio.file.Files.move(nioTmp, dir.resolve("_layout"),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    } else {
-      val mtmp = new Path(path,
-        s"._layout_tmp_${java.util.UUID.randomUUID().toString.take(8)}")
-      writeLayoutFile(fs, mtmp, counts)
-      org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, fs.getConf)
-        .rename(mtmp, mirror, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    }
     created
   }
 
-  /** The layout in effect at manifest version `asOf` (None = latest):
-    * floor rule over the versioned files, plain-`_layout` fallback. */
-  def readLayoutAt(fs: FileSystem, path: String,
-                   asOf: Option[Int]): Map[String, Int] = {
-    val vs = layoutVersions(fs, path)
-    val pick = asOf match {
-      case Some(v) => vs.filter(_ <= v).lastOption
-      case None    => vs.lastOption
-    }
-    pick.map(v => readLayoutFile(fs, new Path(s"$path/$LayoutPrefix$v")))
+  /** The floor layout at manifest version `asOf`, None when no
+    * `_layout.v<k>` with k ≤ `asOf` exists. */
+  private def layoutFloor(fs: FileSystem, path: String,
+                          asOf: Int): Option[Map[String, Int]] =
+    layoutVersions(fs, path).filter(_ <= asOf).lastOption
+      .map(v => readLayoutFile(fs, new Path(s"$path/$LayoutPrefix$v")))
       .filter(_.nonEmpty)
-      .getOrElse(readLayout(fs, path))
-  }
+
+  /** The layout in effect at manifest version `asOf`, by the floor
+    * rule. Refuses when none resolves: every layout-carrying save
+    * commits one with its manifest, so a store without one is torn or
+    * hand-built — routing it with default bucket counts would silently
+    * miss every pruned read. */
+  def readLayoutAt(fs: FileSystem, path: String, asOf: Int): Map[String, Int] =
+    layoutFloor(fs, path, asOf).getOrElse(throw new IllegalArgumentException(
+      s"$path has no $LayoutPrefix<k> with k <= $asOf (no store layout at " +
+        s"manifest v$asOf) — the store is torn or was not written by its " +
+        "save verb; re-save it"))
 
   def manifestVersions(fs: FileSystem, path: String): Seq[Int] = {
     val root = new Path(path)
@@ -542,9 +462,9 @@ private[graft] object StoreSwap {
     * segments partition locality, so a pruned fact read (one year of a
     * 100 TB table) expands O(year) entries instead of O(table) — the
     * driver-side analog of partition pruning, applied to the manifest
-    * itself. Falls back to expanding prefix-less (pre-r18) segment
-    * refs. `version` None = latest; Some pins a retained snapshot with
-    * [[manifestAt]]'s loud retention contract. */
+    * itself. A prefix-less ref (a chunk with no common prefix) is
+    * always expanded. `version` None = latest; Some pins a retained
+    * snapshot with [[manifestAt]]'s loud retention contract. */
   def manifestEntriesPruned(fs: FileSystem, path: String,
                             version: Option[Int], prefix: String,
                             verb: String): Seq[String] = {
@@ -724,7 +644,7 @@ private[graft] object StoreSwap {
     // a v1 commit means the path is being (re-)created as a store:
     // evict any caches a PRIOR store at this path populated, so a
     // deleted-and-rebuilt store with colliding deterministic file
-    // names (adopted legacy layouts, externally written files) can
+    // names (streaming batch tags, externally written files) can
     // never resolve stale sizes or schemas. Before the body build —
     // manifestBody consumes the size cache. Deliberate trade: the
     // eviction also drops the sizes THIS verb's move-in just recorded,
@@ -750,9 +670,9 @@ private[graft] object StoreSwap {
       val layoutNote =
         if (!layoutCreated) ""
         else {
-          val mine = readLayoutAt(fs, path, Some(version))
+          val mine = layoutFloor(fs, path, version).getOrElse(Map.empty)
           fs.delete(new Path(s"$path/$LayoutPrefix$version"), false)
-          val floor = readLayoutAt(fs, path, Some(version))
+          val floor = layoutFloor(fs, path, version).getOrElse(Map.empty)
           if (mine == floor) ""
           else
             s" NOTE: this verb's layout claim $LayoutPrefix$version " +

@@ -176,7 +176,7 @@ object TextSearch {
                                    verb: String): (Int, Seq[String]) =
     StoreSwap.latestManifest(fs, path)
       .getOrElse(throw new IllegalArgumentException(
-        s"$verb: $path is not a saveCorpusStats layout (no stats manifest)"))
+        s"$verb: $path is not a saveCorpusStats layout (no store manifest)"))
 
   /** True iff `path` holds committed corpus stats (a manifest exists —
     * the save's single commit point, so a torn bootstrap reads as
@@ -428,21 +428,17 @@ object TextSearch {
     * frequencies. `corpus/` and `terms/` hold additive partials (one
     * per save/append), so both reads SUM — the terms read is still
     * pushdown-pruned to the query terms before the tiny aggregate.
-    * Reads resolve through the stats manifest when one exists (every
-    * stats layout this module writes commits one) and fall back to
-    * plain directory reads on a legacy or hand-built layout. */
+    * Reads resolve through the stats manifest (every stats layout this
+    * module writes commits one); a path without one refuses. */
   private def readStats(spark: org.apache.spark.sql.SparkSession,
-                        path: String, terms: Seq[String],
+                        path: String, terms: Seq[String], verb: String,
                         asOfVersion: Option[Int] = None)
   : (Long, Long, Map[String, Long]) = {
     val fs = StoreSwap.fsOf(spark, path)
-    val mf = asOfVersion
-      .map(v => Some(StoreSwap.manifestAt(fs, path, v)._2))
-      .getOrElse(StoreSwap.latestManifest(fs, path).map(_._2))
-    def dirDf(dir: String): DataFrame = mf match {
-      case Some(files) => StoreSwap.readStoreDir(spark, path, dir, files)
-      case None => spark.read.parquet(s"$path/$dir")
-    }
+    val (_, files) = asOfVersion.map(v => StoreSwap.manifestAt(fs, path, v))
+      .getOrElse(requireStatsManifest(fs, path, verb))
+    def dirDf(dir: String): DataFrame =
+      StoreSwap.readStoreDir(spark, path, dir, files)
     val cr = dirDf("corpus")
       .agg(coalesce(sum(col("n")), lit(0L)).as("n"),
         coalesce(sum(col("tl")), lit(0L)).as("tl")).collect()(0)
@@ -472,7 +468,8 @@ object TextSearch {
     require(terms.size <= 64,
       s"bm25TopKIndexed: ${terms.size} query terms — same cap as bm25TopK")
     require(k > 0, s"bm25TopKIndexed: k must be positive: $k")
-    val (n, tl, dfByTerm) = readStats(spark, statsPath, terms, asOfVersion)
+    val (n, tl, dfByTerm) = readStats(spark, statsPath, terms, "bm25TopKIndexed",
+      asOfVersion)
     require(n > 0, "bm25TopKIndexed: stats describe an empty corpus")
     val idf: Seq[Double] = terms.map { t =>
       val df = dfByTerm.getOrElse(t, 0L) // absent term: df 0, like bm25TopK
@@ -601,7 +598,8 @@ object TextSearch {
     require(k > 0, s"bm25TopKBatchIndexed: k must be positive: $k")
     val spark = docs.sparkSession
     val (normed, universe) = normalizeProbes(probes, probeIdCol, termsCol)
-    val (n, tl, dfByTerm) = readStats(spark, statsPath, universe)
+    val (n, tl, dfByTerm) = readStats(spark, statsPath, universe,
+      "bm25TopKBatchIndexed")
     require(n > 0, "bm25TopKBatchIndexed: stats describe an empty corpus")
     batchScore(docs, idCol, textCol, probes, probeIdCol,
       normed, universe, roundedIdf(universe, dfByTerm, n), n, tl, k)

@@ -1548,7 +1548,7 @@ object TrainingData {
   // wastes exactly the work this store persists once. Layout under
   // `path`: `hashes/` (h) PARTITIONED BY `src` (the benchmark name the
   // caller supplies), so retiring a benchmark is a pure manifest
-  // unlist — no rewrite, its files become vacuum garbage; `_layout`
+  // unlist — no rewrite, its files become vacuum garbage; `_layout.v<N>`
   // pins the window length L every verb must agree on (a store queried
   // at a different L would silently miss spans). Shares [[StoreSwap]]'s
   // manifest isolation: copy-on-write, ONE flip per verb, CAS commit,
@@ -1568,9 +1568,9 @@ object TrainingData {
     * minTokens. */
   private def evalStoreL(fs: org.apache.hadoop.fs.FileSystem,
                          path: String, asOf: Int, verb: String): Int =
-    StoreSwap.readLayoutAt(fs, path, Some(asOf)).getOrElse("L",
+    StoreSwap.readLayoutAt(fs, path, asOf).getOrElse("L",
       throw new IllegalArgumentException(
-        s"$verb: $path has no L in _layout — not an eval-hash store"))
+        s"$verb: $path has no L in its layout — not an eval-hash store"))
 
   /** Create the store from one benchmark: its distinct window hashes
     * land under `src=<source>`, the manifest flip is the commit point
@@ -1673,7 +1673,7 @@ object TrainingData {
   /** [[redactEvalSpans]] against the PERSISTED suite: the corpus is
     * scanned once, the store's hash set (union of live sources, read
     * through the manifest) rides the broadcast semi-join, and L comes
-    * from the store's `_layout` — the one the hashes were computed
+    * from the store's `_layout.v<N>` — the one the hashes were computed
     * with, so a caller can never probe at a mismatched window length.
     * `asOfVersion` pins a retained manifest (redact exactly as the
     * suite stood at a past version — reproducing a historical

@@ -147,31 +147,26 @@ object WarehouseStore {
     val spark = fact.sparkSession
     val fs = fsOf(spark, path)
     val prior = StoreSwap.latestManifest(fs, path)
-    // Append onto a manifest-less dir that already HOLDS fact files is
-    // a legacy (pre-manifest) warehouse: committing a v1 listing only
-    // this batch would silently unlist years of fact rows (and the
-    // next vacuum would delete them). Refuse loudly — the upgrade is
-    // an explicit full re-save. A torn FIRST append's own crash
-    // leftovers must NOT refuse (re-running is the documented
-    // recovery): this verb's files are move-in TAGGED
-    // ("<letter><8 hex>_…"), legacy layouts hold plain Spark part
-    // files, and only the latter block the append.
+    // Append onto a manifest-less dir that already HOLDS plain fact
+    // files (a legacy pre-manifest warehouse, or one written by another
+    // tool): committing a v1 listing only this batch would silently
+    // unlist them (and the next vacuum would delete them). Refuse
+    // loudly — the only upgrade is a full re-save. A torn FIRST
+    // append's own crash leftovers must NOT refuse (re-running is the
+    // documented recovery): this verb's files are move-in TAGGED —
+    // verb-unique ("<letter><8 hex>_") or a streaming batch tag
+    // ("b<id>x<lineage>_") — and only untagged files block the append.
     if (mode == SaveMode.Append && prior.isEmpty) {
-      // tagged = verb-unique ("<letter><8 hex>_") or a streaming
-      // batch tag ("b<id>x<lineage>_") — both are this store's own
-      // move-ins
-      val legacy = StoreSwap.listDirFiles(fs, path, "fact_sales")
+      val untagged = StoreSwap.listDirFiles(fs, path, "fact_sales")
         .filterNot(f => f.substring(f.lastIndexOf('/') + 1)
           .matches("^([a-z][0-9a-f]{8}|b[0-9]+x[0-9a-f]+)_.*"))
-      if (legacy.nonEmpty)
+      if (untagged.nonEmpty)
         throw new IllegalArgumentException(
           s"saveFact: $path/fact_sales holds untagged files but no " +
             "warehouse manifest — a legacy (pre-manifest) layout. " +
             "Appending would commit a manifest listing only this batch " +
-            "and orphan the existing data; adopt it in place with " +
-            "WarehouseStore.upgradeWarehouse (one manifest flip, no data " +
-            "rewrite) or re-save the full warehouse " +
-            s"(e.g. ${legacy.head})")
+            "and orphan the existing data; re-save the full warehouse " +
+            s"with WarehouseStore.save (e.g. ${untagged.head})")
     }
     // Schema-drift guard (the one silent-wrongness hole this family
     // had): an Append must carry the store's committed fact schema —
@@ -254,28 +249,6 @@ object WarehouseStore {
     }
   }
 
-  /** Adopt a LEGACY (pre-manifest) warehouse in place: commit a v1
-    * manifest listing the directory trees' existing files verbatim —
-    * ONE flip, no data rewrite. At 100 TB this is the difference
-    * between an upgrade that costs one metadata write and a full
-    * table re-save; after it, every manifest verb (saveFact Append,
-    * compactFact, vacuumWarehouse, asOfVersion reads) works against
-    * the adopted layout. Refuses when a manifest already exists (the
-    * store is already on the protocol) or when there is nothing to
-    * adopt. Single-writer like every mutation verb: don't run it
-    * while a legacy writer is still appending files. */
-  def upgradeWarehouse(spark: SparkSession, path: String): Unit = {
-    val fs = fsOf(spark, path)
-    require(StoreSwap.latestManifest(fs, path).isEmpty,
-      s"upgradeWarehouse: $path already has a committed warehouse " +
-        "manifest — it is already on the manifest protocol")
-    val files = AllDirs.flatMap(d => StoreSwap.listDirFiles(fs, path, d))
-    require(files.nonEmpty,
-      s"upgradeWarehouse: $path holds no warehouse files to adopt " +
-        s"(looked under ${AllDirs.mkString(", ")})")
-    StoreSwap.commitManifest(fs, path, 1, files)
-  }
-
   /** Bucketed catalog table: pre-shuffled on `keys` into `numBuckets` so
     * joins/aggregations on those keys skip the exchange entirely (the
     * "co-located join" layout for fact↔fact joins at scale, where neither
@@ -313,15 +286,10 @@ object WarehouseStore {
                   targetBytes: Long = 128L * 1024 * 1024,
                   years: Option[Seq[Int]] = None): Unit = {
     val fs = fsOf(spark, path)
-    // loud on a legacy/absent layout, mirroring saveFact: an operator
-    // compacting a pre-manifest warehouse must not get success-shaped
-    // silence while the small-file problem stays
-    val (mfVersion, mfFiles) = StoreSwap.latestManifest(fs, path)
-      .getOrElse(throw new IllegalArgumentException(
-        s"compactFact: $path is not a committed warehouse layout (no " +
-          "manifest) — adopt a legacy layout with " +
-          "WarehouseStore.upgradeWarehouse first, or write the store " +
-          "with WarehouseStore.save/saveFact"))
+    // loud on a manifest-less layout, mirroring saveFact: an operator
+    // compacting an unmanaged dir must not get success-shaped silence
+    // while the small-file problem stays
+    val (mfVersion, mfFiles) = requireWh(fs, path, "compactFact")
     def partDir(rel: String): String = {
       val i = rel.lastIndexOf('/')
       rel.substring(0, i)

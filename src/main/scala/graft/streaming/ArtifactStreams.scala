@@ -53,105 +53,55 @@ object ArtifactStreams {
   private[graft] def batchPrefix(spark: org.apache.spark.sql.SparkSession,
                                  batchId: Long,
                                  checkpointDir: String): String =
-    s"b${batchId}x${lineageInfo(spark, checkpointDir)._1}_"
+    s"b${batchId}x${lineageId(spark, checkpointDir)}_"
 
-  /** The un-lineaged `b<id>_` tag pre-lineage binaries wrote — ONLY
-    * for a checkpoint with evidence it predates the lineage feature
-    * (it had committed/attempted batches before its marker was
-    * created). A NEW checkpoint must never match or drop legacy tags:
-    * they could be another stream instance's committed batches in a
-    * shared store, and a blind `dropAppendPartials("b<N>_")` on batch
-    * N would DELETE that instance's data (or, via the
-    * [[onlyThisBatch]] match, silently re-bootstrap over a
-    * single-batch legacy store). */
-  private[graft] def legacyPrefix(spark: org.apache.spark.sql.SparkSession,
-                                  batchId: Long,
-                                  checkpointDir: String): Option[String] =
-    if (lineageInfo(spark, checkpointDir)._2) Some(s"b${batchId}_") else None
+  /** Per-JVM cache of resolved lineage ids: the marker is immutable
+    * once created (create-if-absent converges racing creators on the
+    * winner), and each micro-batch would otherwise pay an
+    * exists+open+read round-trip on it. A cache hit still costs ONE
+    * existence probe: a wiped-and-recreated checkpoint in the same
+    * driver must resolve a FRESH lineage (the hazard the instance id
+    * exists to prevent), so a vanished marker invalidates the entry. */
+  private val lineageCache =
+    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  /** (lineage id, legacy-eligible): the instance id persisted as
-    * `.graft_lineage` in the checkpoint dir, plus whether this
-    * checkpoint PREDATES the lineage feature — decided once, at marker
-    * creation (offsets already present = a pre-lineage binary ran
-    * batches here, whose partials carry un-lineaged tags a replay must
-    * still find), and persisted IN the marker (`legacy=0|1` second
-    * line) so the decision survives restarts. A bare one-line marker
-    * (written by the first lineage-aware binary, which gated nothing)
-    * stays legacy-eligible — its streams relied on legacy matching.
-    *
-    * TIMING: the ingest verbs resolve the marker EAGERLY, before
-    * `start()` — the stream engine writes `offsets/<id>` before
-    * invoking foreachBatch, so a lazy first read inside batch 0 would
-    * see the stream's OWN offset and mis-classify a fresh checkpoint
-    * as pre-lineage (re-opening the very hazard the gate closes). At
-    * stream start, offsets exist iff a previous instance ran. The lazy
-    * path remains only for direct batch-fn calls (specs) and a
-    * manually deleted marker. */
-  /** Per-JVM cache of resolved markers: the marker is immutable once
-    * created (create-if-absent converges racing creators on the
-    * winner), and each micro-batch would otherwise pay two
-    * exists+open+read round-trips on a 2-line file. A cache hit still
-    * costs ONE existence probe: a wiped-and-recreated checkpoint in
-    * the same driver must resolve a FRESH lineage (the hazard the
-    * instance id exists to prevent), so a vanished marker invalidates
-    * the entry. */
-  private val lineageCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Boolean)]()
-
-  private def lineageInfo(spark: org.apache.spark.sql.SparkSession,
-                          checkpointDir: String): (String, Boolean) = {
-    val cached = lineageCache.get(checkpointDir)
-    if (cached != null) {
-      val fs = graft.operators.StoreSwap.fsOf(spark, checkpointDir)
-      if (fs.exists(new org.apache.hadoop.fs.Path(checkpointDir,
-          ".graft_lineage")))
-        return cached
-      lineageCache.remove(checkpointDir)
-    }
-    val resolved = lineageInfoUncached(spark, checkpointDir)
-    lineageCache.put(checkpointDir, resolved)
-    resolved
-  }
-
-  private def lineageInfoUncached(spark: org.apache.spark.sql.SparkSession,
-                                  checkpointDir: String): (String, Boolean) = {
+  private def lineageId(spark: org.apache.spark.sql.SparkSession,
+                        checkpointDir: String): String = {
     val fs = graft.operators.StoreSwap.fsOf(spark, checkpointDir)
     val marker = new org.apache.hadoop.fs.Path(checkpointDir,
       ".graft_lineage")
-    def read(): Option[(String, Boolean)] =
+    val cached = lineageCache.get(checkpointDir)
+    if (cached != null) {
+      if (fs.exists(marker)) return cached
+      lineageCache.remove(checkpointDir)
+    }
+    def read(): Option[String] =
       if (!fs.exists(marker)) None
       else {
         val in = fs.open(marker)
         val t = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
         finally in.close()
-        val lines = t.linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
-        lines.headOption.map { id =>
-          id -> !lines.exists(_ == "legacy=0")
-        }
+        t.linesIterator.map(_.trim).find(_.nonEmpty)
       }
-    read().getOrElse {
+    val resolved = read().getOrElse {
       val fresh = java.util.UUID.randomUUID().toString
         .replace("-", "").take(6)
-      // pre-lineage evidence: the stream engine wrote offsets before
-      // any lineage-aware code touched this checkpoint
-      val offsets = new org.apache.hadoop.fs.Path(checkpointDir, "offsets")
-      val ranBefore = fs.exists(offsets) &&
-        fs.listStatus(offsets).exists(s => !s.getPath.getName.startsWith("."))
       fs.mkdirs(new org.apache.hadoop.fs.Path(checkpointDir))
       // create-if-absent: one stream per checkpoint by contract, but a
       // lost race must still converge on the winner's id
       try {
         val out = fs.create(marker, false)
-        try out.write(s"$fresh\nlegacy=${if (ranBefore) 1 else 0}\n"
-          .getBytes("UTF-8"))
+        try out.write(s"$fresh\n".getBytes("UTF-8"))
         finally out.close()
-        (fresh, ranBefore)
+        fresh
       } catch {
         case _: java.io.IOException => read().getOrElse(throw
           new java.io.IOException(
-            s"lineageInfo: could not create or read $marker"))
+            s"lineageId: could not create or read $marker"))
       }
     }
+    lineageCache.put(checkpointDir, resolved)
+    resolved
   }
 
   /** True iff every listed file under `dirs` (all dirs when empty)
@@ -165,16 +115,12 @@ object ArtifactStreams {
     * bootstrap's data gone. */
   private def onlyThisBatch(spark: org.apache.spark.sql.SparkSession,
                             path: String, prefix: String,
-                            legacyPrefix: Option[String],
                             dirs: Seq[String]): Boolean = {
     val fs = graft.operators.StoreSwap.fsOf(spark, path)
     val files = graft.operators.StoreSwap.latestManifest(fs, path)
       .map(_._2).getOrElse(Seq.empty)
       .filter(f => dirs.isEmpty || dirs.exists(d => f.startsWith(d + "/")))
-    files.forall { f =>
-      val name = f.substring(f.lastIndexOf('/') + 1)
-      name.startsWith(prefix) || legacyPrefix.exists(name.startsWith)
-    }
+    files.forall(f => f.substring(f.lastIndexOf('/') + 1).startsWith(prefix))
   }
 
   /** Post-batch manifest link retention ([[StoreSwap.pruneManifestLinks]]):
@@ -199,12 +145,6 @@ object ArtifactStreams {
                                retainVersions: Int = 0): Unit = {
     val spark = batch.sparkSession
     val prefix = batchPrefix(spark, batchId, checkpointDir)
-    // pre-lineage binaries tagged this batch `b<id>_` — replays across
-    // an upgrade must still find those partials, but ONLY when this
-    // checkpoint demonstrably predates lineage ([[legacyPrefix]]): a
-    // fresh checkpoint matching another instance's `b<id>_` files
-    // would delete or overwrite them
-    val legacy = legacyPrefix(spark, batchId, checkpointDir)
     def bootstrap(): Unit =
       // an empty first batch must not bootstrap empty stats (see
       // semanticBatch) — wait for the first batch with documents
@@ -214,13 +154,12 @@ object ArtifactStreams {
     // bootstrapped iff the stats MANIFEST exists — the save's single
     // commit point, so a torn bootstrap re-runs cleanly
     if (TextSearch.statsReady(spark, statsPath)) {
-      if (onlyThisBatch(spark, statsPath, prefix, legacy, Seq.empty))
+      if (onlyThisBatch(spark, statsPath, prefix, Seq.empty))
         // re-bootstrap (see onlyThisBatch): the save continues the
         // version chain with identical content
         bootstrap()
       else {
         TextSearch.dropAppendPartials(spark, statsPath, prefix)
-        legacy.foreach(TextSearch.dropAppendPartials(spark, statsPath, _))
         TextSearch.appendCorpusStats(batch, idCol, textCol, statsPath,
           prefix)
       }
@@ -238,8 +177,6 @@ object ArtifactStreams {
                       availableNow: Boolean = true,
                       retainVersions: Int = 0): StreamingQuery = {
     require(docs.isStreaming, "bm25StatsIngest: docs must be a streaming frame")
-    // eager marker resolution: see lineageInfo's TIMING note
-    lineageInfo(docs.sparkSession, checkpointDir)
     val writer = docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -266,8 +203,6 @@ object ArtifactStreams {
                               retainVersions: Int = 0): Unit = {
     val spark = batch.sparkSession
     val prefix = batchPrefix(spark, batchId, checkpointDir)
-    // pre-lineage tag, gated on checkpoint age (see bm25Batch)
-    val legacy = legacyPrefix(spark, batchId, checkpointDir)
     def bootstrap(): Unit = if (!batch.isEmpty) {
       // an empty first batch must not bootstrap (train(empty) has no
       // sample; an empty index manifest would brick later reads while
@@ -281,14 +216,13 @@ object ArtifactStreams {
     // bootstrapped iff the index MANIFEST exists — the save's single
     // commit point, so a torn bootstrap re-runs cleanly
     if (IvfIndex.indexReady(spark, indexPath)) {
-      if (onlyThisBatch(spark, indexPath, prefix, legacy, Seq("postings")))
+      if (onlyThisBatch(spark, indexPath, prefix, Seq("postings")))
         // re-bootstrap (see onlyThisBatch): saveIndex's fresh manifest
         // also unlists the stale centroids; deterministic training on
         // the same batch reproduces them
         bootstrap()
       else {
         IvfIndex.dropAppendPartials(spark, indexPath, prefix)
-        legacy.foreach(IvfIndex.dropAppendPartials(spark, indexPath, _))
         IvfIndex.appendToIndex(spark, indexPath, batch, idCol, vecCol,
           prefix)
       }
@@ -302,8 +236,6 @@ object ArtifactStreams {
                 availableNow: Boolean = true,
                 retainVersions: Int = 0): StreamingQuery = {
     require(vecs.isStreaming, "ivfIngest: vecs must be a streaming frame")
-    // eager marker resolution: see lineageInfo's TIMING note
-    lineageInfo(vecs.sparkSession, checkpointDir)
     val writer = vecs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -322,8 +254,6 @@ object ArtifactStreams {
                                retainVersions: Int = 0): Unit = {
     val spark = batch.sparkSession
     val prefix = batchPrefix(spark, batchId, checkpointDir)
-    // pre-lineage tag, gated on checkpoint age (see bm25Batch)
-    val legacy = legacyPrefix(spark, batchId, checkpointDir)
     def bootstrap(): Unit =
       // an empty first batch must not bootstrap an empty fact table
       // (see semanticBatch) — wait for the first batch with rows
@@ -331,7 +261,7 @@ object ArtifactStreams {
         graft.sources.WarehouseStore.saveFact(batch, whPath,
           org.apache.spark.sql.SaveMode.Overwrite, Some(prefix))
     if (graft.sources.WarehouseStore.ready(spark, whPath)) {
-      if (onlyThisBatch(spark, whPath, prefix, legacy, Seq("fact_sales")))
+      if (onlyThisBatch(spark, whPath, prefix, Seq("fact_sales")))
         // re-bootstrap (see onlyThisBatch) — though this family's
         // append would converge anyway (saveFact reads nothing), the
         // re-save avoids the transient empty-fact manifest a reader
@@ -340,8 +270,6 @@ object ArtifactStreams {
       else {
         graft.sources.WarehouseStore.dropAppendPartials(spark, whPath,
           prefix)
-        legacy.foreach(graft.sources.WarehouseStore.dropAppendPartials(
-          spark, whPath, _))
         graft.sources.WarehouseStore.saveFact(batch, whPath,
           org.apache.spark.sql.SaveMode.Append, Some(prefix))
       }
@@ -364,8 +292,6 @@ object ArtifactStreams {
                  availableNow: Boolean = true,
                  retainVersions: Int = 0): StreamingQuery = {
     require(facts.isStreaming, "factIngest: facts must be a streaming frame")
-    // eager marker resolution: see lineageInfo's TIMING note
-    lineageInfo(facts.sparkSession, checkpointDir)
     val writer = facts.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>

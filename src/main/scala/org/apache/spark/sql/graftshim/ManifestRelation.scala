@@ -61,7 +61,7 @@ object ManifestRelation {
   /** Drop every cached schema under `basePath` — called when a store
     * path is observed being RE-CREATED (v1 manifest commit), so a
     * deleted-and-rebuilt store at the same path with colliding file
-    * names (adopted legacy layouts use deterministic names) can never
+    * names (streaming batch tags are deterministic) can never
     * serve a stale footer schema. */
   def evictSchemas(basePath: String): Unit = schemaCache.synchronized {
     val it = schemaCache.keySet().iterator()

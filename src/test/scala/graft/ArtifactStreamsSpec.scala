@@ -293,28 +293,13 @@ class ArtifactStreamsSpec extends SparkSpec {
       "replayed batch committed a new store version")
   }
 
-  test("legacy b<id>_ tags are lineage-gated: a NEW stream instance " +
-    "(fresh checkpoint) ingesting into a store holding another " +
-    "instance's b0_-tagged files must append, not delete or " +
-    "re-bootstrap over them; a checkpoint that demonstrably predates " +
-    "lineage stays legacy-eligible") {
+  test("a fresh checkpoint ingesting into a store holding another " +
+    "instance's b0_-tagged files appends, never deleting or " +
+    "re-bootstrapping over them") {
     val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_legacy_gate_${System.nanoTime()}")
+      s"graft_lineage_gate_${System.nanoTime()}")
     base.deleteOnExit()
-    // a fresh checkpoint (no offsets) is NOT legacy-eligible
-    assert(ArtifactStreams.legacyPrefix(spark, 0L, s"$base/ckptFresh").isEmpty)
-    // a checkpoint with pre-existing offsets but no marker (= ran under
-    // a pre-lineage binary) IS
-    val oldCkpt = s"$base/ckptOld"
-    new java.io.File(s"$oldCkpt/offsets").mkdirs()
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$oldCkpt/offsets/0"), "v1".getBytes)
-    assert(ArtifactStreams.legacyPrefix(spark, 0L, oldCkpt)
-      .contains("b0_"))
-    // both decisions PERSIST in the marker across re-reads
-    assert(ArtifactStreams.legacyPrefix(spark, 3L, s"$base/ckptFresh").isEmpty)
-    assert(ArtifactStreams.legacyPrefix(spark, 3L, oldCkpt).contains("b3_"))
-    // behavioral half: warehouse with ANOTHER instance's b0_ files
+    // warehouse with ANOTHER instance's b0_ files
     def d(s: String) = java.sql.Date.valueOf(s)
     val cols = Seq("fact_id", "date_id", "product_id", "units")
     val other = Seq((1L, d("2024-01-01"), 10L, 2),
@@ -322,23 +307,15 @@ class ArtifactStreamsSpec extends SparkSpec {
     val wh = s"$base/wh"
     graft.sources.WarehouseStore.saveFact(other, wh,
       org.apache.spark.sql.SaveMode.Overwrite, Some("b0_"))
-    // new instance, fresh checkpoint, batch 0 into the same store: the
-    // pre-gate code would dropAppendPartials("b0_") (deleting the other
-    // instance's rows) or re-bootstrap over them via the onlyThisBatch
-    // legacy match
+    // new instance, fresh checkpoint, batch 0 into the same store: its
+    // lineage-scoped tag matches none of the other instance's files, so
+    // neither the replay drop nor the re-bootstrap check may fire
     val mine = Seq((10L, d("2025-03-01"), 12L, 4)).toDF(cols: _*)
     ArtifactStreams.factBatch(mine, 0L, wh, s"$base/ckptNew")
     val after = graft.sources.WarehouseStore.loadFact(spark, wh)
       .select("fact_id").as[Long].collect().sorted.toSeq
     assert(after == Seq(1L, 2L, 10L),
       s"another instance's b0_ batch was clobbered: $after")
-    // while a legacy-ELIGIBLE checkpoint still drops its own b0_
-    // partials on replay (the upgrade path the gate must preserve)
-    ArtifactStreams.factBatch(mine, 0L, wh, oldCkpt)
-    val upgraded = graft.sources.WarehouseStore.loadFact(spark, wh)
-      .select("fact_id").as[Long].collect().sorted.toSeq
-    assert(upgraded == Seq(10L, 10L),
-      s"legacy-eligible replay must drop the b0_ partials: $upgraded")
   }
 
   test("retainVersions bounds manifest link files under a long ingest " +

@@ -497,15 +497,14 @@ class DedupSpec extends SparkSpec {
   }
 
   test("bandidx projection: a 1-doc ingest touches at most `bands` band " +
-    "buckets (untouched partitions keep files+mtimes); legacy stores " +
-    "without the projection produce identical pairs; purge keeps the " +
+    "buckets (untouched partitions keep files+mtimes); the ingests' " +
+    "pairs equal the bands/-only derivation; purge keeps the " +
     "projection exactly equal to bands/") {
     import org.apache.hadoop.fs.Path
     val base = new java.io.File(System.getProperty("java.io.tmpdir"),
       s"graft_bandidx_spec_${System.nanoTime()}")
     base.deleteOnExit()
     val root = s"${base.getAbsolutePath}/store"
-    val legacy = s"${base.getAbsolutePath}/legacy"
     val batch1 = docs.where(col("doc_id") % 2 === 0)
     val batch2 = docs.where(col("doc_id") % 2 === 1)
     Dedup.saveMinhashStore(batch1, "doc_id", "text", root)
@@ -536,20 +535,17 @@ class DedupSpec extends SparkSpec {
     (before.keySet -- touched).foreach { k =>
       assert(after(k) == before(k), s"untouched $k was rewritten")
     }
-    // legacy store (no bandidx): the full-scan fallback produces the
-    // SAME pairs as the pruned projection path over the same corpus
-    Dedup.saveMinhashStore(batch1, "doc_id", "text", legacy)
-    fs.delete(new Path(s"$legacy/bandidx"), true)
-    val viaLegacy = pairSet(Dedup.minhashIncremental(
-      batch2, "doc_id", "text", legacy, 0.4))
+    // the pruned projection path finds EXACTLY the pairs the store's
+    // bands/ rows imply: derivePairsFromStore reads bands/ only (never
+    // bandidx/), restricted to pairs touching a batch-2 doc
     val viaIdx = p1 ++ pairSet(Dedup.minhashIncremental(
       batch2, "doc_id", "text", root, 0.4))
-    assert(viaIdx == viaLegacy,
-      s"missing=${(viaLegacy -- viaIdx).take(5)} " +
-        s"extra=${(viaIdx -- viaLegacy).take(5)}")
-    // a legacy store stays legacy: the ingest must not half-create the
-    // projection (a partial bandidx would silently lose candidates)
-    assert(!fs.exists(new Path(s"$legacy/bandidx")))
+    val viaBands = pairSet(Dedup.derivePairsFromStore(spark, root, 0.4))
+      .filter(p => p._1 % 2 == 1 || p._2 % 2 == 1)
+    assert(viaBands.nonEmpty, "no batch-2 pairs — vacuous")
+    assert(viaIdx == viaBands,
+      s"missing=${(viaBands -- viaIdx).take(5)} " +
+        s"extra=${(viaIdx -- viaBands).take(5)}")
     // purge keeps the projection EXACT: no purged doc survives in it,
     // and it equals bands/ row-for-row afterwards (vacuum first — the
     // copy-on-write purge leaves unlisted garbage the plain dir reads
@@ -684,9 +680,8 @@ class DedupSpec extends SparkSpec {
   }
 
   test("rebucketMinhashStore: pairs byte-identical across the re-bucket, " +
-    "the new counts route later ingests, a pre-rebucket pin still " +
-    "resolves the OLD layout, and a legacy store gains the bandidx " +
-    "projection") {
+    "the new counts route later ingests, and a pre-rebucket pin still " +
+    "resolves the OLD layout") {
     import org.apache.hadoop.fs.Path
     import spark.implicits._
     val store = new java.io.File(System.getProperty("java.io.tmpdir"),
@@ -705,9 +700,9 @@ class DedupSpec extends SparkSpec {
     val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
     Dedup.rebucketMinhashStore(spark, root,
       storeBuckets = 64, bandBuckets = 64) // v3
-    assert(graft.operators.StoreSwap.readLayoutAt(fs, root, Some(3)) ==
+    assert(graft.operators.StoreSwap.readLayoutAt(fs, root, 3) ==
       Map("pb" -> 64, "bb" -> 64))
-    assert(graft.operators.StoreSwap.readLayoutAt(fs, root, Some(2)) ==
+    assert(graft.operators.StoreSwap.readLayoutAt(fs, root, 2) ==
       Map("pb" -> 4, "bb" -> 2),
       "the pre-rebucket pin must resolve the OLD layout (floor rule)")
     assert(pairSet(Dedup.derivePairsFromStore(spark, root, 0.4)) == before,
@@ -725,25 +720,29 @@ class DedupSpec extends SparkSpec {
       Seq(0L).toDF("doc_id"), "doc_id") == 1L)
     assert(!pairSet(Dedup.derivePairsFromStore(spark, root, 0.4))
       .exists(p => p._1 == 0L || p._2 == 0L))
-    // legacy upgrade: strip bandidx/ from a copy of the layout → the
-    // re-bucket rebuilds the projection from bands/
-    val legacy = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_minhash_rebucket_legacy_${System.nanoTime()}")
-    legacy.deleteOnExit()
-    Dedup.saveMinhashStore(evens, "doc_id", "text", legacy.getAbsolutePath)
-    val lfs = new Path(legacy.getAbsolutePath)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    lfs.delete(new Path(s"${legacy.getAbsolutePath}/bandidx"), true)
-    val legacyPairs = pairSet(Dedup.derivePairsFromStore(spark,
-      legacy.getAbsolutePath, 0.4))
-    Dedup.rebucketMinhashStore(spark, legacy.getAbsolutePath)
-    assert(lfs.exists(new Path(s"${legacy.getAbsolutePath}/bandidx")),
-      "re-bucket must rebuild the candidate projection")
-    assert(pairSet(Dedup.derivePairsFromStore(spark,
-      legacy.getAbsolutePath, 0.4)) == legacyPairs)
-    assert(Dedup.minhashIncremental(evens, "doc_id", "text",
-      legacy.getAbsolutePath, 0.4).count() == 0L,
-      "the upgraded store must still read the corpus as seen")
+  }
+
+  test("a store with no resolvable layout refuses: pairsForIds names " +
+    "the path and version instead of routing with default 64/64 " +
+    "buckets") {
+    import org.apache.hadoop.fs.Path
+    import spark.implicits._
+    val store = new java.io.File(System.getProperty("java.io.tmpdir"),
+      s"graft_minhash_nolayout_${System.nanoTime()}")
+    store.deleteOnExit()
+    val root = store.getAbsolutePath
+    Dedup.saveMinhashStore(docs, "doc_id", "text", root,
+      storeBuckets = 4, bandBuckets = 2)
+    val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
+    val names = fs.listStatus(new Path(root)).map(_.getPath.getName).toSet
+    assert(names.contains("_layout.v1") && !names.contains("_layout"),
+      s"a fresh save writes the versioned layout only: $names")
+    names.filter(_.contains("_layout")).foreach(n =>
+      fs.delete(new Path(s"$root/$n"), false))
+    val e = intercept[IllegalArgumentException](Dedup.pairsForIds(spark,
+      root, Seq(0L).toDF("doc_id"), "doc_id", 0.4).collect())
+    assert(e.getMessage.contains(root) && e.getMessage.contains("k <= 1"),
+      e.getMessage)
   }
 
   test("manifest isolation: a reader pinned mid-purge sees the old " +

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{IvfIndex, PqIndex, Similarity}
+import graft.operators.{IvfIndex, PqIndex, Similarity, StoreSwap}
 import org.apache.spark.sql.functions._
 
 /** IVF ANN: index structure, determinism, and recall against the exact
@@ -460,9 +460,18 @@ class IvfIndexSpec extends SparkSpec {
       .coalesce(1).write.parquet(s"$broken/centroids")
     spark.read.parquet(s"$dir/postings").write.partitionBy("cell")
       .parquet(s"$broken/postings")
-    intercept[IllegalArgumentException] {
-      IvfIndex.loadIndex(spark, broken.getAbsolutePath)
-    }
+    // hand-written files without a manifest are not an index
+    val noMf = intercept[IllegalArgumentException](
+      IvfIndex.loadIndex(spark, broken.getAbsolutePath))
+    assert(noMf.getMessage.contains("no store manifest"), noMf.getMessage)
+    // committed over a manifest, the centroid validation fires
+    val fs = StoreSwap.fsOf(spark, broken.getAbsolutePath)
+    StoreSwap.commitManifest(fs, broken.getAbsolutePath, 1,
+      Seq("centroids", "postings").flatMap(
+        StoreSwap.listDirFiles(fs, broken.getAbsolutePath, _)))
+    val gap = intercept[IllegalArgumentException](
+      IvfIndex.loadIndex(spark, broken.getAbsolutePath))
+    assert(gap.getMessage.contains("non-contiguous cell ids"), gap.getMessage)
     // saveIndex refuses a frame that is not an assign() output
     intercept[IllegalArgumentException] {
       IvfIndex.saveIndex(model, emb, dir.getAbsolutePath + "_x")

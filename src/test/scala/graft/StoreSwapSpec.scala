@@ -165,10 +165,10 @@ class StoreSwapSpec extends graft.SparkSpec {
       StoreSwap.commitLayout(fs, root, 3, Seq("pb" -> 16)))
     assert(e.getMessage.contains("different values"), e.getMessage)
     commitV(3, withLayout = true)
-    assert(StoreSwap.readLayoutAt(fs, root, Some(1)) == Map("pb" -> 8))
-    assert(StoreSwap.readLayoutAt(fs, root, Some(2)) == Map("pb" -> 8),
+    assert(StoreSwap.readLayoutAt(fs, root, 1) == Map("pb" -> 8))
+    assert(StoreSwap.readLayoutAt(fs, root, 2) == Map("pb" -> 8),
       "floor rule: v2 resolves the layout committed at v1")
-    assert(StoreSwap.readLayoutAt(fs, root, Some(3)) == Map("pb" -> 64))
+    assert(StoreSwap.readLayoutAt(fs, root, 3) == Map("pb" -> 64))
     // once manifest v3 is committed, ANY layout claim of v3 is stale
     // (the claimant's entry read predates the committed version)
     val stale = intercept[java.util.ConcurrentModificationException](
@@ -178,7 +178,13 @@ class StoreSwapSpec extends graft.SparkSpec {
     // the v1 layout is out of window and reclaimed
     StoreSwap.vacuumManifested(spark, root, Seq("d"), "spec")
     assert(StoreSwap.layoutVersions(fs, root) == Seq(3))
-    assert(StoreSwap.readLayoutAt(fs, root, Some(3)) == Map("pb" -> 64))
+    assert(StoreSwap.readLayoutAt(fs, root, 3) == Map("pb" -> 64))
+    // below the oldest kept layout nothing resolves: a loud refusal
+    // naming the path and version, never default counts
+    val none = intercept[IllegalArgumentException](
+      StoreSwap.readLayoutAt(fs, root, 2))
+    assert(none.getMessage.contains(root) &&
+      none.getMessage.contains("k <= 2"), none.getMessage)
   }
 
   test("orphan layout (a crashed layout-writing verb): a layout-less " +
@@ -200,7 +206,7 @@ class StoreSwapSpec extends graft.SparkSpec {
     StoreSwap.commitLayout(fs, root, 1, Seq("pb" -> 8))
     StoreSwap.commitManifest(fs, root, 1, Seq("d/f1.parquet"),
       layoutCommitted = true)
-    assert(StoreSwap.readLayoutAt(fs, root, Some(1)) == Map("pb" -> 8))
+    assert(StoreSwap.readLayoutAt(fs, root, 1) == Map("pb" -> 8))
     // an abandoned orphan ABOVE the newest manifest: vacuum (quiescent)
     // reclaims it, and the next layout-less commit proceeds
     StoreSwap.commitLayout(fs, root, 2, Seq("pb" -> 16))
@@ -213,7 +219,7 @@ class StoreSwapSpec extends graft.SparkSpec {
     fs.create(new Path(s"$root/d/f2.parquet"), true).close()
     StoreSwap.commitManifest(fs, root, 2,
       Seq("d/f1.parquet", "d/f2.parquet"))
-    assert(StoreSwap.readLayoutAt(fs, root, Some(2)) == Map("pb" -> 8),
+    assert(StoreSwap.readLayoutAt(fs, root, 2) == Map("pb" -> 8),
       "v2 must floor-resolve v1's layout after the orphan is gone")
   }
 
@@ -254,53 +260,12 @@ class StoreSwapSpec extends graft.SparkSpec {
     assert(loss.getMessage.contains("layout claim") &&
       loss.getMessage.contains("pb,64") &&
       loss.getMessage.contains("pb,8"), loss.getMessage)
-    assert(StoreSwap.readLayoutAt(fs, root, Some(2)) == Map("pb" -> 8),
+    assert(StoreSwap.readLayoutAt(fs, root, 2) == Map("pb" -> 8),
       "after cleanup the winner's version floor-resolves the old counts")
     // and a layout claim AGAINST an already-committed version refuses
     val stale = intercept[java.util.ConcurrentModificationException](
       StoreSwap.commitLayout(fs, root, 2, Seq("pb" -> 64)))
     assert(stale.getMessage.contains("already committed"), stale.getMessage)
-  }
-
-  test("legacy back-fill: the first versioned layout over a plain-" +
-    "_layout store preserves the legacy values as the oldest retained " +
-    "manifest's floor, so pinned legacy-era reads keep their counts") {
-    val root = freshRoot()
-    val fs = StoreSwap.fsOf(spark, root)
-    fs.mkdirs(new Path(s"$root/d"))
-    fs.create(new Path(s"$root/d/f1.parquet"), true).close()
-    // a legacy store: plain _layout only, two committed manifests
-    StoreSwap.writeLayout(fs, root, Seq("pb" -> 8))
-    StoreSwap.commitManifest(fs, root, 1, Seq("d/f1.parquet"))
-    fs.create(new Path(s"$root/d/f2.parquet"), true).close()
-    StoreSwap.commitManifest(fs, root, 2,
-      Seq("d/f1.parquet", "d/f2.parquet"))
-    // first VERSIONED claim changes the counts (a re-bucket to 16)
-    val created = StoreSwap.commitLayout(fs, root, 3, Seq("pb" -> 16))
-    fs.create(new Path(s"$root/d/f3.parquet"), true).close()
-    StoreSwap.commitManifest(fs, root, 3, Seq("d/f3.parquet"),
-      layoutCommitted = true, layoutCreated = created)
-    assert(StoreSwap.readLayoutAt(fs, root, Some(1)) == Map("pb" -> 8),
-      "legacy-era pinned read must resolve the back-filled old counts")
-    assert(StoreSwap.readLayoutAt(fs, root, Some(2)) == Map("pb" -> 8))
-    assert(StoreSwap.readLayoutAt(fs, root, Some(3)) == Map("pb" -> 16))
-    assert(StoreSwap.readLayout(fs, root) == Map("pb" -> 16),
-      "the plain mirror carries the NEW counts for legacy readers")
-    // crash-rerun: a verb that died AFTER claiming _layout.v<N> but
-    // BEFORE the back-fill re-runs with created=false — the back-fill
-    // must still land (it is not gated on who created the claim)
-    val root2 = freshRoot()
-    val fs2 = StoreSwap.fsOf(spark, root2)
-    fs2.mkdirs(new Path(s"$root2/d"))
-    fs2.create(new Path(s"$root2/d/f1.parquet"), true).close()
-    StoreSwap.writeLayout(fs2, root2, Seq("pb" -> 8))
-    StoreSwap.commitManifest(fs2, root2, 1, Seq("d/f1.parquet"))
-    val claim = fs2.create(new Path(s"$root2/_layout.v2"), true)
-    claim.write("pb=16\n".getBytes("UTF-8")); claim.close() // torn verb
-    assert(!StoreSwap.commitLayout(fs2, root2, 2, Seq("pb" -> 16)),
-      "the re-run verifies the existing claim")
-    assert(StoreSwap.readLayoutAt(fs2, root2, Some(1)) == Map("pb" -> 8),
-      "the re-run must still back-fill the legacy values")
   }
 
   test("chunked manifests: past the segment threshold the file list " +

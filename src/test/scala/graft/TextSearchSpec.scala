@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.TextSearch
+import graft.operators.{StoreSwap, TextSearch}
 
 /** BM25 top-k retrieval: the engine-exact score contract (idf rounded
   * half-up at 6 decimals pre-multiply, 10·TL-scaled tf ratio with fixed
@@ -197,10 +197,19 @@ class TextSearchSpec extends SparkSpec {
     Seq((0L, 0L), (0L, 0L)).toDF("n", "tl")
       .write.parquet(s"$bad/corpus")
     spark.read.parquet(s"$dir/terms").write.parquet(s"$bad/terms")
-    intercept[IllegalArgumentException] {
-      TextSearch.bm25TopKIndexed(corpus, "doc_id", "text",
-        bad.getAbsolutePath, Seq("apple"), k = 5)
-    }
+    def searchBad() = TextSearch.bm25TopKIndexed(corpus, "doc_id", "text",
+      bad.getAbsolutePath, Seq("apple"), k = 5)
+    // hand-written files without a manifest are not a stats store
+    val noMf = intercept[IllegalArgumentException](searchBad())
+    assert(noMf.getMessage.contains("no store manifest"), noMf.getMessage)
+    // committed over a manifest, the empty-corpus validation fires
+    val fs = StoreSwap.fsOf(spark, bad.getAbsolutePath)
+    StoreSwap.commitManifest(fs, bad.getAbsolutePath, 1,
+      Seq("corpus", "terms").flatMap(
+        StoreSwap.listDirFiles(fs, bad.getAbsolutePath, _)))
+    val empty = intercept[IllegalArgumentException](searchBad())
+    assert(empty.getMessage.contains("stats describe an empty corpus"),
+      empty.getMessage)
   }
 
   test("appendCorpusStats: merged stats answer EXACTLY like a one-shot " +

@@ -146,58 +146,11 @@ class WarehouseStoreSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("legacy") &&
       e.getMessage.contains("re-save"), e.getMessage)
-  }
-
-  test("upgradeWarehouse adopts a legacy layout in place: one metadata " +
-    "flip, no data rewrite; append then works and the pinned v1 is the " +
-    "legacy content; compactFact refuses loudly before the upgrade") {
-    val dir = Files.createTempDirectory("graft-wh8").toString
-    // a legacy warehouse: plain Spark writes, untagged files, no manifest
-    wh.factSales
-      .withColumn("p_year", year(col("date_id")))
-      .withColumn("p_month", month(col("date_id")))
-      .repartition(col("p_year"), col("p_month"))
-      .write.partitionBy("p_year", "p_month").parquet(s"$dir/fact_sales")
-    Seq("dim_date", "dim_customer", "dim_product", "dim_platform")
-      .zip(Seq(wh.dimDate, wh.dimCustomer, wh.dimProduct, wh.dimPlatform))
-      .foreach { case (d, df) => df.write.parquet(s"$dir/$d") }
-    // pre-upgrade: compactFact must be loud (not success-shaped silence)
+    // compactFact refuses the same manifest-less dir loudly (never
+    // success-shaped silence while the small-file problem stays)
     val ce = intercept[IllegalArgumentException](
-      WarehouseStore.compactFact(spark, dir))
-    assert(ce.getMessage.contains("upgradeWarehouse"), ce.getMessage)
-    val legacyFiles = {
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      StoreSwap.listDirFiles(fs, dir, "fact_sales").toSet
-    }
-    WarehouseStore.upgradeWarehouse(spark, dir) // v1: adopt, zero rewrite
-    assert(WarehouseStore.versions(spark, dir) == Seq(1))
-    val legacyRows = factRows(dir)
-    assert(legacyRows.length == 3, "adopted read must see the legacy rows")
-    // the adopted files are the SAME files — nothing was rewritten
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    assert(StoreSwap.latestManifest(fs, dir).get._2
-      .filter(_.startsWith("fact_sales/")).toSet == legacyFiles)
-    // append now works; the pinned v1 stays the legacy content
-    WarehouseStore.saveFact(
-      wh.factSales.withColumn("fact_id", col("fact_id") + lit(100L)),
-      dir, SaveMode.Append) // v2
-    assert(factRows(dir).length == 6)
-    assert(factRows(dir, asOf = Some(1)) == legacyRows,
-      "pinned v1 after upgrade+append must equal the legacy content")
-    assert(WarehouseStore.loadFactYear(spark, dir, 2025).count() == 2,
-      "one legacy 2025 row + one appended 2025 row")
-    // re-upgrading an already-manifested store refuses
-    val e2 = intercept[IllegalArgumentException](
-      WarehouseStore.upgradeWarehouse(spark, dir))
-    assert(e2.getMessage.contains("already"), e2.getMessage)
-    // and an empty dir has nothing to adopt
-    val e3 = intercept[IllegalArgumentException](
-      WarehouseStore.upgradeWarehouse(spark,
-        Files.createTempDirectory("graft-wh9").toString))
-    assert(e3.getMessage.contains("nothing") ||
-      e3.getMessage.contains("no warehouse files"), e3.getMessage)
+      WarehouseStore.compactFact(spark, dir2))
+    assert(ce.getMessage.contains("no manifest"), ce.getMessage)
   }
 
   test("whole-warehouse time travel: a truncate-reload (save) supersedes " +
