@@ -1,7 +1,7 @@
 package graft
 
 import graft.etl.{DimDate, Taxonomy}
-import graft.functions.{CleanExprs, TextExprs, VectorExprs}
+import graft.functions.{CleanExprs, TextExprs}
 import graft.operators.{Dedup, Sessionize, Similarity}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -1509,50 +1509,57 @@ object Queries {
     * enforces this by type (it memoizes only a java.io.File); this memo
     * holds frames, so it keeps the rule by re-reading parquet. The in-memory
     * checkpoints below live only WITHIN this one-time build (batch 2
-    * reads batch 1's state), then the result is dumped to parquet and
-    * the memo references the re-read. */
+    * reads batch 1's state), then the result is dumped to parquet in the
+    * [[staged]] directory and the memo references the re-read. */
   private def incrementalWarehouse(s: SparkSession, d: String): graft.etl.OrderEtl.Warehouse =
     incrementalWh.computeIfAbsent(d, _ => {
-      import java.nio.file.{Files, Paths, StandardCopyOption}
-      val base = Files.createTempDirectory("graft_inc").toFile
-      val drops = new java.io.File(base, "drops"); drops.mkdirs()
-      val synth = graft.etl.ReferenceShapedData.syntheticOrders(s, d)
-      val cols = synth.columns.toSeq
-      val tagged = synth.withColumn("__h",
-        pmod(graft.functions.StableId63.stableId63(col("orderNo")), lit(2)))
-      Seq(0, 1).foreach { h =>
-        val out = new java.io.File(base, s"out$h")
-        tagged.where(col("__h") === h).drop("__h")
-          .coalesce(1).write.option("header", "true")
-          .mode("overwrite").csv(out.getAbsolutePath)
-        val part = out.listFiles().filter(_.getName.startsWith("part-")).head
-        Files.move(part.toPath,
-          Paths.get(drops.getAbsolutePath, s"drop$h.csv"),
-          StandardCopyOption.REPLACE_EXISTING)
-      }
-      @volatile var wh = graft.etl.OrderEtl.emptyWarehouse(s)
-      val q = graft.streaming.IncrementalIngest.start(s,
-        drops.getAbsolutePath,
-        new java.io.File(base, "ckpt").getAbsolutePath,
-        fileColumns = cols,
-        load = () => wh,
-        save = next => wh = graft.etl.OrderEtl.Warehouse(
-          next.dimDate.localCheckpoint(true), next.dimCustomer.localCheckpoint(true),
-          next.dimProduct.localCheckpoint(true), next.dimPlatform.localCheckpoint(true),
-          next.factSales.localCheckpoint(true)),
-        maxFilesPerTrigger = Some(1))
-      q.awaitTermination()
-      val whDir = new java.io.File(base, "wh")
-      def dump(df: org.apache.spark.sql.DataFrame, n: String) = {
-        val p = new java.io.File(whDir, n).getAbsolutePath
-        df.write.mode("overwrite").parquet(p)
-        s.read.parquet(p)
-      }
-      graft.etl.OrderEtl.Warehouse(
-        dump(wh.dimDate, "dim_date"), dump(wh.dimCustomer, "dim_customer"),
-        dump(wh.dimProduct, "dim_product"), dump(wh.dimPlatform, "dim_platform"),
-        dump(wh.factSales, "fact_sales"))
+      val whDir = new java.io.File(staged("inc", d)(base =>
+        buildIncrementalWarehouse(s, d, base)), "wh")
+      def read(n: String) = s.read.parquet(new java.io.File(whDir, n).getAbsolutePath)
+      graft.etl.OrderEtl.Warehouse(read("dim_date"), read("dim_customer"),
+        read("dim_product"), read("dim_platform"), read("fact_sales"))
     })
+
+  /** Fill `base` for [[incrementalWarehouse]]: the two CSV drops, the
+    * stream's checkpoint, and the final warehouse as parquet under
+    * `base/wh`. */
+  private def buildIncrementalWarehouse(s: SparkSession, d: String,
+                                        base: java.io.File): Unit = {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val drops = new java.io.File(base, "drops"); drops.mkdirs()
+    val synth = graft.etl.ReferenceShapedData.syntheticOrders(s, d)
+    val cols = synth.columns.toSeq
+    val tagged = synth.withColumn("__h",
+      pmod(graft.functions.StableId63.stableId63(col("orderNo")), lit(2)))
+    Seq(0, 1).foreach { h =>
+      val out = new java.io.File(base, s"out$h")
+      tagged.where(col("__h") === h).drop("__h")
+        .coalesce(1).write.option("header", "true")
+        .mode("overwrite").csv(out.getAbsolutePath)
+      val part = out.listFiles().filter(_.getName.startsWith("part-")).head
+      Files.move(part.toPath,
+        Paths.get(drops.getAbsolutePath, s"drop$h.csv"),
+        StandardCopyOption.REPLACE_EXISTING)
+    }
+    @volatile var wh = graft.etl.OrderEtl.emptyWarehouse(s)
+    val q = graft.streaming.IncrementalIngest.start(s,
+      drops.getAbsolutePath,
+      new java.io.File(base, "ckpt").getAbsolutePath,
+      fileColumns = cols,
+      load = () => wh,
+      save = next => wh = graft.etl.OrderEtl.Warehouse(
+        next.dimDate.localCheckpoint(true), next.dimCustomer.localCheckpoint(true),
+        next.dimProduct.localCheckpoint(true), next.dimPlatform.localCheckpoint(true),
+        next.factSales.localCheckpoint(true)),
+      maxFilesPerTrigger = Some(1))
+    q.awaitTermination()
+    val whDir = new java.io.File(base, "wh")
+    def dump(df: org.apache.spark.sql.DataFrame, n: String): Unit =
+      df.write.mode("overwrite").parquet(new java.io.File(whDir, n).getAbsolutePath)
+    dump(wh.dimDate, "dim_date"); dump(wh.dimCustomer, "dim_customer")
+    dump(wh.dimProduct, "dim_product"); dump(wh.dimPlatform, "dim_platform")
+    dump(wh.factSales, "fact_sales")
+  }
 
   // Bucketed catalog tables for the co-located join path, created once
   // per JVM per sf dir (the bucketed layout is durable; queries only read)
@@ -4943,9 +4950,9 @@ object Queries {
     * heading, a copyright stub, and a 2-link footer — around two real
     * content blocks, one containing an inline link that must survive
     * (low density). [[graft.functions.TextExprs.htmlBlocks]] classifies
-    * per block and [[graft.functions.TextExprs.htmlMainText]] keeps the
-    * content. The oracle recomputes everything from the fixture formula
-    * (block counts are structural constants; the main text is the
+    * per block and the query joins the non-boilerplate blocks' text.
+    * The oracle recomputes everything from the fixture formula (block
+    * counts are structural constants; the main text is the
     * document text under a known wrapper), so a block-boundary bug, a
     * mis-counted word, a density off-by-one, or a kept nav rail all
     * hash-mismatch. */

@@ -15,9 +15,6 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Dimension-sized tables that should always be broadcast in joins. */
-  val smallDims: Set[String] = Set("region", "nation")
-
   /** Tables whose scans feed heavy per-row compute (tokenization, hashes,
     * signatures, vector math). The driver-generated fixtures hold ONE
     * parquet row group per file, and a row group is the unit of scan

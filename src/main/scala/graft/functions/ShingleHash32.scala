@@ -92,7 +92,4 @@ object ShingleHash32 {
 
   def shingleHash32(c: Column, n: Int, nBytes: Int): Column =
     ColumnBridge.column(ShingleHash32(ColumnBridge.expr(c), n, nBytes))
-
-  def shingleHash48(c: Column, n: Int): Column =
-    ColumnBridge.column(ShingleHash32(ColumnBridge.expr(c), n, nBytes = 6))
 }

@@ -12,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * → per-bit ±1 sign sums → signature, all inside the expression.
   *
   * The declarative formulation (explode tokens, distinct, 48 conditional
-  * SUMs in a hash aggregate — [[graft.operators.Dedup.simhashDeclarative]])
+  * SUMs in a hash aggregate — DedupReference in the specs)
   * shuffles every (doc, token-hash) pair and keeps a 48-column aggregation
   * buffer per doc. This expression keeps the whole computation narrow: a
   * 100 TB corpus signature pass is a scan with zero exchanges, and the

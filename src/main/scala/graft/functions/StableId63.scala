@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -60,9 +59,4 @@ object StableId63 {
     * final hashing step (callers build the pipe-joined key themselves). */
   def stableId63(c: Column): Column =
     ColumnBridge.column(StableId63(ColumnBridge.expr(c)))
-
-  /** SQL registration: `SELECT stable_id63(concat_ws('|', ...))`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "stable_id63", exprs => StableId63(exprs.head), "built-in")
 }

@@ -80,7 +80,7 @@ object TextExprs {
     *
     * Empty blocks vanish before classification. Returns
     * `array<struct<text, n_words, link_density, is_boilerplate>>` —
-    * [[htmlMainText]] is the common projection. Defaults (4 words,
+    * q154 joins the non-boilerplate texts. Defaults (4 words,
     * 0.33) follow the boilerpipe NumWordsRules ballpark; tune per
     * corpus. Honest limits as [[htmlToText]]: no DOM, no CSS
     * visibility, no cross-block smoothing. */
@@ -171,18 +171,6 @@ object TextExprs {
     }
     picked
   }
-
-  /** The kept-content projection of [[htmlBlocks]]: non-boilerplate
-    * block texts joined with newlines — the "main text" a curation
-    * pipeline feeds downstream quality filters. */
-  def htmlMainText(html: Column, minWords: Int = 4,
-                   maxLinkDensity: Double = 0.33): Column =
-    array_join(
-      transform(
-        filter(htmlBlocks(html, minWords, maxLinkDensity),
-          b => !b.getField("is_boilerplate")),
-        b => b.getField("text")),
-      "\n")
 
   /** Control/format-character sanitization — the cleanup a crawl runs
     * before tokenization and fingerprinting: invisible characters make
@@ -297,23 +285,9 @@ object TextExprs {
   /** N-gram-free language-ID heuristic: argmax of per-language stopword
     * hits over lowercased tokens; 'unk' when nothing matches. Deterministic
     * tie-break = list order above. Native one-pass implementation
-    * ([[LangIdNative]]); [[langIdComposed]] is its declarative spec. */
+    * ([[LangIdNative]]); its declarative spec lives with the specs
+    * (TextExprsReference). */
   def langId(text: Column): Column = LangIdNative.langId(text)
-
-  def langIdComposed(text: Column): Column = {
-    val toks = tokens(lower(text))
-    val counts = langStopwords.map { case (l, sw) =>
-      l -> size(filter(toks, t => t.isInCollection(sw)))
-    }
-    // lang wins iff its count is strictly greater than every EARLIER lang's
-    // count and >= every later one, and > 0 — i.e. first argmax.
-    val best = counts.foldLeft(lit("unk") -> lit(0)) {
-      case ((bestLang, bestCnt), (l, c)) =>
-        (when(c > bestCnt, lit(l)).otherwise(bestLang),
-         when(c > bestCnt, c).otherwise(bestCnt))
-    }
-    best._1
-  }
 
   /** Flesch reading-ease score with the standard heuristic proxies,
     * every term a codegen'd regexp count so a SQL oracle replays it
@@ -358,33 +332,7 @@ object TextExprs {
 
   /** Document fingerprint: md5 of whitespace-collapsed lowercase text —
     * the exact-dedup key that survives formatting noise. Native one-pass
-    * implementation; [[fingerprintComposed]] is its spec. */
+    * implementation; its spec lives with the specs (TextExprsReference). */
   def fingerprint(text: Column): Column = FingerprintMd5.fingerprintMd5(text)
 
-  def fingerprintComposed(text: Column): Column =
-    md5(lower(regexp_replace(trim(text), "\\s+", " ")))
-
-  /** 32-bit token hash from md5 (engine-portable: any system that can md5
-    * reproduces it — used for MinHash parity with the DuckDB oracle). */
-  def tokenHash32(tok: Column): Column = tokenHash32Expr(tok)
-
-  /** Same, usable inside higher-order-function lambdas. */
-  def tokenHash32Expr(tok: Column): Column =
-    conv(substring(md5(tok), 1, 8), 16, 10).cast(LongType)
-
-  /** Word n-gram shingles of the token array (n >= 1): array of
-    * space-joined windows; used by MinHash/Jaccard dedup. Documents with
-    * fewer than n tokens yield NULL — callers filter them out (same as the
-    * oracle's `WHERE len(tokens) >= n`). */
-  def shingles(text: Column, n: Int): Column = {
-    val toks = tokens(text)
-    if (n <= 1) toks
-    else {
-      // transform over indices 0..size-n producing concat of n tokens
-      val idx = sequence(lit(0), size(toks) - n)
-      when(size(toks) >= n,
-        transform(idx, i =>
-          concat_ws(" ", (0 until n).map(j => element_at(toks, i + j + 1)): _*)))
-    }
-  }
 }

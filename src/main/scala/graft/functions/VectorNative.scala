@@ -9,7 +9,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native vector math — the codegen'd replacements for the
-  * zip_with/aggregate formulations in [[VectorExprs]], which fall out of
+  * zip_with/aggregate formulations (VectorExprsReference in the specs,
+  * their executable specification), which fall out of
   * whole-stage codegen and interpret the lambda per element (measured 18s
   * for a bucketed pairwise cosine pass at sf0.1 that runs in ~2s here).
   *

@@ -45,7 +45,7 @@ object JpegCodec {
 
   // uniform quantization table (index 0 is the DC divisor the q128
   // closed form depends on); any table is spec-valid since DQT ships it
-  private val Quant = 16
+  private[multimodal] val Quant = 16
 
   private val ZigZag: Array[Int] = Array(
     0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
@@ -314,21 +314,6 @@ object JpegCodec {
       restartInterval = restartInterval)
   }
 
-  /** [[encodeProgressive]] for interleaved RGB at 4:4:4 YCbCr (the
-    * same forward transform as [[encodeColor]]). */
-  def encodeProgressiveColor(w: Int, h: Int, rgb: Array[Int],
-                             quant: Int = Quant,
-                             bands: Seq[(Int, Int)] = Seq((1, 5), (6, 63)),
-                             batchEob: Boolean = true): Array[Byte] = {
-    require(w >= 1 && h >= 1 && rgb.length == w * h * 3,
-      s"bad dims: $w x $h x3 vs ${rgb.length}")
-    require(quant >= 1 && quant <= 255, s"quant out of byte range: $quant")
-    val (yP, cbP, crP) = rgbToYcc(w, h, rgb)
-    encodeProgressiveCore(w, h, Array(yP, cbP, crP),
-      Array(w, w, w), Array(h, h, h), Array(0x11, 0x11, 0x11),
-      quant, bands, sa = false, batchEob = batchEob)
-  }
-
   /** Zigzag-ordered quantized coefficients for every 8×8 block of a
     * plane over an EXPLICIT block grid (raster order, edge-replicated).
     * Interleaved scans cover the MCU-padded grid (`bxN`/`byN` larger
@@ -571,7 +556,7 @@ object JpegCodec {
     * traverse the MCU grid (hi×vi blocks per component per MCU);
     * non-interleaved AC scans traverse each component's own UNPADDED
     * block grid, exactly as T.81 prescribes. */
-  private def encodeProgressiveCore(w: Int, h: Int, planes: Array[Array[Int]],
+  private[multimodal] def encodeProgressiveCore(w: Int, h: Int, planes: Array[Array[Int]],
                                     planeW: Array[Int], planeH: Array[Int],
                                     samps: Array[Int], quant: Int,
                                     bands: Seq[(Int, Int)], sa: Boolean,
@@ -716,19 +701,6 @@ object JpegCodec {
       restartInterval = restartInterval)
   }
 
-  /** [[encodeProgressiveSA]] for interleaved RGB at 4:4:4 YCbCr. */
-  def encodeProgressiveColorSA(w: Int, h: Int, rgb: Array[Int],
-                               quant: Int = Quant,
-                               bands: Seq[(Int, Int)] = Seq((1, 5), (6, 63))): Array[Byte] = {
-    require(w >= 1 && h >= 1 && rgb.length == w * h * 3,
-      s"bad dims: $w x $h x3 vs ${rgb.length}")
-    require(quant >= 1 && quant <= 255, s"quant out of byte range: $quant")
-    val (yP, cbP, crP) = rgbToYcc(w, h, rgb)
-    encodeProgressiveCore(w, h, Array(yP, cbP, crP),
-      Array(w, w, w), Array(h, h, h), Array(0x11, 0x11, 0x11),
-      quant, bands, sa = true, batchEob = true)
-  }
-
   /** PROGRESSIVE at 4:2:0 — Y full resolution (2×2 sampling), chroma
     * 2×2-mean downsampled, interleaved DC scan over the MCU grid,
     * non-interleaved AC scans over each component's own block grid;
@@ -760,7 +732,7 @@ object JpegCodec {
 
   /** The shared JFIF forward transform — one fixed IEEE sequence per
     * channel, the q129/q130 oracle contract. */
-  private def rgbToYcc(w: Int, h: Int,
+  private[multimodal] def rgbToYcc(w: Int, h: Int,
                        rgb: Array[Int]): (Array[Int], Array[Int], Array[Int]) = {
     val n = w * h
     val yP = new Array[Int](n); val cbP = new Array[Int](n); val crP = new Array[Int](n)

@@ -2,15 +2,14 @@ package graft.multimodal
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal columns for training-data pipelines: image/audio/video
   * payloads as opaque `binary` columns with typed metadata, processed by
-  * partition-batched transforms.
+  * narrow per-row transforms.
   *
-  * Container METADATA is real: [[imageHeaderMeta]] parses PNG/JPEG/GIF/
-  * BMP headers natively from the payload bytes
-  * ([[graft.functions.ImageMetaExpr]] — codegen'd, no codec library).
+  * Container METADATA is real: [[graft.functions.ImageMetaExpr]] parses
+  * PNG/JPEG/GIF/BMP headers natively from the payload bytes (codegen'd,
+  * no codec library).
   * PIXEL decode is real for PNG ([[PngCodec]] — 8-bit gray/RGB/palette
   * via java.util.zip, all five scanline filters), GIF ([[GifCodec]] —
   * LZW + palette expansion, interlaced or not), and baseline JPEG
@@ -23,25 +22,13 @@ import org.apache.spark.sql.types._
   * ([[StubCodec]]), the fallback when the real codecs decline a
   * payload.
   * Everything around the codec is real and tested: schema,
-  * null/short-payload handling, batch shape (fixed-size record batches
-  * per partition, the JVM analog of an Arrow-batched pandas UDF), and
-  * the feature-extraction contract.
+  * null/short-payload handling, and the feature-extraction contract.
   *
   * Scale design: payload bytes never shuffle — transforms are narrow
-  * mapPartitions; only extracted features (KB per row → bytes per row)
+  * per-row maps; only extracted features (KB per row → bytes per row)
   * flow into joins/aggregations downstream.
   */
 object Multimodal {
-
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("mime", StringType),
-    StructField("content", BinaryType),
-    StructField("meta", StructType(Seq(
-      StructField("source", StringType),
-      StructField("width", IntegerType),
-      StructField("height", IntegerType),
-      StructField("duration_ms", LongType))))))
 
   final case class MediaMeta(source: String, width: Option[Int],
                              height: Option[Int], duration_ms: Option[Long])
@@ -77,24 +64,15 @@ object Multimodal {
       val h = 1 + (bytes.length % 64)
       (w, h, digest.map(_ & 0xff))
     }
-    /** "Resize": re-hash payload to the target dims deterministically. */
-    def resize(bytes: Array[Byte], w: Int, h: Int): Array[Byte] = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      md.update(bytes); md.update(s"${w}x$h".getBytes("UTF-8"))
-      md.digest()
-    }
-    /** "Frame-sample" a video payload every `everyMs`. */
-    def sampleFrames(bytes: Array[Byte], durationMs: Long, everyMs: Long): Seq[(Int, Long)] =
-      (0L until math.max(durationMs, 1L) by math.max(everyMs, 1L))
-        .zipWithIndex.map { case (ms, i) => (i, ms) }
   }
 
-  /** Batched mapPartitions: the Arrow-record-batch shape without Arrow —
-    * operators see fixed-size batches, enabling per-batch amortized setup
-    * (codec init, buffer reuse) exactly like a pandas UDF would. */
-  def mapBatches[T, U](ds: Dataset[T], batchSize: Int)(f: Seq[T] => Seq[U])
-                      (implicit enc: org.apache.spark.sql.Encoder[U]): Dataset[U] =
-    ds.mapPartitions(_.grouped(batchSize).flatMap(batch => f(batch)))(enc)
+  /** Real pixel decode: PNG, then GIF, then baseline JPEG, as
+    * (width, height, channels, samples); None for an empty payload or
+    * one every codec declines. */
+  private def decodeImage(bytes: Array[Byte]): Option[(Int, Int, Int, Array[Int])] =
+    if (bytes.isEmpty) None
+    else PngCodec.decode(bytes).orElse(GifCodec.decode(bytes))
+      .orElse(JpegCodec.decode(bytes))
 
   /** Image feature extraction over the media frame: decode →
     * width/height/brightness/16-bin histogram. PNG payloads (8-bit
@@ -109,31 +87,28 @@ object Multimodal {
     * micro = (2·sum·10^6 + d) DIV 2d over d = n·255, then ONE exact IEEE
     * divide) — so an engine that can reproduce the pixel synthesis can
     * reproduce the exact double without float-summation-order hazards. */
-  def imageFeatures(media: Dataset[MediaRow], batchSize: Int = 64): Dataset[ImageFeatures] = {
+  def imageFeatures(media: Dataset[MediaRow]): Dataset[ImageFeatures] = {
     import media.sparkSession.implicits._
-    mapBatches(media, batchSize) { batch =>
-      batch.map { m =>
-        val bytes = Option(m.content).getOrElse(Array.emptyByteArray)
-        if (bytes.isEmpty) ImageFeatures(m.media_id, 0, 0, 0L, 0.0, Array.fill(16)(0.0))
-        else PngCodec.decode(bytes).orElse(GifCodec.decode(bytes))
-          .orElse(JpegCodec.decode(bytes)) match {
-          case Some((w, h, _, samples)) =>
-            val hist = Array.fill(16)(0.0)
-            var sum = 0L
-            samples.foreach { s => hist(s / 16) += 1.0; sum += s }
-            val d = samples.length.toLong * 255L
-            val micro = (sum * 2000000L + d) / (2L * d)
-            ImageFeatures(m.media_id, w, h, bytes.length.toLong,
-              micro.toDouble / 1000000.0,
-              hist.map(_ / samples.length.toDouble))
-          case None =>
-            val (w, h, px) = StubCodec.decodeImage(bytes)
-            val hist = Array.fill(16)(0.0)
-            px.foreach(p => hist(p / 16) += 1.0)
-            val n = px.length.toDouble
-            ImageFeatures(m.media_id, w, h, bytes.length.toLong,
-              px.sum / math.max(n, 1.0) / 255.0, hist.map(_ / math.max(n, 1.0)))
-        }
+    media.map { m =>
+      val bytes = Option(m.content).getOrElse(Array.emptyByteArray)
+      if (bytes.isEmpty) ImageFeatures(m.media_id, 0, 0, 0L, 0.0, Array.fill(16)(0.0))
+      else decodeImage(bytes) match {
+        case Some((w, h, _, samples)) =>
+          val hist = Array.fill(16)(0.0)
+          var sum = 0L
+          samples.foreach { s => hist(s / 16) += 1.0; sum += s }
+          val d = samples.length.toLong * 255L
+          val micro = (sum * 2000000L + d) / (2L * d)
+          ImageFeatures(m.media_id, w, h, bytes.length.toLong,
+            micro.toDouble / 1000000.0,
+            hist.map(_ / samples.length.toDouble))
+        case None =>
+          val (w, h, px) = StubCodec.decodeImage(bytes)
+          val hist = Array.fill(16)(0.0)
+          px.foreach(p => hist(p / 16) += 1.0)
+          val n = px.length.toDouble
+          ImageFeatures(m.media_id, w, h, bytes.length.toLong,
+            px.sum / math.max(n, 1.0) / 255.0, hist.map(_ / math.max(n, 1.0)))
       }
     }
   }
@@ -152,31 +127,29 @@ object Multimodal {
     * row: format "stub", zero features, n_samples = payload length, so
     * a downstream consumer can never mistake a declined decode for
     * digital silence. NULL/empty payloads yield the same with n 0. */
-  def audioFeatures(media: Dataset[MediaRow], batchSize: Int = 64): Dataset[AudioFeatures] = {
+  def audioFeatures(media: Dataset[MediaRow]): Dataset[AudioFeatures] = {
     import media.sparkSession.implicits._
-    mapBatches(media, batchSize) { batch =>
-      batch.map { m =>
-        val bytes = Option(m.content).getOrElse(Array.emptyByteArray)
-        PcmCodec.decode(bytes) match {
-          case Some(p) if p.samples.nonEmpty =>
-            var peak = 0; var sum = 0L; var sq = 0L
-            p.samples.foreach { s =>
-              val a = math.abs(s)
-              if (a > peak) peak = a
-              sum += s
-              sq += s.toLong * s
-            }
-            val n = p.samples.length
-            AudioFeatures(m.media_id, p.format, p.channels, p.sampleRate,
-              n.toLong, peak, sum, sq,
-              sum.toDouble / n, math.sqrt(sq.toDouble / n))
-          case Some(p) =>
-            AudioFeatures(m.media_id, p.format, p.channels, p.sampleRate,
-              0L, 0, 0L, 0L, 0.0, 0.0)
-          case None =>
-            AudioFeatures(m.media_id, "stub", 0, 0, bytes.length.toLong,
-              0, 0L, 0L, 0.0, 0.0)
-        }
+    media.map { m =>
+      val bytes = Option(m.content).getOrElse(Array.emptyByteArray)
+      PcmCodec.decode(bytes) match {
+        case Some(p) if p.samples.nonEmpty =>
+          var peak = 0; var sum = 0L; var sq = 0L
+          p.samples.foreach { s =>
+            val a = math.abs(s)
+            if (a > peak) peak = a
+            sum += s
+            sq += s.toLong * s
+          }
+          val n = p.samples.length
+          AudioFeatures(m.media_id, p.format, p.channels, p.sampleRate,
+            n.toLong, peak, sum, sq,
+            sum.toDouble / n, math.sqrt(sq.toDouble / n))
+        case Some(p) =>
+          AudioFeatures(m.media_id, p.format, p.channels, p.sampleRate,
+            0L, 0, 0L, 0L, 0.0, 0.0)
+        case None =>
+          AudioFeatures(m.media_id, "stub", 0, 0, bytes.length.toLong,
+            0, 0L, 0L, 0.0, 0.0)
       }
     }
   }
@@ -194,21 +167,15 @@ object Multimodal {
     * smaller than the 9×8 grid, yield NULL — a visible non-hash, never
     * a fabricated fingerprint from stub pixels.
     *
-    * Scale shape: per-row kernel in narrow batches (payloads never
-    * shuffle); downstream near-dup detection ([[imageNearDups]])
+    * Scale shape: narrow per-row kernel (payloads never shuffle); downstream near-dup detection ([[imageNearDups]])
     * operates on the 8-byte hashes only. */
-  def imageDHash(media: Dataset[MediaRow], batchSize: Int = 64): DataFrame = {
+  def imageDHash(media: Dataset[MediaRow]): DataFrame = {
     import media.sparkSession.implicits._
-    mapBatches(media, batchSize) { batch =>
-      batch.map { m =>
-        val bytes = Option(m.content).getOrElse(Array.emptyByteArray)
-        val decoded =
-          if (bytes.isEmpty) None
-          else PngCodec.decode(bytes).orElse(GifCodec.decode(bytes))
-            .orElse(JpegCodec.decode(bytes))
-        m.media_id -> decoded.flatMap { case (w, h, ch, s) =>
-          if (w < 9 || h < 8) None else Some(dhash64(w, h, ch, s))
-        }
+    media.map { m =>
+      val bytes = Option(m.content).getOrElse(Array.emptyByteArray)
+      val decoded = decodeImage(bytes)
+      m.media_id -> decoded.flatMap { case (w, h, ch, s) =>
+        if (w < 9 || h < 8) None else Some(dhash64(w, h, ch, s))
       }
     }.toDF("media_id", "dhash")
   }
@@ -265,50 +232,47 @@ object Multimodal {
     * Output frame count preserves duration: ((frames−1)·dst)/src + 1.
     *
     * Payloads the codec declines pass through UNTOUCHED — visibly, via
-    * [[audioHeaderMeta]]'s unchanged sample_rate, never silently
-    * dropped or fabricated. */
-  def resampleAudio(media: Dataset[MediaRow], targetRate: Int,
-                    batchSize: Int = 64): Dataset[MediaRow] = {
+    * [[graft.functions.AudioMetaExpr]]'s unchanged sample_rate, never
+    * silently dropped or fabricated. */
+  def resampleAudio(media: Dataset[MediaRow], targetRate: Int): Dataset[MediaRow] = {
     require(targetRate > 0, s"resampleAudio: bad target rate $targetRate")
     import media.sparkSession.implicits._
-    mapBatches(media, batchSize) { batch =>
-      batch.map { m =>
-        val bytes = Option(m.content).getOrElse(Array.emptyByteArray)
-        PcmCodec.decode(bytes) match {
-          case Some(p) if p.samples.nonEmpty && p.sampleRate != targetRate =>
-            val ch = p.channels
-            val frames = p.samples.length / ch
-            val outFrames =
-              if (frames == 1) 1
-              else ((frames - 1).toLong * targetRate / p.sampleRate).toInt + 1
-            val out = new Array[Int](outFrames * ch)
-            var i = 0
-            while (i < outFrames) {
-              val num = i.toLong * p.sampleRate
-              val k = (num / targetRate).toInt
-              val rem = (num % targetRate).toInt
-              var c = 0
-              while (c < ch) {
-                val a = p.samples(k * ch + c)
-                out(i * ch + c) =
-                  if (rem == 0 || k + 1 >= frames) a
-                  else {
-                    val b = p.samples((k + 1) * ch + c)
-                    val t = (b - a).toDouble * rem / targetRate.toDouble
-                    (if (a + t >= 0) math.floor(a + t + 0.5)
-                     else -math.floor(-(a + t) + 0.5)).toInt
-                  }
-                c += 1
-              }
-              i += 1
+    media.map { m =>
+      val bytes = Option(m.content).getOrElse(Array.emptyByteArray)
+      PcmCodec.decode(bytes) match {
+        case Some(p) if p.samples.nonEmpty && p.sampleRate != targetRate =>
+          val ch = p.channels
+          val frames = p.samples.length / ch
+          val outFrames =
+            if (frames == 1) 1
+            else ((frames - 1).toLong * targetRate / p.sampleRate).toInt + 1
+          val out = new Array[Int](outFrames * ch)
+          var i = 0
+          while (i < outFrames) {
+            val num = i.toLong * p.sampleRate
+            val k = (num / targetRate).toInt
+            val rem = (num % targetRate).toInt
+            var c = 0
+            while (c < ch) {
+              val a = p.samples(k * ch + c)
+              out(i * ch + c) =
+                if (rem == 0 || k + 1 >= frames) a
+                else {
+                  val b = p.samples((k + 1) * ch + c)
+                  val t = (b - a).toDouble * rem / targetRate.toDouble
+                  (if (a + t >= 0) math.floor(a + t + 0.5)
+                   else -math.floor(-(a + t) + 0.5)).toInt
+                }
+              c += 1
             }
-            val re =
-              if (p.format == "wav")
-                PcmCodec.encodeWav(ch, targetRate, p.bits, out)
-              else PcmCodec.encodeAiff(ch, targetRate, p.bits, out)
-            m.copy(content = re)
-          case _ => m // declined or already at rate: untouched, visibly
-        }
+            i += 1
+          }
+          val re =
+            if (p.format == "wav")
+              PcmCodec.encodeWav(ch, targetRate, p.bits, out)
+            else PcmCodec.encodeAiff(ch, targetRate, p.bits, out)
+          m.copy(content = re)
+        case _ => m // declined or already at rate: untouched, visibly
       }
     }
   }
@@ -322,33 +286,31 @@ object Multimodal {
     * dHash survives brightness shifts. Payloads the codec declines, and
     * clips shorter than 33 samples, yield NULL — never a fabricated
     * fingerprint. Output: (media_id, afp). */
-  def audioFingerprint(media: Dataset[MediaRow], batchSize: Int = 64): DataFrame = {
+  def audioFingerprint(media: Dataset[MediaRow]): DataFrame = {
     import media.sparkSession.implicits._
-    mapBatches(media, batchSize) { batch =>
-      batch.map { m =>
-        val bytes = Option(m.content).getOrElse(Array.emptyByteArray)
-        m.media_id -> PcmCodec.decode(bytes).flatMap { p =>
-          val n = p.samples.length
-          if (n < 33) None
-          else {
-            val e = new Array[Long](33)
-            var wI = 0
-            while (wI < 33) {
-              var k = wI * n / 33
-              val k1 = (wI + 1) * n / 33
-              var sum = 0L
-              while (k < k1) { sum += math.abs(p.samples(k)); k += 1 }
-              e(wI) = sum
-              wI += 1
-            }
-            var hash = 0L
-            var i = 0
-            while (i < 32) {
-              if (e(i) < e(i + 1)) hash |= 1L << i
-              i += 1
-            }
-            Some(hash)
+    media.map { m =>
+      val bytes = Option(m.content).getOrElse(Array.emptyByteArray)
+      m.media_id -> PcmCodec.decode(bytes).flatMap { p =>
+        val n = p.samples.length
+        if (n < 33) None
+        else {
+          val e = new Array[Long](33)
+          var wI = 0
+          while (wI < 33) {
+            var k = wI * n / 33
+            val k1 = (wI + 1) * n / 33
+            var sum = 0L
+            while (k < k1) { sum += math.abs(p.samples(k)); k += 1 }
+            e(wI) = sum
+            wI += 1
           }
+          var hash = 0L
+          var i = 0
+          while (i < 32) {
+            if (e(i) < e(i + 1)) hash |= 1L << i
+            i += 1
+          }
+          Some(hash)
         }
       }
     }.toDF("media_id", "afp")
@@ -374,39 +336,36 @@ object Multimodal {
     * NULL lag/score — a visible non-answer, never a fabricated pitch.
     * Output: (media_id, period_lag, period_score).
     *
-    * Scale shape: per-row kernel in narrow batches — `O(n·lagRange)`
+    * Scale shape: narrow per-row kernel — `O(n·lagRange)`
     * integer ops per clip, payloads never shuffle. */
-  def audioPeriodicity(media: Dataset[MediaRow], minLag: Int, maxLag: Int,
-                       batchSize: Int = 64): DataFrame = {
+  def audioPeriodicity(media: Dataset[MediaRow], minLag: Int, maxLag: Int): DataFrame = {
     require(0 < minLag && minLag <= maxLag,
       s"audioPeriodicity: bad lag range [$minLag, $maxLag]")
     import media.sparkSession.implicits._
-    mapBatches(media, batchSize) { batch =>
-      batch.map { m =>
-        val bytes = Option(m.content).getOrElse(Array.emptyByteArray)
-        val best = PcmCodec.decode(bytes).flatMap { p =>
-          val s = p.samples
-          val n = s.length
-          var peak = 0L
-          s.foreach { v => val a = math.abs(v).toLong; if (a > peak) peak = a }
-          if (n <= maxLag ||
-            (peak > 0 && n.toLong > Long.MaxValue / (peak * peak))) None
-          else {
-            var bestLag = 0; var bestR = Long.MinValue
-            var lag = minLag
-            while (lag <= maxLag) {
-              var r = 0L
-              var i = 0
-              val end = n - lag
-              while (i < end) { r += s(i).toLong * s(i + lag); i += 1 }
-              if (r > bestR) { bestR = r; bestLag = lag } // strict: ties keep the smaller lag
-              lag += 1
-            }
-            Some((bestLag, bestR))
+    media.map { m =>
+      val bytes = Option(m.content).getOrElse(Array.emptyByteArray)
+      val best = PcmCodec.decode(bytes).flatMap { p =>
+        val s = p.samples
+        val n = s.length
+        var peak = 0L
+        s.foreach { v => val a = math.abs(v).toLong; if (a > peak) peak = a }
+        if (n <= maxLag ||
+          (peak > 0 && n.toLong > Long.MaxValue / (peak * peak))) None
+        else {
+          var bestLag = 0; var bestR = Long.MinValue
+          var lag = minLag
+          while (lag <= maxLag) {
+            var r = 0L
+            var i = 0
+            val end = n - lag
+            while (i < end) { r += s(i).toLong * s(i + lag); i += 1 }
+            if (r > bestR) { bestR = r; bestLag = lag } // strict: ties keep the smaller lag
+            lag += 1
           }
+          Some((bestLag, bestR))
         }
-        (m.media_id, best.map(_._1), best.map(_._2))
       }
+      (m.media_id, best.map(_._1), best.map(_._2))
     }.toDF("media_id", "period_lag", "period_score")
   }
 
@@ -424,35 +383,32 @@ object Multimodal {
     * payloads the codec declines, all-zero clips (no peak to scale),
     * and clips whose bit depth cannot represent `targetPeak`
     * (target ≥ 2^(bits−1)) — never a silently clipped rewrite. */
-  def normalizeAudioPeak(media: Dataset[MediaRow], targetPeak: Int,
-                         batchSize: Int = 64): Dataset[MediaRow] = {
+  def normalizeAudioPeak(media: Dataset[MediaRow], targetPeak: Int): Dataset[MediaRow] = {
     require(targetPeak > 0, s"normalizeAudioPeak: bad target $targetPeak")
     import media.sparkSession.implicits._
-    mapBatches(media, batchSize) { batch =>
-      batch.map { m =>
-        val bytes = Option(m.content).getOrElse(Array.emptyByteArray)
-        PcmCodec.decode(bytes) match {
-          case Some(p) if p.samples.nonEmpty &&
-            targetPeak < (1 << (p.bits - 1)) =>
-            var peak = 0
-            p.samples.foreach { s =>
-              val a = math.abs(s); if (a > peak) peak = a
+    media.map { m =>
+      val bytes = Option(m.content).getOrElse(Array.emptyByteArray)
+      PcmCodec.decode(bytes) match {
+        case Some(p) if p.samples.nonEmpty &&
+          targetPeak < (1 << (p.bits - 1)) =>
+          var peak = 0
+          p.samples.foreach { s =>
+            val a = math.abs(s); if (a > peak) peak = a
+          }
+          if (peak == 0) m // digital silence: nothing to scale, visibly
+          else {
+            val out = p.samples.map { s =>
+              val scaled = ((2L * math.abs(s) * targetPeak + peak) /
+                (2L * peak)).toInt
+              if (s < 0) -scaled else scaled
             }
-            if (peak == 0) m // digital silence: nothing to scale, visibly
-            else {
-              val out = p.samples.map { s =>
-                val scaled = ((2L * math.abs(s) * targetPeak + peak) /
-                  (2L * peak)).toInt
-                if (s < 0) -scaled else scaled
-              }
-              val re =
-                if (p.format == "wav")
-                  PcmCodec.encodeWav(p.channels, p.sampleRate, p.bits, out)
-                else PcmCodec.encodeAiff(p.channels, p.sampleRate, p.bits, out)
-              m.copy(content = re)
-            }
-          case _ => m // declined or unrepresentable target: untouched
-        }
+            val re =
+              if (p.format == "wav")
+                PcmCodec.encodeWav(p.channels, p.sampleRate, p.bits, out)
+              else PcmCodec.encodeAiff(p.channels, p.sampleRate, p.bits, out)
+            m.copy(content = re)
+          }
+        case _ => m // declined or unrepresentable target: untouched
       }
     }
   }
@@ -468,42 +424,40 @@ object Multimodal {
     * no qualifying run, emit NO rows (compose with [[audioFeatures]]'s
     * visible stub row to distinguish "silent" from "undecodable").
     *
-    * Scale shape: flatMap-shaped per-row kernel in narrow batches —
+    * Scale shape: narrow flatMap-shaped per-row kernel —
     * payload bytes never shuffle, and the output is segment METADATA
     * (five ints per segment), not audio. */
   def audioActiveSegments(media: Dataset[MediaRow], threshold: Int,
-                          minRun: Int, batchSize: Int = 64): DataFrame = {
+                          minRun: Int): DataFrame = {
     require(threshold > 0, s"audioActiveSegments: bad threshold $threshold")
     require(minRun >= 1, s"audioActiveSegments: bad minRun $minRun")
     import media.sparkSession.implicits._
-    mapBatches(media, batchSize) { batch =>
-      batch.flatMap { m =>
-        val bytes = Option(m.content).getOrElse(Array.emptyByteArray)
-        PcmCodec.decode(bytes) match {
-          case Some(p) =>
-            val s = p.samples
-            val segs = scala.collection.mutable.ArrayBuffer
-              .empty[(Long, Int, Int, Int, Int, Int)]
-            var i = 0
-            var segIdx = 0
-            while (i < s.length) {
-              if (math.abs(s(i)) >= threshold) {
-                val start = i
-                var peak = 0
-                while (i < s.length && math.abs(s(i)) >= threshold) {
-                  val a = math.abs(s(i))
-                  if (a > peak) peak = a
-                  i += 1
-                }
-                if (i - start >= minRun) {
-                  segs += ((m.media_id, segIdx, start, i, i - start, peak))
-                  segIdx += 1
-                }
-              } else i += 1
-            }
-            segs.toSeq
-          case None => Seq.empty
-        }
+    media.flatMap { m =>
+      val bytes = Option(m.content).getOrElse(Array.emptyByteArray)
+      PcmCodec.decode(bytes) match {
+        case Some(p) =>
+          val s = p.samples
+          val segs = scala.collection.mutable.ArrayBuffer
+            .empty[(Long, Int, Int, Int, Int, Int)]
+          var i = 0
+          var segIdx = 0
+          while (i < s.length) {
+            if (math.abs(s(i)) >= threshold) {
+              val start = i
+              var peak = 0
+              while (i < s.length && math.abs(s(i)) >= threshold) {
+                val a = math.abs(s(i))
+                if (a > peak) peak = a
+                i += 1
+              }
+              if (i - start >= minRun) {
+                segs += ((m.media_id, segIdx, start, i, i - start, peak))
+                segIdx += 1
+              }
+            } else i += 1
+          }
+          segs.toSeq
+        case None => Seq.empty
       }
     }.toDF("media_id", "seg_idx", "start", "end_excl", "n_samples", "peak")
   }
@@ -528,18 +482,13 @@ object Multimodal {
     * so pair via exact equality or small-radius scan — at 15 bits the
     * keyspace is 32k buckets and a plain hash-equijoin is the scale
     * path). */
-  def imageSpectralHash(media: Dataset[MediaRow], batchSize: Int = 64): DataFrame = {
+  def imageSpectralHash(media: Dataset[MediaRow]): DataFrame = {
     import media.sparkSession.implicits._
-    mapBatches(media, batchSize) { batch =>
-      batch.map { m =>
-        val bytes = Option(m.content).getOrElse(Array.emptyByteArray)
-        val decoded =
-          if (bytes.isEmpty) None
-          else PngCodec.decode(bytes).orElse(GifCodec.decode(bytes))
-            .orElse(JpegCodec.decode(bytes))
-        m.media_id -> decoded.flatMap { case (w, h, ch, s) =>
-          if (w < 8 || h < 8) None else Some(spectralHash15(w, h, ch, s))
-        }
+    media.map { m =>
+      val bytes = Option(m.content).getOrElse(Array.emptyByteArray)
+      val decoded = decodeImage(bytes)
+      m.media_id -> decoded.flatMap { case (w, h, ch, s) =>
+        if (w < 8 || h < 8) None else Some(spectralHash15(w, h, ch, s))
       }
     }.toDF("media_id", "shash")
   }
@@ -673,8 +622,8 @@ object Multimodal {
   }
 
   /** REAL integer-factor image downscale — the thumbnailing transform
-    * a 100 TB crawl runs before feature extraction, replacing the stub
-    * resize for every payload the real codecs can decode: pixels come
+    * a 100 TB crawl runs before feature extraction, for every payload
+    * the real codecs can decode: pixels come
     * through [[PngCodec]]/[[GifCodec]]/[[JpegCodec]], each output
     * sample is the EXACT half-up integer mean of its factor×factor box
     * (`(2·sum + f²) div 2f²` — no float, an oracle recomputes it), and
@@ -687,67 +636,46 @@ object Multimodal {
     * unchanged dims), never silently dropped or fabricated. General
     * fractional resize stays out of the envelope deliberately: it
     * needs interpolation choices this contract doesn't want to hide. */
-  def downscaleImages(media: Dataset[MediaRow], factor: Int,
-                      batchSize: Int = 64): Dataset[MediaRow] = {
+  def downscaleImages(media: Dataset[MediaRow], factor: Int): Dataset[MediaRow] = {
     require(factor >= 1, s"downscaleImages: bad factor $factor")
     import media.sparkSession.implicits._
     val f2 = factor * factor
-    mapBatches(media, batchSize) { batch =>
-      batch.map { m =>
-        val bytes = Option(m.content).getOrElse(Array.emptyByteArray)
-        val decoded =
-          if (bytes.isEmpty) None
-          else PngCodec.decode(bytes).orElse(GifCodec.decode(bytes))
-            .orElse(JpegCodec.decode(bytes))
-        decoded match {
-          case Some((w, h, ch, s))
-            if factor > 1 && w % factor == 0 && h % factor == 0 =>
-            val ow = w / factor; val oh = h / factor
-            val out = new Array[Int](ow * oh * ch)
-            var oy = 0
-            while (oy < oh) {
-              var ox = 0
-              while (ox < ow) {
-                var c = 0
-                while (c < ch) {
-                  var sum = 0
-                  var dy = 0
-                  while (dy < factor) {
-                    var dx = 0
-                    while (dx < factor) {
-                      sum += s(((oy * factor + dy) * w + ox * factor + dx)
-                        * ch + c)
-                      dx += 1
-                    }
-                    dy += 1
+    media.map { m =>
+      val bytes = Option(m.content).getOrElse(Array.emptyByteArray)
+      val decoded = decodeImage(bytes)
+      decoded match {
+        case Some((w, h, ch, s))
+          if factor > 1 && w % factor == 0 && h % factor == 0 =>
+          val ow = w / factor; val oh = h / factor
+          val out = new Array[Int](ow * oh * ch)
+          var oy = 0
+          while (oy < oh) {
+            var ox = 0
+            while (ox < ow) {
+              var c = 0
+              while (c < ch) {
+                var sum = 0
+                var dy = 0
+                while (dy < factor) {
+                  var dx = 0
+                  while (dx < factor) {
+                    sum += s(((oy * factor + dy) * w + ox * factor + dx)
+                      * ch + c)
+                    dx += 1
                   }
-                  out((oy * ow + ox) * ch + c) = (2 * sum + f2) / (2 * f2)
-                  c += 1
+                  dy += 1
                 }
-                ox += 1
+                out((oy * ow + ox) * ch + c) = (2 * sum + f2) / (2 * f2)
+                c += 1
               }
-              oy += 1
+              ox += 1
             }
-            m.copy(mime = "image/png",
-              content = PngCodec.encode(ow, oh, ch, out),
-              meta = m.meta.copy(width = Some(ow), height = Some(oh)))
-          case _ => m // declined or factor 1: untouched, visibly
-        }
-      }
-    }
-  }
-
-  /** Image resize: payload→payload transform keeping (id, mime, meta)
-    * and rewriting content + dims — the decode→resize→encode round trip
-    * behind the stub codec. */
-  def resizeImages(media: Dataset[MediaRow], w: Int, h: Int,
-                   batchSize: Int = 64): Dataset[MediaRow] = {
-    import media.sparkSession.implicits._
-    mapBatches(media, batchSize) { batch =>
-      batch.map { m =>
-        val bytes = Option(m.content).getOrElse(Array.emptyByteArray)
-        m.copy(content = StubCodec.resize(bytes, w, h),
-          meta = m.meta.copy(width = Some(w), height = Some(h)))
+            oy += 1
+          }
+          m.copy(mime = "image/png",
+            content = PngCodec.encode(ow, oh, ch, out),
+            meta = m.meta.copy(width = Some(ow), height = Some(oh)))
+        case _ => m // declined or factor 1: untouched, visibly
       }
     }
   }
@@ -758,35 +686,17 @@ object Multimodal {
     * one output row per frame, frame payload = the frame's own JPEG
     * bytes, `frame_ms` from the container's µs-per-frame clock.
     * Containers outside the envelope (real inter-frame codecs) emit
-    * NO rows — compose with [[sampleFrames]]'s visible stub for those,
-    * never fabricated frames. */
-  def mjpegFrames(media: Dataset[MediaRow], batchSize: Int = 16): Dataset[FrameSample] = {
+    * NO rows, never fabricated frames. */
+  def mjpegFrames(media: Dataset[MediaRow]): Dataset[FrameSample] = {
     import media.sparkSession.implicits._
-    mapBatches(media, batchSize) { batch =>
-      batch.flatMap { m =>
-        val bytes = Option(m.content).getOrElse(Array.emptyByteArray)
-        MjpegAvi.decode(bytes) match {
-          case Some((us, frames)) =>
-            frames.zipWithIndex.map { case (f, i) =>
-              FrameSample(m.media_id, i, i.toLong * us / 1000L, f)
-            }
-          case None => Seq.empty
-        }
-      }
-    }
-  }
-
-  /** Video frame sampling: one output row per sampled frame (flatMap
-    * shape), frame payload re-hashed per frame (stub). */
-  def sampleFrames(media: Dataset[MediaRow], everyMs: Long,
-                   batchSize: Int = 16): Dataset[FrameSample] = {
-    import media.sparkSession.implicits._
-    mapBatches(media, batchSize) { batch =>
-      batch.flatMap { m =>
-        val dur = m.meta.duration_ms.getOrElse(0L)
-        StubCodec.sampleFrames(Option(m.content).getOrElse(Array.emptyByteArray), dur, everyMs)
-          .map { case (i, ms) =>
-            FrameSample(m.media_id, i, ms, StubCodec.resize(m.content, 32, 32)) }
+    media.flatMap { m =>
+      val bytes = Option(m.content).getOrElse(Array.emptyByteArray)
+      MjpegAvi.decode(bytes) match {
+        case Some((us, frames)) =>
+          frames.zipWithIndex.map { case (f, i) =>
+            FrameSample(m.media_id, i, i.toLong * us / 1000L, f)
+          }
+        case None => Seq.empty
       }
     }
   }
@@ -798,25 +708,7 @@ object Multimodal {
       md5(col("content")).as("content_md5"),
       col("meta.width").as("width"), col("meta.height").as("height"))
 
-  /** REAL container metadata from the payload bytes: format, dimensions,
-    * bit depth, channels parsed from the PNG/JPEG/GIF/BMP header by the
-    * codegen'd [[graft.functions.ImageMetaExpr]] — one narrow scan, no
-    * pixel decode, NULLs (not failures) for unrecognized payloads. The
-    * trust boundary a 100 TB crawl needs: declared `meta.width/height`
-    * can lie; these come from the bytes. */
-  def imageHeaderMeta(media: DataFrame): DataFrame = {
-    val m = graft.functions.ImageMetaExpr.imageMeta(col("content"))
-    media.select(col("media_id"), col("mime"),
-      length(col("content")).as("n_bytes"),
-      m.getField("format").as("format"),
-      m.getField("width").as("width"),
-      m.getField("height").as("height"),
-      m.getField("bit_depth").as("bit_depth"),
-      m.getField("channels").as("channels"))
-  }
-
-  /** [[imageHeaderMeta]]'s video sibling, completing the metadata
-    * family: MP4/AVI header fields parsed from the payload bytes by the
+  /** Video container metadata: MP4/AVI header fields parsed from the payload bytes by the
     * codegen'd [[graft.functions.VideoMetaExpr]] — same narrow-scan,
     * NULL-on-corrupt contract; frame DECODE stays behind the stub. */
   def videoHeaderMeta(media: DataFrame): DataFrame = {
@@ -828,22 +720,5 @@ object Multimodal {
       m.getField("height").as("height"),
       m.getField("duration_ms").as("duration_ms"),
       m.getField("n_tracks").as("n_tracks"))
-  }
-
-  /** [[imageHeaderMeta]]'s audio sibling: WAV/AIFF/FLAC header fields
-    * parsed from the payload bytes by the codegen'd
-    * [[graft.functions.AudioMetaExpr]], plus derived duration —
-    * same narrow-scan, NULL-on-corrupt contract. */
-  def audioHeaderMeta(media: DataFrame): DataFrame = {
-    val m = graft.functions.AudioMetaExpr.audioMeta(col("content"))
-    media.select(col("media_id"), col("mime"),
-      length(col("content")).as("n_bytes"),
-      m.getField("format").as("format"),
-      m.getField("channels").as("channels"),
-      m.getField("sample_rate").as("sample_rate"),
-      m.getField("bits_per_sample").as("bits_per_sample"),
-      m.getField("n_frames").as("n_frames"))
-      .withColumn("duration_ms",
-        expr("n_frames * 1000 DIV sample_rate"))
   }
 }

@@ -23,18 +23,18 @@ import java.util.zip.{CRC32, Deflater, Inflater}
   * shared state to leak across tasks). */
 object PngCodec {
 
-  private val Signature =
+  private[multimodal] val Signature =
     Array(0x89, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A).map(_.toByte)
 
   private def u32be(b: Array[Byte], i: Int): Long =
     ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) |
       ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
 
-  private def be32(v: Long): Array[Byte] = Array(
+  private[multimodal] def be32(v: Long): Array[Byte] = Array(
     ((v >>> 24) & 0xff).toByte, ((v >>> 16) & 0xff).toByte,
     ((v >>> 8) & 0xff).toByte, (v & 0xff).toByte)
 
-  private def chunk(tag: String, data: Array[Byte]): Array[Byte] = {
+  private[multimodal] def chunk(tag: String, data: Array[Byte]): Array[Byte] = {
     val t = tag.getBytes("US-ASCII")
     val crc = new CRC32()
     crc.update(t); crc.update(data)
@@ -49,7 +49,7 @@ object PngCodec {
 
   /** Filter rows (type rotates y mod 5) and deflate — shared by the
     * gray/RGB and palette encoders. `channels` is bytes per pixel. */
-  private def filterAndDeflate(w: Int, h: Int, channels: Int,
+  private[multimodal] def filterAndDeflate(w: Int, h: Int, channels: Int,
                                samples: Array[Int]): Array[Byte] = {
     val stride = w * channels
     val raw = new Array[Byte]((stride + 1) * h)
@@ -97,28 +97,6 @@ object PngCodec {
       Array(8.toByte, colorType.toByte, 0.toByte, 0.toByte, 0.toByte)
     Signature ++ chunk("IHDR", ihdr) ++
       chunk("IDAT", filterAndDeflate(w, h, channels, samples)) ++
-      chunk("IEND", Array.emptyByteArray)
-  }
-
-  /** Encode a palette (color type 3) PNG: PLTE from packed 0xRRGGBB
-    * entries, 8-bit indices, same rotating scanline filters (filters
-    * operate on index bytes per spec). Fixture encoder for the
-    * palette-decode path. */
-  def encodePalette(w: Int, h: Int, palette: Array[Int],
-                    indices: Array[Int]): Array[Byte] = {
-    require(palette.nonEmpty && palette.length <= 256,
-      s"palette size: ${palette.length}")
-    require(w >= 1 && h >= 1 && indices.length == w * h,
-      s"bad dims: $w x $h vs ${indices.length}")
-    require(indices.forall(i => i >= 0 && i < palette.length),
-      "index past the palette")
-    val ihdr = be32(w.toLong) ++ be32(h.toLong) ++
-      Array(8.toByte, 3.toByte, 0.toByte, 0.toByte, 0.toByte)
-    val plte = palette.flatMap(rgb => Array(
-      ((rgb >> 16) & 0xff).toByte, ((rgb >> 8) & 0xff).toByte,
-      (rgb & 0xff).toByte))
-    Signature ++ chunk("IHDR", ihdr) ++ chunk("PLTE", plte) ++
-      chunk("IDAT", filterAndDeflate(w, h, 1, indices)) ++
       chunk("IEND", Array.emptyByteArray)
   }
 

@@ -424,13 +424,6 @@ object Dedup {
                         path: String): Boolean =
     StoreSwap.latestManifest(StoreSwap.fsOf(spark, path), path).nonEmpty
 
-  /** The store's retained manifest versions, oldest first — the
-    * time-travel surface: any listed version is a complete snapshot
-    * [[derivePairsFromStore]] can pin via `asOfVersion`. */
-  def minhashStoreVersions(spark: org.apache.spark.sql.SparkSession,
-                           path: String): Seq[Int] =
-    StoreSwap.manifestVersions(StoreSwap.fsOf(spark, path), path)
-
   /** Drop every file no retained manifest lists — the retention verb
     * that reclaims the copy-on-write garbage mutations leave behind
     * (unflipped crash leftovers, superseded rewrite inputs, a losing
@@ -1073,29 +1066,13 @@ object Dedup {
     * Computed by the native one-pass [[graft.functions.SimHash48]]
     * expression — the signature pass is a narrow scan with ZERO exchanges
     * (the declarative explode + 48-SUM hash aggregate it replaces shuffled
-    * every (doc, token-hash) pair; [[simhashDeclarative]] keeps that
-    * formulation as the executable spec). The hash must genuinely fill all
-    * 48 bits: with a 32-bit hash the top pigeonhole band is constant-zero
+    * every (doc, token-hash) pair; DedupReference in the specs keeps
+    * that formulation as the executable spec). The hash must genuinely
+    * fill all 48 bits: with a 32-bit hash the top pigeonhole band is constant-zero
     * and [[simhashNearDups]]'s band join degenerates to all-pairs. */
   def simhash(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs.select(col(idCol).as("doc"),
       graft.functions.SimHash48.simhash48(col(textCol)).as("simhash"))
-
-  /** The explode/aggregate formulation of [[simhash]] — slower (one
-    * shuffle, 48-column agg buffer) but independently derived; DedupSpec
-    * asserts equality with the native expression. */
-  def simhashDeclarative(docs: DataFrame, idCol: String, textCol: String,
-                         nBits: Int = 48): DataFrame = {
-    val tok = postings(docs, idCol, textCol, ngram = 1, hashBytes = 6)
-    val bitAggs = (0 until nBits).map { j =>
-      sum(when(shiftright(col("hv"), j).bitwiseAND(1) === 1, 1).otherwise(-1)).as(s"s$j")
-    }
-    val sums = tok.groupBy(col("doc")).agg(bitAggs.head, bitAggs.tail: _*)
-    val sigExpr = (0 until nBits).map { j =>
-      when(col(s"s$j") >= 0, lit(1L) * (1L << j)).otherwise(0L)
-    }.reduce(_ + _)
-    sums.select(col("doc"), sigExpr.as("simhash"))
-  }
 
   /** Benchmark decontamination: drop (or audit) every corpus document
     * that shares at least one word n-gram with the evaluation set — the
@@ -1131,11 +1108,10 @@ object Dedup {
     * group-level roll-up; this is per document).
     *
     * Scale shape: identical to [[decontaminate]] — the reference's
-    * distinct 4-byte shingle hashes broadcast (switch to
-    * [[noveltyScoreBloom]] past ~10^8 reference n-grams); the corpus
-    * side shuffles only its distinct (doc, hash) posting pairs. Docs
-    * with fewer than `ngram` tokens have no shingles and are absent from
-    * the output (nothing to score). */
+    * distinct 4-byte shingle hashes broadcast; the corpus side shuffles
+    * only its distinct (doc, hash) posting pairs. Docs with fewer than
+    * `ngram` tokens have no shingles and are absent from the output
+    * (nothing to score). */
   def noveltyScore(corpus: DataFrame, ref: DataFrame, idCol: String,
                    textCol: String, ngram: Int = 3): DataFrame = {
     val refShingles = ref
@@ -1193,8 +1169,7 @@ object Dedup {
     * against the materialized id set. */
   def decontaminateBloom(corpus: DataFrame, evalSet: DataFrame, idCol: String,
                          textCol: String, ngram: Int = 3,
-                         fpp: Double = 0.01,
-                         checkpointDir: Option[String] = None): DataFrame = {
+                         fpp: Double = 0.01): DataFrame = {
     require(fpp > 0 && fpp < 1, s"fpp out of range: $fpp")
     // three consumers (size count, bloom aggregate, exact confirm join)
     // must not re-run the explode+distinct shuffle over what is by
@@ -1218,12 +1193,10 @@ object Dedup {
         .select(col("__doc")).distinct()
         // materialize so the cache/broadcast can release here — EAGER by
         // contract: the finally below unpersists evalShingles and the
-        // bloom broadcast, both of which this plan reads. Default is
-        // a LOCAL checkpoint (executor blocks — lost executors make the
-        // returned frame unrecoverable); pass checkpointDir for a
-        // reliable store on preemptible clusters, same contract as
-        // [[components]].
-        .transform(ckptEagerFn(corpus, checkpointDir))
+        // bloom broadcast, both of which this plan reads. A LOCAL
+        // checkpoint: executor blocks — lost executors make the
+        // returned frame unrecoverable.
+        .localCheckpoint(true)
       corpus.join(contaminated,
         corpus(idCol) === contaminated("__doc"), "left_anti")
     } finally {
@@ -1232,78 +1205,6 @@ object Dedup {
       // copies (non-blocking; the driver copy stays for any re-broadcast)
       if (bloomBc != null) bloomBc.unpersist(blocking = false)
     }
-  }
-
-  /** [[noveltyScore]]'s scale path for LARGE reference sets — the same
-    * bloom-prefilter pattern as [[decontaminateBloom]] (which see for
-    * why the filter rides a broadcast, never a plan literal). Output is
-    * value-identical to [[noveltyScore]]: the bloom only prefilters the
-    * postings entering the exact confirm join, and false positives die
-    * in that join before anything is counted.
-    *
-    * Per-doc counting changes the shape vs decontaminate's semi-join:
-    *  - the corpus postings dedup once — one (doc, 8-byte hash) pair
-    *    shuffle, the same cost the exact path already pays, and the ONE
-    *    exchange both consumers below reuse;
-    *  - n_shingles is a hash aggregate over those pairs;
-    *  - the confirm semi-join shuffles ONLY the bloom-surviving sliver
-    *    (≈ true overlap + fpp of the rest) against the reference
-    *    postings — the term that made the giant-ref broadcast the
-    *    bottleneck — then aggregates per doc;
-    *  - the two bounded per-doc frames meet in a final (doc) join.
-    *
-    * Unlike decontaminateBloom this operator stays LAZY (its output is
-    * per-doc, corpus-sized — nothing cheap to checkpoint), so nothing
-    * here may pin cache entries: the reference postings are persisted
-    * only while counting + building the filter, released before return,
-    * and the confirm join re-derives them from source at execution (one
-    * extra pass over ref — the honest price of leaving no cache behind).
-    * The broadcast handle lives in the returned plan and is reclaimed
-    * with it by the context cleaner.
-    *
-    * PRECONDITION (the price of that re-derivation): `ref` must be
-    * DETERMINISTIC across evaluations — a stable table/file scan, not a
-    * sample(), a limit without order, or a re-read of a mutating source.
-    * The bloom is built from one evaluation and the confirm join runs
-    * against a later one; a reference shingle that exists only in the
-    * second evaluation can be false-negatived by the filter and silently
-    * undercount n_seen, breaking the documented value-identity with
-    * [[noveltyScore]]. Same assumption [[decontaminateBloom]] makes of
-    * its reference; materialize a volatile ref (checkpoint / write-read)
-    * before calling. */
-  def noveltyScoreBloom(corpus: DataFrame, ref: DataFrame, idCol: String,
-                        textCol: String, ngram: Int = 3,
-                        fpp: Double = 0.01): DataFrame = {
-    require(fpp > 0 && fpp < 1, s"fpp out of range: $fpp")
-    def refShingles = ref
-      .select(explode(
-        graft.functions.ShingleHash32.shingleHash32(col(textCol), ngram))
-        .as("hv"))
-      .distinct()
-    val counted = refShingles
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bloomBc =
-      try {
-        val nRef = math.max(1L, counted.count())
-        corpus.sparkSession.sparkContext.broadcast(
-          counted.stat.bloomFilter("hv", nRef, fpp))
-      } finally counted.unpersist(blocking = false)
-    val post = corpus
-      .select(col(idCol).as("doc"),
-        explode(
-          graft.functions.ShingleHash32.shingleHash32(col(textCol), ngram))
-          .as("hv"))
-      .distinct()
-    val sizes = post.groupBy(col("doc")).agg(count(lit(1)).as("n_shingles"))
-    val seen = post
-      .where(graft.functions.BloomMightContainBc.mightContain(bloomBc, col("hv")))
-      .join(refShingles, Seq("hv"), "left_semi") // exact confirm: kills fps
-      .groupBy(col("doc")).agg(count(lit(1)).as("__ns"))
-    sizes.join(seen, Seq("doc"), "left")
-      .select(col("doc"), col("n_shingles"),
-        coalesce(col("__ns"), lit(0L)).as("n_seen"))
-      .withColumn("novelty",
-        round(lit(1.0) - col("n_seen").cast("double") / col("n_shingles"), 6))
   }
 
   /** The dedup endgame: near-dup PAIRS resolved into CLUSTERS, so one
@@ -1317,23 +1218,17 @@ object Dedup {
     * shuffle join + aggregate; the driver sees only an 8-byte convergence
     * checksum (labels are monotonically nonincreasing, so an unchanged
     * sum IS the fixpoint — no data ever collects). `localCheckpoint`
-    * truncates the growing lineage per round; a production run on an
-    * unreliable cluster would use reliable checkpointing instead. For
+    * truncates the growing lineage per round (executor blocks: an
+    * executor lost mid-iteration fails the job). For
     * adversarially deep graphs, alternate large-star/small-star rounds
     * bound iterations at O(log n); near-dup graphs don't need it.
     *
     * @return (doc, component) for EVERY doc in `docs`; component = min
     *         doc id reachable, singletons map to themselves. */
-  /** @param checkpointDir reliable (HDFS/object-store) checkpoint
-    *        location for the per-round lineage cut. `localCheckpoint`
-    *        (the default) stores blocks on executors — fastest, but an
-    *        executor death mid-iteration kills the job; a 100 TB run on a
-    *        preemptible cluster should pass a durable path instead. */
   def components(docs: DataFrame, idCol: String, pairs: DataFrame,
-                 maxIters: Int = 25, checkpointDir: Option[String] = None): DataFrame = {
-    val ckpt = ckptFn(pairs, checkpointDir)
-    val edges = directedEdges(pairs, ckpt)
-    val (labels, converged, iters) = propagateBounded(edges, ckpt, maxIters)
+                 maxIters: Int = 25): DataFrame = {
+    val edges = directedEdges(pairs)
+    val (labels, converged, iters) = propagateBounded(edges, maxIters)
     // silent non-convergence would hand back WRONG cluster labels — an
     // adversarially deep chain must fail loudly, not under-merge quietly
     if (!converged) throw new ComponentsNoFixpointException(
@@ -1342,52 +1237,28 @@ object Dedup {
     joinLabels(docs, idCol, labels)
   }
 
-  /** Per-round checkpoint flavor for the CONVERGENCE LOOPS — and only
-    * them. The local path is LAZY (r18): [[propagateBounded]] /
-    * [[starContract]] (and their callers [[components]] /
-    * [[componentsStar]] / [[componentsAuto]]) run a driver
-    * checksum/count action immediately after every checkpoint, so the
-    * lazy flavor caches DURING that action instead of paying a separate
-    * materialization job per round — the convergence decision and the
-    * checkpoint share one job (2 driver jobs/round → 1). The reliable-dir
-    * path stays eager (fault-tolerance callers expect the files to exist
-    * when the verb returns). Callers that RELEASE persisted inputs or
-    * broadcasts right after checkpointing must use [[ckptEagerFn]]
-    * instead — a lazy checkpoint would materialize only at the caller's
-    * later action, after the inputs it depends on are gone. */
-  private def ckptFn(pairs: DataFrame,
-                     checkpointDir: Option[String]): DataFrame => DataFrame =
-    checkpointDir match {
-      case Some(dir) =>
-        pairs.sparkSession.sparkContext.setCheckpointDir(dir)
-        df => df.checkpoint()
-      case None => df => df.localCheckpoint(false)
-    }
-
-  /** EAGER checkpoint for the non-loop callers ([[decontaminateBloom]],
-    * [[overlapMatrix]]): materializes before returning, so the persisted
-    * frames / broadcasts the plan reads can be released by the caller's
-    * `finally` without the result silently re-deriving them from source
-    * (ADVICE r18 — the r18 lazy ckptFn broke exactly that contract). */
-  private def ckptEagerFn(pairs: DataFrame,
-                          checkpointDir: Option[String]): DataFrame => DataFrame =
-    checkpointDir match {
-      case Some(dir) =>
-        pairs.sparkSession.sparkContext.setCheckpointDir(dir)
-        df => df.checkpoint()
-      case None => df => df.localCheckpoint(true)
-    }
+  // Lineage cuts are local checkpoints (executor blocks). The
+  // convergence loops ([[propagateBounded]], [[starContract]] and the
+  // frames that seed them) cut LAZILY (r18): each loop runs a driver
+  // checksum/count action right after every checkpoint, so the lazy
+  // flavor caches DURING that action instead of paying a separate
+  // materialization job per round — the convergence decision and the
+  // checkpoint share one job (2 driver jobs/round → 1). Callers that
+  // RELEASE persisted inputs or broadcasts right after checkpointing
+  // ([[decontaminateBloom]], [[overlapMatrix]]) cut EAGERLY: a lazy
+  // checkpoint would materialize only at the caller's later action,
+  // after the inputs it depends on are gone (ADVICE r18).
 
   /** Both-orientation edge frame, hash-partitioned on src ONCE before the
     * checkpoint (LogicalRDD keeps the partitioning) so each propagation
     * round's join only shuffles the (small, changing) label frame. */
-  private def directedEdges(pairs: DataFrame,
-                            ckpt: DataFrame => DataFrame): DataFrame =
-    ckpt(pairs
+  private def directedEdges(pairs: DataFrame): DataFrame =
+    pairs
       .select(col("d1").cast("long").as("src"), col("d2").cast("long").as("dst"))
       .unionByName(pairs
         .select(col("d2").cast("long").as("src"), col("d1").cast("long").as("dst")))
-      .repartition(col("src")))
+      .repartition(col("src"))
+      .localCheckpoint(false)
 
   /** Bounded min-label propagation over the ACTIVE subgraph (a node with
     * no edges can never change its label, so the loop touches
@@ -1400,10 +1271,10 @@ object Dedup {
     *         CONTRACTION — same-label nodes are definitely connected —
     *         which is what lets [[componentsAuto]] seed the star phase
     *         with them instead of discarding the probe's work. */
-  private def propagateBounded(edges: DataFrame, ckpt: DataFrame => DataFrame,
+  private def propagateBounded(edges: DataFrame,
                                maxIters: Int): (DataFrame, Boolean, Int) = {
-    var labels = ckpt(edges.select(col("src").as("doc")).distinct()
-      .select(col("doc"), col("doc").as("comp")))
+    var labels = edges.select(col("src").as("doc")).distinct()
+      .select(col("doc"), col("doc").as("comp")).localCheckpoint(false)
     // labels are monotonically nonincreasing, so an unchanged sum IS the
     // fixpoint; coalesce covers the no-edges case (sum over empty = null).
     // The sum runs in decimal: 63-bit ids × many rows overflow a bigint
@@ -1434,7 +1305,7 @@ object Dedup {
     while (!converged && iter < maxIters) {
       // two hops per materialization: each eager checkpoint + checksum is
       // a driver round trip, and those dominate once the frames are small
-      labels = ckpt(propagate(propagate(labels)))
+      labels = propagate(propagate(labels)).localCheckpoint(false)
       val s = checksum(labels)
       converged = s == prevSum
       prevSum = s
@@ -1475,17 +1346,16 @@ object Dedup {
     * detected via an order-insensitive xor-of-hashes checksum (one 8-byte
     * driver value per round, like [[components]]). */
   def componentsStar(docs: DataFrame, idCol: String, pairs: DataFrame,
-                     maxIters: Int = 35,
-                     checkpointDir: Option[String] = None): DataFrame = {
-    val ckpt = ckptFn(pairs, checkpointDir)
+                     maxIters: Int = 35): DataFrame = {
     // canonical undirected edge set, self-loops dropped
-    val edges = ckpt(pairs
+    val edges = pairs
       .select(col("d1").cast("long").as("u"), col("d2").cast("long").as("v"))
       .where(col("u") =!= col("v"))
       .select(greatest(col("u"), col("v")).as("u"),
         least(col("u"), col("v")).as("v"))
-      .distinct())
-    val links = starContract(edges, ckpt, maxIters)
+      .distinct()
+      .localCheckpoint(false)
+    val links = starContract(edges, maxIters)
     // fixpoint edges are (child, root) with root = component min
     docs.select(col(idCol).cast("long").as("doc"))
       .join(links.select(col("u").as("doc"), col("v").as("component"))
@@ -1498,8 +1368,7 @@ object Dedup {
   /** The large-star/small-star loop over a canonical (u > v) edge set;
     * returns the fixpoint (child, root) link set. Factored out so
     * [[componentsAuto]] can run it on a probe-contracted graph. */
-  private def starContract(edges0: DataFrame, ckpt: DataFrame => DataFrame,
-                           maxIters: Int): DataFrame = {
+  private def starContract(edges0: DataFrame, maxIters: Int): DataFrame = {
     var edges = edges0
     // order-insensitive edge-set fingerprint: xor of per-edge hashes —
     // stable across partitionings, and a stable set IS the fixpoint
@@ -1543,7 +1412,7 @@ object Dedup {
     var iter = 0
     var converged = false
     while (!converged && iter < maxIters) {
-      edges = ckpt(smallStar(largeStar(edges)))
+      edges = smallStar(largeStar(edges)).localCheckpoint(false)
       val s = checksum(edges)
       converged = s == prev
       prev = s
@@ -1574,11 +1443,9 @@ object Dedup {
     * link graphs) should call [[componentsStar]] directly and skip the
     * probe. */
   def componentsAuto(docs: DataFrame, idCol: String, pairs: DataFrame,
-                     propIters: Int = 8, starIters: Int = 35,
-                     checkpointDir: Option[String] = None): DataFrame = {
-    val ckpt = ckptFn(pairs, checkpointDir)
-    val edges = directedEdges(pairs, ckpt)
-    val (labels, converged, _) = propagateBounded(edges, ckpt, propIters)
+                     propIters: Int = 8, starIters: Int = 35): DataFrame = {
+    val edges = directedEdges(pairs)
+    val (labels, converged, _) = propagateBounded(edges, propIters)
     if (converged) joinLabels(docs, idCol, labels)
     else {
       // Seed star with the probe's contraction: edge (u,v) becomes
@@ -1586,7 +1453,7 @@ object Dedup {
       // owners, so contraction preserves components exactly, and the
       // global min id m keeps lab(m) = m — star's roots are the true
       // component minima, no relabeling needed on the way back out.
-      val contracted = ckpt(edges
+      val contracted = edges
         .join(labels.select(col("doc").as("src"), col("comp").as("__cs")),
           Seq("src"))
         .join(labels.select(col("doc").as("dst"), col("comp").as("__cd")),
@@ -1594,8 +1461,9 @@ object Dedup {
         .where(col("__cs") =!= col("__cd"))
         .select(greatest(col("__cs"), col("__cd")).as("u"),
           least(col("__cs"), col("__cd")).as("v"))
-        .distinct())
-      val roots = starContract(contracted, ckpt, starIters)
+        .distinct()
+        .localCheckpoint(false)
+      val roots = starContract(contracted, starIters)
       // doc → partial label → star root of that label (labels whose
       // cluster was already fully contracted stay their own root)
       docs.select(col(idCol).cast("long").as("doc"))
@@ -1629,12 +1497,11 @@ object Dedup {
     * `eager = false` returns the LAZY plan instead (no persist, no
     * checkpoint) — for plan inspection or composition into a larger
     * eval; the shingle frame then recomputes per consumer unless the
-    * caller persists it. `checkpointDir` upgrades the eager result from
-    * a local checkpoint to a reliable one (same contract as
-    * [[components]] — local blocks die with their executor). */
+    * caller persists it. The eager result is a local checkpoint (same
+    * contract as [[components]] — local blocks die with their
+    * executor). */
   def overlapMatrix(docs: DataFrame, groupCol: String, textCol: String,
-                    ngram: Int = 3, eager: Boolean = true,
-                    checkpointDir: Option[String] = None): DataFrame = {
+                    ngram: Int = 3, eager: Boolean = true): DataFrame = {
     require(ngram >= 1, s"ngram must be >= 1: $ngram")
     val base = docs
       .where(col(groupCol).isNotNull)
@@ -1660,7 +1527,7 @@ object Dedup {
       // EAGER checkpoint: the plan reads `grouped`, which the finally
       // below unpersists — materialize the |groups|² rows here so the
       // shingle cache really is free to go (ADVICE r18)
-      if (eager) ckptEagerFn(docs, checkpointDir)(out)
+      if (eager) out.localCheckpoint(true)
       else out
     } finally if (eager) grouped.unpersist(blocking = false)
   }

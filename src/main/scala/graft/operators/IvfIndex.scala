@@ -177,11 +177,6 @@ object IvfIndex {
   def indexReady(spark: SparkSession, path: String): Boolean =
     StoreSwap.latestManifest(StoreSwap.fsOf(spark, path), path).nonEmpty
 
-  /** The index's retained manifest versions, oldest first — any listed
-    * version is a complete snapshot [[loadIndex]] can pin. */
-  def indexVersions(spark: SparkSession, path: String): Seq[Int] =
-    StoreSwap.manifestVersions(StoreSwap.fsOf(spark, path), path)
-
   /** Drop every file no retained manifest lists — the ANN family's
     * retention verb (see [[Dedup.vacuumMinhashStore]] for the
     * `keepVersions` time-travel window); run it when no reader is

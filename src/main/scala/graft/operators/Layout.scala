@@ -18,8 +18,8 @@ import org.apache.spark.sql.functions._
   * expression): bit i of x lands at position 2i, bit i of y at 2i+1,
   * so z-adjacent rows are rectangle-adjacent in (x, y).
   *
-  * Scale shape: [[repartitionByZOrder]] is ONE range exchange on the
-  * z-value (the same shuffle a plain sort-by-one-column layout pays) —
+  * Scale shape: a writer that range-partitions on [[zValue16]] pays ONE
+  * exchange (the same shuffle a plain sort-by-one-column layout pays) —
   * locality in two dimensions costs nothing extra at write time.
   * [[zorderStats]] is the audit: per z-bucket (= per would-be file)
   * row count and min/max of each dimension — the x_span×y_span
@@ -42,24 +42,9 @@ object Layout {
     spread(x).bitwiseOR(shiftleft(spread(y), 1))
   }
 
-  /** The layout op itself: range-partition on the z-value into
-    * `numFiles` partitions and sort within each — write the result and
-    * every file carries a narrow two-dimensional min/max rectangle.
-    * One exchange; the sort is partition-local. */
-  def repartitionByZOrder(df: DataFrame, xCol: String, yCol: String,
-                          numFiles: Int): DataFrame = {
-    require(numFiles >= 1 && numFiles <= (1 << 20),
-      s"repartitionByZOrder: numFiles must be in [1, 2^20]: $numFiles")
-    val z = zValue16(col(xCol), col(yCol)).as("__z")
-    df.withColumn("__z", z)
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-  }
-
   /** Layout audit: bucket rows by the top bits of their z-value
     * (bucket = z >> shiftBits — each bucket is a contiguous z-range,
-    * i.e. a would-be file under [[repartitionByZOrder]]) and report
+    * i.e. a would-be file under a z-value range partitioning) and report
     * each bucket's count and min/max per dimension. The spans prove
     * (or disprove) two-dimensional locality: a z-bucket of 2^(2k)
     * codes confines BOTH dimensions to 2^k values, where a one-column

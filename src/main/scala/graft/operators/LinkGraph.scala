@@ -380,7 +380,7 @@ object LinkGraph {
     * invariant and oracle-replayable). Communities are the label
     * groups — the mutual-link ring a crawl curator wants to treat as
     * ONE entity, where [[Dedup]]'s connected components merge
-    * anything touching and [[kCore]] keeps only the dense part.
+    * anything touching and [[kCorePeel]] keeps only the dense part.
     *
     * Mode-with-deterministic-tie is computed without any max_by
     * (whose ties are nondeterministic in a distributed agg): per
@@ -434,8 +434,7 @@ object LinkGraph {
     * degree", Social Networks 1983; the Batagelj–Zaveršnik peel as a
     * bounded bulk-synchronous loop). Fixed round count makes the
     * result deterministic and SQL-oracle-replayable whether or not
-    * the peel has converged; [[kCore]] wraps it with convergence
-    * detection. Dense cores survive peeling — link farms and mutual-
+    * the peel has converged. Dense cores survive peeling — link farms and mutual-
     * admiration rings hold high k-cores while organically-linked
     * pages shed early, making core number the third crawl-curation
     * graph signal next to [[pageRank]]/[[hits]] (endorsement) and
@@ -460,31 +459,6 @@ object LinkGraph {
       s"kCorePeel: rounds must be in [1, 100]: $rounds")
     var e = undirected(edges, srcCol, dstCol, partitionOnU = true)
     for (_ <- 1 to rounds) e = peelOnce(e, k)
-    degrees(e)
-  }
-
-  /** The k-core itself: peel until no node drops (round count is a
-    * measured property of the graph, bounded loudly at `maxRounds` —
-    * exactness never silently degrades to a partial peel). */
-  def kCore(edges: DataFrame, srcCol: String, dstCol: String,
-            k: Int, maxRounds: Int = 50): DataFrame = {
-    require(k >= 1, s"kCore: k must be >= 1: $k")
-    require(maxRounds >= 1 && maxRounds <= 100,
-      s"kCore: maxRounds must be in [1, 100]: $maxRounds")
-    var e = undirected(edges, srcCol, dstCol, partitionOnU = true)
-    var n = e.count()
-    var round = 0
-    var done = n == 0L
-    while (!done) {
-      round += 1
-      require(round <= maxRounds,
-        s"kCore: no fixpoint after $maxRounds rounds — raise maxRounds " +
-          "deliberately for adversarially deep peel chains")
-      e = peelOnce(e, k)
-      val m = e.count()
-      done = m == n || m == 0L
-      n = m
-    }
     degrees(e)
   }
 
@@ -586,10 +560,10 @@ object LinkGraph {
     * untouched. */
   private def peelOnce(e: DataFrame, k: Int): DataFrame = {
     val deg = degrees(e)
-    // LAZY checkpoint (r19, same trick as Dedup.ckptFn): the count right
-    // below is the action that materializes the dead set, so checkpoint
-    // materialization and the converged?/broadcastable? decision share
-    // ONE driver job instead of two per round
+    // LAZY checkpoint (r19, same trick as Dedup's convergence loops): the
+    // count right below is the action that materializes the dead set, so
+    // checkpoint materialization and the converged?/broadcastable?
+    // decision share ONE driver job instead of two per round
     val dead = deg.where(col("degree") < k).select(col("node"))
       .localCheckpoint(false)
     // one count serves both decisions (converged? broadcastable?) —
@@ -598,9 +572,8 @@ object LinkGraph {
     val nDead = dead.count()
     if (nDead == 0) return e // converged: nothing to rewrite
     // the surviving edge frame is also checkpointed LAZILY: its first
-    // consumer is always a single driver action (kCore's convergence
-    // count, or — in kCorePeel — the next round's dead.count(), whose
-    // plan reads this frame exactly once), so the blocks cache during
+    // consumer is always a single driver action (the next round's
+    // dead.count(), whose plan reads this frame exactly once), so the blocks cache during
     // that job and every later consumer (degrees + both join sides)
     // reads blocks, never recomputes. 2 driver jobs/round → 1.
     if (nDead <= IvfIndex.MaxBroadcastQueries) {
@@ -650,28 +623,17 @@ object LinkGraph {
     * corpus-sized beyond the edge list itself. */
   def triangles(edges: DataFrame, srcCol: String, dstCol: String)
   : DataFrame = {
-    val und = edges
-      .select(col(srcCol).cast("string").as("u"),
-        col(dstCol).cast("string").as("v"))
-      .where(col("u").isNotNull && col("v").isNotNull &&
-        col("u") =!= col("v"))
-      .select(least(col("u"), col("v")).as("u"),
-        greatest(col("u"), col("v")).as("v"))
-      .distinct()
-      .localCheckpoint()
-    val deg = und.select(col("u").as("node"))
-      .unionAll(und.select(col("v").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("d"))
-      .localCheckpoint()
+    val und = undirected(edges, srcCol, dstCol)
+    val deg = degrees(und).localCheckpoint()
     // canonical order: (degree, node); orient low -> high
     def lt(d1: Column, n1: Column, d2: Column, n2: Column): Column =
       d1 < d2 || (d1 === d2 && n1 < n2)
     val withDeg = und
       // shuffle_hash (r18): hash-build the node-sized degree table twice
       // instead of sorting the edge frame twice (stat-less SMJ default)
-      .join(deg.select(col("node").as("u"), col("d").as("du"))
+      .join(deg.select(col("node").as("u"), col("degree").as("du"))
         .hint("shuffle_hash"), Seq("u"))
-      .join(deg.select(col("node").as("v"), col("d").as("dv"))
+      .join(deg.select(col("node").as("v"), col("degree").as("dv"))
         .hint("shuffle_hash"), Seq("v"))
     val oriented = withDeg.select(
       when(lt(col("du"), col("u"), col("dv"), col("v")), col("u"))
@@ -697,7 +659,7 @@ object LinkGraph {
       .select(explode(array(col("a"), col("b1"), col("b2"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("n_triangles"))
     deg.join(perNode, Seq("node"), "left")
-      .select(col("node"), col("d").as("degree"),
+      .select(col("node"), col("degree"),
         coalesce(col("n_triangles"), lit(0L)).as("n_triangles"))
       .withColumn("clustering",
         when(col("degree") < 2L, lit(0.0))

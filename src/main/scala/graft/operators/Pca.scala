@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Principal-component analysis of an embedding corpus by the POWER
-  * METHOD (fixed iterations), plus the "all-but-the-top" postprocess
+  * METHOD (fixed iterations), for the "all-but-the-top" audit
   * (Mu & Viswanath, "All-but-the-Top: Simple and Effective
   * Postprocessing for Word Representations", ICLR 2018 — public
   * literature): embedding sets share a large common direction that
@@ -45,18 +45,6 @@ object Pca {
       s"Pca.Component: dim $dim vs mean ${meanFp.length}/dir ${dirFp.length}")
   }
 
-  /** DIV 2²⁰ truncating toward zero on either sign (`m − m % Fp` is
-    * exactly divisible; the double division is exact below 2⁵³). */
-  private def divFp(m: Column): Column = ((m - (m % Fp)) / Fp).cast("long")
-
-  /** Composed-HOF FP20 encode — the executable SPECIFICATION of
-    * [[graft.functions.PcaNative.fp20]] (what the scans actually run;
-    * PcaNativeEquivalenceSpec holds them identical through Spark).
-    * Interpreted per element — spec/test use only. */
-  private[graft] def fxColComposed(vecCol: String): Column =
-    transform(col(vecCol).cast("array<double>"),
-      x => floor(x * Fp).cast("long"))
-
   /** Elementwise long-array sum as ONE map-side hash aggregate with
     * `dim` sum buffers — no positional explode: exploding shuffles
     * n×dim narrow rows where this ships one dim-wide partial per map
@@ -89,46 +77,6 @@ object Pca {
       graft.functions.PcaNative.fp20(col(vecCol)).as("__fx")), "__fx", dim)
     // mean = sum DIV n, truncating toward zero (both engines)
     (sums.map(_ / n), n)
-  }
-
-  /** Centered FP20 rows as column `__cx`, deflated by `prevDirs` in
-    * training order: for each previous direction d, the row loses its
-    * d-component — cx ← cx − (d·((cx·d) DIV 2²⁰) DIV 2²⁰) — every step
-    * in the exact protocol, every scalar STAGED as a named projection
-    * (the q154 HOF lesson: a lambda-captured expression TREE
-    * re-evaluates per element; a staged attribute reads a slot). */
-  private[graft] def residualFrameComposed(emb: DataFrame, vecCol: String,
-      mean: Array[Long], prevDirs: Seq[Array[Long]]): DataFrame = {
-    var df = emb.select(
-      zip_with(fxColComposed(vecCol), typedLit(mean.toSeq), (a, b) => a - b)
-        .as("__cx"))
-    prevDirs.foreach { d =>
-      val dLit = typedLit(d.toSeq)
-      df = df
-        .select(col("__cx"),
-          divFp(aggregate(zip_with(col("__cx"), dLit, (a, b) => a * b),
-            lit(0L), (acc, v) => acc + v)).as("__s"))
-        .select(zip_with(col("__cx"), dLit,
-          (c, dj) => c - divFp(dj * col("__s"))).as("__cx"))
-    }
-    df
-  }
-
-  /** Composed-HOF power-iteration step over [[residualFrameComposed]]
-    * — the executable SPECIFICATION of
-    * [[graft.functions.PcaNative.powerStep]] (kept for
-    * PcaNativeEquivalenceSpec; interpreted per element, spec use
-    * only). */
-  private[graft] def powerStepComposed(emb: DataFrame, vecCol: String,
-      mean: Array[Long], prevDirs: Seq[Array[Long]],
-      w: Array[Long]): DataFrame = {
-    val wLit = typedLit(w.toSeq)
-    residualFrameComposed(emb, vecCol, mean, prevDirs)
-      .select(col("__cx"),
-        divFp(aggregate(zip_with(col("__cx"), wLit, (a, b) => a * b),
-          lit(0L), (acc, v) => acc + v)).as("__s"))
-      .select(transform(col("__cx"),
-        c => divFp(c * col("__s"))).as("__c"))
   }
 
   /** The power loop: per iteration ONE narrow kernel scan
@@ -205,18 +153,6 @@ object Pca {
       (s.cast("double") / lit(Fp.toDouble)).as("pc1"))
   }
 
-  /** Composed-HOF PC1 coordinate — the executable SPECIFICATION of
-    * [[graft.functions.PcaNative.coords]] at r=1 (spec use only). */
-  private[graft] def projectComposed(emb: DataFrame, idCol: String,
-      vecCol: String, comp: Component): DataFrame = {
-    val cx = zip_with(fxColComposed(vecCol), typedLit(comp.meanFp.toSeq),
-      (a, b) => a - b)
-    val s = divFp(aggregate(zip_with(cx, typedLit(comp.dirFp.toSeq),
-      (a, b) => a * b), lit(0L), (acc, v) => acc + v))
-    emb.select(col(idCol).as("id"),
-      (s.cast("double") / lit(Fp.toDouble)).as("pc1"))
-  }
-
   /** Coordinates along EVERY component of a [[topComponents]] train,
     * in one narrow scan: (id, pc1 … pcr). Component i's coordinate is
     * the dot of the (i−1)-times-deflated residual with direction i —
@@ -237,33 +173,12 @@ object Pca {
         .as(s"pc${i + 1}")): _*)
   }
 
-  /** Composed-HOF residual coordinates — the executable SPECIFICATION
-    * of [[graft.functions.PcaNative.coords]] (spec use only). */
-  private[graft] def projectManyComposed(emb: DataFrame, idCol: String,
-      vecCol: String, comps: Seq[Component]): DataFrame = {
-    var df = emb.select(col(idCol).as("id"),
-      zip_with(fxColComposed(vecCol), typedLit(comps.head.meanFp.toSeq),
-        (a, b) => a - b).as("__cx"))
-    comps.zipWithIndex.foreach { case (c, i) =>
-      val dLit = typedLit(c.dirFp.toSeq)
-      df = df.withColumn(s"__p${i + 1}",
-        divFp(aggregate(zip_with(col("__cx"), dLit, (a, b) => a * b),
-          lit(0L), (acc, v) => acc + v)))
-      if (i < comps.size - 1)
-        df = df.withColumn("__cx", zip_with(col("__cx"), dLit,
-          (cc, dj) => cc - divFp(dj * col(s"__p${i + 1}"))))
-    }
-    df.select(col("id") +: comps.indices.map(i =>
-      (col(s"__p${i + 1}").cast("double") / lit(Fp.toDouble))
-        .as(s"pc${i + 1}")): _*)
-  }
-
   /** Variance explained per component: (component, ss, ratio) where
     * ss = Σ rows s_i² (s_i the residual-projection coordinate the
     * component trained on, FP20² units) and ratio = ss / ss_total
     * with ss_total = Σ rows Σ_j cx_j² — the "is PC1 actually the
-    * common direction worth removing" audit before [[removeTop]]
-    * rewrites a corpus. ONE narrow scan: the per-row squared norm and
+    * common direction worth removing" audit before a corpus is
+    * rewritten. ONE narrow scan: the per-row squared norm and
     * every coordinate compute in the same staged chain; per-row
     * squares are exact longs (envelope: |x| ≤ 90 keeps cx² < 2⁵³),
     * cross-row sums are exact DECIMAL(38,0); ss is emitted as the
@@ -294,49 +209,5 @@ object Pca {
       val ss = row.getDecimal(i + 1).doubleValue
       (i + 1, ss, ss / sstot)
     }.toDF("component", "ss", "ratio")
-  }
-
-  /** Composed-HOF per-row variance frame (__rss, __p0 … __p{r−1}) —
-    * the executable SPECIFICATION of
-    * [[graft.functions.PcaNative.coords]] with withRss=true (spec use
-    * only). */
-  private[graft] def varianceRowsComposed(emb: DataFrame, vecCol: String,
-      comps: Seq[Component]): DataFrame = {
-    var df = emb.select(
-      zip_with(fxColComposed(vecCol), typedLit(comps.head.meanFp.toSeq),
-        (a, b) => a - b).as("__cx"))
-      .withColumn("__rss", aggregate(col("__cx"), lit(0L),
-        (acc, v) => acc + v * v))
-    comps.zipWithIndex.foreach { case (c, i) =>
-      val dLit = typedLit(c.dirFp.toSeq)
-      df = df.withColumn(s"__p$i",
-        divFp(aggregate(zip_with(col("__cx"), dLit, (a, b) => a * b),
-          lit(0L), (acc, v) => acc + v)))
-      if (i < comps.size - 1)
-        df = df.withColumn("__cx", zip_with(col("__cx"), dLit,
-          (cc, dj) => cc - divFp(dj * col(s"__p$i"))))
-    }
-    df.select(col("__rss") +: comps.indices.map(i => col(s"__p$i")): _*)
-  }
-
-  /** All-but-the-top residual: center, then remove the PC1 component —
-    * (id, vec as double array). residual = (cx − (s·dir DIV 2²⁰)) /
-    * 2²⁰, every step in the exact protocol. One narrow scan. */
-  def removeTop(emb: DataFrame, idCol: String, vecCol: String,
-                comp: Component): DataFrame = {
-    val dirLit = typedLit(comp.dirFp.toSeq)
-    // staged like the training iteration: the scalar must NOT sit
-    // inside the final zip_with lambda (per-element re-evaluation)
-    emb
-      .select(col(idCol).as("id"),
-        zip_with(fxColComposed(vecCol), typedLit(comp.meanFp.toSeq),
-          (a, b) => a - b).as("__cx"))
-      .select(col("id"), col("__cx"),
-        divFp(aggregate(zip_with(col("__cx"), dirLit, (a, b) => a * b),
-          lit(0L), (acc, v) => acc + v)).as("__s"))
-      .select(col("id"),
-        zip_with(col("__cx"), dirLit, (c, dj) =>
-          (c - divFp(dj * col("__s"))).cast("double") / lit(Fp.toDouble))
-          .as("vec"))
   }
 }

@@ -106,22 +106,6 @@ object RetrievalEval {
         coalesce(ratio(col("__dcg"), ideal), lit(0.0)).as("ndcg"))
   }
 
-  /** Macro average over [[perQuery]]'s judged queries: one summary row
-    * (n_queries, recall, mrr, ndcg) — each metric is the exact
-    * micro-integer mean of the per-query values. */
-  def macroAvg(run: DataFrame, qrels: DataFrame, k: Int): DataFrame = {
-    val pq = perQuery(run, qrels, k)
-    def mean(sumMicro: Column): Column =
-      floor(sumMicro.cast("double") / col("n_queries").cast("double"))
-        .cast("double").divide(lit(1000000.0))
-    pq.agg(count(lit(1)).as("n_queries"),
-        sum((micro(col("recall")) * 1000000).cast("long")).as("__r"),
-        sum((micro(col("mrr")) * 1000000).cast("long")).as("__m"),
-        sum((micro(col("ndcg")) * 1000000).cast("long")).as("__n"))
-      .select(col("n_queries"), mean(col("__r")).as("recall"),
-        mean(col("__m")).as("mrr"), mean(col("__n")).as("ndcg"))
-  }
-
   /** Hard-negative mining — the training-data half of the retrieval
     * loop: contrastive embedding training (SimCSE/DPR/BGE family —
     * Karpukhin et al., EMNLP 2020, public literature) wants, per

@@ -56,25 +56,4 @@ object Rolling {
             col("epoch_day").cast("int")), "yyyy-MM-dd").as("day"),
         col("roll_sum"), col("roll_n"))
   }
-
-  /** Trailing-window DISTINCT-day activity count per key — the
-    * "active days in the last N" engagement metric. Collapses to one
-    * row per (key, day) first (so the window input is already
-    * day-grained and the frame count IS the distinct-day count — no
-    * distinct-over-window, which Spark does not support), then the
-    * same RANGE frame as [[trailingSumCount]].
-    *
-    * @return (key, epoch_day, active_days long) — one row per distinct
-    *         (key, day). */
-  def trailingActiveDays(df: DataFrame, keyCol: String, tsCol: String,
-                         windowDays: Int): DataFrame = {
-    require(windowDays >= 1 && windowDays <= 3650,
-      s"trailingActiveDays: windowDays must be in [1, 3650]: $windowDays")
-    val day = datediff(col(tsCol).cast("date"), lit("1970-01-01").cast("date"))
-      .cast("long")
-    val w = Window.partitionBy(col(keyCol)).orderBy(col("epoch_day"))
-      .rangeBetween(-(windowDays - 1L), 0L)
-    df.select(col(keyCol), day.as("epoch_day")).distinct()
-      .withColumn("active_days", count(lit(1)).over(w))
-  }
 }

@@ -144,16 +144,4 @@ object SemDeDup {
       .select(col("__sd_id"))
     emb.join(survivors, emb(idCol) === col("__sd_id"), "left_semi")
   }
-
-  /** Train-and-dedup convenience: k-means the corpus with
-    * [[IvfIndex.train]]'s deterministic protocol (id-hash-ordered
-    * sample, first-k init, fixed Lloyd rounds), then
-    * [[dedup]]. */
-  def dedupTrained(emb: DataFrame, idCol: String, vecCol: String,
-                           k: Int, tau: Double, sampleSize: Int = 2000,
-                           iters: Int = 8,
-                           maxCellPairs: Long = DefaultMaxCellPairs): DataFrame =
-    dedup(emb, idCol, vecCol,
-      IvfIndex.train(emb, idCol, vecCol, k, sampleSize, iters), tau,
-      maxCellPairs)
 }

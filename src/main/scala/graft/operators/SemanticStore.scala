@@ -76,10 +76,6 @@ object SemanticStore {
   def ready(spark: SparkSession, path: String): Boolean =
     StoreSwap.latestManifest(StoreSwap.fsOf(spark, path), path).nonEmpty
 
-  /** Retained manifest versions, oldest first — the snapshot surface. */
-  def versions(spark: SparkSession, path: String): Seq[Int] =
-    StoreSwap.manifestVersions(StoreSwap.fsOf(spark, path), path)
-
   // layout (shared [[StoreSwap]] plumbing): pb count persisted
   // VERSIONED at save, resolved at the manifest version being read —
   // a pinned snapshot routes with the counts its data was written

@@ -1,7 +1,7 @@
 package graft.operators
 
-import graft.functions.VectorExprs
-import org.apache.spark.sql.{DataFrame}
+import graft.functions.VectorNative
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -103,7 +103,7 @@ object Similarity {
         col(vecCol).as("__raw"))
       if (nPlanes <= 0) base.drop("__raw")
       else base.withColumn("bucket",
-        VectorExprs.simhashPlanes(col("__raw"), planes(nPlanes, dim))).drop("__raw")
+        VectorNative.planeBits(col("__raw"), planes(nPlanes, dim))).drop("__raw")
     }
     val a = side("d1", "v1")
     val b = side("d2", "v2")
@@ -185,17 +185,6 @@ object Similarity {
       corpus(idCol) === col("__dom"), "left_anti")
   }
 
-  /** [[semanticDedup]] on the self-tuning bucket path: plane count from
-    * [[autoPlanes]] over the corpus count, same contract as
-    * [[cosineDupPairsAuto]]. */
-  def semanticDedupAuto(corpus: DataFrame, idCol: String, vecCol: String,
-                        threshold: Double, targetBucket: Int = 64,
-                        minPlanes: Int = 1, maxPlanes: Int = 24,
-                        dim: Int = 64): DataFrame = {
-    val np = autoPlanes(corpus.count(), targetBucket, minPlanes, maxPlanes)
-    semanticDedup(corpus, idCol, vecCol, threshold, np, dim)
-  }
-
   /** Recall audit for the LSH-bucketed near-dup path: at the SAME
     * threshold the bucketed pair set is a strict subset of the exact one
     * (bucketing only prunes candidates; the cosine filter is identical),
@@ -225,10 +214,10 @@ object Similarity {
     val ps = planes(nPlanes, dim)
     val qb = queries.select(col(idCol).as("q_id"),
       graft.functions.VectorNative.l2Normalize(col(vecCol)).as("q_vec"),
-      VectorExprs.simhashPlanes(col(vecCol), ps).as("bucket"))
+      VectorNative.planeBits(col(vecCol), ps).as("bucket"))
     val cb = corpus.select(col(idCol).as("n_id"),
       graft.functions.VectorNative.l2Normalize(col(vecCol)).as("n_vec"),
-      VectorExprs.simhashPlanes(col(vecCol), ps).as("bucket"))
+      VectorNative.planeBits(col(vecCol), ps).as("bucket"))
     val scored = cb.join(broadcast(qb), Seq("bucket"))
       .where(col("q_id") =!= col("n_id"))
       .withColumn("cos", graft.functions.VectorNative.dotProduct(col("q_vec"), col("n_vec")))

@@ -24,7 +24,6 @@ object SkewJoin {
   def saltedJoin(probe: DataFrame, build: DataFrame, keys: Seq[String],
                  factor: Int, joinType: String = "inner"): DataFrame = {
     require(factor > 1, "salt factor must be > 1")
-    val nonKey = probe.columns.filterNot(keys.contains)
     // deterministic per-row salt: hash of the whole probe row (keys
     // included so single-column frames still spread)
     val salted = probe.withColumn("__salt",

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Corpus snapshot diff — the change-data report between two dumps of
@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape (100 TB): content is hashed to a 128-bit md5 AT THE
   * SCAN, so the full-outer id join ships (id, 32-hex-char) rows — the
-  * text/payload column never shuffles. One id-keyed exchange per side,
-  * one hash aggregate for the summary. */
+  * text/payload column never shuffles. One id-keyed exchange per
+  * side. */
 object SnapshotDiff {
 
   /** Per-id classification. Output: (id, status, old_fp, new_fp) where
@@ -41,21 +41,5 @@ object SnapshotDiff {
           .when(col("old_fp") <=> col("new_fp"), lit("unchanged"))
           .otherwise(lit("changed")).as("status"),
         col("old_fp"), col("new_fp"))
-  }
-
-  /** One-row summary: (n_added, n_removed, n_changed, n_unchanged,
-    * append_safe) — `append_safe` is the [[diff]] contract check
-    * (true iff the new snapshot only grows: zero removed, zero
-    * changed). */
-  def summary(oldSnap: DataFrame, newSnap: DataFrame, idCol: String,
-              contentCol: String): DataFrame = {
-    def n(s: String): Column =
-      sum(when(col("status") === s, 1L).otherwise(0L)).as(s"n_$s")
-    diff(oldSnap, newSnap, idCol, contentCol)
-      .agg(n("added"), n("removed"), n("changed"), n("unchanged"))
-      .select(col("n_added"), col("n_removed"), col("n_changed"),
-        col("n_unchanged"),
-        (col("n_removed") === 0 && col("n_changed") === 0)
-          .as("append_safe"))
   }
 }

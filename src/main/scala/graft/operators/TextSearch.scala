@@ -185,13 +185,6 @@ object TextSearch {
                  path: String): Boolean =
     StoreSwap.latestManifest(StoreSwap.fsOf(spark, path), path).nonEmpty
 
-  /** The stats layout's retained manifest versions, oldest first — any
-    * listed version is a complete snapshot [[bm25TopKIndexed]] can
-    * pin. */
-  def statsVersions(spark: org.apache.spark.sql.SparkSession,
-                    path: String): Seq[Int] =
-    StoreSwap.manifestVersions(StoreSwap.fsOf(spark, path), path)
-
   /** Drop every file no retained manifest lists — the stats family's
     * retention verb (see [[graft.operators.Dedup.vacuumMinhashStore]]
     * for the `keepVersions` time-travel window); run it when no reader

@@ -645,11 +645,11 @@ object TrainingData {
     require(topK >= 1 && topK <= 100000,
       s"collocations: topK must be in [1, 100000]: $topK")
     val tk = TextExprs.tokens(lower(col(textCol)))
-    // LAZY checkpoint (r19, the Dedup.ckptFn trick): the total-count
-    // collect right below is the action that materializes the bigram
-    // blocks, so checkpoint materialization and the N aggregate share
-    // ONE driver job instead of two; every later consumer (both
-    // marginals + the join's probe side) reads blocks.
+    // LAZY checkpoint (r19, the trick of Dedup's convergence loops): the
+    // total-count collect right below is the action that materializes
+    // the bigram blocks, so checkpoint materialization and the N
+    // aggregate share ONE driver job instead of two; every later
+    // consumer (both marginals + the join's probe side) reads blocks.
     // tk STAGED as an attribute before the lambda (q154 lesson, r19:
     // the size/element_at captures re-ran the tokenizer per ELEMENT —
     // O(len²) per document)
@@ -1651,15 +1651,6 @@ object TrainingData {
     if (keep.length == mfFiles.length) return false
     StoreSwap.commitManifest(fs, path, mfVersion + 1, keep)
     true
-  }
-
-  /** The sources the current manifest carries. */
-  def evalSources(spark: SparkSession, path: String): Seq[String] = {
-    val fs = StoreSwap.fsOf(spark, path)
-    val (_, mfFiles) = requireEvalStore(fs, path, "evalSources")
-    mfFiles.filter(_.startsWith("hashes/src="))
-      .map(_.stripPrefix("hashes/src=").takeWhile(_ != '/'))
-      .distinct.sorted
   }
 
   /** Drop every file no retained manifest lists — the retention verb. */

@@ -41,10 +41,6 @@ object WarehouseStore {
   private def fsOf(spark: SparkSession, path: String) =
     StoreSwap.fsOf(spark, path)
 
-  /** Retained manifest versions, oldest first — the snapshot surface. */
-  def versions(spark: SparkSession, path: String): Seq[Int] =
-    StoreSwap.manifestVersions(fsOf(spark, path), path)
-
   /** True iff `path` holds a committed warehouse. */
   def ready(spark: SparkSession, path: String): Boolean =
     StoreSwap.latestManifest(fsOf(spark, path), path).nonEmpty

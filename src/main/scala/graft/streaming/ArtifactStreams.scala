@@ -52,8 +52,8 @@ object ArtifactStreams {
     * prefix-matching `b10x…`. */
   private[graft] def batchPrefix(spark: org.apache.spark.sql.SparkSession,
                                  batchId: Long,
-                                 checkpointDir: String): String =
-    s"b${batchId}x${lineageId(spark, checkpointDir)}_"
+                                 checkpointLocation: String): String =
+    s"b${batchId}x${lineageId(spark, checkpointLocation)}_"
 
   /** Per-JVM cache of resolved lineage ids: the marker is immutable
     * once created (create-if-absent converges racing creators on the
@@ -66,14 +66,14 @@ object ArtifactStreams {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   private def lineageId(spark: org.apache.spark.sql.SparkSession,
-                        checkpointDir: String): String = {
-    val fs = graft.operators.StoreSwap.fsOf(spark, checkpointDir)
-    val marker = new org.apache.hadoop.fs.Path(checkpointDir,
+                        checkpointLocation: String): String = {
+    val fs = graft.operators.StoreSwap.fsOf(spark, checkpointLocation)
+    val marker = new org.apache.hadoop.fs.Path(checkpointLocation,
       ".graft_lineage")
-    val cached = lineageCache.get(checkpointDir)
+    val cached = lineageCache.get(checkpointLocation)
     if (cached != null) {
       if (fs.exists(marker)) return cached
-      lineageCache.remove(checkpointDir)
+      lineageCache.remove(checkpointLocation)
     }
     def read(): Option[String] =
       if (!fs.exists(marker)) None
@@ -86,7 +86,7 @@ object ArtifactStreams {
     val resolved = read().getOrElse {
       val fresh = java.util.UUID.randomUUID().toString
         .replace("-", "").take(6)
-      fs.mkdirs(new org.apache.hadoop.fs.Path(checkpointDir))
+      fs.mkdirs(new org.apache.hadoop.fs.Path(checkpointLocation))
       // create-if-absent: one stream per checkpoint by contract, but a
       // lost race must still converge on the winner's id
       try {
@@ -100,7 +100,7 @@ object ArtifactStreams {
             s"lineageId: could not create or read $marker"))
       }
     }
-    lineageCache.put(checkpointDir, resolved)
+    lineageCache.put(checkpointLocation, resolved)
     resolved
   }
 
@@ -141,10 +141,10 @@ object ArtifactStreams {
   private[graft] def bm25Batch(batch: DataFrame, batchId: Long,
                                idCol: String, textCol: String,
                                statsPath: String,
-                               checkpointDir: String,
+                               checkpointLocation: String,
                                retainVersions: Int = 0): Unit = {
     val spark = batch.sparkSession
-    val prefix = batchPrefix(spark, batchId, checkpointDir)
+    val prefix = batchPrefix(spark, batchId, checkpointLocation)
     def bootstrap(): Unit =
       // an empty first batch must not bootstrap empty stats (see
       // semanticBatch) — wait for the first batch with documents
@@ -173,14 +173,14 @@ object ArtifactStreams {
     * batch. Gated at q240 (q153's save → append → search protocol
     * replayed through pinned micro-batches). */
   def bm25StatsIngest(docs: DataFrame, idCol: String, textCol: String,
-                      statsPath: String, checkpointDir: String,
+                      statsPath: String, checkpointLocation: String,
                       availableNow: Boolean = true,
                       retainVersions: Int = 0): StreamingQuery = {
     require(docs.isStreaming, "bm25StatsIngest: docs must be a streaming frame")
     val writer = docs.writeStream
-      .option("checkpointLocation", checkpointDir)
+      .option("checkpointLocation", checkpointLocation)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        bm25Batch(batch, batchId, idCol, textCol, statsPath, checkpointDir,
+        bm25Batch(batch, batchId, idCol, textCol, statsPath, checkpointLocation,
           retainVersions)
       }
     (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer)
@@ -198,11 +198,11 @@ object ArtifactStreams {
     * REPLAY through the production path. */
   private[graft] def ivfBatch(batch: DataFrame, batchId: Long,
                               idCol: String, vecCol: String,
-                              indexPath: String, checkpointDir: String,
+                              indexPath: String, checkpointLocation: String,
                               k: Int, sampleSize: Int, iters: Int,
                               retainVersions: Int = 0): Unit = {
     val spark = batch.sparkSession
-    val prefix = batchPrefix(spark, batchId, checkpointDir)
+    val prefix = batchPrefix(spark, batchId, checkpointLocation)
     def bootstrap(): Unit = if (!batch.isEmpty) {
       // an empty first batch must not bootstrap (train(empty) has no
       // sample; an empty index manifest would brick later reads while
@@ -231,15 +231,15 @@ object ArtifactStreams {
   }
 
   def ivfIngest(vecs: DataFrame, idCol: String, vecCol: String,
-                indexPath: String, checkpointDir: String, k: Int,
+                indexPath: String, checkpointLocation: String, k: Int,
                 sampleSize: Int = 2000, iters: Int = 8,
                 availableNow: Boolean = true,
                 retainVersions: Int = 0): StreamingQuery = {
     require(vecs.isStreaming, "ivfIngest: vecs must be a streaming frame")
     val writer = vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
+      .option("checkpointLocation", checkpointLocation)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ivfBatch(batch, batchId, idCol, vecCol, indexPath, checkpointDir,
+        ivfBatch(batch, batchId, idCol, vecCol, indexPath, checkpointLocation,
           k, sampleSize, iters, retainVersions)
       }
     (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer)
@@ -250,10 +250,10 @@ object ArtifactStreams {
     * REPLAY through the production path. */
   private[graft] def factBatch(batch: DataFrame, batchId: Long,
                                whPath: String,
-                               checkpointDir: String,
+                               checkpointLocation: String,
                                retainVersions: Int = 0): Unit = {
     val spark = batch.sparkSession
-    val prefix = batchPrefix(spark, batchId, checkpointDir)
+    val prefix = batchPrefix(spark, batchId, checkpointLocation)
     def bootstrap(): Unit =
       // an empty first batch must not bootstrap an empty fact table
       // (see semanticBatch) — wait for the first batch with rows
@@ -288,14 +288,14 @@ object ArtifactStreams {
     * owns them); readers time-travel across committed batches via
     * `loadFact(asOfVersion)`. Gated at q256 (the q254 fact protocol
     * replayed through pinned micro-batches against the batch oracle). */
-  def factIngest(facts: DataFrame, whPath: String, checkpointDir: String,
+  def factIngest(facts: DataFrame, whPath: String, checkpointLocation: String,
                  availableNow: Boolean = true,
                  retainVersions: Int = 0): StreamingQuery = {
     require(facts.isStreaming, "factIngest: facts must be a streaming frame")
     val writer = facts.writeStream
-      .option("checkpointLocation", checkpointDir)
+      .option("checkpointLocation", checkpointLocation)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        factBatch(batch, batchId, whPath, checkpointDir, retainVersions)
+        factBatch(batch, batchId, whPath, checkpointLocation, retainVersions)
       }
     (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer)
       .start()
@@ -347,14 +347,14 @@ object ArtifactStreams {
     * design, inherited wholesale). */
   def semanticIngest(vecs: DataFrame, idCol: String, vecCol: String,
                      storePath: String, verdictsPath: String,
-                     checkpointDir: String, tau: Double,
+                     checkpointLocation: String, tau: Double,
                      model: Option[IvfIndex.Model] = None,
                      k: Int = 16, sampleSize: Int = 2000, iters: Int = 8,
                      availableNow: Boolean = true,
                      retainVersions: Int = 0): StreamingQuery = {
     require(vecs.isStreaming, "semanticIngest: vecs must be a streaming frame")
     val writer = vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
+      .option("checkpointLocation", checkpointLocation)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         semanticBatch(batch, batchId, idCol, vecCol, storePath,
           verdictsPath, tau, model, k, sampleSize, iters)

@@ -77,13 +77,13 @@ object DocStreams {
 
   def nearDupIngest(docs: DataFrame, idCol: String, textCol: String,
                     storePath: String, pairsPath: String,
-                    checkpointDir: String, threshold: Double,
+                    checkpointLocation: String, threshold: Double,
                     bands: Int = 4, ngram: Int = 3,
                     availableNow: Boolean = true,
                     retainVersions: Int = 0): StreamingQuery = {
     require(docs.isStreaming, "nearDupIngest: docs must be a streaming frame")
     val writer = docs.writeStream
-      .option("checkpointLocation", checkpointDir)
+      .option("checkpointLocation", checkpointLocation)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         processBatch(batch, batchId, idCol, textCol, storePath, pairsPath,
           threshold, bands, ngram)

@@ -16,14 +16,6 @@ import org.apache.spark.sql.types._
   */
 object EventStreams {
 
-  val eventSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", TimestampType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
-
   /** Hourly tumbling-window counts/sums with a watermark: late events
     * beyond 2 hours are dropped and state is GC'd — bounded state at any
     * scale. Append-mode compatible. */

@@ -23,7 +23,7 @@ object IncrementalIngest {
     * drop directory is part of the ingest config. All columns read as
     * string (the batch edge's dtype=str contract); missing staging
     * columns are injected downstream by cleanOrders. */
-  def start(spark: SparkSession, csvDir: String, checkpointDir: String,
+  def start(spark: SparkSession, csvDir: String, checkpointLocation: String,
             fileColumns: Seq[String],
             load: () => OrderEtl.Warehouse,
             save: OrderEtl.Warehouse => Unit,
@@ -40,7 +40,7 @@ object IncrementalIngest {
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
     val stream = reader.csv(csvDir)
     val writer = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
+      .option("checkpointLocation", checkpointLocation)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val staged = OrderEtl.toStaging(OrderEtl.cleanOrders(batch))
         save(OrderEtl.loadWarehouse(load(), staged))

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{IvfIndex, TextSearch}
+import graft.operators.{IvfIndex, StoreSwap, TextSearch}
 import graft.streaming.ArtifactStreams
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -283,13 +283,14 @@ class ArtifactStreamsSpec extends SparkSpec {
     val fs = new org.apache.hadoop.fs.Path(s"$base/verdicts")
       .getFileSystem(spark.sessionState.newHadoopConf())
     fs.delete(new org.apache.hadoop.fs.Path(s"$base/verdicts/batch=1"), true)
-    val vBefore = SemanticStore.versions(spark, s"$base/store")
+    val store = s"$base/store"
+    val vBefore = StoreSwap.manifestVersions(StoreSwap.fsOf(spark, store), store)
     ArtifactStreams.semanticBatch(b1.toIndexedSeq.toDF("vec_id", "embedding"),
       1L, "vec_id", "embedding", s"$base/store", s"$base/verdicts",
       tau = 0.35, model = Some(model), k = 8, sampleSize = 2000, iters = 8)
     assert(toMap(spark.read.parquet(s"$base/verdicts/batch=1")) == before,
       "replayed batch did not rewrite the identical verdict partition")
-    assert(SemanticStore.versions(spark, s"$base/store") == vBefore,
+    assert(StoreSwap.manifestVersions(StoreSwap.fsOf(spark, store), store) == vBefore,
       "replayed batch committed a new store version")
   }
 
@@ -331,7 +332,7 @@ class ArtifactStreamsSpec extends SparkSpec {
       ArtifactStreams.factBatch(batch, i.toLong, wh, s"$base/ckpt",
         retainVersions = 3)
     }
-    val versions = graft.sources.WarehouseStore.versions(spark, wh)
+    val versions = StoreSwap.manifestVersions(StoreSwap.fsOf(spark, wh), wh)
     assert(versions.length == 3 && versions.last == 12,
       s"12 batches must leave exactly 3 link files: $versions")
     // every retained version resolves, with monotone content

@@ -34,7 +34,7 @@ class CodegenRegressionSpec extends SparkSpec {
       val out = docs.select(
         SimHash48.simhash48(col("text")).as("sh"),
         ShingleHash32.shingleHash32(col("text"), 3).as("s32"),
-        ShingleHash32.shingleHash48(col("text"), 3).as("s48"),
+        ShingleHash32.shingleHash32(col("text"), 3, 6).as("s48"),
         StableId63.stableId63(col("text")).as("sid"),
         LangIdNative.langId(col("text")).as("lid"),
         FingerprintMd5.fingerprintMd5(col("text")).as("fp"),

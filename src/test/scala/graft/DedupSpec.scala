@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, StoreSwap}
 import org.apache.spark.sql.functions._
 
 /** Dedup operator family invariants on real documents. */
@@ -66,23 +66,6 @@ class DedupSpec extends SparkSpec {
     val out = graft.operators.Dedup.components(docs, "doc_id", pairs)
       .collect().map(r => r.getLong(1)).distinct
     assert(out.toSeq == Seq(1L))
-  }
-
-  test("components with reliable checkpointing matches localCheckpoint labels") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    val docs = (1L to 30L).toDF("doc_id")
-    val pairs = ((1L until 8L).map(i => (i, i + 1)) ++ Seq((20L, 21L)))
-      .toDF("d1", "d2")
-    val local = graft.operators.Dedup.components(docs, "doc_id", pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val durable = graft.operators.Dedup
-      .components(docs, "doc_id", pairs, checkpointDir = Some(dir))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(durable == local)
-    // the reliable path actually wrote checkpoint data
-    val written = new java.io.File(dir).listFiles()
-    assert(written != null && written.nonEmpty, dir)
   }
 
   test("components fails loudly instead of returning non-converged labels") {
@@ -177,45 +160,6 @@ class DedupSpec extends SparkSpec {
     }
   }
 
-  test("noveltyScoreBloom == noveltyScore, no cache residue, no binary literal") {
-    // the session (and its cache manager) is shared across suites; start
-    // from a clean slate so the residue assert below sees only what THIS
-    // operator call leaves behind
-    spark.catalog.clearCache()
-    val ref = docs.where(col("doc_id") < 25)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-      .toSet
-    val exact = rows(graft.operators.Dedup
-      .noveltyScore(docs, ref, "doc_id", "text", ngram = 3))
-    val bloom01 = graft.operators.Dedup
-      .noveltyScoreBloom(docs, ref, "doc_id", "text", ngram = 3, fpp = 0.01)
-    assert(rows(bloom01) == exact)
-    // adversarial fpp: half of all unseen postings pass the prefilter —
-    // the exact confirm join must still kill every false positive, or
-    // n_seen (and every novelty value) drifts
-    val sloppy = graft.operators.Dedup
-      .noveltyScoreBloom(docs, ref, "doc_id", "text", ngram = 3, fpp = 0.5)
-    assert(rows(sloppy) == exact)
-    // lazy operator, clean contract: nothing may stay persisted after the
-    // call returns (the ref postings persist only while the filter builds)
-    assert(spark.sharedState.cacheManager.isEmpty,
-      "noveltyScoreBloom left cache entries behind")
-    // the filter rides a broadcast handle, never a plan literal
-    val binLits = bloom01.queryExecution.analyzed.collect { case p =>
-      p.expressions.flatMap(_.collect {
-        case l: org.apache.spark.sql.catalyst.expressions.Literal
-          if l.dataType == org.apache.spark.sql.types.BinaryType => l
-      })
-    }.flatten
-    assert(binLits.isEmpty,
-      s"analyzed plan embeds ${binLits.size} binary literal(s)")
-    intercept[IllegalArgumentException] {
-      graft.operators.Dedup
-        .noveltyScoreBloom(docs, ref, "doc_id", "text", fpp = 1.0)
-    }
-  }
-
   test("componentsAuto routes a 2000-deep chain to star after the bounded probe") {
     import spark.implicits._
     // the chooser's failure mode before it existed: pointing a deep graph
@@ -276,7 +220,7 @@ class DedupSpec extends SparkSpec {
   test("native simhash48 expression == declarative explode/agg formulation") {
     val native = Dedup.simhash(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val decl = Dedup.simhashDeclarative(docs, "doc_id", "text")
+    val decl = graft.operators.DedupReference.simhashDeclarative(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(decl.nonEmpty && native.size == docs.count())
     // declarative drops no docs here (every doc has >= 1 token row)
@@ -650,7 +594,7 @@ class DedupSpec extends SparkSpec {
     Dedup.minhashIncremental(odds, "doc_id", "text", root, 0.4).count() // v2
     Dedup.purgeMinhashStore(spark, root,
       docs.where(col("doc_id") % 3 === 0).select("doc_id"), "doc_id") // v3
-    assert(Dedup.minhashStoreVersions(spark, root) == Seq(1, 2, 3))
+    assert(StoreSwap.manifestVersions(StoreSwap.fsOf(spark, root), root) == Seq(1, 2, 3))
     def pairSet(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     def oneShot(d: org.apache.spark.sql.DataFrame) =
@@ -663,7 +607,7 @@ class DedupSpec extends SparkSpec {
       oneShot(survivors), "latest must see only purge survivors")
     // keepVersions = 2: v2 stays fully derivable, v1 leaves the window
     Dedup.vacuumMinhashStore(spark, root, keepVersions = 2)
-    assert(Dedup.minhashStoreVersions(spark, root) == Seq(2, 3))
+    assert(StoreSwap.manifestVersions(StoreSwap.fsOf(spark, root), root) == Seq(2, 3))
     assert(pairSet(Dedup.derivePairsFromStore(spark, root, 0.4, Some(2))) ==
       oneShot(docs), "retained snapshot must survive the vacuum intact")
     val e = intercept[IllegalArgumentException](
@@ -672,7 +616,7 @@ class DedupSpec extends SparkSpec {
       s"out-of-window pin must name the retained versions: ${e.getMessage}")
     // default vacuum: history collapses to the present
     Dedup.vacuumMinhashStore(spark, root)
-    assert(Dedup.minhashStoreVersions(spark, root) == Seq(3))
+    assert(StoreSwap.manifestVersions(StoreSwap.fsOf(spark, root), root) == Seq(3))
     intercept[IllegalArgumentException](
       Dedup.derivePairsFromStore(spark, root, 0.4, Some(2)))
     assert(pairSet(Dedup.derivePairsFromStore(spark, root, 0.4)) ==

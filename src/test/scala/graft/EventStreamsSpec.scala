@@ -142,9 +142,16 @@ class EventStreamsSpec extends SparkSpec {
 
   test("slidingAgg: non-dividing slide is refused loudly; duration " +
     "parser accepts fixed units only") {
+    import org.apache.spark.sql.types._
+    val eventSchema = StructType(Seq(
+      StructField("event_id", LongType),
+      StructField("ts", TimestampType),
+      StructField("user_id", LongType),
+      StructField("event_type", StringType),
+      StructField("value", DoubleType),
+      StructField("props", StringType)))
     val ev = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      EventStreams.eventSchema)
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], eventSchema)
     intercept[IllegalArgumentException] {
       EventStreams.slidingAgg(ev, "1 hour", "25 minutes")
     }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.TextExprs
+import graft.functions.{TextExprs, TextExprsReference}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 
@@ -12,7 +12,7 @@ class FingerprintMd5Spec extends SparkSpec {
   test("equals composed form on the documents table") {
     val diff = Tables.documents(spark, "/root/testdata/sf0.001")
       .select(TextExprs.fingerprint(col("text")).as("fast"),
-        TextExprs.fingerprintComposed(col("text")).as("slow"))
+        TextExprsReference.fingerprintComposed(col("text")).as("slow"))
       .where(col("fast") =!= col("slow"))
     assert(diff.count() == 0)
   }
@@ -23,7 +23,7 @@ class FingerprintMd5Spec extends SparkSpec {
     val texts = Iterator.continually(gen.sample).flatten.take(300).toSeq
     val rows = texts.toDF("t")
       .select(TextExprs.fingerprint($"t").as("fast"),
-        TextExprs.fingerprintComposed($"t").as("slow"))
+        TextExprsReference.fingerprintComposed($"t").as("slow"))
       .collect()
     rows.zip(texts).foreach { case (r, t) =>
       assert(r.getString(0) == r.getString(1), s"text=${t.map(_.toInt)}")

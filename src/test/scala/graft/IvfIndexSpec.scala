@@ -401,7 +401,7 @@ class IvfIndexSpec extends SparkSpec {
     IvfIndex.appendToIndex(spark, path, odds, "vec_id", "embedding") // v2
     IvfIndex.purgeFromIndex(spark, path,
       emb.where(col("vec_id") % 7 === 0).select("vec_id"), "vec_id") // v3
-    assert(IvfIndex.indexVersions(spark, path) == Seq(1, 2, 3))
+    assert(StoreSwap.manifestVersions(StoreSwap.fsOf(spark, path), path) == Seq(1, 2, 3))
     val queries = emb.where(col("vec_id") < 10).localCheckpoint()
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getAs[Long]("q_id"), r.getAs[Int]("rank"),
@@ -422,7 +422,7 @@ class IvfIndexSpec extends SparkSpec {
       rows(Similarity.bruteTopK(survivors, queries, "vec_id", "embedding", 5)),
       "latest must answer over the purge survivors")
     IvfIndex.vacuumIndex(spark, path)
-    assert(IvfIndex.indexVersions(spark, path) == Seq(3))
+    assert(StoreSwap.manifestVersions(StoreSwap.fsOf(spark, path), path) == Seq(3))
     val e = intercept[IllegalArgumentException](searchAt(Some(2)))
     assert(e.getMessage.contains("v2") &&
       e.getMessage.contains("keepVersions"),

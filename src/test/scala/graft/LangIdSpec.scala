@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.TextExprs
+import graft.functions.{TextExprs, TextExprsReference}
 import org.apache.spark.sql.functions._
 
 /** The native language-ID kernel against its declarative spec
@@ -11,7 +11,7 @@ class LangIdSpec extends SparkSpec {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val both = docs.select(col("doc_id"),
       TextExprs.langId(col("text")).as("native"),
-      TextExprs.langIdComposed(col("text")).as("composed"))
+      TextExprsReference.langIdComposed(col("text")).as("composed"))
     assert(both.where(col("native") =!= col("composed")).count() == 0)
     // and the heuristic actually discriminates on this corpus
     val langs = both.select("native").distinct().collect().map(_.getString(0)).toSet

@@ -3,8 +3,8 @@ package graft
 import graft.operators.Layout
 import org.apache.spark.sql.functions._
 
-/** Z-order layout: interleave correctness, masking, two-dimensional
-  * locality of z-buckets, and the single-range-exchange plan. */
+/** Z-order layout: interleave correctness, masking, and two-dimensional
+  * locality of z-buckets. */
 class LayoutSpec extends SparkSpec {
 
   test("zValue16: known interleaves and 16-bit masking") {
@@ -35,35 +35,9 @@ class LayoutSpec extends SparkSpec {
     // (x) would confine x but leave y full-range — the point of z-order
   }
 
-  test("repartitionByZOrder: one range exchange on the z-value, " +
-    "partition-local sort, payload intact") {
-    import spark.implicits._
-    val grid = (0 until 32).flatMap(x => (0 until 32).map(y => (x, y)))
-      .toDF("x", "y")
-    val laid = Layout.repartitionByZOrder(grid, "x", "y", numFiles = 8)
-    val plan = laid.queryExecution.executedPlan.toString
-    assert(plan.contains("rangepartitioning"), plan)
-    assert(!plan.contains("Exchange hashpartitioning"), plan)
-    assert(laid.rdd.getNumPartitions == 8)
-    assert(laid.count() == 1024L)
-    // z-contiguity per partition: reconstruct z and check partitions
-    // hold disjoint contiguous ranges
-    val withZ = laid.withColumn("z", Layout.zValue16(col("x"), col("y")))
-      .withColumn("p", spark_partition_id())
-    val ranges = withZ.groupBy("p").agg(min("z").as("lo"), max("z").as("hi"))
-      .orderBy("lo").collect().map(r => (r.getLong(1), r.getLong(2)))
-    ranges.sliding(2).foreach {
-      case Array((_, hi1), (lo2, _)) => assert(hi1 < lo2, ranges.mkString(","))
-      case _ => ()
-    }
-  }
-
   test("bounds reject") {
     import spark.implicits._
     val df = Seq((1, 2)).toDF("x", "y")
-    intercept[IllegalArgumentException] {
-      Layout.repartitionByZOrder(df, "x", "y", 0)
-    }
     intercept[IllegalArgumentException] {
       Layout.zorderStats(df, "x", "y", 40)
     }

@@ -164,7 +164,7 @@ class LinkGraphSpec extends SparkSpec {
     val k4 = Seq(("A", "B"), ("A", "C"), ("A", "D"), ("B", "C"),
       ("B", "D"), ("C", "D"))
     val e = (k4 ++ Seq(("D", "E"), ("E", "F"))).toDF("src", "dst")
-    val core = LinkGraph.kCore(e, "src", "dst", k = 3)
+    val core = LinkGraph.kCorePeel(e, "src", "dst", k = 3, rounds = 5)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(core == Map("A" -> 3L, "B" -> 3L, "C" -> 3L, "D" -> 3L))
     // round 1 peels F (deg 1 < 3) and E (deg 2 < 3) TOGETHER — bulk
@@ -179,24 +179,22 @@ class LinkGraphSpec extends SparkSpec {
     val after1 = LinkGraph.kCorePeel(path, "src", "dst", 2, 1)
       .collect().map(_.getString(0)).toSet
     assert(after1 == Set("v2", "v3", "v4"))
-    assert(LinkGraph.kCore(path, "src", "dst", 2).collect().isEmpty)
+    assert(LinkGraph.kCorePeel(path, "src", "dst", 2, rounds = 3)
+      .collect().isEmpty)
   }
 
   test("kCore: a ring is its own 2-core; convergence matches a deep " +
     "fixed peel; deterministic across partitioning; refusals") {
     val ring = (0 until 6).map(i => (s"r$i", s"r${(i + 1) % 6}"))
     val mixed = (ring ++ Seq(("r0", "x"), ("x", "y"))).toDF("src", "dst")
-    val core = LinkGraph.kCore(mixed, "src", "dst", 2)
+    val core = LinkGraph.kCorePeel(mixed, "src", "dst", 2, rounds = 30)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(core == (0 until 6).map(i => s"r$i" -> 2L).toMap)
-    val deep = LinkGraph.kCorePeel(mixed, "src", "dst", 2, rounds = 30)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(deep == core)
-    val repart = LinkGraph.kCore(mixed.repartition(7), "src", "dst", 2)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val repart = LinkGraph.kCorePeel(mixed.repartition(7), "src", "dst", 2,
+      rounds = 30).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(repart == core)
     intercept[IllegalArgumentException] {
-      LinkGraph.kCore(mixed, "src", "dst", 0)
+      LinkGraph.kCorePeel(mixed, "src", "dst", 0, rounds = 1)
     }
     intercept[IllegalArgumentException] {
       LinkGraph.kCorePeel(mixed, "src", "dst", 2, rounds = 0)

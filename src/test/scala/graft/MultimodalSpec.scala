@@ -2,8 +2,9 @@ package graft
 
 import graft.multimodal.Multimodal
 import graft.multimodal.Multimodal.{MediaMeta, MediaRow}
+import org.apache.spark.sql.functions.{expr, length}
 
-/** Multimodal plumbing: schema, batch shape, null handling, determinism.
+/** Multimodal plumbing: schema, null handling, determinism.
   * The codec is a stub by design (no native image/audio libs in the
   * build); what's under test is the Spark-side contract. */
 class MultimodalSpec extends SparkSpec {
@@ -21,45 +22,9 @@ class MultimodalSpec extends SparkSpec {
 
   test("image features: deterministic stub decode, empty payload safe") {
     val f1 = Multimodal.imageFeatures(media).collect().map(f => f.media_id -> f).toMap
-    val f2 = Multimodal.imageFeatures(media, batchSize = 1).collect()
-      .map(f => f.media_id -> f).toMap
     assert(f1.keySet == Set(1L, 2L, 3L, 4L))
-    // batch size must not change results (batch shape is an optimization)
-    f1.foreach { case (id, f) =>
-      assert(f2(id).width == f.width && f2(id).brightness == f.brightness &&
-        f2(id).histogram.toSeq == f.histogram.toSeq)
-    }
     assert(f1(4L).n_bytes == 0L && f1(4L).brightness == 0.0)
     assert(f1(1L).histogram.sum > 0.999 && f1(1L).histogram.sum < 1.001)
-  }
-
-  test("resize: payload rewritten deterministically, identity and meta updated") {
-    val out = Multimodal.resizeImages(media, 32, 32).collect()
-      .map(m => m.media_id -> m).toMap
-    assert(out.keySet == Set(1L, 2L, 3L, 4L))
-    out.values.foreach { m =>
-      assert(m.meta.width.contains(32) && m.meta.height.contains(32))
-      assert(m.content.length == 16) // stub codec: md5-sized payload
-    }
-    // pure function of (payload, dims): same input -> same bytes; distinct
-    // payloads -> distinct outputs
-    val again = Multimodal.resizeImages(media, 32, 32).collect()
-      .map(m => m.media_id -> m).toMap
-    out.foreach { case (id, m) =>
-      assert(again(id).content.toSeq == m.content.toSeq)
-    }
-    assert(out(1L).content.toSeq != out(2L).content.toSeq)
-    // mime and source pass through untouched
-    assert(out(3L).mime == "video/mp4" && out(3L).meta.source == "cam2")
-  }
-
-  test("frame sampling: one row per sampled frame, duration-driven") {
-    val frames = Multimodal.sampleFrames(media, everyMs = 1000L).collect()
-    val byId = frames.groupBy(_.media_id)
-    assert(byId(3L).length == 3) // 0ms, 1000ms, 2000ms of 2500ms
-    assert(byId(3L).map(_.frame_ms).sorted.toSeq == Seq(0L, 1000L, 2000L))
-    assert(byId(3L).forall(_.frame.length == 16)) // md5-stub frame payload
-    assert(!byId.contains(1L) || byId(1L).length == 1) // images: duration 0 -> 1 frame
   }
 
   test("payload stats stay pure-SQL (no decode)") {
@@ -128,7 +93,11 @@ class MultimodalSpec extends SparkSpec {
     try {
       rows.toDS().write.mode("overwrite").parquet(dir.getAbsolutePath)
       val media = spark.read.parquet(dir.getAbsolutePath)
-      val out = Multimodal.imageHeaderMeta(media).collect()
+      val m = graft.functions.ImageMetaExpr.imageMeta($"content")
+      val out = media.select($"media_id", $"mime",
+          length($"content").as("n_bytes"), m.getField("format"),
+          m.getField("width"), m.getField("height"),
+          m.getField("bit_depth"), m.getField("channels")).collect()
         .map(r => r.getLong(0) -> r).toMap
       assert(out(1L).getString(3) == "png" &&
         out(1L).getInt(4) == 1 && out(1L).getInt(5) == 1)
@@ -295,7 +264,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("PngCodec palette (color type 3) round-trips; PLTE mandatory") {
-    import graft.multimodal.PngCodec
+    import graft.multimodal.{PngCodec, PngFixtures}
     val rnd = new scala.util.Random(29)
     for {
       (w, h) <- Seq((1, 1), (5, 7), (17, 6))
@@ -304,7 +273,7 @@ class MultimodalSpec extends SparkSpec {
       val pal = Array.tabulate(palSize)(j =>
         ((j * 3 % 256) << 16) | ((j * 5 % 256) << 8) | (j * 11 % 256))
       val idx = Array.fill(w * h)(rnd.nextInt(palSize))
-      val png = PngCodec.encodePalette(w, h, pal, idx)
+      val png = PngFixtures.encodePalette(w, h, pal, idx)
       val got = PngCodec.decode(png)
       assert(got.isDefined, s"palette decode failed $w x $h pal=$palSize")
       val (gw, gh, gch, gs) = got.get
@@ -366,7 +335,7 @@ class MultimodalSpec extends SparkSpec {
     import spark.implicits._
     val rows = Seq(MediaRow(9L, "image/gif", good,
       MediaMeta("synth", Some(10), Some(6), None)))
-    val f = Multimodal.imageFeatures(rows.toDS(), batchSize = 4).collect().head
+    val f = Multimodal.imageFeatures(rows.toDS()).collect().head
     assert(f.width == 10 && f.height == 6)
     val sum = idx.map(c => ((pal(c) >> 16) & 0xff) + ((pal(c) >> 8) & 0xff)
       + (pal(c) & 0xff)).sum.toLong
@@ -508,7 +477,7 @@ class MultimodalSpec extends SparkSpec {
     import spark.implicits._
     val rows = Seq(MediaRow(11L, "image/jpeg", JpegCodec.encode(w, h, const),
       MediaMeta("synth", Some(w), Some(h), None)))
-    val f = Multimodal.imageFeatures(rows.toDS(), batchSize = 4).collect().head
+    val f = Multimodal.imageFeatures(rows.toDS()).collect().head
     assert(f.width == w && f.height == h)
     val d = const.length.toLong * 255L
     assert(f.brightness ==
@@ -902,7 +871,12 @@ class MultimodalSpec extends SparkSpec {
       s"graft_audiometa_${System.nanoTime()}")
     try {
       rows.toDS().write.mode("overwrite").parquet(dir.getAbsolutePath)
-      val got = Multimodal.audioHeaderMeta(spark.read.parquet(dir.getAbsolutePath))
+      val m = graft.functions.AudioMetaExpr.audioMeta($"content")
+      val got = spark.read.parquet(dir.getAbsolutePath)
+        .select($"media_id", m.getField("format").as("format"),
+          m.getField("sample_rate").as("sample_rate"),
+          m.getField("n_frames").as("n_frames"))
+        .withColumn("duration_ms", expr("n_frames * 1000 DIV sample_rate"))
         .collect().map(r => r.getLong(0) ->
           (Option(r.getAs[String]("format")), Option(r.getAs[Any]("duration_ms")))).toMap
       assert(got(1L) == (Some("wav"), Some(100L * 1000L / 44100L)))  // 2 ms
@@ -1026,7 +1000,7 @@ class MultimodalSpec extends SparkSpec {
       MediaRow(2L, "audio/flac", realFlac, MediaMeta("mic", None, None, None)),
       MediaRow(3L, "audio/wav", Array.emptyByteArray,
         MediaMeta("mic", None, None, None)))
-    val got = Multimodal.audioFeatures(rows.toDS(), batchSize = 2)
+    val got = Multimodal.audioFeatures(rows.toDS())
       .collect().map(f => f.media_id -> f).toMap
     val f1 = got(1L)
     assert(f1.format == "wav" && f1.channels == 2 && f1.sample_rate == 16000)
@@ -1137,7 +1111,7 @@ class MultimodalSpec extends SparkSpec {
   test("JpegCodec progressive: spectral-selection decode equals the " +
     "baseline decode exactly, EOBn batching and per-block EOB0 agree, " +
     "band splits are transparent, honest declines") {
-    import graft.multimodal.JpegCodec
+    import graft.multimodal.{JpegCodec, JpegFixtures}
     val w = 20; val h = 13
     val gray = Array.tabulate(w * h)(i => (7 * (i % w) + 11 * (i / w)) % 256)
     val base = JpegCodec.decode(JpegCodec.encode(w, h, gray))
@@ -1160,7 +1134,7 @@ class MultimodalSpec extends SparkSpec {
     val rgb = Array.tabulate(16 * 16 * 3)(i => (5 * i) % 256)
     val cb = JpegCodec.decode(JpegCodec.encodeColor(16, 16, rgb, quant = 1))
     val cp = JpegCodec.decode(
-      JpegCodec.encodeProgressiveColor(16, 16, rgb, quant = 1))
+      JpegFixtures.encodeProgressiveColor(16, 16, rgb, quant = 1))
     assert(cp.isDefined && cp.get._4.toSeq == cb.get._4.toSeq)
     // image_meta reads progressive headers (SOF2 dims)
     val prog = JpegCodec.encodeProgressive(w, h, gray)
@@ -1197,7 +1171,7 @@ class MultimodalSpec extends SparkSpec {
     "libjpeg-style script decodes pixel-identical to baseline — DC " +
     "refinement bits, AC ±1 arrivals, correction bits inside ZRL " +
     "windows and EOB runs all reconstruct exactly") {
-    import graft.multimodal.JpegCodec
+    import graft.multimodal.{JpegCodec, JpegFixtures}
     // gradient: dense coefficients exercise history corrections
     val w = 24; val h = 21
     val gray = Array.tabulate(w * h)(i => (7 * (i % w) + 11 * (i / w)) % 256)
@@ -1220,7 +1194,7 @@ class MultimodalSpec extends SparkSpec {
     // color SA == color baseline
     val rgb = Array.tabulate(16 * 16 * 3)(i => (5 * i + i * i % 37) % 256)
     val cb = JpegCodec.decode(JpegCodec.encodeColor(16, 16, rgb)).get
-    val cs = JpegCodec.decode(JpegCodec.encodeProgressiveColorSA(16, 16, rgb)).get
+    val cs = JpegCodec.decode(JpegFixtures.encodeProgressiveColorSA(16, 16, rgb)).get
     assert(cs._4.toSeq == cb._4.toSeq)
     // pseudo-random content, several shapes incl. non-multiple-of-8
     val rnd = new scala.util.Random(99)

@@ -5,7 +5,7 @@ import org.scalacheck.Gen
 
 /** The r19 native FP20 PCA kernels ([[graft.functions.PcaNative]])
   * must be EXACTLY equal to the composed higher-order-function chains
-  * they replaced (kept in [[graft.operators.Pca]] as
+  * they replaced (kept in [[graft.operators.PcaReference]] as
   * `*Composed` builders — the executable specification). The protocol
   * is integer-exact, so equality is literal (no FP tolerance); both
   * sides run THROUGH SPARK so codegen, zip_with padding and null
@@ -14,7 +14,7 @@ import org.scalacheck.Gen
   * adversarial generators. */
 class PcaNativeEquivalenceSpec extends SparkSpec {
 
-  import graft.operators.Pca
+  import graft.operators.{Pca, PcaReference}
 
   private val dim = 8
   private val mean: Array[Long] =
@@ -81,7 +81,7 @@ class PcaNativeEquivalenceSpec extends SparkSpec {
     assertFramesEqual(
       df.select(graft.functions.PcaNative.fp20(col("embedding"))
         .as("fx")).select(col("fx").cast("string")),
-      df.select(Pca.fxColComposed("embedding")
+      df.select(PcaReference.fxColComposed("embedding")
         .as("fx")).select(col("fx").cast("string")),
       "fp20")
   }
@@ -93,7 +93,7 @@ class PcaNativeEquivalenceSpec extends SparkSpec {
         df.select(graft.functions.PcaNative
           .powerStep(col("embedding"), mean, prev, w).as("__c"))
           .select(col("__c").cast("string")),
-        Pca.powerStepComposed(df, "embedding", mean, prev, w)
+        PcaReference.powerStepComposed(df, "embedding", mean, prev, w)
           .select(col("__c").cast("string")),
         s"powerStep(prev=${prev.length})")
     }
@@ -103,11 +103,11 @@ class PcaNativeEquivalenceSpec extends SparkSpec {
     val df = frame(vectors())
     assertFramesEqual(
       Pca.project(df, "vec_id", "embedding", comps.head),
-      Pca.projectComposed(df, "vec_id", "embedding", comps.head),
+      PcaReference.projectComposed(df, "vec_id", "embedding", comps.head),
       "project")
     assertFramesEqual(
       Pca.projectMany(df, "vec_id", "embedding", comps),
-      Pca.projectManyComposed(df, "vec_id", "embedding", comps),
+      PcaReference.projectManyComposed(df, "vec_id", "embedding", comps),
       "projectMany")
   }
 
@@ -120,7 +120,7 @@ class PcaNativeEquivalenceSpec extends SparkSpec {
     assertFramesEqual(
       df.select(element_at(xs, 1).as("__rss"),
         element_at(xs, 2).as("__p0"), element_at(xs, 3).as("__p1")),
-      Pca.varianceRowsComposed(df, "embedding", comps),
+      PcaReference.varianceRowsComposed(df, "embedding", comps),
       "varianceRows")
   }
 
@@ -141,7 +141,7 @@ class PcaNativeEquivalenceSpec extends SparkSpec {
     }
     assert(causedByArithmetic(nat), s"native failure was not arithmetic: $nat")
     val comp = intercept[Throwable] {
-      Pca.powerStepComposed(df, "embedding", mean, Nil, w).collect()
+      PcaReference.powerStepComposed(df, "embedding", mean, Nil, w).collect()
     }
     assert(comp.isInstanceOf[org.apache.spark.SparkException] ||
       causedByArithmetic(comp) ||
@@ -160,7 +160,7 @@ class PcaNativeEquivalenceSpec extends SparkSpec {
     val (m, _) = {
       // recompute mean via composed encode + the same sum/DIV protocol
       val sums = (0 until dim).map(j =>
-        sum(element_at(Pca.fxColComposed("embedding"), j + 1)).as(s"u$j"))
+        sum(element_at(PcaReference.fxColComposed("embedding"), j + 1)).as(s"u$j"))
       val row = emb.agg(sums.head, sums.tail: _*).collect()(0)
       (Array.tabulate(dim)(j => row.getLong(j) / 300L), 300L)
     }
@@ -169,7 +169,7 @@ class PcaNativeEquivalenceSpec extends SparkSpec {
     for (r <- 0 until 2) {
       var wr = Array.fill(dim)(math.floor(Pca.Fp / math.sqrt(dim)).toLong)
       for (_ <- 1 to 2) {
-        val staged = Pca.powerStepComposed(emb, "embedding", m, dirs, wr)
+        val staged = PcaReference.powerStepComposed(emb, "embedding", m, dirs, wr)
         val sums = (0 until dim).map(j =>
           sum(element_at(col("__c"), j + 1)).as(s"u$j"))
         val row = staged.agg(sums.head, sums.tail: _*).collect()(0)

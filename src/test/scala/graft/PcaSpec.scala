@@ -74,25 +74,6 @@ class PcaSpec extends SparkSpec {
     assert(math.abs(w(3)) < 0.05)
   }
 
-  test("removeTop: residuals project to ~0 along PC1; projection " +
-    "variance survives in project()") {
-    val data = fixture(300)
-    val df = data.map { case (id, v) => (id, v.toSeq) }
-      .toDF("vec_id", "embedding")
-    val c = Pca.topComponent(df, "vec_id", "embedding", iters = 5)
-    val pc1 = Pca.project(df, "vec_id", "embedding", c)
-      .agg(max(abs(col("pc1")))).collect()(0).getDouble(0)
-    assert(pc1 > 1.0) // the planted spread is visible
-    // residuals are ALREADY centered — dot them with the direction
-    // directly (project() would subtract the mean a second time)
-    val dirD = typedLit(c.dirFp.map(_.toDouble / Fp).toSeq)
-    val residMax = Pca.removeTop(df, "vec_id", "embedding", c)
-      .select(abs(aggregate(zip_with(col("vec"), dirD, (a, b) => a * b),
-        lit(0.0), (acc, v) => acc + v)).as("d"))
-      .agg(max(col("d"))).collect()(0).getDouble(0)
-    assert(residMax < 0.01, s"residual PC1 magnitude: $residMax")
-  }
-
   /** Reference replay of topComponents: deflate rows after each
     * trained direction exactly as residualFrame does. */
   private def refComponents(vecs: Seq[Array[Double]], r: Int,

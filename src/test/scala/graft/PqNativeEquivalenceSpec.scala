@@ -6,7 +6,7 @@ import org.scalacheck.Gen
 
 /** The r19 native PQ kernels ([[graft.functions.PqNative]]) must be
   * BYTE-IDENTICAL to the composed higher-order-function forms they
-  * replaced ([[graft.operators.PqIndex.distTableComposed]] and the
+  * replaced ([[graft.operators.PqIndexReference.distTableComposed]] and the
   * `aggregate(zip_with(a, b, (x,y) ⇒ (x−y)²))` fold, both kept as the
   * executable specification). Both run THROUGH SPARK on the same
   * frames, so codegen, null padding and fold order are all inside the
@@ -14,7 +14,7 @@ import org.scalacheck.Gen
   * ordered left sum, so even NaN payloads and −0.0 must agree). */
 class PqNativeEquivalenceSpec extends SparkSpec {
 
-  import graft.operators.PqIndex
+  import graft.operators.{PqIndex, PqIndexReference}
 
   private val cb8x16x8: Array[Array[Array[Double]]] =
     Array.tabulate(8, 16, 8) { (j, c, d) =>
@@ -78,7 +78,7 @@ class PqNativeEquivalenceSpec extends SparkSpec {
     val rows = df.select(
       col("v"),
       graft.functions.PqNative.distTable(qv, model.codebooks.toSeq).as("n"),
-      PqIndex.distTableComposed(qv, model).as("c")).collect()
+      PqIndexReference.distTableComposed(qv, model).as("c")).collect()
     rows.foreach { r =>
       assert(tableEq(r.get(1), r.get(2)),
         s"distTable diverged on ${r.get(0)}:\n native=${r.get(1)}\n composed=${r.get(2)}")
@@ -159,7 +159,7 @@ class PqNativeEquivalenceSpec extends SparkSpec {
     val qv = col("embedding").cast("array<double>")
     val qdf = corpus.where(col("vec_id") < 4)
       .select(col("vec_id").as("q_id"),
-        PqIndex.distTableComposed(qv, model).as("__dtab"))
+        PqIndexReference.distTableComposed(qv, model).as("__dtab"))
     val adc = (0 until model.m).map { j =>
       element_at(element_at(col("__dtab"), j + 1),
         element_at(col("pq_code"), j + 1) + 1)

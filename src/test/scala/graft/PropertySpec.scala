@@ -1,7 +1,7 @@
 package graft
 
 import graft.etl.SalesTaxonomy
-import graft.functions.{CleanExprs, ShingleHash32, StableId63, TextExprs}
+import graft.functions.{CleanExprs, ShingleHash32, StableId63, TextExprs, TextExprsReference}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 
@@ -60,8 +60,8 @@ class PropertySpec extends SparkSpec {
     for (n <- Seq(1, 2, 3)) {
       val df = texts.toDF("text")
       val slow = df.select(coalesce(transform(
-          if (n == 1) TextExprs.tokens($"text") else TextExprs.shingles($"text", n),
-          t => TextExprs.tokenHash32Expr(t)), array()).as("hv"))
+          if (n == 1) TextExprs.tokens($"text") else TextExprsReference.shingles($"text", n),
+          t => TextExprsReference.tokenHash32Expr(t)), array()).as("hv"))
         .collect().map(_.getSeq[Long](0).toSeq)
       val fast = df.select(ShingleHash32.shingleHash32($"text", n).as("hv"))
         .collect().map(_.getSeq[Long](0).toSeq)
@@ -85,7 +85,7 @@ class PropertySpec extends SparkSpec {
     val df = texts.toDF("doc_id", "text")
     val native = graft.operators.Dedup.simhash(df, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val decl = graft.operators.Dedup.simhashDeclarative(df, "doc_id", "text")
+    val decl = graft.operators.DedupReference.simhashDeclarative(df, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // declarative == native on every doc it emits; signatures fit 48 bits
     decl.foreach { case (id, sig) => assert(native(id) == sig, s"doc $id") }
@@ -402,9 +402,14 @@ class PropertySpec extends SparkSpec {
         .select("b.text", "b.n_words", "b.link_density", "b.is_boilerplate")
         .collect().map(r => (r.getString(0), r.getInt(1),
           r.getDouble(2), r.getBoolean(3))).toSeq
+    // the kept-content projection q154 computes: non-boilerplate block
+    // texts joined with newlines
     def main(s: String): String =
       Seq(s).toDF("h")
-        .select(TextExprs.htmlMainText(col("h")).as("m"))
+        .select(array_join(transform(
+          filter(TextExprs.htmlBlocks(col("h")),
+            b => !b.getField("is_boilerplate")),
+          b => b.getField("text")), "\n").as("m"))
         .collect().head.getString(0)
     val page = "<body><nav><a href=\"/\">Home</a> <a href=\"/a\">About</a> " +
       "<a href=\"/c\">Contact</a> <a href=\"/x\">Careers</a> " +

@@ -58,21 +58,6 @@ class RetrievalEvalSpec extends SparkSpec {
     assert(r.getDouble(5) == ratio(disc(2), ideal5))
   }
 
-  test("macroAvg: exact micro-integer mean of per-query values") {
-    val run = Seq((1L, 1, 10L), (2L, 1, 20L), (2L, 2, 21L))
-      .toDF("q_id", "rank", "n_id")
-    val qrels = Seq((1L, 10L), (2L, 21L), (2L, 99L)).toDF("q_id", "n_id")
-    val pq = RetrievalEval.perQuery(run, qrels, k = 2)
-      .collect().map(r => (r.getDouble(3), r.getDouble(4), r.getDouble(5)))
-    val m = RetrievalEval.macroAvg(run, qrels, k = 2).collect()(0)
-    assert(m.getLong(0) == 2L)
-    def mean(xs: Seq[Double]): Double =
-      math.floor(xs.map(microOf).sum.toDouble / xs.length) / 1000000.0
-    assert(m.getDouble(1) == mean(pq.map(_._1).toSeq))
-    assert(m.getDouble(2) == mean(pq.map(_._2).toSeq))
-    assert(m.getDouble(3) == mean(pq.map(_._3).toSeq))
-  }
-
   test("refuses non-positive k") {
     val df = Seq((1L, 1, 10L)).toDF("q_id", "rank", "n_id")
     intercept[IllegalArgumentException] {

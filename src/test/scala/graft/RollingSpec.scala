@@ -53,17 +53,6 @@ class RollingSpec extends SparkSpec {
     assert(days(0L) == "1970-01-01" && days(44L) == "1970-02-14")
   }
 
-  test("trailingActiveDays: distinct-day grain, window counts days not rows") {
-    val out = Rolling.trailingActiveDays(fixture, "k", "ts", windowDays = 30)
-      .orderBy("k", "epoch_day").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    assert(out.toSeq == Seq(
-      ("A", 0L, 1L), ("A", 10L, 2L), ("A", 29L, 3L), ("A", 30L, 3L),
-      ("A", 31L, 4L),
-      ("B", 4L, 1L),   // two same-day rows collapse to ONE day row
-      ("B", 44L, 1L)), out.mkString("\n"))
-  }
-
   test("plan: window partitions by the key — no single-partition window, " +
     "one exchange") {
     val plan = Rolling.trailingSumCount(fixture, "k", "ts", "v", 30)
@@ -79,7 +68,7 @@ class RollingSpec extends SparkSpec {
       Rolling.trailingSumCount(fixture, "k", "ts", "v", 0)
     }
     intercept[IllegalArgumentException] {
-      Rolling.trailingActiveDays(fixture, "k", "ts", 5000)
+      Rolling.trailingSumCount(fixture, "k", "ts", "v", 5000)
     }
   }
 }

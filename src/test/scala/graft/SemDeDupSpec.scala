@@ -105,8 +105,9 @@ class SemDeDupSpec extends SparkSpec {
   test("dedupTrained is deterministic across partitioning and equals " +
     "dedup on the trained model") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val viaTrained = SemDeDup.dedupTrained(emb, "vec_id", "embedding",
-        k = 4, tau = 0.4).select("vec_id").as[Long].collect().toSet
+    val viaTrained = SemDeDup.dedup(emb, "vec_id", "embedding",
+        IvfIndex.train(emb, "vec_id", "embedding", 4), 0.4)
+      .select("vec_id").as[Long].collect().toSet
     val model = IvfIndex.train(emb.repartition(9), "vec_id", "embedding", 4)
     val viaModel = SemDeDup.dedup(emb, "vec_id", "embedding", model, 0.4)
       .select("vec_id").as[Long].collect().toSet

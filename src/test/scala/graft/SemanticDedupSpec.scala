@@ -83,8 +83,10 @@ class SemanticDedupSpec extends SparkSpec {
 
   test("semanticDedupAuto: survivors = corpus minus auto-path dominated set") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val survivors = Similarity.semanticDedupAuto(emb, "vec_id", "embedding",
-      0.4, targetBucket = 64, maxPlanes = 12)
+    val np = Similarity.autoPlanes(emb.count(), targetBucket = 64,
+      maxPlanes = 12)
+    val survivors = Similarity.semanticDedup(emb, "vec_id", "embedding",
+      0.4, np)
       .select("vec_id").as[Long].collect().toSet
     val dominated = Similarity.cosineDupPairsAuto(emb, "vec_id", "embedding",
       0.4, targetBucket = 64, maxPlanes = 12)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{IvfIndex, SemDeDup, SemanticStore}
+import graft.operators.{IvfIndex, SemDeDup, SemanticStore, StoreSwap}
 import org.apache.spark.sql.functions._
 
 /** The semantic store's lifecycle against a PURE-SCALA reference
@@ -96,12 +96,12 @@ class SemanticStoreSpec extends SparkSpec {
       .select("doc").collect().map(_.getLong(0)).toSet
     assert(derived == ref)
     // replay: same verdicts, same version (no flip for a fully-seen batch)
-    val vBefore = SemanticStore.versions(spark, path)
+    val vBefore = StoreSwap.manifestVersions(StoreSwap.fsOf(spark, path), path)
     val replayed = SemanticStore.ingest(odds, "vec_id", "embedding",
       path, tau)
       .collect().map(r => r.getLong(0) -> r.getBoolean(4)).toMap
     assert(replayed == verdicts)
-    assert(SemanticStore.versions(spark, path) == vBefore,
+    assert(StoreSwap.manifestVersions(StoreSwap.fsOf(spark, path), path) == vBefore,
       "a fully-seen batch must not commit a new version")
     // purge every third doc: derived survivors == reference over the
     // REMAINING membership (dominance re-derives automatically — docs
@@ -120,9 +120,9 @@ class SemanticStoreSpec extends SparkSpec {
     // purged ids answer no verdicts; unknown purge is a REAL no-op
     assert(SemanticStore.verdictsForIds(spark, path, purgeIds, "vec_id",
       tau).count() == 0L)
-    val vAfterPurge = SemanticStore.versions(spark, path)
+    val vAfterPurge = StoreSwap.manifestVersions(StoreSwap.fsOf(spark, path), path)
     assert(SemanticStore.purge(spark, path, purgeIds, "vec_id") == 0L)
-    assert(SemanticStore.versions(spark, path) == vAfterPurge,
+    assert(StoreSwap.manifestVersions(StoreSwap.fsOf(spark, path), path) == vAfterPurge,
       "a no-op purge must not commit a new version")
     // snapshot: pinned pre-purge derive sees the full membership
     val pinned = SemanticStore.deriveSurvivors(spark, path, tau,
@@ -144,7 +144,7 @@ class SemanticStoreSpec extends SparkSpec {
       SemanticStore.deriveSurvivors(spark, path, tau, maxCellPairs = 10L)
     }
     assert(e1.getMessage.contains("Train more cells"))
-    val vBefore = SemanticStore.versions(spark, path)
+    val vBefore = StoreSwap.manifestVersions(StoreSwap.fsOf(spark, path), path)
     val e2 = intercept[IllegalArgumentException] {
       SemanticStore.ingest(
         Tables.embeddings(spark, "/root/testdata/sf0.001")
@@ -153,7 +153,7 @@ class SemanticStoreSpec extends SparkSpec {
     }
     assert(e2.getMessage.contains("maxCellPairs") &&
       e2.getMessage.contains("nothing was written"))
-    assert(SemanticStore.versions(spark, path) == vBefore,
+    assert(StoreSwap.manifestVersions(StoreSwap.fsOf(spark, path), path) == vBefore,
       "guard-refused ingest committed a version")
     // the guard bounds the FULL verdict compare, so a fully-SEEN batch
     // past the cap refuses BEFORE verdictsForIds (no half-observable
@@ -164,10 +164,10 @@ class SemanticStoreSpec extends SparkSpec {
         maxCellPairs = 10L)
     }
     assert(e2b.getMessage.contains("nothing was written"))
-    assert(SemanticStore.versions(spark, path) == vBefore)
+    assert(StoreSwap.manifestVersions(StoreSwap.fsOf(spark, path), path) == vBefore)
     assert(SemanticStore.ingest(emb, "vec_id", "embedding", path, tau)
       .count() == emb.count())
-    assert(SemanticStore.versions(spark, path) == vBefore,
+    assert(StoreSwap.manifestVersions(StoreSwap.fsOf(spark, path), path) == vBefore,
       "fully-seen re-ingest committed a version")
     import spark.implicits._
     assert(SemanticStore.verdictsForIds(spark, path,
@@ -245,7 +245,7 @@ class SemanticStoreSpec extends SparkSpec {
     // (the old design's overwrite-mode save physically deleted them)
     SemanticStore.save(emb, "vec_id", "embedding", path, model,
       idBuckets = 4) // v2
-    assert(SemanticStore.versions(spark, path) == Seq(1, 2))
+    assert(StoreSwap.manifestVersions(StoreSwap.fsOf(spark, path), path) == Seq(1, 2))
     val pinned = SemanticStore.deriveSurvivors(spark, path, tau,
       asOfVersion = Some(1))
       .select("doc").collect().map(_.getLong(0)).toSet

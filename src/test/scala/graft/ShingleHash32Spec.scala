@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{ShingleHash32, TextExprs}
+import graft.functions.{ShingleHash32, TextExprs, TextExprsReference}
 import org.apache.spark.sql.functions._
 
 /** The codegen'd shingle-hash expression must agree exactly with the
@@ -22,8 +22,8 @@ class ShingleHash32Spec extends SparkSpec {
       val df = texts.toDF("text")
       val slow = df.select(
         coalesce(transform(
-          if (n == 1) TextExprs.tokens($"text") else TextExprs.shingles($"text", n),
-          t => TextExprs.tokenHash32Expr(t)), array()).as("hv"))
+          if (n == 1) TextExprs.tokens($"text") else TextExprsReference.shingles($"text", n),
+          t => TextExprsReference.tokenHash32Expr(t)), array()).as("hv"))
         .collect().map(_.getSeq[Long](0).toSeq)
       val fast = df.select(ShingleHash32.shingleHash32($"text", n).as("hv"))
         .collect().map(_.getSeq[Long](0).toSeq)
@@ -36,8 +36,8 @@ class ShingleHash32Spec extends SparkSpec {
   test("documents table: identical posting sets at sf0.001") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val slow = docs.select($"doc_id",
-        explode(transform(TextExprs.shingles($"text", 3),
-          t => TextExprs.tokenHash32Expr(t))).as("hv"))
+        explode(transform(TextExprsReference.shingles($"text", 3),
+          t => TextExprsReference.tokenHash32Expr(t))).as("hv"))
       .distinct().collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val fast = docs.select($"doc_id",
         explode(ShingleHash32.shingleHash32($"text", 3)).as("hv"))

@@ -2,8 +2,7 @@ package graft
 
 import graft.operators.SnapshotDiff
 
-/** Four-way classification semantics, null-content rules, and the
-  * append-safety audit. */
+/** Four-way classification semantics and null-content rules. */
 class SnapshotDiffSpec extends SparkSpec {
   import spark.implicits._
 
@@ -28,20 +27,5 @@ class SnapshotDiffSpec extends SparkSpec {
     val got = SnapshotDiff.diff(old, neu, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(got == Map(1L -> "unchanged", 2L -> "changed", 3L -> "changed"))
-  }
-
-  test("summary counts and append_safe: growth-only is safe, any " +
-    "removal or change is not") {
-    val old = Seq((1L, "a"), (2L, "b")).toDF("doc_id", "text")
-    val grow = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("doc_id", "text")
-    val g = SnapshotDiff.summary(old, grow, "doc_id", "text").collect()(0)
-    assert((g.getLong(0), g.getLong(1), g.getLong(2), g.getLong(3)) ==
-      ((1L, 0L, 0L, 2L)))
-    assert(g.getBoolean(4))
-    val mut = Seq((1L, "a2"), (3L, "c")).toDF("doc_id", "text")
-    val m = SnapshotDiff.summary(old, mut, "doc_id", "text").collect()(0)
-    assert((m.getLong(0), m.getLong(1), m.getLong(2), m.getLong(3)) ==
-      ((1L, 1L, 1L, 0L)))
-    assert(!m.getBoolean(4))
   }
 }

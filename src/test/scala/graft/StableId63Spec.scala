@@ -24,7 +24,8 @@ class StableId63Spec extends SparkSpec {
   }
 
   test("SQL registration + null propagation") {
-    StableId63.register(spark)
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "stable_id63", exprs => StableId63(exprs.head), "built-in")
     val got = spark.sql(
       "SELECT stable_id63('John Smith|1 Main St|07001') AS id, stable_id63(NULL) AS nid")
       .collect().head

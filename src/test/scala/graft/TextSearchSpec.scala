@@ -526,7 +526,7 @@ class TextSearchSpec extends SparkSpec {
       "doc_id", "text", path) // v2
     TextSearch.purgeCorpusStats(grown.where(col("doc_id") % 2L === 0L),
       "doc_id", "text", path) // v3
-    assert(TextSearch.statsVersions(spark, path) == Seq(1, 2, 3))
+    assert(StoreSwap.manifestVersions(StoreSwap.fsOf(spark, path), path) == Seq(1, 2, 3))
     def scored(docs: org.apache.spark.sql.DataFrame, asOf: Option[Int],
                terms: Seq[String]) =
       TextSearch.bm25TopKIndexed(docs, "doc_id", "text", path, terms,
@@ -545,7 +545,7 @@ class TextSearchSpec extends SparkSpec {
         s"latest must score with survivor stats: terms=$terms")
     }
     TextSearch.vacuumCorpusStats(spark, path, keepVersions = 2)
-    assert(TextSearch.statsVersions(spark, path) == Seq(2, 3))
+    assert(StoreSwap.manifestVersions(StoreSwap.fsOf(spark, path), path) == Seq(2, 3))
     assert(scored(grown, Some(2), Seq("apple", "cherry")) ===
       live(grown, Seq("apple", "cherry")),
       "a retained snapshot must survive the vacuum intact")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.TrainingData
+import graft.operators.{StoreSwap, TrainingData}
 import org.apache.spark.sql.functions._
 
 /** Corpus-prep operator invariants beyond the oracle checks. */
@@ -120,11 +120,17 @@ class TrainingDataSpec extends SparkSpec {
       s"graft_evalstore_${System.nanoTime()}").getAbsolutePath
     val benchA = docs.where(col("doc_id") < 10)
     val benchB = docs.where(col("doc_id") >= 10 && col("doc_id") < 20)
+    // the sources the current manifest carries
+    def evalSources(): Seq[String] =
+      StoreSwap.latestManifest(StoreSwap.fsOf(spark, path), path).get._2
+        .filter(_.startsWith("hashes/src="))
+        .map(_.stripPrefix("hashes/src=").takeWhile(_ != '/'))
+        .distinct.sorted
     TrainingData.saveEvalHashStore(benchA, "doc_id", "text", path,
       "benchA", minTokens = 8) // v1
     TrainingData.appendEvalSource(benchB, "doc_id", "text", path,
       "benchB") // v2
-    assert(TrainingData.evalSources(spark, path) == Seq("benchA", "benchB"))
+    assert(evalSources() == Seq("benchA", "benchB"))
     def toMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
     val both = toMap(TrainingData.redactAgainstStore(docs, "doc_id",
@@ -142,7 +148,7 @@ class TrainingDataSpec extends SparkSpec {
     assert(TrainingData.purgeEvalSource(spark, path, "benchA")) // v3
     assert(!TrainingData.purgeEvalSource(spark, path, "benchA"),
       "purging a retired source must be a no-op")
-    assert(TrainingData.evalSources(spark, path) == Seq("benchB"))
+    assert(evalSources() == Seq("benchB"))
     val onlyB = toMap(TrainingData.redactAgainstStore(docs, "doc_id",
       "text", path))
     assert(onlyB == toMap(TrainingData.redactEvalSpans(docs, benchB,

@@ -5,8 +5,8 @@ import org.scalacheck.Gen
 
 /** The r19 native URL canonicalizer ([[graft.functions.UrlCanon]]) must
   * be BYTE-IDENTICAL to the composed-Column pipeline it replaced
-  * ([[graft.functions.UrlExprs.canonicalizeUrlComposed]], kept in the
-  * tree as the executable specification). Both implementations are
+  * ([[graft.functions.UrlExprsReference.canonicalizeUrlComposed]], kept
+  * with the specs as the executable specification). Both implementations are
   * evaluated THROUGH SPARK on the same frames, so codegen, null
   * semantics and UTF8String behavior are all inside the comparison.
   * Covers: the q138/q163/q164/q180 fixture variant shapes, a
@@ -24,9 +24,9 @@ class UrlCanonEquivalenceSpec extends SparkSpec {
     val rows = df.select(
       col("url"),
       graft.functions.UrlExprs.canonicalizeUrl(col("url")).as("n"),
-      graft.functions.UrlExprs.canonicalizeUrlComposed(col("url")).as("c"),
+      graft.functions.UrlExprsReference.canonicalizeUrlComposed(col("url")).as("c"),
       graft.functions.UrlExprs.canonicalHost(col("url")).as("nh"),
-      graft.functions.UrlExprs.canonicalHostComposed(col("url")).as("ch"))
+      graft.functions.UrlExprsReference.canonicalHostComposed(col("url")).as("ch"))
       .collect()
     rows.foreach { r =>
       assert(r.get(1) == r.get(2),

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.VectorExprs
+import graft.functions.{VectorExprsReference, VectorNative}
 import graft.operators.Similarity
 import org.apache.spark.sql.functions._
 
@@ -15,8 +15,8 @@ class VectorNativeSpec extends SparkSpec {
       .crossJoin(emb.select(col("vec_id").as("b"), col("embedding").as("vb")))
       .where(col("a") < col("b") && col("a") < 30 && col("b") < 30)
     val diff = pairs.select(
-      VectorExprs.cosine(col("va"), col("vb")).as("fast"),
-      VectorExprs.cosineComposed(col("va"), col("vb")).as("slow"))
+      VectorNative.cosineSim(col("va"), col("vb")).as("fast"),
+      VectorExprsReference.cosineComposed(col("va"), col("vb")).as("slow"))
       .where(col("fast") =!= col("slow"))
     assert(diff.count() == 0)
   }
@@ -62,8 +62,8 @@ class VectorNativeSpec extends SparkSpec {
   test("native plane bits == composed plane bits") {
     val planes = Similarity.planes(8, 64)
     val diff = emb.select(
-      VectorExprs.simhashPlanes(col("embedding"), planes).as("fast"),
-      VectorExprs.simhashPlanesComposed(col("embedding"), planes).as("slow"))
+      VectorNative.planeBits(col("embedding"), planes).as("fast"),
+      VectorExprsReference.simhashPlanesComposed(col("embedding"), planes).as("slow"))
       .where(col("fast") =!= col("slow"))
     assert(diff.count() == 0)
   }

@@ -77,9 +77,9 @@ class WarehouseStoreSpec extends SparkSpec {
     assert(factRows(dir, asOf = Some(5)) == before,
       "pinned pre-compact reader lost files")
     // scoped compaction is a no-op when nothing multi-file matches
-    val vBefore = WarehouseStore.versions(spark, dir)
+    val vBefore = StoreSwap.manifestVersions(StoreSwap.fsOf(spark, dir), dir)
     WarehouseStore.compactFact(spark, dir, years = Some(Seq(2024)))
-    assert(WarehouseStore.versions(spark, dir) == vBefore,
+    assert(StoreSwap.manifestVersions(StoreSwap.fsOf(spark, dir), dir) == vBefore,
       "a nothing-to-do compaction committed a version")
     // vacuum to 1 version: the superseded small files reclaim, the
     // pre-compact pin then refuses with the retained window named
@@ -162,7 +162,7 @@ class WarehouseStoreSpec extends SparkSpec {
     val grown = wh.copy(factSales = wh.factSales
       .unionAll(wh.factSales.withColumn("fact_id", col("fact_id") + lit(7L))))
     WarehouseStore.save(grown, dir) // v2: reload with 6 rows
-    assert(WarehouseStore.versions(spark, dir) == Seq(1, 2))
+    assert(StoreSwap.manifestVersions(StoreSwap.fsOf(spark, dir), dir) == Seq(1, 2))
     assert(factRows(dir).length == 6)
     val old = WarehouseStore.load(spark, dir, asOfVersion = Some(1))
     assert(old.factSales.count() == 3)

@@ -3,14 +3,15 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Embedding-vector math over `array<float>` columns, as pure Catalyst
-  * higher-order functions (zip_with / aggregate) — codegen-friendly, no UDF.
+/** Embedding-vector math over `array<float>` columns as pure Catalyst
+  * higher-order functions (zip_with / aggregate) — the composed-HOF
+  * specifications of the [[VectorNative]] kernels; spec use only.
   *
   * Accumulation is an ordered left fold in double precision so results are
   * bit-deterministic and engine-portable (the DuckDB oracle's
   * list_dot_product folds in the same element order).
   */
-object VectorExprs {
+object VectorExprsReference {
 
   private def d(c: Column): Column = c.cast("array<double>")
 
@@ -20,28 +21,10 @@ object VectorExprs {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  /** Cosine similarity — native codegen'd single-pass implementation
-    * (see [[VectorNative]]; the composed fold here is its spec). */
-  def cosine(a: Column, b: Column): Column = VectorNative.cosineSim(a, b)
-
   /** The composed-HOF cosine (reference implementation for equivalence
     * tests; interpreted per element — do not use on hot paths). */
   def cosineComposed(a: Column, b: Column): Column =
     dot(a, b) / (norm(a) * norm(b))
-
-  /** Squared L2 distance (cheaper than sqrt when only ranking matters). */
-  def l2sq(a: Column, b: Column): Column =
-    aggregate(zip_with(d(a), d(b), (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, x) => acc + x)
-
-  /** Deterministic LSH bucket for cosine similarity: sign bits of the dot
-    * product against `nPlanes` pseudo-random hyperplanes derived from a
-    * seeded hash (no RNG at plan time — plane j, dim i weight is
-    * a fixed function of (j, i)). Used to shard ANN search so the
-    * brute-force compare only runs within a bucket.
-    */
-  def simhashPlanes(v: Column, planes: Seq[Seq[Double]]): Column =
-    VectorNative.planeBits(v, planes)
 
   /** Composed-HOF plane bits (reference implementation for tests). */
   def simhashPlanesComposed(v: Column, planes: Seq[Seq[Double]]): Column = {
