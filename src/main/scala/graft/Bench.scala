@@ -12,7 +12,8 @@ object Bench {
     // warm up JVM/codegen/parquet reader once so the first timed query
     // doesn't absorb ~3s of session initialization
     spark.range(1000).selectExpr("sum(id)").collect()
-    try spark.read.parquet(s"$sfDir/nation.parquet").count()
+    try org.apache.spark.sql.graftshim.ManifestRelation
+      .readParquet(spark, s"$sfDir/nation.parquet").count()
     catch { case scala.util.control.NonFatal(_) => () }
     // HOST-STATE CALIBRATION (advice r13): full-bench totals moved
     // 1.2-1.5x on byte-identical plans two rounds running, and each

@@ -3,6 +3,7 @@ package graft
 import graft.etl.{DimDate, Taxonomy}
 import graft.functions.{CleanExprs, TextExprs}
 import graft.operators.{Dedup, Sessionize, Similarity}
+import org.apache.spark.sql.graftshim.ManifestRelation
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1440,7 +1441,7 @@ object Queries {
     val t0 = System.currentTimeMillis()
     stageStreamFile(df.where(col(idCol) % 2 === 0), in, "a_even", t0)
     stageStreamFile(df.where(col(idCol) % 2 === 1), in, "b_odd", t0 + 2000)
-    val rawSchema = s.read.parquet(in.getAbsolutePath).schema
+    val rawSchema = ManifestRelation.readParquet(s, in.getAbsolutePath).schema
     s.readStream.schema(rawSchema)
       .option("maxFilesPerTrigger", "1")
       .parquet(in.getAbsolutePath)
@@ -1515,7 +1516,8 @@ object Queries {
     incrementalWh.computeIfAbsent(d, _ => {
       val whDir = new java.io.File(staged("inc", d)(base =>
         buildIncrementalWarehouse(s, d, base)), "wh")
-      def read(n: String) = s.read.parquet(new java.io.File(whDir, n).getAbsolutePath)
+      def read(n: String) =
+        ManifestRelation.readParquet(s, new java.io.File(whDir, n).getAbsolutePath)
       graft.etl.OrderEtl.Warehouse(read("dim_date"), read("dim_customer"),
         read("dim_product"), read("dim_platform"), read("fact_sales"))
     })
@@ -2197,7 +2199,7 @@ object Queries {
       }
       graft.operators.TrainingData.lmQualityScore(
         documents(s, d), "doc_id", "text",
-        s.read.parquet(dir.getAbsolutePath))
+        ManifestRelation.readParquet(s, dir.getAbsolutePath))
     },
     Some(lmQualityOracle))
 
@@ -5335,7 +5337,7 @@ object Queries {
         documents(s, d).select(messyUrl.as("url")).dropDuplicates("url")
           .coalesce(1).write.mode("overwrite").parquet(dir.getAbsolutePath)
       }
-      val rawSchema = s.read.parquet(f.getAbsolutePath).schema
+      val rawSchema = ManifestRelation.readParquet(s, f.getAbsolutePath).schema
       val docs = s.readStream.schema(rawSchema).parquet(f.getAbsolutePath)
       drainToMemory(s, "graft_q163_sink", "complete") {
         graft.streaming.UrlFrontier.frontierPerHost(docs, "url")
@@ -5405,7 +5407,7 @@ object Queries {
         Queries.stageStreamFile(tick(2), dir, "c_tick2", t0 + 4000)
         Queries.stageStreamFile(redeliver, dir, "d_redeliver", t0 + 6000)
       }
-      val rawSchema = s.read.parquet(f.getAbsolutePath).schema
+      val rawSchema = ManifestRelation.readParquet(s, f.getAbsolutePath).schema
       val urls = s.readStream.schema(rawSchema)
         .option("maxFilesPerTrigger", "1")
         .parquet(f.getAbsolutePath)
@@ -8065,7 +8067,7 @@ object Queries {
         bootstrapPairs.unionAll(deltaPairs)
           .write.mode("overwrite").parquet(s"${f.getAbsolutePath}/pairs")
       }
-      s.read.parquet(s"${dir.getAbsolutePath}/pairs")
+      ManifestRelation.readParquet(s, s"${dir.getAbsolutePath}/pairs")
     },
     q114.oracle)
 
@@ -8137,7 +8139,7 @@ object Queries {
           bands = 4, ngram = 3)
           .write.mode("overwrite").parquet(s"${f.getAbsolutePath}/pairs")
       }
-      s.read.parquet(s"${dir.getAbsolutePath}/pairs")
+      ManifestRelation.readParquet(s, s"${dir.getAbsolutePath}/pairs")
     },
     q114.oracle.map(sql =>
       s"SELECT * FROM ($sql) WHERE d1 % 2 = 1 OR d2 % 2 = 1"))
@@ -8164,7 +8166,7 @@ object Queries {
             threshold = 0.4)
         }
       }
-      s.read.parquet(s"${dir.getAbsolutePath}/pairs")
+      ManifestRelation.readParquet(s, s"${dir.getAbsolutePath}/pairs")
         .select(col("d1"), col("d2"), col("jaccard"))
     },
     q114.oracle)
@@ -8606,7 +8608,7 @@ object Queries {
               Array(basis(0), basis(1), basis(2)))))
         }
       }
-      s.read.parquet(s"${dir.getAbsolutePath}/verdicts")
+      ManifestRelation.readParquet(s, s"${dir.getAbsolutePath}/verdicts")
         .select(col("doc").as("vec_id"), col("cell"), col("seq"),
           col("kept"))
     },

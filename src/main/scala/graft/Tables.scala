@@ -1,14 +1,17 @@
 package graft
 
+import org.apache.spark.sql.graftshim.ManifestRelation
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Loaders for the driver-generated TPC-H-ish star schema
-  * (see /root/repo/TESTDATA.md). One parquet file per table.
+  * (see TESTDATA.md). One parquet file per table.
   *
-  * At cluster scale these would be partitioned/bucketed warehouse tables;
-  * the loader is the single seam where that changes (swap `parquet(path)`
-  * for `spark.table(name)` over a bucketed catalog table) — query code
-  * never hardcodes paths.
+  * Every table read goes through [[ManifestRelation.readParquet]], the
+  * single seam for parquet reads in main: the schema comes from one
+  * driver-side footer read, so a load runs no Spark job. At cluster
+  * scale these would be partitioned/bucketed warehouse tables, and that
+  * seam is where the change lands (a `spark.table(name)` over a
+  * bucketed catalog table) — query code never hardcodes paths.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -35,7 +38,7 @@ object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val df =
       if (name == "events") eventsRaw(spark, sfDir)
-      else spark.read.parquet(s"$sfDir/$name.parquet")
+      else ManifestRelation.readParquet(spark, s"$sfDir/$name.parquet")
     if (splitOnRead(name)) df.repartition(spark.sparkContext.defaultParallelism)
     else df
   }
@@ -54,14 +57,15 @@ object Tables {
 
   private def eventsRaw(s: SparkSession, d: String): DataFrame = {
     readNanosAsLong(s)
-    normalizeEventTs(s.read.parquet(s"$d/events.parquet"))
+    normalizeEventTs(ManifestRelation.readParquet(s, s"$d/events.parquet"))
   }
 
   /** A directory of staged events-parquet copies as a file stream, with
     * the batch schema and `ts` normalized like [[events]]. */
   def readEventsStream(s: SparkSession, dir: String): DataFrame = {
     readNanosAsLong(s)
-    normalizeEventTs(s.readStream.schema(s.read.parquet(dir).schema).parquet(dir))
+    normalizeEventTs(s.readStream
+      .schema(ManifestRelation.readParquet(s, dir).schema).parquet(dir))
   }
 
   private def readNanosAsLong(s: SparkSession): Unit =

@@ -122,7 +122,8 @@ object PqIndex {
     * [[Model]] requires) — a corrupted or hand-edited table fails HERE,
     * not as garbage codes. */
   def loadModel(spark: org.apache.spark.sql.SparkSession, path: String): Model = {
-    val rows = spark.read.parquet(path)
+    val rows = org.apache.spark.sql.graftshim.ManifestRelation
+      .readParquet(spark, path)
       .select(col("subspace").cast("int"), col("centroid").cast("int"),
         col("values").cast("array<double>"))
       .collect()

@@ -185,7 +185,8 @@ object QualityClassifier {
     * feature ids 0..dim-1. */
   def loadModel(spark: org.apache.spark.sql.SparkSession,
                 path: String): Model = {
-    val rows = spark.read.parquet(path)
+    val rows = org.apache.spark.sql.graftshim.ManifestRelation
+      .readParquet(spark, path)
       .select(col("j").cast("int"), col("w_micro").cast("long"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
     require(rows.nonEmpty && rows.head._1 == -1,

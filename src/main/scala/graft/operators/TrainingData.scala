@@ -2177,7 +2177,8 @@ object TrainingData {
     * silently-wrong tokenization. */
   def loadBpeMerges(spark: org.apache.spark.sql.SparkSession,
                     path: String): Seq[(String, String)] = {
-    val rows = spark.read.parquet(path)
+    val rows = org.apache.spark.sql.graftshim.ManifestRelation
+      .readParquet(spark, path)
       .select(col("rank").cast("int"), col("left"), col("right"))
       .collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2)))

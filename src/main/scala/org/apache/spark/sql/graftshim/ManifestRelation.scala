@@ -1,11 +1,14 @@
 package org.apache.spark.sql.graftshim
 
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.unsafe.types.UTF8String
@@ -34,19 +37,23 @@ import org.apache.spark.unsafe.types.UTF8String
   * execution machinery is reused (ParquetFileFormat does the actual
   * reading, so vectorization, predicate pushdown, and column pruning
   * are unchanged).
+  *
+  * It is also the one parquet reader of `src/main/scala`:
+  * [[readParquet]] resolves a plain file or directory the same way,
+  * on the driver, so no read pays a Spark job to learn its schema.
   */
 object ManifestRelation {
 
-  /** Data-schema cache keyed by the footer file actually read: one
-    * parquet footer per (store dir, current footer file) — repeat
-    * reads of an unchanged store resolve the schema with zero I/O.
-    * Entries are immutable (copy-on-write stores never rewrite a
-    * file), but the KEY churns: compaction and appends change the
-    * largest file, so the cache is a bounded LRU (a long-lived driver
-    * touching many stores/versions must not accrete stranded entries
-    * without bound) and [[evictSchemas]] drops a store's entries when
-    * a path is re-created (a v1 manifest commit on a previously-seen
-    * path). */
+  /** Data-schema cache keyed by the footer file actually read, its
+    * length and mtime, and the session confs the footer conversion
+    * reads ([[dataSchemaOf]]): repeat reads of an unchanged file
+    * resolve the schema with zero I/O, while a file rewritten in place,
+    * or read under a different `nanosAsLong`, misses. Compaction and
+    * appends change the largest file, so the key churns: the cache is
+    * a bounded LRU (a long-lived driver touching many stores/versions
+    * must not accrete stranded entries without bound) and
+    * [[evictSchemas]] drops a store's entries when a path is re-created
+    * (a v1 manifest commit on a previously-seen path). */
   private val SchemaCacheMax = 256
   private val schemaCache = java.util.Collections.synchronizedMap(
     new java.util.LinkedHashMap[String, StructType](64, 0.75f, true) {
@@ -67,6 +74,42 @@ object ManifestRelation {
     val it = schemaCache.keySet().iterator()
     while (it.hasNext) if (it.next().startsWith(basePath + "/")) it.remove()
   }
+
+  /** DataFrame over one parquet file or directory — what
+    * `spark.read.parquet(path)` returns, the schema included, but
+    * resolved on the driver with no Spark job: one stat (a file) or one
+    * recursive listing (a directory; `_`- and `.`-prefixed names are
+    * skipped as Spark skips them, `k=v` directories become partition
+    * columns), one footer read, and the scan built by [[parquet]].
+    * A missing path or a directory with no data files refuses. */
+  def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val fs = new Path(path).getFileSystem(
+      spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf())
+    val p = fs.makeQualified(new Path(path))
+    val root = fs.getFileStatus(p)
+    if (!root.isDirectory)
+      return parquet(spark, p.getParent.toString, Seq(p.getName -> root.getLen))
+    val files = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+    def walk(dir: Path, rel: String): Unit =
+      fs.listStatus(dir).sortBy(_.getPath.getName).foreach { st =>
+        val name = st.getPath.getName
+        if (!hiddenName(name)) {
+          val r = if (rel.isEmpty) name else s"$rel/$name"
+          if (st.isDirectory) walk(st.getPath, r) else files += r -> st.getLen
+        }
+      }
+    walk(p, "")
+    require(files.nonEmpty, s"ManifestRelation: unable to infer a parquet " +
+      s"schema — no data files under $path")
+    parquet(spark, p.toString, files.toSeq)
+  }
+
+  /** Spark's listing filter (`shouldFilterOutPathName`), minus the
+    * parquet summary files this project never writes: `_` (unless a
+    * `k=v` name), `.` and in-flight `._COPYING_` names are not data. */
+  private def hiddenName(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")
 
   /** DataFrame over `files` (paths relative to `basePath`, with byte
     * lengths) — partition columns recovered from `k=v` path components
@@ -187,23 +230,47 @@ object ManifestRelation {
     }.toSeq)
 
   /** The parquet data schema of one store-relative file (cached — one
-    * footer read per (store, file) in a session). Public so writers can
-    * validate an incoming frame against the store's committed schema
-    * BEFORE staging an append (the warehouse schema-drift guard). */
+    * footer read per (file, length, mtime, converter confs)). Public so
+    * writers can validate an incoming frame against the store's
+    * committed schema BEFORE staging an append (the warehouse
+    * schema-drift guard). */
   def dataSchemaOf(spark: SparkSession, basePath: String,
                    firstRel: String): StructType = {
     val key = s"$basePath/$firstRel"
-    val cached = schemaCache.get(key)
-    if (cached != null) return cached
+    val cs = spark.asInstanceOf[classic.SparkSession]
     val p = new Path(key)
-    val fs = p.getFileSystem(
-      spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf())
-    val schema = new ParquetFileFormat()
-      .inferSchema(spark.asInstanceOf[classic.SparkSession],
-        Map.empty[String, String], Seq(fs.getFileStatus(p)))
-      .getOrElse(throw new IllegalArgumentException(
-        s"ManifestRelation: could not read a parquet footer from $key"))
-    schemaCache.put(key, schema)
+    val hadoopConf = cs.sessionState.newHadoopConf()
+    val st = p.getFileSystem(hadoopConf).getFileStatus(p)
+    val conf = cs.sessionState.conf
+    // the confs Spark's own schema inference converts footers with
+    // (ParquetFileFormat.mergeSchemasInParallel); the rest stay default
+    val binaryAsString = conf.isParquetBinaryAsString
+    val int96AsTimestamp = conf.isParquetINT96AsTimestamp
+    val inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled
+    val nanosAsLong = conf.legacyParquetNanosAsLong
+    val unknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation
+    val cacheKey = Seq(key, st.getLen, st.getModificationTime, binaryAsString,
+      int96AsTimestamp, inferTimestampNTZ, nanosAsLong, unknownTypeAnnotation)
+      .mkString("\u0000")
+    val cached = schemaCache.get(cacheKey)
+    if (cached != null) return cached
+    val converter = new ParquetToSparkSchemaConverter(
+      assumeBinaryIsString = binaryAsString,
+      assumeInt96IsTimestamp = int96AsTimestamp,
+      inferTimestampNTZ = inferTimestampNTZ,
+      nanosAsLong = nanosAsLong,
+      respectUnknownTypeAnnotation = unknownTypeAnnotation)
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(st, hadoopConf),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    // the footer's Spark row metadata (names, nullability, field
+    // metadata) wins over the converted parquet schema, as in Spark;
+    // every column is then nullable, as DataSource makes it — a
+    // non-null column in one file says nothing of the store's others
+    val schema = ParquetFileFormat
+      .readSchemaFromFooter(new Footer(st.getPath, footer), converter)
+      .asNullable
+    schemaCache.put(cacheKey, schema)
     schema
   }
 }

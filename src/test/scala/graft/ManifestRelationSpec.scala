@@ -75,6 +75,25 @@ class ManifestRelationSpec extends SparkSpec {
     assert(df.select(sum(col("v"))).as[Double].head() == 2.0)
   }
 
+  test("a non-null column in the schema-source file stays nullable: " +
+    "null rows of the store's other files still match IS NULL") {
+    val dir = freshDir()
+    // the 5,000-row file (largest, so the schema source) is written
+    // from a frame whose `s` is non-null; the 10-row file holds nulls
+    spark.range(5000).select(col("id"), lit("x").as("s"))
+      .coalesce(1).write.parquet(dir.toString)
+    spark.range(10).select(col("id"), lit(null).cast("string").as("s"))
+      .coalesce(1).write.mode("append").parquet(dir.toString)
+    val rels = dir.listFiles().filter(f => f.getName.endsWith(".parquet") &&
+      !f.getName.startsWith(".")).map(f => f.getName -> f.length()).toSeq
+    assert(rels.length == 2)
+    val df = ManifestRelation.parquet(spark, dir.toString, rels)
+    assert(df.schema("s").nullable)
+    assert(spark.read.parquet(dir.toString).where(col("s").isNull)
+      .count() == 10)
+    assert(df.where(col("s").isNull).count() == 10)
+  }
+
   test("schema cache holds at most 256 footers; evictSchemas drops a " +
     "store's entries") {
     val dir = freshDir()
