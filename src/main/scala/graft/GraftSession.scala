@@ -12,6 +12,27 @@ import org.apache.spark.sql.SparkSession
   * (`spark.sql.extensions=graft.plans.GraftExtensions`).
   */
 object GraftSession {
+  /** The one size that decides join strategy, in bytes. The planner and
+    * AQE broadcast a join side whose (estimated, then observed) size is
+    * under it; AQE turns a sort-merge join into a shuffled hash join
+    * when every map-output partition of the build side is under it, and
+    * otherwise keeps the sort-merge join, which can spill. The local-map
+    * threshold takes effect only at or above
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes` (64 MB default).
+    * The default broadcast threshold is 10 MB; 64 MB turns the mid-size
+    * dimension joins (orders at sf0.1 ≈ 15 MB) into broadcasts. On a
+    * cluster, size it to executor memory. An operator hints a strategy
+    * only with a same-session sf0.1 A/B number beside the hint;
+    * `JoinStrategySpec` fails on any other. */
+  val JoinSizeThreshold: Long = 64L * 1024 * 1024
+
+  /** The three byte-size confs that apply [[JoinSizeThreshold]]. */
+  val JoinConfs: Map[String, String] = Seq(
+    "spark.sql.autoBroadcastJoinThreshold",
+    "spark.sql.adaptive.autoBroadcastJoinThreshold",
+    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold")
+    .map(_ -> s"$JoinSizeThreshold").toMap
+
   def build(cpus: String): SparkSession =
     SparkSession.builder()
       .master(s"local[$cpus]")
@@ -19,13 +40,7 @@ object GraftSession {
       .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
-      // Default 10MB broadcast threshold is sized for small executors; on
-      // this 128 GiB single JVM a 64MB build side is trivially resident
-      // and turns the mid-size dimension joins (orders at sf0.1 ≈ 15MB)
-      // into broadcasts — no probe-side shuffle. On a cluster, size this
-      // to executor memory; the big-fact joins stay shuffles regardless.
-      .config("spark.sql.autoBroadcastJoinThreshold", s"${64 * 1024 * 1024}")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", s"${64 * 1024 * 1024}")
+      .config(JoinConfs)
       // The engine caches only narrow, hot frames (the 8-column ETL
       // staging projection) — for those, columnar-cache compression codecs
       // cost more CPU at build time than the memory they save (measured

@@ -1,15 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** IDN host folding as ONE codegen'd scalar pass: every dot-separated
-  * label containing a non-ASCII code point is lowercased and encoded
-  * to its RFC 3492 punycode ACE form (`xn--` prefix) — so
+/** IDN host folding: every dot-separated label containing a non-ASCII
+  * code point is lowercased and encoded to its RFC 3492 punycode ACE
+  * form (`xn--` prefix) — so
   * `bücher.example.com` and `xn--bcher-kva.example.com` land on the
   * SAME canonical host and URL-level dedup collides them (the round-11
   * "what's missing #1" residual; real crawls carry both forms of every
@@ -30,28 +25,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Why native: punycode is an inherently stateful per-label loop (the
   * delta/bias adaptation) that no built-in expression composition can
-  * express; a codegen'd scalar calling one static method keeps the
-  * surrounding URL pipeline inside whole-stage codegen, per the
-  * [[LangIdNative]]/[[StableId63]] pattern. */
-case class IdnHostExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType || child.dataType == org.apache.spark.sql.types.NullType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"idn_host expects STRING, got ${child.dataType.sql}")
-
-  override def nullSafeEval(v: Any): Any =
-    IdnHostExpr.fold(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.IdnHostExpr.fold($c)")
-
-  override protected def withNewChildInternal(c: Expression): IdnHostExpr = copy(c)
-  override def prettyName: String = "idn_host"
-}
-
-object IdnHostExpr {
+  * express. [[UrlCanonExpr]]'s host pipeline calls [[IdnHost.fold]]
+  * inside its one codegen'd pass. */
+object IdnHost {
 
   private val Base = 36
   private val TMin = 1
@@ -191,7 +167,4 @@ object IdnHostExpr {
     }
     out.toString
   }
-
-  def idnHost(c: Column): Column =
-    ColumnBridge.column(IdnHostExpr(ColumnBridge.expr(c)))
 }

@@ -303,7 +303,7 @@ object UrlCanon {
   /** host pipeline shared by both expressions: pct-decode → trailing
     * dots → IDN fold. (The www strip differs between the two callers.) */
   private def foldHost(hostRaw: String): String =
-    IdnHostExpr.fold(UTF8String.fromString(
+    IdnHost.fold(UTF8String.fromString(
       stripTrailingDots(hostPctDecode(hostRaw)))).toString
 
   /** [[UrlExprs.canonicalizeUrl]] in one pass; null for null/no-scheme. */

@@ -33,7 +33,7 @@ import org.apache.spark.sql.functions._
   *  - scheme and host lowercased; trailing root-dots dropped
   *    (`a.com.` ≡ `a.com` in DNS; a run of junk trailing dots
   *    collapses too, keeping the fold idempotent on garbage); internationalized host labels fold
-  *    to their RFC 3492 `xn--` ACE form ([[IdnHostExpr]] — DNS's wire
+  *    to their RFC 3492 `xn--` ACE form ([[IdnHost]] — DNS's wire
   *    form, so `bücher.example` and `xn--bcher-kva.example` collide;
   *    ASCII hosts take a zero-cost fast path); a leading `www.`
   *    dropped;
@@ -52,7 +52,7 @@ import org.apache.spark.sql.functions._
   * labels arrive PERCENT-ENCODED (`m%C3%BCnchen.example`) is decoded
   * IN THE HOST COMPONENT ONLY — after authority extraction, escapes
   * ≥ 0x80 whose byte runs form well-formed UTF-8 decode to their
-  * characters and then fold through [[IdnHostExpr]], so the escaped,
+  * characters and then fold through [[IdnHost]], so the escaped,
   * raw, and ACE spellings of one host all land in one canonical group.
   * This is sound precisely because it happens post-split: a decoded
   * character can no longer change where the authority ends, and ASCII

@@ -288,14 +288,12 @@ object Dedup {
       storeBands.columns.toSet == Set("doc", "band", "bucket", "pb"),
       s"pairsForIds: $storePath is not a saveMinhashStore layout")
     val (pbN, bbN) = storeLayout(fs, storePath, mfV)
-    def maybeBroadcast(df: DataFrame): DataFrame =
-      StoreSwap.maybeBroadcast(df)
     val idFrame = ids.select(col(idCol).as("doc")).distinct().localCheckpoint()
     val idPbs = idFrame.select(storeBucket(col("doc"), pbN).as("pb"))
       .distinct().collect().map(_.getLong(0)).sorted.toSeq
     // the probe docs' own band rows: pb-pruned, id-restricted
     val idBands = pruneBuckets(storeBands, "pb", idPbs, pbN)
-      .join(maybeBroadcast(idFrame), Seq("doc"), "left_semi")
+      .join(idFrame, Seq("doc"), "left_semi")
       .select(col("doc"), col("band"), col("bucket")).localCheckpoint()
     val touched = idBands
       .select(bandBucket(col("band"), col("bucket"), bbN).as("bb"))
@@ -306,7 +304,7 @@ object Dedup {
         .select(col("doc"), col("band"), col("bucket"))
     val probe = idBands.select(col("band"), col("bucket"), col("doc").as("__p"))
     val pairs = collisionSide
-      .join(maybeBroadcast(probe), Seq("band", "bucket"))
+      .join(probe, Seq("band", "bucket"))
       .select(least(col("doc"), col("__p")).as("d1"),
         greatest(col("doc"), col("__p")).as("d2"))
       .where(col("d1") =!= col("d2")).distinct().localCheckpoint()
@@ -315,7 +313,7 @@ object Dedup {
     val candPbs = candDocs.select(storeBucket(col("doc"), pbN).as("pb"))
       .distinct().collect().map(_.getLong(0)).sorted.toSeq
     val tok = pruneBuckets(storeToks, "pb", candPbs, pbN)
-      .join(maybeBroadcast(candDocs), Seq("doc"), "left_semi")
+      .join(candDocs, Seq("doc"), "left_semi")
       .select(col("doc"), col("hv")).localCheckpoint()
     verifyJaccard(tok,
       tok.groupBy(col("doc")).agg(count(lit(1)).as("n")), pairs, threshold)
@@ -538,18 +536,19 @@ object Dedup {
     * ([[pairsForIds]], the streaming ingest's shape).
     *
     * Scale shape (100 TB store, delta-sized batch): the store is never
-    * shuffled — the delta's ids, band keys, and candidate doc ids ride
-    * broadcast semi-joins into the store reads (seen-probe, candidate
-    * generation, verify postings), each of which returns a
+    * shuffled — the delta's ids, band keys, and candidate doc ids
+    * semi-join the store reads (seen-probe, candidate generation,
+    * verify postings), AQE broadcasting each delta-sized side; each
+    * returns a
     * delta-bounded result; every shuffle in the plan carries delta- or
     * candidate-sized frames. Candidate generation reads the
     * band-bucket-keyed `bandidx/` projection PARTITION-PRUNED to the
     * band buckets the delta's own keys touch ([[NBandBuckets]]; the
     * round-14 verdict's top item — the previous shape scanned the
     * entire `bands/` dir every batch, linear in STORE size per delta).
-    * Deltas past [[IvfIndex.MaxBroadcastQueries]] band rows fall back
-    * to shuffle joins of the store scans (loud in the plan, correct
-    * either way; split huge backfills into batches instead). Per-batch
+    * Deltas past the broadcast threshold fall back to shuffle joins of
+    * the store scans (loud in the plan, correct either way; split huge
+    * backfills into batches instead). Per-batch
     * cost is O(scan(delta-touched buckets) + |delta| log |delta|).
     *
     * Torn append: the batch's files land first, the manifest flip
@@ -572,19 +571,17 @@ object Dedup {
       storeBands.columns.toSet == Set("doc", "band", "bucket", "pb"),
       s"minhashIncremental: $storePath is not a saveMinhashStore layout")
     val (pbN, bbN) = storeLayout(fsInc, storePath, mfVersion)
-    def maybeBroadcast(df: DataFrame): DataFrame =
-      StoreSwap.maybeBroadcast(df)
     // seen-probe: postings scan PRUNED to the batch ids' own buckets
-    // (computable from the ids alone), then filtered by the (broadcast)
-    // batch ids — result is ≤ |batch| ids; the batch drops them locally
+    // (computable from the ids alone), then filtered by the batch ids —
+    // result is ≤ |batch| ids; the batch drops them locally
     val batchIds = batch.select(col(idCol)).distinct().localCheckpoint()
     val batchPbs = batchIds.select(storeBucket(col(idCol), pbN).as("pb"))
       .distinct().collect().map(_.getLong(0)).sorted.toSeq
     val seenIds = pruneBuckets(storeToks, "pb", batchPbs, pbN)
       .select(col("doc"))
-      .join(maybeBroadcast(batchIds), col("doc") === col(idCol), "left_semi")
+      .join(batchIds, col("doc") === col(idCol), "left_semi")
       .distinct().localCheckpoint()
-    val fresh = batch.join(maybeBroadcast(seenIds),
+    val fresh = batch.join(seenIds,
       batch(idCol) === seenIds("doc"), "left_anti")
     val tokNew = postings(fresh, idCol, textCol, ngram).localCheckpoint()
     val sigNew = signaturesOf(tokNew).localCheckpoint()
@@ -611,14 +608,14 @@ object Dedup {
         StoreSwap.readStoreDir(spark, storePath, "bandidx", mfFiles),
         "bb", touched, bbN)
       .select(col("doc"), col("band"), col("bucket"))
-      .join(maybeBroadcast(bn), Seq("band", "bucket"))
+      .join(bn, Seq("band", "bucket"))
       .select(least(col("doc"), col("__new_doc")).as("d1"),
         greatest(col("doc"), col("__new_doc")).as("d2"))
       .where(col("d1") =!= col("d2"))
       .distinct()
     val pairs = intra.unionAll(cross).distinct().localCheckpoint()
     // verify postings: the delta's own, plus ONLY the store docs that
-    // appear in a candidate pair (store scan, broadcast-probed)
+    // appear in a candidate pair (store scan, semi-joined)
     val candDocs = pairs.select(col("d1").as("doc"))
       .unionAll(pairs.select(col("d2").as("doc"))).distinct()
       .join(tokNew.select(col("doc")).distinct(), Seq("doc"), "left_anti")
@@ -626,7 +623,7 @@ object Dedup {
     val candPbs = candDocs.select(storeBucket(col("doc"), pbN).as("pb"))
       .distinct().collect().map(_.getLong(0)).sorted.toSeq
     val tokOld = pruneBuckets(storeToks, "pb", candPbs, pbN)
-      .join(maybeBroadcast(candDocs), Seq("doc"), "left_semi")
+      .join(candDocs, Seq("doc"), "left_semi")
       .select(col("doc"), col("hv"))
     val tokAll = tokNew.unionAll(tokOld).localCheckpoint()
     verifyJaccard(tokAll,
@@ -1285,17 +1282,16 @@ object Dedup {
     var prevSum = checksum(labels)
     var iter = 0
     var converged = false
-    // shuffle_hash on the node-sized side (r18, guide §3.1): the
-    // checkpointed frames have unknown stats, so the planner fell back to
-    // SortMergeJoin — which re-SORTS the (big, static) edge frame every
-    // round. A shuffled-hash join streams the pre-partitioned edges
-    // unsorted and builds only the per-partition label map; the rounds'
-    // dominant sort disappears. Build side is node-sized / partitions —
-    // exactly what AQE-sized partitions keep bounded at scale.
+    // shuffle_hash on the node-sized side of both joins: unhinted, AQE
+    // broadcasts the small label frames and every round runs one more
+    // job at no gain in time. sf0.1 A/B (4 cores, 3 runs a side; this
+    // and [[starContract]]'s two hints together): traced build_jobs q56
+    // 25 hinted vs 32 unhinted, q89 25 vs 31, q143 44 vs 51; warm median
+    // q56 3.37 vs 3.40 s, q89 3.42 vs 3.33 s.
     def propagate(ls: DataFrame): DataFrame = {
       val neighborMin = edges
-        .join(ls.select(col("doc").as("src"), col("comp")).hint("shuffle_hash"),
-          Seq("src"))
+        .join(ls.select(col("doc").as("src"), col("comp"))
+          .hint("shuffle_hash"), Seq("src"))
         .groupBy(col("dst")).agg(min(col("comp")).as("ncomp"))
         .select(col("dst").as("doc"), col("ncomp"))
       ls.join(neighborMin.hint("shuffle_hash"), Seq("doc"), "left")
@@ -1319,9 +1315,7 @@ object Dedup {
   private def joinLabels(docs: DataFrame, idCol: String,
                          labels: DataFrame): DataFrame =
     docs.select(col(idCol).cast("long").as("doc"))
-      // shuffle_hash (r18): labels are the edge-endpoint subset — build
-      // them per partition instead of sorting the whole corpus for a SMJ
-      .join(labels.hint("shuffle_hash"), Seq("doc"), "left")
+      .join(labels, Seq("doc"), "left")
       .select(col("doc"), coalesce(col("comp"), col("doc")).as("component"))
 
   /** Connected components by alternating large-star / small-star
@@ -1358,8 +1352,7 @@ object Dedup {
     val links = starContract(edges, maxIters)
     // fixpoint edges are (child, root) with root = component min
     docs.select(col(idCol).cast("long").as("doc"))
-      .join(links.select(col("u").as("doc"), col("v").as("component"))
-        .hint("shuffle_hash"),
+      .join(links.select(col("u").as("doc"), col("v").as("component")),
         Seq("doc"), "left")
       .select(col("doc"),
         coalesce(col("component"), col("doc")).as("component"))
@@ -1386,9 +1379,8 @@ object Dedup {
         .unionByName(e.select(col("v").as("u"), col("u").as("v")))
       val m = dir.groupBy(col("u"))
         .agg(least(min(col("v")), first(col("u"))).as("m"))
-      // shuffle_hash on the node-sized min table (r18, guide §3.1): the
-      // planner's stat-less default was SMJ, which sorts the 2|E|-row dir
-      // frame every round; hash-building m streams dir unsorted
+      // shuffle_hash: sf0.1 A/B beside [[propagateBounded]]'s hints;
+      // q79 traced build_jobs 26 hinted vs 28 unhinted
       dir.join(m.hint("shuffle_hash"), Seq("u"))
         .where(col("v") > col("u"))                 // strictly larger re-attach
         .select(col("v").as("u"), col("m").as("v")) // new edge (v, m), v > m
@@ -1398,7 +1390,7 @@ object Dedup {
     def smallStar(e: DataFrame): DataFrame = {
       // orient every edge toward the larger endpoint: u > v always holds
       val m = e.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val re = e.join(m.hint("shuffle_hash"), Seq("u"))
+      val re = e.join(m.hint("shuffle_hash"), Seq("u")) // as largeStar
         .where(col("v") =!= col("m"))
         .select(col("v").as("u"), col("m").as("v")) // smaller sibs -> min
       val self = m.select(col("u"), col("m").as("v")) // u stays on its min
@@ -1467,10 +1459,9 @@ object Dedup {
       // doc → partial label → star root of that label (labels whose
       // cluster was already fully contracted stay their own root)
       docs.select(col(idCol).cast("long").as("doc"))
-        .join(labels.hint("shuffle_hash"), Seq("doc"), "left")
+        .join(labels, Seq("doc"), "left")
         .select(col("doc"), coalesce(col("comp"), col("doc")).as("__lab"))
-        .join(roots.select(col("u").as("__lab"), col("v").as("__root"))
-          .hint("shuffle_hash"),
+        .join(roots.select(col("u").as("__lab"), col("v").as("__root")),
           Seq("__lab"), "left")
         .select(col("doc"),
           coalesce(col("__root"), col("__lab")).as("component"))
@@ -1568,9 +1559,9 @@ object Dedup {
     val pairs = pairsOf(leaderNodes).select(col("d1"), col("d2"))
     val labels = componentsAuto(leaderNodes.select(col(idCol)), idCol, pairs)
     base.select(col("doc"))
-      .join(docLeader.hint("shuffle_hash"), Seq("doc"), "left")
+      .join(docLeader, Seq("doc"), "left")
       .join(labels.select(col("doc").as("__leader"),
-        col("component").as("__c")).hint("shuffle_hash"),
+        col("component").as("__c")),
         Seq("__leader"), "left")
       .select(col("doc"), coalesce(col("__c"), col("doc")).as("component"))
   }
@@ -1652,9 +1643,9 @@ object Dedup {
       }
     val labeled = docs
       .select(col(idCol).cast("long").as("doc"), col(qualityCol))
-      .join(docLeader.hint("shuffle_hash"), Seq("doc"), "left")
+      .join(docLeader, Seq("doc"), "left")
       .join(labels.select(col("doc").as("__leader"),
-        col("component").as("__comp")).hint("shuffle_hash"),
+        col("component").as("__comp")),
         Seq("__leader"), "left")
       .select(col("doc"), col(qualityCol),
         coalesce(col("__comp"), col("doc")).as("component"))

@@ -420,9 +420,8 @@ object IvfIndex {
     * surviving corpus (oracle-gated: q233).
     *
     * `ids` must be a 1-column frame (or have `idCol`) of purge keys —
-    * typically a takedown batch, tiny next to the corpus; it is
-    * broadcast when provably small and shuffled otherwise (the
-    * [[fitsBroadcast]] guard, same cap as search's query tables).
+    * typically a takedown batch, tiny next to the corpus; AQE
+    * broadcasts it when small and shuffles it otherwise.
     *
     * @return number of postings removed (0 = nothing matched). */
   def purgeFromIndex(spark: SparkSession, path: String, ids: DataFrame,
@@ -432,14 +431,11 @@ object IvfIndex {
     val (mfVersion, mfFiles) = requireIndexManifest(fs, path, "purgeFromIndex")
     val purgeKeys = ids.select(col(idCol).as("__purge_id"))
       .distinct().localCheckpoint()
-    val keyed =
-      if (fitsBroadcast(purgeKeys, MaxBroadcastQueries)) broadcast(purgeKeys)
-      else purgeKeys
     // narrow probe: which cells hold a purged id, and how many postings
     // go — (n_id, cell) only, the vector column is pruned at the scan
     val affected = StoreSwap.readStoreDir(spark, path, "postings", mfFiles)
       .select(col("n_id"), col("cell"))
-      .join(keyed, col("n_id") === col("__purge_id"))
+      .join(purgeKeys, col("n_id") === col("__purge_id"))
       .groupBy(col("cell")).agg(count(lit(1)).as("n_gone"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     if (affected.isEmpty) return 0L
@@ -454,7 +450,7 @@ object IvfIndex {
       "purge", tag)(root =>
       StoreSwap.readStoreDir(spark, path, "postings", mfFiles)
         .where(col("cell").isin(cells: _*))
-        .join(keyed, col("n_id") === col("__purge_id"), "left_anti")
+        .join(purgeKeys, col("n_id") === col("__purge_id"), "left_anti")
         .repartition(cells.size, col("cell"))
         .write.mode("overwrite").partitionBy("cell").parquet(root))
     val dropPrefixes = cells.map(c => s"postings/cell=$c/")
@@ -476,9 +472,14 @@ object IvfIndex {
   /** True iff `queries` is provably at-or-under `cap` rows. Checks the
     * analyzed plan's static `maxRows` bound first (free — no job; any
     * limit-derived frame carries one), and only then falls back to the
-    * short-circuiting `limit(cap+1).count()` probe job. Shared by the
-    * IVF and PQ search families so every broadcast hint in the ANN
-    * surface rides the same guard. */
+    * short-circuiting `limit(cap+1).count()` probe job.
+    *
+    * Only the ANN searches call it ([[search]] and [[PqIndex]]'s
+    * three), because only there AQE cannot choose: the broadcast side
+    * is the EXPLODED probes frame, nProbe× the query rows, so the
+    * bound is on the payload, not on a size AQE observes; and
+    * `PqIndex.search` is a `crossJoin`, which has no shuffle for AQE
+    * to measure. Every other join leaves the strategy to AQE. */
   private[operators] def fitsBroadcast(queries: DataFrame, cap: Long): Boolean =
     // maxRows is an UPPER bound: at-or-under cap proves smallness (no
     // job); above cap proves nothing (a filter keeps its child's bound),
@@ -526,9 +527,8 @@ object IvfIndex {
     * any cosine is computed (a filtered-out vector is never scored,
     * and on a manifest-resolved index the scan's cell
     * PartitionFilters survive — the semi-join keys on `n_id`, not the
-    * partition column), riding broadcast under the same
-    * [[MaxBroadcastQueries]] guard as every ANN probe; an allow-set
-    * past the cap degrades to a shuffle semi-join, never a driver OOM.
+    * partition column); AQE broadcasts a small allow-set and shuffles
+    * a large one, never a driver OOM.
     *
     * Recall caveat, stated loudly: probing stays geometric — the
     * nProbe nearest cells by the QUERY's geometry, not the filter's —
@@ -541,9 +541,7 @@ object IvfIndex {
                      vecCol: String, model: Model, k: Int, nProbe: Int,
                      allowed: DataFrame, allowedIdCol: String): DataFrame = {
     val ids = allowed.select(col(allowedIdCol).as("n_id")).distinct()
-    val idSide = if (fitsBroadcast(ids, MaxBroadcastQueries))
-      broadcast(ids) else ids
-    search(index.join(idSide, Seq("n_id"), "left_semi"),
+    search(index.join(ids, Seq("n_id"), "left_semi"),
       queries, idCol, vecCol, model, k, nProbe)
   }
 }

@@ -80,12 +80,11 @@ object LinkGraph {
       .localCheckpoint()
     val baseMicro = (100L - dampingPct) * 10000L
     var rank = nodes.select(col("node"), lit(1000000L).as("__rm"))
-    // shuffle_hash on the node-sized side of both per-round joins (r18,
-    // guide §3.1): the checkpointed frames carry no stats, so the planner
-    // defaulted to SortMergeJoin — sorting the static edge frame and the
-    // node frame every round. Hash-building the rank/contrib side streams
-    // the pre-partitioned edges (and nodes) unsorted; build side is
-    // |nodes|/partitions, the quantity AQE-sized partitions bound at scale.
+    // shuffle_hash on the node-sized side of the degree join and both
+    // per-round joins: unhinted, AQE broadcasts these small frames, one
+    // broadcast job per join per round. sf0.1 A/B (4 cores, 3 runs a
+    // side, warm median): q174 0.72 s hinted vs 0.90 s unhinted, traced
+    // build_jobs 8 vs 9; q194 (personalizedPageRank) 0.77 vs 0.90 s.
     //
     // Periodic (not per-round) checkpoint (r18): this loop makes NO
     // driver decision, and rank_{i-1} has exactly ONE consumer in
@@ -105,8 +104,7 @@ object LinkGraph {
         .groupBy(col("dst")).agg(sum(col("__c")).as("__s"))
       val next = nodes
         .join(contrib.select(col("dst").as("node"), col("__s"))
-          .hint("shuffle_hash"),
-          Seq("node"), "left")
+          .hint("shuffle_hash"), Seq("node"), "left")
         .select(col("node"),
           (lit(baseMicro) +
             expr(s"($dampingPct * coalesce(__s, 0L)) DIV 100"))
@@ -204,8 +202,7 @@ object LinkGraph {
       .localCheckpoint()
     for (_ <- 1 to maxHops) {
       val relaxed = e
-        .join(dist.select(col("node").as("src"), col("dist"))
-          .hint("shuffle_hash"), Seq("src"))
+        .join(dist.select(col("node").as("src"), col("dist")), Seq("src"))
         .select(col("dst").as("node"), (col("dist") + 1L).as("dist"))
       dist = dist.unionAll(relaxed)
         .groupBy(col("node")).agg(min(col("dist")).as("dist"))
@@ -263,7 +260,8 @@ object LinkGraph {
     val baseMicro = (100L - dampingPct) * 10000L
     var rank = nodes.select(col("node"),
       when(isSeed, lit(1000000L)).otherwise(lit(0L)).as("__rm"))
-    // shuffle_hash + periodic checkpoint — [[pageRank]]'s r18 rationale
+    // shuffle_hash + periodic checkpoint — [[pageRank]]'s rationale and
+    // sf0.1 A/B
     for (i <- 1 to iters) {
       val contrib = ed
         .join(rank.select(col("node").as("src"), col("__rm"))
@@ -272,8 +270,7 @@ object LinkGraph {
         .groupBy(col("dst")).agg(sum(col("__c")).as("__s"))
       val next = nodes
         .join(contrib.select(col("dst").as("node"), col("__s"))
-          .hint("shuffle_hash"),
-          Seq("node"), "left")
+          .hint("shuffle_hash"), Seq("node"), "left")
         .select(col("node"),
           (when(isSeed, lit(baseMicro)).otherwise(lit(0L)) +
             expr(s"($dampingPct * coalesce(__s, 0L)) DIV 100"))
@@ -342,7 +339,7 @@ object LinkGraph {
       val raw = raw0.localCheckpoint(false)
       val mx = raw.agg(max(col(valCol))).collect()(0).getLong(0)
       val denom = math.max(1L, (mx + 999999L) / 1000000L)
-      nodes.join(raw.withColumnRenamed(valCol, "__raw").hint("shuffle_hash"),
+      nodes.join(raw.withColumnRenamed(valCol, "__raw"),
           Seq("node"), "left")
         .select(col("node"),
           expr(s"coalesce(__raw, 0L) DIV $denom").as(valCol))
@@ -352,17 +349,15 @@ object LinkGraph {
     var auth: DataFrame = null
     for (_ <- 1 to iters) {
       auth = rescaled(
-        eSrc.join(hub.select(col("node").as("src"), col("__hm"))
-            .hint("shuffle_hash"), Seq("src"))
+        eSrc.join(hub.select(col("node").as("src"), col("__hm")), Seq("src"))
           .groupBy(col("dst")).agg(sum(col("__hm")).as("__am"))
           .withColumnRenamed("dst", "node"), "__am")
       hub = rescaled(
-        eDst.join(auth.select(col("node").as("dst"), col("__am"))
-            .hint("shuffle_hash"), Seq("dst"))
+        eDst.join(auth.select(col("node").as("dst"), col("__am")), Seq("dst"))
           .groupBy(col("src")).agg(sum(col("__am")).as("__hm"))
           .withColumnRenamed("src", "node"), "__hm")
     }
-    hub.join(auth.hint("shuffle_hash"), Seq("node"))
+    hub.join(auth, Seq("node"))
       .select(col("node"),
         col("__hm").cast("double").divide(lit(1000000.0)).as("hub"),
         col("__am").cast("double").divide(lit(1000000.0))
@@ -413,8 +408,7 @@ object LinkGraph {
     // rationale (fixed iters, single consumer per round)
     for (i <- 1 to iters) {
       val next = adj
-        .join(lab.select(col("node").as("nbr"), col("label"))
-          .hint("shuffle_hash"), Seq("nbr"))
+        .join(lab.select(col("node").as("nbr"), col("label")), Seq("nbr"))
         .select(col("node"), col("label"))
         .groupBy(col("node"), col("label"))
         .agg(count(lit(1)).as("__c"))
@@ -498,10 +492,7 @@ object LinkGraph {
     // neighbor lists keyed by the wedge CENTER, center degree bounded
     val nbr = e.select(col("u").as("c"), col("v").as("n"))
       .unionAll(e.select(col("v").as("c"), col("u").as("n")))
-      // shuffle_hash (r18): hash-build the node-sized degree table instead
-      // of sorting the 2|E| adjacency for a stat-less SortMergeJoin
-      .join(deg.select(col("node").as("c"), col("degree"))
-        .hint("shuffle_hash"), Seq("c"))
+      .join(deg.select(col("node").as("c"), col("degree")), Seq("c"))
       .where(col("degree") <= maxDeg)
       .select(col("c"), col("n"),
         expr("1000000 DIV degree").as("__ra"))
@@ -583,12 +574,8 @@ object LinkGraph {
         .localCheckpoint(false)
     } else {
       val alive = deg.where(col("degree") >= k).select(col("node"))
-      // shuffle_hash (r18): build the node-sized alive set per partition
-      // instead of sorting the edge frame twice per peel round
-      e.join(alive.select(col("node").as("u")).hint("shuffle_hash"),
-          Seq("u"), "left_semi")
-        .join(alive.select(col("node").as("v")).hint("shuffle_hash"),
-          Seq("v"), "left_semi")
+      e.join(alive.select(col("node").as("u")), Seq("u"), "left_semi")
+        .join(alive.select(col("node").as("v")), Seq("v"), "left_semi")
         .select(col("u"), col("v"))
         .repartition(col("u"))
         .localCheckpoint(false)
@@ -629,12 +616,8 @@ object LinkGraph {
     def lt(d1: Column, n1: Column, d2: Column, n2: Column): Column =
       d1 < d2 || (d1 === d2 && n1 < n2)
     val withDeg = und
-      // shuffle_hash (r18): hash-build the node-sized degree table twice
-      // instead of sorting the edge frame twice (stat-less SMJ default)
-      .join(deg.select(col("node").as("u"), col("degree").as("du"))
-        .hint("shuffle_hash"), Seq("u"))
-      .join(deg.select(col("node").as("v"), col("degree").as("dv"))
-        .hint("shuffle_hash"), Seq("v"))
+      .join(deg.select(col("node").as("u"), col("degree").as("du")), Seq("u"))
+      .join(deg.select(col("node").as("v"), col("degree").as("dv")), Seq("v"))
     val oriented = withDeg.select(
       when(lt(col("du"), col("u"), col("dv"), col("v")), col("u"))
         .otherwise(col("v")).as("a"),

@@ -206,9 +206,6 @@ object SemanticStore {
     bSeq < aSeq || (bSeq === aSeq &&
       (bCsim < aCsim || (bCsim === aCsim && bDoc < aDoc)))
 
-  private def maybeBroadcast(df: DataFrame): DataFrame =
-    StoreSwap.maybeBroadcast(df)
-
   /** Ingest a delta batch: already-seen ids are SKIPPED (idempotent —
     * the seen-probe reads the current manifest, so a torn append
     * re-runs cleanly), fresh examples are assigned once against the
@@ -250,11 +247,11 @@ object SemanticStore {
     val batchPbs = batchIds.select(idBucket(col("doc"), pbN).as("pb"))
       .distinct().collect().map(_.getLong(0)).sorted.toSeq
     val seenCells = pruneParts(idmapOf(spark, path, mfFiles), "pb", batchPbs, pbN)
-      .join(maybeBroadcast(batchIds), Seq("doc"), "left_semi")
+      .join(batchIds, Seq("doc"), "left_semi")
       .select(col("doc"), col("cell")).distinct().localCheckpoint()
     val seen = seenCells.select(col("doc").as("__seen_doc"))
-    val fresh = batch.join(maybeBroadcast(seen),
-      batch(idCol) === col("__seen_doc"), "left_anti")
+    val fresh =
+      batch.join(seen, batch(idCol) === col("__seen_doc"), "left_anti")
     val slim = assignSlim(fresh, idCol, vecCol, cents)
       .dropDuplicates("doc")
       .withColumn("seq", lit(mfVersion + 1)).localCheckpoint()
@@ -345,7 +342,7 @@ object SemanticStore {
     * union) and [[verdictsForIds]] (store scan). */
   private def deriveVerdicts(cellRows: DataFrame, idFrame: DataFrame,
                              tau: Double): DataFrame = {
-    val aRows = cellRows.join(maybeBroadcast(idFrame), Seq("doc"), "left_semi")
+    val aRows = cellRows.join(idFrame, Seq("doc"), "left_semi")
     val b = cellRows.select(col("doc").as("b_doc"), col("nv").as("b_nv"),
       col("csim").as("b_csim"), col("seq").as("b_seq"),
       col("cell").as("b_cell"))
@@ -383,7 +380,7 @@ object SemanticStore {
     val idPbs = idFrame.select(idBucket(col("doc"), pbN).as("pb"))
       .distinct().collect().map(_.getLong(0)).sorted.toSeq
     val touched = pruneParts(idmapOf(spark, path, mfFiles), "pb", idPbs, pbN)
-      .join(maybeBroadcast(idFrame), Seq("doc"), "left_semi")
+      .join(idFrame, Seq("doc"), "left_semi")
       .select(col("cell")).distinct()
       .collect().map(_.getInt(0).toLong).sorted.toSeq
     if (touched.isEmpty)
@@ -395,7 +392,7 @@ object SemanticStore {
     val cellRows = pruneParts(vectorsOf(spark, path, mfFiles), "cell",
       touched, k).localCheckpoint()
     // mass guard: Σ per touched cell |ids∩cell| · |cell|
-    val aCounts = cellRows.join(maybeBroadcast(idFrame), Seq("doc"), "left_semi")
+    val aCounts = cellRows.join(idFrame, Seq("doc"), "left_semi")
       .groupBy(col("cell")).agg(count(lit(1)).as("an"))
     val bCounts = cellRows.groupBy(col("cell")).agg(count(lit(1)).as("bn"))
     val mass = aCounts.join(bCounts, Seq("cell"))

@@ -178,11 +178,7 @@ object Similarity {
                     threshold: Double, nPlanes: Int = 0, dim: Int = 64): DataFrame = {
     val dominated = cosineDupPairs(corpus, idCol, vecCol, threshold, nPlanes, dim)
       .select(col("d2").as("__dom")).distinct()
-    // shuffle_hash (r18): the dominated-id set is duplicate-sized; hash-
-    // build it per partition instead of sorting the whole corpus (the
-    // stat-less SMJ default on this anti join)
-    corpus.join(dominated.hint("shuffle_hash"),
-      corpus(idCol) === col("__dom"), "left_anti")
+    corpus.join(dominated, corpus(idCol) === col("__dom"), "left_anti")
   }
 
   /** Recall audit for the LSH-bucketed near-dup path: at the SAME

@@ -233,20 +233,6 @@ private[graft] object StoreSwap {
     if (touched.length >= total) df
     else df.where(col(partCol).isin(touched: _*))
 
-  /** Broadcast-if-provably-small under the shared ANN-family guard
-    * ([[IvfIndex.fitsBroadcast]]): delta-sized probes ride broadcast
-    * joins into store scans, oversized ones degrade to shuffle joins
-    * instead of a driver OOM. The degrade is hinted `shuffle_hash`
-    * (r18, guide §3.1): the probe frame is stat-less (checkpointed /
-    * derived), so the planner's fallback was a SortMergeJoin that
-    * sorts BOTH the store scan and the probes; hash-building the
-    * probe side per partition skips both sorts, and the build stays
-    * |probes|/partitions — bounded by the same delta-vs-store
-    * asymmetry that motivated the broadcast fast path. */
-  def maybeBroadcast(df: DataFrame): DataFrame =
-    if (IvfIndex.fitsBroadcast(df, IvfIndex.MaxBroadcastQueries))
-      broadcast(df) else df.hint("shuffle_hash")
-
   private def writeLayoutFile(fs: FileSystem, p: Path,
                               counts: Seq[(String, Int)]): Unit = {
     val out = fs.create(p, true)

@@ -1521,22 +1521,19 @@ object TrainingData {
     * Same window-hash machinery as [[dedupSubstringsGlobal]]: any
     * shared span of length ≥ `minTokens` is fully covered by shared
     * L-windows. The eval side reduces to a DISTINCT hash set that
-    * rides a broadcast semi-join into the corpus window stream when
-    * provably small (the usual case — eval sets are tiny next to a
-    * 100 TB corpus), so the corpus is scanned once and only matching
-    * windows shuffle. */
+    * semi-joins the corpus window stream; AQE broadcasts it when small
+    * (the usual case — eval sets are tiny next to a 100 TB corpus), so
+    * the corpus is scanned once and only matching windows shuffle. */
   def redactEvalSpans(corpus: DataFrame, evalSet: DataFrame, idCol: String,
                       textCol: String, minTokens: Int = 13): DataFrame = {
     require(minTokens >= 2, s"redactEvalSpans: minTokens < 2: $minTokens")
     val L = minTokens
     val base = corpus.select(col(idCol), tokenArray(textCol).as("__toks"))
-    // checkpoint: the broadcast-guard probe and the semi-join would
-    // otherwise each evaluate the eval tokenize→window→distinct pipeline
     val evalHashes = tokenWindows(
         evalSet.select(col(idCol), tokenArray(textCol).as("__toks")), idCol, L)
-      .select(col("__h")).distinct().localCheckpoint()
+      .select(col("__h")).distinct()
     val contaminated = tokenWindows(base, idCol, L)
-      .join(StoreSwap.maybeBroadcast(evalHashes), Seq("__h"), "left_semi")
+      .join(evalHashes, Seq("__h"), "left_semi")
     removeCovered(base, mergedIntervals(contaminated, idCol, L),
       idCol, "text_redacted", "n_redacted")
   }
@@ -1663,7 +1660,7 @@ object TrainingData {
 
   /** [[redactEvalSpans]] against the PERSISTED suite: the corpus is
     * scanned once, the store's hash set (union of live sources, read
-    * through the manifest) rides the broadcast semi-join, and L comes
+    * through the manifest) semi-joins the windows, and L comes
     * from the store's `_layout.v<N>` — the one the hashes were computed
     * with, so a caller can never probe at a mismatched window length.
     * `asOfVersion` pins a retained manifest (redact exactly as the
@@ -1687,7 +1684,7 @@ object TrainingData {
     val hashes = StoreSwap.readStoreDir(spark, path, "hashes", mfFiles)
       .select(col("h").as("__h"))
     val contaminated = tokenWindows(base, idCol, l)
-      .join(StoreSwap.maybeBroadcast(hashes), Seq("__h"), "left_semi")
+      .join(hashes, Seq("__h"), "left_semi")
     removeCovered(base, mergedIntervals(contaminated, idCol, l),
       idCol, "text_redacted", "n_redacted")
   }

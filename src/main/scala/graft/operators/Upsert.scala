@@ -177,11 +177,10 @@ object Upsert {
     *
     * Scale shape (100 TB base, batch-sized changes): ONE window over
     * the CHANGES (batch-keyed, never the base), then the base takes a
-    * single anti join against the distinct changed-key set — broadcast
-    * when the batch fits [[IvfIndex.MaxBroadcastQueries]] (guarded, not
-    * assumed), shuffled-anti otherwise — and the surviving winners
-    * union in. The base is never windowed, never shuffled beyond that
-    * one join. */
+    * single anti join against the distinct changed-key set — AQE
+    * broadcasts it when the batch is small and shuffles it otherwise —
+    * and the surviving winners union in. The base is never windowed,
+    * never shuffled beyond that one join. */
   def applyChangeSet(base: DataFrame, changes: DataFrame, keys: Seq[String],
                      opCol: String = "op", seqCol: String = "seq"): DataFrame = {
     val valueCols = base.columns.filterNot(keys.contains)
@@ -192,12 +191,7 @@ object Upsert {
         Window.partitionBy(keys.map(col): _*).orderBy(ordering: _*)))
       .where(col("__rn") === 1)
       .localCheckpoint()
-    val changedKeys = winners.select(keys.map(col): _*)
-    val keySide =
-      if (IvfIndex.fitsBroadcast(changedKeys, IvfIndex.MaxBroadcastQueries))
-        broadcast(changedKeys)
-      else changedKeys
-    base.join(keySide, keys, "left_anti")
+    base.join(winners.select(keys.map(col): _*), keys, "left_anti")
       .unionByName(winners.where(upper(col(opCol)) =!= "D")
         .select(base.columns.map(col): _*))
   }

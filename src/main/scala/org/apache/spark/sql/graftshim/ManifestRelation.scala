@@ -80,7 +80,11 @@ object ManifestRelation {
     * resolved on the driver with no Spark job: one stat (a file) or one
     * recursive listing (a directory; `_`- and `.`-prefixed names are
     * skipped as Spark skips them, `k=v` directories become partition
-    * columns), one footer read, and the scan built by [[parquet]].
+    * columns), one footer read, and the scan built over the listed
+    * statuses. As with Spark's own file index, the root path is the
+    * path read (the file itself for a single file) and every file
+    * carries its listed length and mtime, so `inputFiles` and
+    * `_metadata.file_modification_time` match `spark.read.parquet`.
     * A missing path or a directory with no data files refuses. */
   def readParquet(spark: SparkSession, path: String): DataFrame = {
     val fs = new Path(path).getFileSystem(
@@ -88,20 +92,22 @@ object ManifestRelation {
     val p = fs.makeQualified(new Path(path))
     val root = fs.getFileStatus(p)
     if (!root.isDirectory)
-      return parquet(spark, p.getParent.toString, Seq(p.getName -> root.getLen))
-    val files = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+      return relation(spark, p.getParent,
+        Seq(ListedFile(p.getName, root.getLen, root.getModificationTime)), p)
+    val files = scala.collection.mutable.ArrayBuffer.empty[ListedFile]
     def walk(dir: Path, rel: String): Unit =
       fs.listStatus(dir).sortBy(_.getPath.getName).foreach { st =>
         val name = st.getPath.getName
         if (!hiddenName(name)) {
           val r = if (rel.isEmpty) name else s"$rel/$name"
-          if (st.isDirectory) walk(st.getPath, r) else files += r -> st.getLen
+          if (st.isDirectory) walk(st.getPath, r)
+          else files += ListedFile(r, st.getLen, st.getModificationTime)
         }
       }
     walk(p, "")
     require(files.nonEmpty, s"ManifestRelation: unable to infer a parquet " +
       s"schema — no data files under $path")
-    parquet(spark, p.toString, files.toSeq)
+    relation(spark, p, files.toSeq, p)
   }
 
   /** Spark's listing filter (`shouldFilterOutPathName`), minus the
@@ -113,16 +119,29 @@ object ManifestRelation {
 
   /** DataFrame over `files` (paths relative to `basePath`, with byte
     * lengths) — partition columns recovered from `k=v` path components
-    * exactly like Spark's directory inference (int/long/string). */
+    * exactly like Spark's directory inference (int/long/string). A store
+    * manifest records no mtimes, so these files' statuses carry mtime 0
+    * and `_metadata.file_modification_time` reads the epoch. */
   def parquet(spark: SparkSession, basePath: String,
               files: Seq[(String, Long)]): DataFrame = {
-    require(files.nonEmpty, s"ManifestRelation: empty file-set under $basePath")
     val base = new Path(basePath)
-    val partitionSchema = inferPartitionSchema(basePath, files.map(_._1))
+    relation(spark, base,
+      files.map { case (rel, len) => ListedFile(rel, len, 0L) }, base)
+  }
+
+  /** One file of a scan: path relative to the base, length, mtime. */
+  private[graftshim] case class ListedFile(rel: String, len: Long,
+                                           mtime: Long)
+
+  private def relation(spark: SparkSession, base: Path,
+                       files: Seq[ListedFile], root: Path): DataFrame = {
+    val basePath = base.toString
+    require(files.nonEmpty, s"ManifestRelation: empty file-set under $basePath")
+    val partitionSchema = inferPartitionSchema(basePath, files.map(_.rel))
     // schema from the LARGEST listed file: deterministic, and by far
     // the most likely to be a fully-written data file
-    val dataSchema = dataSchemaOf(spark, basePath, files.maxBy(_._2)._1)
-    val index = new ManifestFileIndex(base, files, partitionSchema)
+    val dataSchema = dataSchemaOf(spark, basePath, files.maxBy(_.len).rel)
+    val index = new ManifestFileIndex(base, files, partitionSchema, root)
     val cs = spark.asInstanceOf[classic.SparkSession]
     val relation = HadoopFsRelation(index, partitionSchema, dataSchema,
       None, new ParquetFileFormat, Map.empty[String, String])(cs)
@@ -276,33 +295,33 @@ object ManifestRelation {
 }
 
 /** In-memory [[FileIndex]] materialized from manifest metadata: every
-  * file's path and length is already known, so planning performs no
-  * filesystem calls at all. `listFiles` evaluates the pushed partition
+  * file's path, length and mtime is already known, so planning performs
+  * no filesystem calls at all. `listFiles` evaluates the pushed partition
   * filters against one [[InternalRow]] per partition — at 100 TB a
   * year-pruned fact read touches 1/N of the index in driver memory and
-  * the scan never sees the other files. */
-class ManifestFileIndex(base: Path, files: Seq[(String, Long)],
-                        override val partitionSchema: StructType)
+  * the scan never sees the other files. `root` is the path the caller
+  * read: the file itself for a single-file read, else `base`. */
+class ManifestFileIndex(base: Path, files: Seq[ManifestRelation.ListedFile],
+                        override val partitionSchema: StructType, root: Path)
   extends FileIndex {
 
   /** (partition row, statuses) — one entry per distinct partition. */
   private val partitions: Seq[(InternalRow, Array[FileStatus])] = {
-    def status(rel: String, len: Long) =
-      new FileStatus(len, false, 1, 128L * 1024 * 1024, 0L,
-        new Path(base, rel))
+    def status(f: ManifestRelation.ListedFile) =
+      new FileStatus(f.len, false, 1, 128L * 1024 * 1024, f.mtime,
+        new Path(base, f.rel))
     if (partitionSchema.isEmpty)
-      Seq(InternalRow.empty ->
-        files.map { case (r, l) => status(r, l) }.toArray)
+      Seq(InternalRow.empty -> files.map(status).toArray)
     else
-      files.groupBy(f => ManifestRelation.partPairs(f._1).map(_._2))
+      files.groupBy(f => ManifestRelation.partPairs(f.rel).map(_._2))
         .toSeq.sortBy(_._1.mkString("/"))
         .map { case (vals, fs) =>
           ManifestRelation.partRow(partitionSchema, vals) ->
-            fs.map { case (r, l) => status(r, l) }.toArray
+            fs.map(status).toArray
         }
   }
 
-  override def rootPaths: Seq[Path] = Seq(base)
+  override def rootPaths: Seq[Path] = Seq(root)
 
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression])
@@ -323,11 +342,11 @@ class ManifestFileIndex(base: Path, files: Seq[(String, Long)],
   }
 
   override def inputFiles: Array[String] =
-    files.map(f => new Path(base, f._1).toString).toArray
+    files.map(f => new Path(base, f.rel).toString).toArray
 
   override def refresh(): Unit = ()
 
-  override val sizeInBytes: Long = files.map(_._2).sum
+  override val sizeInBytes: Long = files.map(_.len).sum
 
   override def toString: String =
     s"ManifestFileIndex[$base, ${files.length} files]"

@@ -147,7 +147,7 @@ class CrawlCurationSpec extends SparkSpec {
     "never a pseudo-ACE xn-- form") {
     import org.apache.spark.unsafe.types.UTF8String
     def f(s: String) =
-      graft.functions.IdnHostExpr.fold(UTF8String.fromString(s)).toString
+      graft.functions.IdnHost.fold(UTF8String.fromString(s)).toString
     assert(f("Kelvin.example") == "kelvin.example")
     assert(f("abK.example") == "abk.example")
     // the two equivalent spellings now land in ONE canonical group

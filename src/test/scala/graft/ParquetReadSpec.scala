@@ -149,6 +149,42 @@ class ParquetReadSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("inputFiles, root paths and _metadata.file_modification_time " +
+    "equal spark.read.parquet's for a single file and a directory") {
+    val dir = freshDir()
+    spark.range(40).selectExpr("id", "id % 3 AS k").repartition(2)
+      .write.parquet(dir.toString)
+    val file = dir.listFiles().filter(_.getName.endsWith(".parquet"))
+      .minBy(_.getName)
+    file.setLastModified(1700000000000L)
+    def rootsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.queryExecution.analyzed.collect {
+        case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+          l.relation
+      }.collect {
+        case r: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+          r.location.rootPaths.map(_.toString)
+      }.flatten
+    // Spark spells a local file `file:///p` in inputFiles and `file:/p`
+    // elsewhere; both name the same file, so compare URI paths
+    def uriPath(s: String): String = new java.net.URI(s).getPath
+    def mtimes(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select(col("id"), col("_metadata.file_path"),
+          col("_metadata.file_modification_time").cast("string"))
+        .collect().map(r => Seq(r.get(0), uriPath(r.getString(1)), r.get(2))
+          .mkString("|")).sorted.toSeq
+    Seq(file.toString, dir.toString).foreach { path =>
+      val want = spark.read.parquet(path)
+      val got = ManifestRelation.readParquet(spark, path)
+      assert(got.inputFiles.map(uriPath).sorted.toSeq ==
+        want.inputFiles.map(uriPath).sorted.toSeq, path)
+      assert(rootsOf(got) == rootsOf(want), path)
+      assert(mtimes(got) == mtimes(want), path)
+    }
+    assert(mtimes(ManifestRelation.readParquet(spark, file.toString))
+      .forall(_.endsWith("|2023-11-14 22:13:20")))
+  }
+
   test("main reads parquet only through ManifestRelation") {
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, root.getAbsolutePath)

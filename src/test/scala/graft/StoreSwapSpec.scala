@@ -462,31 +462,72 @@ class StoreSwapSpec extends graft.SparkSpec {
     }).toString
   }
 
-  test("maybeBroadcast degrade path: a probe frame over MaxBroadcastQueries " +
-    "joins as ShuffledHashJoin (hinted build side), never SortMergeJoin " +
-    "and never a driver-OOM broadcast") {
-    // provably over the cap (range carries maxRows, so the guard decides
-    // without a probe job) — this is the oversized takedown/ingest batch
-    // the degrade branch exists for
-    val over = graft.operators.IvfIndex.MaxBroadcastQueries + 4096
-    val probe = spark.range(over).selectExpr("id * 3 AS doc")
-    val store = spark.range(4 * over).selectExpr("id AS doc", "id % 97 AS payload")
-    val out = store.join(
-      graft.operators.StoreSwap.maybeBroadcast(probe), Seq("doc"), "left_semi")
-    val plan = finalPlanString(out)
-    assert(plan.contains("ShuffledHashJoin"), plan.take(800))
-    assert(!plan.contains("SortMergeJoin"), plan.take(800))
-    assert(!plan.contains("BroadcastHashJoin"), plan.take(800))
+  /** Run `body` under [[graft.GraftSession.JoinConfs]] with every byte
+    * size (and the advisory partition size the local-map threshold is
+    * compared with) divided by 2^16, so 1 KB stands in for 64 MB, over
+    * 16 shuffle partitions; the prior values come back afterwards.
+    * Fails if the local-map threshold is missing or under the advisory
+    * size, which would leave AQE's shuffled-hash choice switched off. */
+  private def withScaledJoinConfs[T](body: => T): T = {
+    val advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val scaled = (graft.GraftSession.JoinConfs +
+      (advisory -> s"${64L * 1024 * 1024}"))
+      .map { case (k, v) => k -> (v.toLong >> 16).toString }
+    val localMap = "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold"
+    assert(scaled.get(localMap).exists(_.toLong >= scaled(advisory).toLong),
+      s"GraftSession sets no usable $localMap: $scaled")
+    val confs = scaled + ("spark.sql.shuffle.partitions" -> "16")
+    val prior = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
-  test("maybeBroadcast fast path: an under-cap probe frame still rides a " +
-    "broadcast join") {
-    val probe = spark.range(100).selectExpr("id * 3 AS doc")
-    val store = spark.range(100000).selectExpr("id AS doc", "id % 97 AS payload")
-    val out = store.join(
-      graft.operators.StoreSwap.maybeBroadcast(probe), Seq("doc"), "left_semi")
-    val plan = finalPlanString(out)
-    assert(plan.contains("BroadcastHashJoin"), plan.take(800))
+  /** A checkpointed probe of `n` keys (the checkpoint keeps the
+    * planner's size estimate, 8 bytes a row) and a store frame. */
+  private def probe(n: Long): org.apache.spark.sql.DataFrame =
+    spark.range(n).selectExpr("id * 3 AS doc").localCheckpoint()
+
+  private def store(n: Long): org.apache.spark.sql.DataFrame =
+    spark.range(n).selectExpr("id AS doc", "id % 97 AS payload")
+
+  test("AQE join choice: a checkpointed probe under the broadcast " +
+    "threshold plans BroadcastHashJoin") {
+    withScaledJoinConfs {
+      val plan = finalPlanString(
+        store(100000).join(probe(16), Seq("doc"), "left_semi"))
+      assert(plan.contains("BroadcastHashJoin"), plan.take(800))
+    }
+  }
+
+  test("AQE join choice: a probe over the broadcast threshold whose " +
+    "shuffle partitions are under the local-map threshold runs " +
+    "ShuffledHashJoin, never SortMergeJoin") {
+    withScaledJoinConfs {
+      val plan = finalPlanString(
+        store(100000).join(probe(256), Seq("doc"), "left_semi"))
+      assert(plan.contains("ShuffledHashJoin"), plan.take(800))
+      assert(!plan.contains("SortMergeJoin"), plan.take(800))
+      assert(!plan.contains("BroadcastHashJoin"), plan.take(800))
+    }
+  }
+
+  test("AQE join choice: a build side over the local-map threshold runs " +
+    "the spill-capable SortMergeJoin; the same join under it hashes") {
+    withScaledJoinConfs {
+      def big(n: Long) = spark.range(n)
+        .selectExpr("xxhash64(id) AS doc", "id AS payload")
+      val over = finalPlanString(big(20000).join(big(20000), Seq("doc")))
+      assert(over.contains("SortMergeJoin"), over.take(800))
+      assert(!over.contains("ShuffledHashJoin"), over.take(800))
+      assert(!over.contains("BroadcastHashJoin"), over.take(800))
+      val under = finalPlanString(
+        big(20000).join(big(256).select("doc"), Seq("doc")))
+      assert(under.contains("ShuffledHashJoin"), under.take(800))
+    }
   }
 
   test("manifestAt resolves any retained version and refuses an unknown " +
