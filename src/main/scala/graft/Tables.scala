@@ -8,7 +8,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Every table read goes through [[ManifestRelation.readParquet]], the
   * single seam for parquet reads in main: the schema comes from one
-  * driver-side footer read, so a load runs no Spark job. At cluster
+  * driver-side footer read, so a load runs no Spark job. A table file
+  * Spark scans as one split (every fixture table up to a few MB) plans
+  * as one partition that says so (`SinglePartition`) under an aggregate,
+  * a global sort or a top-k that no join or union sits above
+  * ([[graft.plans.SinglePartitionReads]]), so that consumer plans no
+  * exchange. At cluster
   * scale these would be partitioned/bucketed warehouse tables, and that
   * seam is where the change lands (a `spark.table(name)` over a
   * bucketed catalog table) — query code never hardcodes paths.
@@ -26,7 +31,9 @@ object Tables {
     * matter how many cores exist. Production warehouse files carry many
     * row groups/files and split naturally (what WarehouseStore writes);
     * for these degenerate inputs an explicit round-robin split buys full
-    * scan-side parallelism for one ~MB-scale exchange.
+    * scan-side parallelism for one ~MB-scale exchange. A `repartition`
+    * is not a step [[graft.plans.SinglePartitionReads]] looks through,
+    * so these reads keep their parallel split.
     *
     * Deliberately NOT applied to the relational tables: their queries are
     * scan→aggregate with light per-row work, where the extra exchange

@@ -1246,9 +1246,11 @@ object Dedup {
   // checkpoint would materialize only at the caller's later action,
   // after the inputs it depends on are gone (ADVICE r18).
 
-  /** Both-orientation edge frame, hash-partitioned on src ONCE before the
-    * checkpoint (LogicalRDD keeps the partitioning) so each propagation
-    * round's join only shuffles the (small, changing) label frame. */
+  /** Both-orientation edge frame, hash-partitioned on src before the
+    * checkpoint. Under AQE the checkpoint's LogicalRDD records
+    * `UnknownPartitioning(0)` (`AdaptiveSparkPlanExec` does not override
+    * `outputPartitioning`), so a propagation round's src-join re-shuffles
+    * the edges as well as the (small, changing) label frame. */
   private def directedEdges(pairs: DataFrame): DataFrame =
     pairs
       .select(col("d1").cast("long").as("src"), col("d2").cast("long").as("dst"))

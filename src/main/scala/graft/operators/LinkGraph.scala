@@ -65,14 +65,15 @@ object LinkGraph {
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
       .localCheckpoint()
-    // out-degree folds INTO the edge frame once, pre-partitioned on
-    // src — the loop pays one join per iteration instead of two, and
-    // the repartition-then-localCheckpoint preserves HashPartitioning
-    // through the LogicalRDD, so each round's src-join re-shuffles
-    // only the |nodes|-row rank frame, never the edge list
-    // (interleaved same-JVM A/B at 1M nodes / 8M edges / 3 iters:
-    // 22.1 → 7.3 s, 3.0× — SCALE.md round 14; the edge re-shuffle per
-    // round was the dominant cost, not the extra join)
+    // out-degree folds INTO the edge frame once — the loop pays one
+    // join per iteration instead of two (interleaved same-JVM A/B at 1M
+    // nodes / 8M edges / 3 iters: 22.1 → 7.3 s, 3.0× — SCALE.md round
+    // 14). The repartition on src does NOT survive the checkpoint under
+    // AQE: `AdaptiveSparkPlanExec` does not override
+    // `outputPartitioning`, so the LogicalRDD records
+    // `UnknownPartitioning(0)` and each round's src-join re-shuffles
+    // the edge list (q174's AQE-final plan: `Exchange
+    // hashpartitioning(src, 4)` above this `Scan ExistingRDD`)
     val ed = e
       .join(e.groupBy(col("src")).agg(count(lit(1)).as("__deg"))
         .hint("shuffle_hash"), Seq("src"))
@@ -321,11 +322,11 @@ object LinkGraph {
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
       .localCheckpoint()
-    // one pre-partitioned copy per join orientation: the repartition-
-    // then-localCheckpoint preserves HashPartitioning through the
-    // LogicalRDD ([[pageRank]]'s measured 3.0× lesson, SCALE.md r14),
-    // so each half-step re-shuffles only the ≤|nodes|-row score frame,
-    // never the edge list
+    // one repartitioned copy per join orientation. Under AQE the
+    // checkpoint does not keep the hash partitioning (its LogicalRDD
+    // records `UnknownPartitioning(0)`, as in [[pageRank]]), so each
+    // half-step still re-shuffles the edge list as well as the
+    // ≤|nodes|-row score frame
     val eSrc = e.repartition(col("src")).localCheckpoint()
     val eDst = e.repartition(col("dst")).localCheckpoint()
     def rescaled(raw0: DataFrame, valCol: String): DataFrame = {
@@ -434,15 +435,16 @@ object LinkGraph {
     * graph signal next to [[pageRank]]/[[hits]] (endorsement) and
     * [[triangles]] (local density).
     *
-    * Scale shape: the edge list is hash-partitioned on `u` ONCE at
-    * entry; per round ONE degree aggregation (map-side combined,
-    * ≤ |nodes| rows shuffle) + two BROADCAST anti-joins against the
-    * round's dead node set — the edge frame itself never re-shuffles
-    * (the per-round dead delta is node-sized and usually tiny; a
-    * mass-extinction round past the broadcast cap falls back to
-    * alive-semi-joins and re-partitions once). Bounded driver loop,
-    * localCheckpoint per round. Exact integer degrees; no floats
-    * anywhere.
+    * Scale shape: the edge list is hash-partitioned on `u` at entry;
+    * per round ONE degree aggregation (map-side combined, ≤ |nodes|
+    * rows shuffle) + two BROADCAST anti-joins against the round's dead
+    * node set (the per-round dead delta is node-sized and usually tiny;
+    * a mass-extinction round past the broadcast cap falls back to
+    * alive-semi-joins). Under AQE the per-round checkpoint does not keep
+    * the entry partitioning (its LogicalRDD records
+    * `UnknownPartitioning(0)`), so a u-keyed step after it re-shuffles
+    * the edges. Bounded driver loop, localCheckpoint per round. Exact
+    * integer degrees; no floats anywhere.
     *
     * @return (node, degree) — nodes still alive after `rounds` peels,
     *         with their degree in the surviving subgraph. */
@@ -514,11 +516,10 @@ object LinkGraph {
 
   /** `partitionOnU` hash-partitions the canonical edge list on `u`
     * INSIDE the same materialization job (one extra exchange after the
-    * distinct, zero extra passes) — the peel loop's entry shape: the
-    * partitioning survives localCheckpoint, so every later
-    * u-keyed filter of the edge frame reuses it instead of
-    * re-shuffling the edges (the round-14 iterative-graph discipline,
-    * extended to the one graph op whose edge set MUTATES per round). */
+    * distinct, zero extra passes) — the peel loop's entry shape. Under
+    * AQE the partitioning does not survive localCheckpoint (the
+    * LogicalRDD records `UnknownPartitioning(0)`, checked on q192's
+    * AQE-final plan), so a later u-keyed step re-shuffles the edges. */
   private def undirected(edges: DataFrame, srcCol: String,
                          dstCol: String,
                          partitionOnU: Boolean = false): DataFrame = {

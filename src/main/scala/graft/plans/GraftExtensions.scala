@@ -11,11 +11,18 @@ import org.apache.spark.sql.types.IntegerType
   *
   *  - SQL functions `stable_id63(str)` and `shingle_hash32(str, n)`;
   *  - the [[NativeHashRewrite]] optimizer rule (composed md5-key algebra →
-  *    native codegen'd expression).
+  *    native codegen'd expression);
+  *  - the [[DecimalSums]] optimizer rule (decimal sums of precision > 18
+  *    over `DECIMAL(p ≤ 18)` terms → exact sums of unscaled longs);
+  *  - the [[SinglePartitionReads]] optimizer rule (a one-split read under
+  *    an aggregate, a global sort or an unkeyed window plans no exchange);
+  *  - the [[TopKStrategy]] planner strategy (per-key top-k heaps).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => NativeHashRewrite)
+    ext.injectOptimizerRule(_ => DecimalSums)
+    ext.injectOptimizerRule(SinglePartitionReads)
     ext.injectPlannerStrategy(_ => TopKStrategy)
     ext.injectFunction(
       (org.apache.spark.sql.catalyst.FunctionIdentifier("stable_id63"),

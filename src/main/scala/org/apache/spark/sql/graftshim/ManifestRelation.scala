@@ -141,8 +141,10 @@ object ManifestRelation {
     // schema from the LARGEST listed file: deterministic, and by far
     // the most likely to be a fully-written data file
     val dataSchema = dataSchemaOf(spark, basePath, files.maxBy(_.len).rel)
-    val index = new ManifestFileIndex(base, files, partitionSchema, root)
     val cs = spark.asInstanceOf[classic.SparkSession]
+    val fs = base.getFileSystem(cs.sessionState.newHadoopConf())
+    val index = new ManifestFileIndex(base, files, partitionSchema, root,
+      fs.getUri, fs.getWorkingDirectory)
     val relation = HadoopFsRelation(index, partitionSchema, dataSchema,
       None, new ParquetFileFormat, Map.empty[String, String])(cs)
     classic.Dataset.ofRows(cs, LogicalRelation(relation))
@@ -300,24 +302,33 @@ object ManifestRelation {
   * filters against one [[InternalRow]] per partition — at 100 TB a
   * year-pruned fact read touches 1/N of the index in driver memory and
   * the scan never sees the other files. `root` is the path the caller
-  * read: the file itself for a single-file read, else `base`. */
+  * read: the file itself for a single-file read, else `base`. Each file's
+  * path is qualified against the file system's URI and working directory
+  * (`fsUri`, `workingDir`), as that file system's own listing qualifies
+  * it, so its URI is spelled as in Spark's file index (`file:///p` for a
+  * local file; `new Path(base, rel)` alone gives `file:/p`). */
 class ManifestFileIndex(base: Path, files: Seq[ManifestRelation.ListedFile],
-                        override val partitionSchema: StructType, root: Path)
+                        override val partitionSchema: StructType, root: Path,
+                        fsUri: java.net.URI, workingDir: Path)
   extends FileIndex {
+
+  private val paths: Seq[Path] = files.map(f =>
+    Path.getPathWithoutSchemeAndAuthority(new Path(base, f.rel))
+      .makeQualified(fsUri, workingDir))
 
   /** (partition row, statuses) — one entry per distinct partition. */
   private val partitions: Seq[(InternalRow, Array[FileStatus])] = {
-    def status(f: ManifestRelation.ListedFile) =
-      new FileStatus(f.len, false, 1, 128L * 1024 * 1024, f.mtime,
-        new Path(base, f.rel))
+    val statuses = files.zip(paths).map { case (f, p) =>
+      f -> new FileStatus(f.len, false, 1, 128L * 1024 * 1024, f.mtime, p)
+    }
     if (partitionSchema.isEmpty)
-      Seq(InternalRow.empty -> files.map(status).toArray)
+      Seq(InternalRow.empty -> statuses.map(_._2).toArray)
     else
-      files.groupBy(f => ManifestRelation.partPairs(f.rel).map(_._2))
+      statuses.groupBy(s => ManifestRelation.partPairs(s._1.rel).map(_._2))
         .toSeq.sortBy(_._1.mkString("/"))
-        .map { case (vals, fs) =>
+        .map { case (vals, sts) =>
           ManifestRelation.partRow(partitionSchema, vals) ->
-            fs.map(status).toArray
+            sts.map(_._2).toArray
         }
   }
 
@@ -341,8 +352,7 @@ class ManifestFileIndex(base: Path, files: Seq[ManifestRelation.ListedFile],
     selected.map { case (row, sts) => PartitionDirectory(row, sts) }
   }
 
-  override def inputFiles: Array[String] =
-    files.map(f => new Path(base, f.rel).toString).toArray
+  override def inputFiles: Array[String] = paths.map(_.toUri.toString).toArray
 
   override def refresh(): Unit = ()
 

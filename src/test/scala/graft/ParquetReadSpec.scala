@@ -119,34 +119,15 @@ class ParquetReadSpec extends SparkSpec {
     val dir = freshDir()
     spark.range(50).selectExpr("id", "id * 2 AS y").coalesce(2)
       .write.parquet(dir.toString)
-    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        counter.incrementAndGet(); ()
-      }
-    }
-    def jobs(body: => Unit): Int = {
-      org.apache.spark.sql.graftbridge.ListenerBridge
-        .waitUntilListenerBusEmpty(spark.sparkContext)
-      counter.set(0)
-      body
-      org.apache.spark.sql.graftbridge.ListenerBridge
-        .waitUntilListenerBusEmpty(spark.sparkContext)
-      counter.get()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // a never-read directory: the footer is read, not cached
-      assert(jobs {
-        val df = ManifestRelation.readParquet(spark, dir.toString)
-        df.queryExecution.analyzed
-        df.where(col("y") > 10).queryExecution.optimizedPlan
-      } == 0)
-      assert(jobs(Tables.all.foreach(t =>
-        Tables.load(spark, sf, t).queryExecution.analyzed)) == 0)
-      assert(jobs(spark.read.parquet(dir.toString).schema) >= 1)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // a never-read directory: the footer is read, not cached
+    assert(jobsDuring {
+      val df = ManifestRelation.readParquet(spark, dir.toString)
+      df.queryExecution.analyzed
+      df.where(col("y") > 10).queryExecution.optimizedPlan
+    } == 0)
+    assert(jobsDuring(Tables.all.foreach(t =>
+      Tables.load(spark, sf, t).queryExecution.analyzed)) == 0)
+    assert(jobsDuring(spark.read.parquet(dir.toString).schema) >= 1)
   }
 
   test("inputFiles, root paths and _metadata.file_modification_time " +
@@ -165,19 +146,18 @@ class ParquetReadSpec extends SparkSpec {
         case r: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
           r.location.rootPaths.map(_.toString)
       }.flatten
-    // Spark spells a local file `file:///p` in inputFiles and `file:/p`
-    // elsewhere; both name the same file, so compare URI paths
-    def uriPath(s: String): String = new java.net.URI(s).getPath
+    // the strings themselves: Spark spells a local file `file:///p` in
+    // inputFiles and `file:/p` in `_metadata.file_path`, and so must the
+    // helper
     def mtimes(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.select(col("id"), col("_metadata.file_path"),
           col("_metadata.file_modification_time").cast("string"))
-        .collect().map(r => Seq(r.get(0), uriPath(r.getString(1)), r.get(2))
-          .mkString("|")).sorted.toSeq
+        .collect().map(_.mkString("|")).sorted.toSeq
     Seq(file.toString, dir.toString).foreach { path =>
       val want = spark.read.parquet(path)
       val got = ManifestRelation.readParquet(spark, path)
-      assert(got.inputFiles.map(uriPath).sorted.toSeq ==
-        want.inputFiles.map(uriPath).sorted.toSeq, path)
+      assert(got.inputFiles.sorted.toSeq == want.inputFiles.sorted.toSeq,
+        s"$path: ${got.inputFiles.toSeq} vs ${want.inputFiles.toSeq}")
       assert(rootsOf(got) == rootsOf(want), path)
       assert(mtimes(got) == mtimes(want), path)
     }

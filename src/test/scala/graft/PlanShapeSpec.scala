@@ -42,6 +42,26 @@ class PlanShapeSpec extends SparkSpec {
   private def scans(df: org.apache.spark.sql.DataFrame): Seq[FileSourceScanExec] =
     collectScans(finalPlan(df))
 
+  /** A session with [[graft.plans.SinglePartitionReads]], which the shared
+    * test session carries only when a `GraftExtensions` suite built it. */
+  private lazy val oneSplitSpark = {
+    val s = spark.newSession()
+    s.experimental.extraOptimizations =
+      Seq(graft.plans.SinglePartitionReads(s))
+    s
+  }
+
+  /** A data directory holding `tables` as two-file parquet directories
+    * (the fixture's rows, split by Spark), so each read is more than one
+    * split and does not plan as a single partition. */
+  private def twoFileCopy(tables: String*): String = {
+    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
+      "graft_planspec_two")
+    tables.foreach(t => spark.read.parquet(s"$sf/$t.parquet").repartition(2)
+      .write.mode("overwrite").parquet(s"$dir/$t.parquet"))
+    dir.toString
+  }
+
   /** SortMergeJoinExec nodes across the AQE-finalized tree (recursing
     * into query stages) — the "did this join avoid a shuffle-by-key"
     * assertion shared by the skew gates. */
@@ -74,11 +94,27 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q01: agg is partial+final hash aggregate (map-side combine)") {
-    val plan = Queries.queries("q01_pricing_summary")(spark, sf)
-      .queryExecution.executedPlan.toString
+    // over a one-split read no exchange and one job; over two files the
+    // exchange and the map-side combine remain
+    val q01 = Queries.queries("q01_pricing_summary")
+    // the fixture's lineitem is one split: the read reports
+    // SinglePartition, so both aggregate levels run in the scan's task
+    val one = q01(oneSplitSpark, sf)
+    val plan1 = one.queryExecution.executedPlan.toString
+    assert("HashAggregate".r.findAllIn(plan1).size >= 2, plan1.take(800))
+    assert(!plan1.contains("Exchange"), plan1.take(800))
+    var rows1: Seq[String] = Nil
+    assert(jobsDuring {
+      rows1 = one.collect().map(_.toString).sorted.toSeq
+    } == 1)
+    assert(!finalPlan(one).toString.contains("Exchange"))
     // two HashAggregate levels around one Exchange: shuffle carries groups
-    assert("HashAggregate".r.findAllIn(plan).size >= 2, plan.take(500))
-    assert("Exchange".r.findAllIn(plan).size >= 1)
+    val two = q01(oneSplitSpark, twoFileCopy("lineitem"))
+    val plan2 = two.queryExecution.executedPlan.toString
+    assert("HashAggregate".r.findAllIn(plan2).size >= 2, plan2.take(800))
+    assert("Exchange".r.findAllIn(plan2).size >= 1, plan2.take(800))
+    assert(plan2.contains("partial_sum"), plan2.take(800))
+    assert(two.collect().map(_.toString).sorted.toSeq == rows1)
   }
 
   test("q03: top-k plans as TakeOrderedAndProject, not a global sort") {
@@ -434,6 +470,29 @@ class PlanShapeSpec extends SparkSpec {
       "q210_budget_apportion")) {
       val plan = finalPlan(Queries.queries(name)(spark, sf)).toString
       assert(!plan.contains("SinglePartition"), s"$name:\n${plan.take(800)}")
+    }
+    // the keyed window keeps its keyed exchange over the one-split
+    // fixture read (SinglePartitionReads leaves it alone) and over a
+    // multi-file read
+    for (d <- Seq(sf, twoFileCopy("orders"))) {
+      val plan = finalPlan(Queries.queries("q198_rolling_window")(
+        oneSplitSpark, d)).toString
+      assert(plan.contains("hashpartitioning(o_custkey"), plan.take(1200))
+      assert(!plan.contains("SinglePartition"), plan.take(1200))
+    }
+  }
+
+  test("one-split reads keep their exchange under a DISTINCT aggregate, " +
+    "a union and a join, where it spreads the work") {
+    // q11's two DISTINCT counts aggregate in three levels; q225 unions two
+    // global aggregates, and a union of single-partition children runs
+    // them in one task; q48 joins an aggregate of events to a broadcast
+    // one, and its own stage runs while the broadcast side's stages do
+    for (name <- Seq("q11_conditional_counts", "q225_table_fingerprint",
+      "q48_approx_sketches")) {
+      val plan = finalPlan(Queries.queries(name)(oneSplitSpark, sf)).toString
+      assert(plan.contains("Exchange"), s"$name:\n${plan.take(1200)}")
+      assert(!plan.contains("Coalesce"), s"$name:\n${plan.take(1200)}")
     }
   }
 

@@ -14,4 +14,23 @@ trait SparkSpec extends AnyFunSuite {
       java.nio.file.Files.createTempDirectory("graft-test-wh").toString)
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** Spark jobs started while `body` runs. */
+  def jobsDuring(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        n.incrementAndGet(); ()
+      }
+    }
+    val bridge = org.apache.spark.sql.graftbridge.ListenerBridge
+    bridge.waitUntilListenerBusEmpty(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      bridge.waitUntilListenerBusEmpty(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    n.get()
+  }
 }
