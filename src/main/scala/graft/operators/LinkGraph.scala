@@ -435,16 +435,16 @@ object LinkGraph {
     * graph signal next to [[pageRank]]/[[hits]] (endorsement) and
     * [[triangles]] (local density).
     *
-    * Scale shape: the edge list is hash-partitioned on `u` at entry;
-    * per round ONE degree aggregation (map-side combined, ≤ |nodes|
-    * rows shuffle) + two BROADCAST anti-joins against the round's dead
-    * node set (the per-round dead delta is node-sized and usually tiny;
-    * a mass-extinction round past the broadcast cap falls back to
-    * alive-semi-joins). Under AQE the per-round checkpoint does not keep
-    * the entry partitioning (its LogicalRDD records
-    * `UnknownPartitioning(0)`), so a u-keyed step after it re-shuffles
-    * the edges. Bounded driver loop, localCheckpoint per round. Exact
-    * integer degrees; no floats anywhere.
+    * Scale shape: per round ONE degree aggregation (map-side combined,
+    * ≤ |nodes| rows shuffle) whose dead node set comes back to the
+    * driver, then a narrow `NOT IN` filter of the edge frame on both
+    * endpoints (the per-round dead delta is node-sized and usually tiny;
+    * a mass-extinction round past [[MaxInlineDead]] falls back to
+    * alive-semi-joins). The edge list is not partitioned on entry: under
+    * AQE a checkpoint does not keep a partitioning (its LogicalRDD
+    * records `UnknownPartitioning(0)`), and no step of the loop is keyed
+    * on the edges alone. Bounded driver loop, lazy localCheckpoint per
+    * round. Exact integer degrees; no floats anywhere.
     *
     * @return (node, degree) — nodes still alive after `rounds` peels,
     *         with their degree in the surviving subgraph. */
@@ -453,7 +453,7 @@ object LinkGraph {
     require(k >= 1, s"kCorePeel: k must be >= 1: $k")
     require(rounds >= 1 && rounds <= 100,
       s"kCorePeel: rounds must be in [1, 100]: $rounds")
-    var e = undirected(edges, srcCol, dstCol, partitionOnU = true)
+    var e = undirected(edges, srcCol, dstCol)
     for (_ <- 1 to rounds) e = peelOnce(e, k)
     degrees(e)
   }
@@ -514,16 +514,9 @@ object LinkGraph {
       .limit(topK)
   }
 
-  /** `partitionOnU` hash-partitions the canonical edge list on `u`
-    * INSIDE the same materialization job (one extra exchange after the
-    * distinct, zero extra passes) — the peel loop's entry shape. Under
-    * AQE the partitioning does not survive localCheckpoint (the
-    * LogicalRDD records `UnknownPartitioning(0)`, checked on q192's
-    * AQE-final plan), so a later u-keyed step re-shuffles the edges. */
   private def undirected(edges: DataFrame, srcCol: String,
-                         dstCol: String,
-                         partitionOnU: Boolean = false): DataFrame = {
-    val canonical = edges
+                         dstCol: String): DataFrame =
+    edges
       .select(col(srcCol).cast("string").as("u"),
         col(dstCol).cast("string").as("v"))
       .where(col("u").isNotNull && col("v").isNotNull &&
@@ -531,54 +524,47 @@ object LinkGraph {
       .select(least(col("u"), col("v")).as("u"),
         greatest(col("u"), col("v")).as("v"))
       .distinct()
-    (if (partitionOnU) canonical.repartition(col("u")) else canonical)
       .localCheckpoint()
-  }
 
   private def degrees(e: DataFrame): DataFrame =
     e.select(col("u").as("node"))
       .unionAll(e.select(col("v").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("degree"))
 
+  /** Past this many dead nodes in one round the edge filter is a pair of
+    * semi-joins against the alive set instead of an inline set. The set
+    * is shipped with every task of the filter (a few hundred KB of node
+    * ids at the cap, the bound [[hopDistance]]'s literal seed set has),
+    * where a join ships it once per executor. */
+  private[graft] val MaxInlineDead = 10000
+
   /** Drop sub-k nodes and their incident edges, once. The DEAD node
-    * set — the per-round delta, usually tiny — drives the edge filter,
-    * not the alive set: dead broadcasts, so both incident-edge filters
-    * are broadcast anti-joins that keep the edge frame IN PLACE (no
-    * edge shuffle, u-partitioning preserved through the checkpoint for
-    * the next round's degree aggregation). A round that kills more
-    * nodes than the broadcast cap falls back to alive-semi-joins and
-    * restores the u-partitioning behind them — correct either way, and
-    * on a converged round (no dead nodes) the frame passes through
-    * untouched. */
+    * set — the per-round delta, usually tiny — comes back to the driver
+    * in the round's one job (the degree aggregation, which also
+    * materializes the previous round's lazy checkpoint) and drives the
+    * edge filter as an inline `NOT IN` set: a narrow filter, so the
+    * round's checkpoint plans no exchange and runs no job of its own.
+    * A round that kills more than [[MaxInlineDead]] nodes falls back to
+    * alive-semi-joins, whose strategy AQE picks from observed sizes —
+    * correct either way, and on a converged round (no dead nodes) the
+    * frame passes through untouched. */
   private def peelOnce(e: DataFrame, k: Int): DataFrame = {
     val deg = degrees(e)
-    // LAZY checkpoint (r19, same trick as Dedup's convergence loops): the
-    // count right below is the action that materializes the dead set, so
-    // checkpoint materialization and the converged?/broadcastable?
-    // decision share ONE driver job instead of two per round
     val dead = deg.where(col("degree") < k).select(col("node"))
-      .localCheckpoint(false)
-    // one count serves both decisions (converged? broadcastable?) —
-    // a separate isEmpty + limit-probe pair costs two driver jobs per
-    // round, which dominates on small graphs
-    val nDead = dead.count()
-    if (nDead == 0) return e // converged: nothing to rewrite
-    // the surviving edge frame is also checkpointed LAZILY: its first
+      .limit(MaxInlineDead + 1).collect().map(_.getString(0))
+    if (dead.isEmpty) return e // converged: nothing to rewrite
+    // the surviving edge frame is checkpointed LAZILY: its first
     // consumer is always a single driver action (the next round's
-    // dead.count(), whose plan reads this frame exactly once), so the blocks cache during
-    // that job and every later consumer (degrees + both join sides)
-    // reads blocks, never recomputes. 2 driver jobs/round → 1.
-    if (nDead <= IvfIndex.MaxBroadcastQueries) {
-      e.join(broadcast(dead.select(col("node").as("u"))), Seq("u"), "left_anti")
-        .join(broadcast(dead.select(col("node").as("v"))), Seq("v"), "left_anti")
-        .select(col("u"), col("v"))
+    // collect, or the caller's final action), so the blocks cache
+    // during that job and every later consumer reads blocks
+    if (dead.length <= MaxInlineDead) {
+      e.where(!col("u").isin(dead: _*) && !col("v").isin(dead: _*))
         .localCheckpoint(false)
     } else {
       val alive = deg.where(col("degree") >= k).select(col("node"))
       e.join(alive.select(col("node").as("u")), Seq("u"), "left_semi")
         .join(alive.select(col("node").as("v")), Seq("v"), "left_semi")
         .select(col("u"), col("v"))
-        .repartition(col("u"))
         .localCheckpoint(false)
     }
   }

@@ -204,6 +204,25 @@ class LinkGraphSpec extends SparkSpec {
     }
   }
 
+  test("kCore: a round that kills more than MaxInlineDead nodes (the " +
+    "alive-semi-join path) peels like one that kills a few (the inline " +
+    "NOT IN path)") {
+    val k4 = Seq(("A", "B"), ("A", "C"), ("A", "D"), ("B", "C"),
+      ("B", "D"), ("C", "D"))
+    def star(leaves: Int) =
+      (k4 ++ (0 until leaves).map(i => ("A", s"leaf$i"))).toDF("src", "dst")
+    def peel(leaves: Int, rounds: Int) =
+      LinkGraph.kCorePeel(star(leaves), "src", "dst", k = 3, rounds)
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val k4Core = Map("A" -> 3L, "B" -> 3L, "C" -> 3L, "D" -> 3L)
+    // round 1 kills every leaf; round 2 finds no dead node
+    for (leaves <- Seq(5, LinkGraph.MaxInlineDead + 1); rounds <- Seq(1, 2)) {
+      val core = peel(leaves, rounds)
+      assert(core.size == 4, s"$leaves leaves, $rounds rounds")
+      assert(core == k4Core, s"$leaves leaves, $rounds rounds")
+    }
+  }
+
   test("labelPropagation: two cliques joined by a bridge resolve to " +
     "two communities; hand-stepped sync rounds; deterministic") {
     def clique(p: String) = for {
